@@ -15,7 +15,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * ~12 KB full JSON line; the r15→r16 comparison lost its per-query
   * baseline exactly this way). The LAST stdout line is a compact
   * summary that always survives tail capture and names the full
-  * artifact in its `full` field.
+  * artifact in its `full` field. A query whose timed pass throws is
+  * listed in the full line's `failed` array and left out of every
+  * per-query map and total.
   *
   * Each query gets a warmup run immediately before its timed run: the
   * warmup JIT-compiles that query's catalyst eval/codegen paths and
@@ -99,25 +101,30 @@ object Bench {
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
 
+    // None when the pass throws: the time until a crash is not a
+    // query time, so failed queries are named under "failed" and kept
+    // out of every timing map and total
     def timed(group: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
       spark.sparkContext.setJobGroup(group, group)
       val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
+      try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch { case _: Throwable => None }
       finally spark.sparkContext.clearJobGroup()
-      (System.nanoTime() - t0) / 1e9
     }
     // (first-pass, second-pass) per query; headline = min of the two.
     // Both timed passes share the warmup's persisted relations (the
     // release happens once, after the pair), so pass 2 measures the
     // same warm steady state as pass 1 — only the tenancy noise differs.
-    val results = selected.map { case (name, fn) =>
+    val outcomes = selected.map { case (name, fn) =>
       try fn(spark, sfDir).count() catch { case _: Throwable => () } // warmup
       val dt1 = timed(s"$name#1", fn)
       val dt2 = timed(s"$name#2", fn)
       spark.catalog.clearCache() // release persisted intermediates (see header)
       name -> (dt1, dt2)
     }
+    val failed = outcomes.collect { case (k, (a, b)) if a.isEmpty || b.isEmpty => k }
+    val results = outcomes.collect { case (k, (Some(a), Some(b))) => k -> (a, b) }
     // listener events arrive asynchronously on the bus; drain before
     // reading. A fixed sleep undercounts on a loaded machine (late
     // task-end events still in flight silently shrink queries_task —
@@ -168,7 +175,9 @@ object Bench {
       s""""timing":"min_of_2","queries":${jmap(mins)},""" +
       s""""total_first":$totalFirst,"queries_first":${jmap(results.map { case (k, (a, _)) => k -> a })},""" +
       s""""queries_second":${jmap(results.map { case (k, (_, b)) => k -> b })},""" +
-      s""""total_task":$totalTask,"queries_task":${jmap(taskMins)},"sf":"$sfDir"}"""
+      s""""total_task":$totalTask,"queries_task":${jmap(taskMins)},""" +
+      s""""failed":${failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+      s""""sf":"$sfDir"}"""
     println(line)
     // The driver keeps only a truncated log TAIL (~2000 chars), so the
     // ~12 KB full line above never parses in BENCH_rN.json (r9 and r10

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 
 /** Session factory for the graft engine.
   *
@@ -67,77 +67,66 @@ object GraftSession {
     spark
   }
 
-  // Guards the AQE toggle below: session conf is process-shared mutable
-  // state, and the previous per-caller save/restore raced under
-  // Verify's concurrent dump (B snapshots A's "false", A restores
-  // "true", B restores "false" — AQE stuck off for the rest of the
-  // run). A depth counter restores the tuned invariant (AQE on)
-  // exactly once, at quiescence.
-  private val aqeGate = new Object
-  private var aqeOffDepth = 0
-  // Conf value observed when depth went 0→1, restored when depth
-  // returns to 0 — so a session deliberately running with AQE off
-  // (outside tune()) is not silently re-enabled at quiescence.
-  private var aqeSaved: Option[String] = None
+  private val CheckpointDirKey = "spark.graft.checkpoint.dir"
 
-  /** Runs `body` with AQE disabled when `disable` is set; the LAST
-    * concurrent disabler restores the pre-call conf value captured at
-    * depth 0→1. Concurrent queries may transiently plan without AQE,
-    * which is semantics-preserving — only the sticky-off interleaving
-    * is eliminated. */
-  def withAqeOff[T](s: SparkSession, disable: Boolean)(body: => T): T = {
-    if (!disable) body
-    else {
-      aqeGate.synchronized {
-        aqeOffDepth += 1
-        if (aqeOffDepth == 1) {
-          aqeSaved = s.conf.getOption("spark.sql.adaptive.enabled")
-          s.conf.set("spark.sql.adaptive.enabled", "false")
-        }
-      }
-      try body
-      finally aqeGate.synchronized {
-        aqeOffDepth -= 1
-        if (aqeOffDepth == 0) {
-          aqeSaved match {
-            case Some(v) => s.conf.set("spark.sql.adaptive.enabled", v)
-            case None    => s.conf.unset("spark.sql.adaptive.enabled")
+  // Conf value last handed to setCheckpointDir, per SparkContext. The
+  // context's own getCheckpointDir is a fresh UUID child of that value,
+  // so it cannot be compared against the conf directly.
+  private val appliedDir =
+    new java.util.WeakHashMap[org.apache.spark.SparkContext, String]()
+
+  /** True when cuts are RELIABLE checkpoints: `spark.graft.checkpoint.dir`
+    * is set (the cluster-availability convention — localCheckpoint
+    * blocks die with their executor). Read on every call, so a changed
+    * conf takes effect on the next cut. */
+  def reliableCuts(s: SparkSession): Boolean =
+    s.conf.getOption(CheckpointDirKey).isDefined
+
+  /** Resolves the checkpoint mode for one cut and, in reliable mode,
+    * re-points the SparkContext checkpoint dir when the conf moved. The
+    * one setCheckpointDir call site in graft. */
+  private def reliable(s: SparkSession): Boolean =
+    s.conf.getOption(CheckpointDirKey) match {
+      case Some(d) =>
+        appliedDir.synchronized {
+          if (appliedDir.get(s.sparkContext) != d) {
+            s.sparkContext.setCheckpointDir(d)
+            appliedDir.put(s.sparkContext, d)
           }
-          aqeSaved = None
         }
-      }
+        true
+      case None => false
     }
-  }
 
-  /** Lineage cut that PRESERVES the child's physical layout (r17) and
-    * upgrades to a RELIABLE checkpoint when
-    * `spark.graft.checkpoint.dir` is set (the cluster-availability
-    * convention — localCheckpoint blocks die with their executor).
+  /** Lineage cut that PRESERVES the child's physical layout (r17):
+    * reliable checkpoint when `spark.graft.checkpoint.dir` is set,
+    * eager localCheckpoint otherwise.
     *
     * Layout: under AQE, a checkpoint captures the plan's partitioning
-    * from an AdaptiveSparkPlanExec whose final plan is not resolved at
-    * capture time, so the resulting LogicalRDD reports
-    * UnknownPartitioning and EVERY downstream join/agg re-exchanges
-    * the cut relation — measured: the Pregel loops were re-shuffling
-    * their lineage-cut edge bases once per round even though the base
-    * was built hash-partitioned on the join key. Planning the cut
-    * with AQE off makes the captured partitioning concrete, so the
-    * loop's joins/aggs are satisfied exchange-free (with
+    * from the AdaptiveSparkPlanExec root, which reports
+    * UnknownPartitioning, so EVERY downstream join/agg re-exchanges the
+    * cut relation — measured: the Pregel loops were re-shuffling their
+    * lineage-cut edge bases once per round even though the base was
+    * built hash-partitioned on the join key. The cut therefore restates
+    * the layout of the plan AQE actually ran, so the loop's joins/aggs
+    * are satisfied exchange-free (with
     * requireAllClusterKeysForCoPartition=false above for coarse-key
-    * layouts). Call it on a MATERIALIZED subtree (persist + count
-    * first, or a previous cut): then the cut plan is a pure cache/RDD
-    * scan and AQE-off costs nothing; a cut plan with its own fresh
-    * exchanges would run them at the static shuffle partition count. */
-  def cut(s: SparkSession,
-      df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-    ckptDir.foreach { d =>
-      if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
-    }
-    withAqeOff(s, disable = true) {
-      if (ckptDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
-    }
-  }
+    * layouts). The checkpoint runs with the session's own conf (AQE
+    * on), and nothing is written to it. Call it on a MATERIALIZED
+    * subtree (persist + count first, or a previous cut): then the cut
+    * plan is a pure cache/RDD scan. */
+  def cut(s: SparkSession, df: DataFrame): DataFrame =
+    GraftSqlBridge.withExecutedLayout(df, roundCut(s, df))
+
+  /** Per-round lineage cut for loop state: AQE stays on, so every
+    * round's shuffle is sized at runtime, and the cut relation reports
+    * no partitioning (see [[cut]]). With the dir unset it is a
+    * localCheckpoint of the given eagerness (a lazy one is materialized
+    * by the next action that reads it). With the dir set it is a
+    * reliable checkpoint, always eager: a lazy reliable checkpoint
+    * recomputes its input in a second job after the first action. */
+  def roundCut(s: SparkSession, df: DataFrame, eager: Boolean = true): DataFrame =
+    if (reliable(s)) df.checkpoint() else df.localCheckpoint(eager)
 
   /** Recommended configs for a real cluster run, sized from the
     * topology. shuffle.partitions targets 2–3 waves of tasks per

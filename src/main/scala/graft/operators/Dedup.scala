@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDef
+import graft.{GraftSession, QueryDef}
 import graft.functions.Vectors
 import graft.operators.Similarity.{ivfAssignSql => ivfSql}
 import graft.operators.TextOps.{normText, tokens}
@@ -468,7 +468,7 @@ object Dedup {
     // min-label propagation; the convergence test rides the SAME job
     // that materializes the round (old label carried through the agg,
     // delta counted on the cached result — one job per round, not two),
-    // and localCheckpoint truncates lineage so late rounds don't replay
+    // and a per-round cut truncates lineage so late rounds don't replay
     // the whole chain. Oracle side: recursive CTE over the same
     // deterministic edge set. Every doc gets a cluster id (= min doc_id
     // reachable); singletons are their own cluster.
@@ -979,18 +979,12 @@ object Dedup {
       // rejoin via a left join at the end.
       var labels = edges.select(col("src").as("doc_id")).distinct()
         .select(col("doc_id"), col("doc_id").as("label")).persist()
-      // Lineage cut per round: localCheckpoint by default (fast, but
-      // its blocks die with their executor — acceptable in local mode /
-      // short jobs); setting spark.graft.checkpoint.dir switches to a
-      // RELIABLE checkpoint on the shared filesystem, which a
-      // 1000-executor job needs so one lost executor doesn't force a
-      // full restart of the iteration.
-      val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-      ckptDir.foreach { d =>
-        if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
-      }
-      def cutLineage(df: DataFrame): DataFrame =
-        if (ckptDir.isDefined) df.checkpoint() else df.localCheckpoint(false)
+      // Lineage cut per round (GraftSession.roundCut): a lazy
+      // local checkpoint by default (fast, but its blocks die with their
+      // executor — acceptable in local mode / short jobs); setting
+      // spark.graft.checkpoint.dir switches to a RELIABLE checkpoint on
+      // the shared filesystem, which a 1000-executor job needs so one
+      // lost executor doesn't force a full restart of the iteration.
       // r16: AQE stays ON through the loop. The r12-era off-switch
       // predated cached-plan AQE (GraftSession.tune's
       // canChangeCachedPlanOutputPartitioning): with the cached edge
@@ -1026,10 +1020,12 @@ object Dedup {
           col("label").as("old_label"))
         // min(old_label) recovers the doc's previous label (the only
         // non-MaxValue contribution), so the delta test needs no second
-        // join; localCheckpoint caches AND cuts lineage at this round.
-        val next = cutLineage(own.unionByName(propagated).unionByName(shortcut)
-          .groupBy(col("doc_id"))
-          .agg(min(col("label")).as("label"), min(col("old_label")).as("old_label")))
+        // join; the round cut caches AND cuts lineage at this round.
+        val next = GraftSession.roundCut(s,
+          own.unionByName(propagated).unionByName(shortcut)
+            .groupBy(col("doc_id"))
+            .agg(min(col("label")).as("label"), min(col("old_label")).as("old_label")),
+          eager = false)
         val changed = next.filter(col("label") < col("old_label")).count()
         labels.unpersist()
         labels = next.select(col("doc_id"), col("label"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDef
+import graft.{GraftSession, QueryDef}
 import graft.sources.{Connectors, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -1068,7 +1068,7 @@ object Etl {
           // the final plan re-executes it per reference (63 distinct
           // exchanges at 6 steps); with it each step is a flat 2-stage
           // fragment over the previous step's materialization
-          .localCheckpoint(true)
+          .transform(GraftSession.roundCut(s, _))
       }
       cur.select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"),
         (lit(1L) + pmod(col("c_custkey"), lit(7L))).as("w_design"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDef
+import graft.{GraftSession, QueryDef}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -70,7 +70,7 @@ object Graph {
     * runs them side by side (graph_core_number: 4 lineage-cut jobs
     * instead of 3 chains × 4; per-round work is O(|ks|·E) keyed rows,
     * exactly the three chains' combined volume). Edge lineage is
-    * truncated once (the pageRanks localCheckpoint argument) so each
+    * truncated once (the pageRanks lineage-cut argument) so each
     * round plans a constant-size fragment instead of re-analyzing the
     * LSH candidate subtree. */
   private[graft] def kcoreSurvivorsMulti(
@@ -82,9 +82,8 @@ object Graph {
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       // one fixed partitioning serves every round's src-side join
       .repartition(col("src")).persist()
-    val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
     edges.count() // force the cache before the lineage cut
-    val edgesCk = graft.GraftSession.cut(s, edges)
+    val edgesCk = GraftSession.cut(s, edges)
     var cur = edgesCk.select(col("src").as("id")).distinct()
       .select(col("id"), explode(typedLit(ks)).as("k"))
     for (_ <- 0 until rounds) {
@@ -98,7 +97,7 @@ object Graph {
         .groupBy(col("src"), col("k")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= col("k"))
         .select(col("src").as("id"), col("k"), col("d"))
-      cur = if (ckptDir.isDefined) next.checkpoint() else next.localCheckpoint(true)
+      cur = GraftSession.roundCut(s, next)
     }
     cur
   }
@@ -142,10 +141,6 @@ object Graph {
       .repartition(col("src")).persist() // (src, dst, deg)
     // nodes that can ever receive rank mass = edge endpoints
     val nodesE = edgesD.select(col("dst").as("doc_id")).distinct().persist()
-    val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-    ckptDir.foreach { d =>
-      if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
-    }
     // r16 loop shape (guide §1.2/§2.4): the rank vector is referenced
     // ONCE per round, so the whole `iters`-round recurrence can stay
     // LAZY — one query, one job, AQE pipelines every round's two
@@ -153,17 +148,18 @@ object Graph {
     // r9-era eager-per-round cut existed because every round's plan
     // re-embedded the full LSH-candidate subtree (superlinear Catalyst
     // cost: lazy 9.5 s vs eager 2.5 s at sf0.1); truncating the edge
-    // relation's LINEAGE once (localCheckpoint over the materialized
+    // relation's LINEAGE once (a local checkpoint over the materialized
     // cache — a corpus-linear block copy, partitioning metadata
     // preserved) makes each round a constant-size 2-join fragment and
     // the r16 profile puts the lazy chain at 0.9 s wall / 0.03 s task
     // vs 3.0 s / 15.8 s for the eager-cut AQE-off loop. With
-    // spark.graft.checkpoint.dir set the per-round RELIABLE checkpoint
-    // is kept so a 1000-executor run survives executor loss without
-    // replaying the whole iteration.
+    // spark.graft.checkpoint.dir set a per-round RELIABLE checkpoint
+    // is taken so a 1000-executor run survives executor loss without
+    // replaying the whole iteration — the AQE-on round cut, since each
+    // round's plan has fresh exchanges.
     edgesD.count() // force the cache before the lineage cut
-    val edgesCk = graft.GraftSession.cut(s, edgesD)
-    val nodesCk = graft.GraftSession.cut(s, nodesE)
+    val edgesCk = GraftSession.cut(s, edgesD)
+    val nodesCk = GraftSession.cut(s, nodesE)
     var r = nodesCk.withColumn("r", lit(FP))
     for (_ <- 0 until iters) {
       val sums = edgesCk
@@ -174,7 +170,7 @@ object Graph {
         .join(sums, col("doc_id") === col("dst"), "left_outer")
         .select(col("doc_id"),
           expr("(15 * 1048576L + 85 * coalesce(contrib_sum, 0L)) div 100").as("r"))
-      r = if (ckptDir.isDefined) graft.GraftSession.cut(s, next) else next
+      r = if (GraftSession.reliableCuts(s)) GraftSession.roundCut(s, next) else next
     }
     r
   }
@@ -229,7 +225,7 @@ object Graph {
     // over a lineage-truncated edge base — one query, one job, no
     // per-round checkpoint jobs.
     edges.count() // force the cache before the lineage cut
-    val edgesCk = graft.GraftSession.cut(s, edges)
+    val edgesCk = GraftSession.cut(s, edges)
     val enodes = edgesCk.select(col("dst").as("doc_id")).distinct()
     // every edge-subgraph node has in-neighbors (edges are mirrored),
     // so the round's argmax is total — no carry-over coalesce needed
@@ -252,11 +248,10 @@ object Graph {
     // edges in three more joins and per-reference re-analysis of the
     // LSH subtree was the measured driver cost. This cut's plan IS the
     // whole 4-round recurrence (fresh exchanges), so it stays on the
-    // AQE-ON path — routing it through GraftSession.cut ran every
-    // round's shuffle at the static partition count (measured: lpa
-    // task 0.17→13.9 s, modularity 0.24→19.9 s; reverted).
-    val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-    (edgesCk, if (ckptDir.isDefined) l.checkpoint() else l.localCheckpoint(true))
+    // AQE-ON round cut — a cut planned with AQE off ran every round's
+    // shuffle at the static partition count (measured: lpa task
+    // 0.17→13.9 s, modularity 0.24→19.9 s; reverted).
+    (edgesCk, GraftSession.roundCut(s, l))
   }
 
   val defs: Seq[(String, QueryDef)] = Seq(
@@ -265,9 +260,10 @@ object Graph {
     // PageRank over the near-dup graph, 8 synchronous iterations.
     // Scale shape = Pregel: per iteration ONE join of the rank vector
     // to the (src, dst, deg) edge relation and ONE keyed aggregation —
-    // O(E) work and two bounded exchanges per round, lineage cut per
-    // round (localCheckpoint, or a reliable checkpoint via
-    // spark.graft.checkpoint.dir exactly like dedup_cluster_assign).
+    // O(E) work and two bounded exchanges per round; the rounds form one
+    // lazy cascade over a lineage-cut edge base, with a reliable
+    // checkpoint per round when spark.graft.checkpoint.dir is set (see
+    // pageRanks).
     // Only the edge subgraph iterates: a node with no in-edges holds
     // the closed-form base rank (15·FP) div 100 after round 1 and can
     // never influence a neighbor, so singletons — the overwhelming
@@ -471,7 +467,7 @@ object Graph {
         // that combinatorial tree was the measured cost (1.5 s wall,
         // 0.01 s task: pure driver time). The cut reads the warm
         // caches once per pass and leaves downstream plans tiny.
-        .localCheckpoint(true)
+        .transform(GraftSession.roundCut(s, _))
       val e1 = o.select(col("u"), col("v").as("x"), col("dv").as("dx"))
       val e2 = o.select(col("u"), col("v").as("y"), col("dv").as("dy"))
       e1.join(e2, Seq("u"))
@@ -553,7 +549,7 @@ object Graph {
         // wedge closure and 3-way explode nest o and tri so the
         // combinatorial re-analysis of the LSH subtree was ~2.7 s of
         // pure driver time per pass (task 0.00 s)
-        .localCheckpoint(true)
+        .transform(GraftSession.roundCut(s, _))
       val e1 = o.select(col("u"), col("v").as("x"), col("dv").as("dx"))
       val e2 = o.select(col("u"), col("v").as("y"), col("dv").as("dy"))
       val tri = e1.join(e2, Seq("u"))
@@ -561,7 +557,8 @@ object Graph {
           (col("dx") === col("dy") && col("x") < col("y")))
         .join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
         .select(col("u"), col("x"), col("y"))
-        .localCheckpoint(true) // the 3-way node explode reads the closure once
+        // the 3-way node explode reads the closure once
+        .transform(GraftSession.roundCut(s, _))
       val tc = tri.select(col("u").as("nd"))
         .union(tri.select(col("x").as("nd")))
         .union(tri.select(col("y").as("nd")))
@@ -826,10 +823,6 @@ object Graph {
         .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .repartition(col("src")).persist() // Pregel layout: edges never move
       val nodesE = edges.select(col("dst").as("doc_id")).distinct().persist()
-      val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-      ckptDir.foreach { d =>
-        if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
-      }
       edges.count() // force the cache before the lineage cut
       // r16 (guide §1.2): each round's message aggregate used to be
       // read TWICE (the 1-row total, then the renormalize), forcing an
@@ -840,15 +833,15 @@ object Graph {
       // x·deg ≡ deg-fold addition even mod 2⁶⁴). With the aggregate
       // referenced once, each round is ONE lineage-cut job (+ the
       // 1-row broadcast subquery); the edge lineage is truncated once
-      // (the pageRanks localCheckpoint argument) so per-round plans
+      // (the pageRanks lineage-cut argument) so per-round plans
       // stay constant-size.
-      val edgesCk = graft.GraftSession.cut(s, edges)
+      val edgesCk = GraftSession.cut(s, edges)
       // degE derives from the CUT edge base: its layout is concrete, so
-      // the degree agg plans exchange-free inside the (AQE-off) cut
-      val degE = graft.GraftSession.cut(s,
+      // the degree agg plans exchange-free inside the cut
+      val degE = GraftSession.cut(s,
         edgesCk.groupBy(col("src")).agg(count(lit(1)).as("deg")))
       val nfp = nodesE.count() * FP
-      var x = graft.GraftSession.cut(s, nodesE.withColumn("v", lit(FP)))
+      var x = GraftSession.cut(s, nodesE.withColumn("v", lit(FP)))
       for (_ <- 0 until EigenIters) {
         val tot = x.join(degE.withColumnRenamed("src", "doc_id"), Seq("doc_id"))
           .agg(sum(col("v") * col("deg")).as("tot"))
@@ -859,7 +852,7 @@ object Graph {
           .select(col("dst").as("doc_id"),
             floor(col("msum").cast(DoubleType) / col("tot") * lit(nfp))
               .cast(LongType).as("v"))
-        x = if (ckptDir.isDefined) next.checkpoint() else next.localCheckpoint(true)
+        x = GraftSession.roundCut(s, next)
       }
       Tables.documents(s, dir).select(col("doc_id"))
         .join(x, Seq("doc_id"), "left_outer")
@@ -924,31 +917,25 @@ object Graph {
         .select(col("doc_a"), col("doc_b"))
       // partition the edge relation by src ONCE; every round's frontier
       // join reuses that layout (only the frontier moves per round).
-      // Rounds are cut eagerly (localCheckpoint; the pageRanks lesson —
+      // Rounds are cut eagerly (GraftSession.roundCut; the pageRanks lesson —
       // a lazy 3-round cascade re-plans the whole LSH candidate
       // pipeline per round), upgraded to a reliable checkpoint when
       // spark.graft.checkpoint.dir is set.
       val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
         .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
         .repartition(col("src")).persist()
-      val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-      ckptDir.foreach { d =>
-        if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
-      }
-      def cut(df: org.apache.spark.sql.DataFrame) = // per-round: AQE stays on
-        if (ckptDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
       // r16: truncate the edge lineage once so each round's cut plans
       // a constant-size fragment instead of re-analyzing the LSH
       // candidate subtree (the pageRanks argument; driver analysis,
       // not execution, was the measured per-round cost)
       edges.count()
-      val edgesCk = graft.GraftSession.cut(s, edges)
-      var dist = cut(seeds.select(col("doc_id"), lit(0L).as("dist")))
+      val edgesCk = GraftSession.cut(s, edges)
+      var dist = GraftSession.roundCut(s, seeds.select(col("doc_id"), lit(0L).as("dist")))
       for (_ <- 0 until 3) {
         val nxt = edgesCk
           .join(dist.withColumnRenamed("doc_id", "src"), Seq("src"))
           .select(col("dst").as("doc_id"), (col("dist") + 1).as("dist"))
-        dist = cut(dist.unionByName(nxt)
+        dist = GraftSession.roundCut(s, dist.unionByName(nxt)
           .groupBy(col("doc_id")).agg(min(col("dist")).as("dist")))
       }
       dist
@@ -1253,25 +1240,19 @@ object Graph {
       val seeds = edges.select(col("src").as("id")).distinct()
         .orderBy(md5(col("id").cast("string")).asc, col("id").asc)
         .limit(8) // TakeOrdered top-8: no global sort materializes
-      val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-      ckptDir.foreach { d =>
-        if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
-      }
-      def cut(df: DataFrame) = // per-round: AQE stays on
-        if (ckptDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
       // r16: truncate the edge lineage once so each round's cut plans
       // a constant-size fragment instead of re-analyzing the LSH
       // candidate subtree (the pageRanks argument)
       edges.count()
-      val edgesCk = graft.GraftSession.cut(s, edges)
-      var dist = cut(seeds.select(col("id").as("seed"), col("id").as("doc_id"),
-        lit(0L).as("dist")))
+      val edgesCk = GraftSession.cut(s, edges)
+      var dist = GraftSession.roundCut(s,
+        seeds.select(col("id").as("seed"), col("id").as("doc_id"), lit(0L).as("dist")))
       for (_ <- 0 until 3) {
         val nxt = edgesCk
           .join(dist.withColumnRenamed("doc_id", "src"), Seq("src"))
           .select(col("seed"), col("dst").as("doc_id"),
             (col("dist") + 1).as("dist"))
-        dist = cut(dist.unionByName(nxt)
+        dist = GraftSession.roundCut(s, dist.unionByName(nxt)
           .groupBy(col("seed"), col("doc_id")).agg(min(col("dist")).as("dist")))
       }
       dist.groupBy(col("doc_id"))
@@ -1357,12 +1338,6 @@ object Graph {
       val edgesByP = edges0.repartition(col("p")).persist()
       val cfp = edgesByC.select(col("c")).distinct().count() * FP
       val pfp = edgesByP.select(col("p")).distinct().count() * FP
-      val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-      ckptDir.foreach { d =>
-        if (s.sparkContext.getCheckpointDir.isEmpty) s.sparkContext.setCheckpointDir(d)
-      }
-      def cut(df: DataFrame) = // per-round: AQE stays on
-        if (ckptDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
       // r16 (guide §1.2): each half-step's renormalization total used
       // to require materializing the edge-join aggregate so it could
       // be read twice (total, then renormalize). The total is the same
@@ -1376,19 +1351,19 @@ object Graph {
       // CONCRETE to every half-step join (under cached-plan AQE an
       // InMemoryTableScan's partitioning is unknown at planning time,
       // so the half-steps were re-exchanging O(E) despite the copies)
-      val edgesByCCk = graft.GraftSession.cut(s, edgesByC)
-      val edgesByPCk = graft.GraftSession.cut(s, edgesByP)
-      val degC = graft.GraftSession.cut(s,
+      val edgesByCCk = GraftSession.cut(s, edgesByC)
+      val edgesByPCk = GraftSession.cut(s, edgesByP)
+      val degC = GraftSession.cut(s,
         edgesByCCk.groupBy(col("c")).agg(count(lit(1)).as("dc")))
-      val degP = graft.GraftSession.cut(s,
+      val degP = GraftSession.cut(s,
         edgesByPCk.groupBy(col("p")).agg(count(lit(1)).as("dp")))
-      var h = cut(edgesByCCk.select(col("c")).distinct()
+      var h = GraftSession.roundCut(s, edgesByCCk.select(col("c")).distinct()
         .withColumn("v", lit(FP)))
       var an: DataFrame = null
       for (_ <- 0 until HitsRounds) {
         val ta = h.join(degC, Seq("c"))
           .agg(sum(col("v") * col("dc")).as("tot"))
-        an = cut(edgesByCCk.join(h, Seq("c"))
+        an = GraftSession.roundCut(s, edgesByCCk.join(h, Seq("c"))
           .groupBy(col("p")).agg(sum(col("v")).as("av"))
           .crossJoin(broadcast(ta))
           .select(col("p"),
@@ -1396,7 +1371,7 @@ object Graph {
               .cast(LongType).as("v")))
         val th = an.join(degP, Seq("p"))
           .agg(sum(col("v") * col("dp")).as("tot"))
-        h = cut(edgesByPCk.join(an, Seq("p"))
+        h = GraftSession.roundCut(s, edgesByPCk.join(an, Seq("p"))
           .groupBy(col("c")).agg(sum(col("v")).as("hv"))
           .crossJoin(broadcast(th))
           .select(col("c"),
@@ -1564,22 +1539,15 @@ object Graph {
         .agg(count(lit(1)).as("deg"))
         .orderBy(col("deg").desc, col("seed").asc).limit(8)
         .select(col("seed"))
-      val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-      ckptDir.foreach { d =>
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(d)
-      }
-      def cut(df: DataFrame) = // per-round: AQE stays on
-        if (ckptDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
       // r16: truncate the edge lineage once so each round's cut plans
       // a constant-size fragment instead of re-analyzing the embedding
       // near-dup subtree (the pageRanks argument)
       edges.count()
-      val edgesCk = graft.GraftSession.cut(s, edges)
+      val edgesCk = GraftSession.cut(s, edges)
       // forward: visited (seed, doc_id, dist, sigma), one frontier
       // join + one (seed, dst) keyed σ-sum + one anti-join per round
-      var vis = cut(seeds.select(col("seed"), col("seed").as("doc_id"),
-        lit(0L).as("dist"), lit(1L).as("sigma")))
+      var vis = GraftSession.roundCut(s, seeds.select(col("seed"),
+        col("seed").as("doc_id"), lit(0L).as("dist"), lit(1L).as("sigma")))
       for (i <- 0 until 4) {
         val msgs = edgesCk
           .join(vis.filter(col("dist") === i)
@@ -1591,7 +1559,7 @@ object Graph {
             Seq("seed", "doc_id"), "left_anti")
           .select(col("seed"), col("doc_id"), lit(i + 1L).as("dist"),
             col("sig").as("sigma"))
-        vis = cut(vis.unionByName(fresh))
+        vis = GraftSession.roundCut(s, vis.unionByName(fresh))
       }
       // backward: δ-contributions per depth, deepest first; each term
       // snaps ×10⁹ before the per-(seed, node) sum
@@ -1617,8 +1585,8 @@ object Graph {
           .groupBy(col("seed"), col("doc_id"))
           .agg(sum(col("t")).as("dfp"))
       }
-      val c3 = cut(backStep(3, None))
-      val c2 = cut(backStep(2, Some(c3)))
+      val c3 = GraftSession.roundCut(s, backStep(3, None))
+      val c2 = GraftSession.roundCut(s, backStep(2, Some(c3)))
       val c1 = backStep(1, Some(c2))
       c1.unionByName(c2).unionByName(c3)
         .groupBy(col("doc_id"))
@@ -1686,26 +1654,19 @@ object Graph {
         .repartition(col("src")).persist()
       val seeds = edges.select(col("src").as("seed")).distinct()
         .orderBy(col("seed").asc).limit(8)
-      val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-      ckptDir.foreach { d =>
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(d)
-      }
-      def cut(df: DataFrame) = // per-round: AQE stays on
-        if (ckptDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
       // r16: truncate the edge lineage once so each round's cut plans
       // a constant-size fragment instead of re-analyzing the LSH
       // candidate subtree (the pageRanks argument)
       edges.count()
-      val edgesCk = graft.GraftSession.cut(s, edges)
-      var dist = cut(seeds.select(col("seed"), col("seed").as("doc_id"),
-        lit(0L).as("dist")))
+      val edgesCk = GraftSession.cut(s, edges)
+      var dist = GraftSession.roundCut(s,
+        seeds.select(col("seed"), col("seed").as("doc_id"), lit(0L).as("dist")))
       for (_ <- 0 until 4) {
         val nxt = edgesCk
           .join(dist.withColumnRenamed("doc_id", "src"), Seq("src"))
           .select(col("seed"), col("dst").as("doc_id"),
             (col("dist") + 1).as("dist"))
-        dist = cut(dist.unionByName(nxt)
+        dist = GraftSession.roundCut(s, dist.unionByName(nxt)
           .groupBy(col("seed"), col("doc_id"))
           .agg(min(col("dist")).as("dist")))
       }
@@ -1788,13 +1749,6 @@ object Graph {
         .repartition(col("src")).persist()
       val seeds = edgesD.select(col("src").as("seed")).distinct()
         .orderBy(col("seed").asc).limit(8)
-      val ckptDir = s.conf.getOption("spark.graft.checkpoint.dir")
-      ckptDir.foreach { d =>
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(d)
-      }
-      def cut(df: DataFrame) = // per-round: AQE stays on
-        if (ckptDir.isDefined) df.checkpoint() else df.localCheckpoint(true)
       // r16 (the pageRanks lazy-cascade argument): the score vector is
       // referenced once per round and seedRows twice — both tiny after
       // a single lineage cut — so the 4-round recurrence stays LAZY
@@ -1802,8 +1756,9 @@ object Graph {
       // per-round checkpoint jobs. With spark.graft.checkpoint.dir set
       // the per-round RELIABLE cut is kept for executor-loss recovery.
       edgesD.count() // force the cache before the lineage cut
-      val edgesCk = graft.GraftSession.cut(s, edgesD)
-      val seedRows = cut(seeds.select(col("seed"), col("seed").as("doc_id")))
+      val edgesCk = GraftSession.cut(s, edgesD)
+      val seedRows =
+        GraftSession.roundCut(s, seeds.select(col("seed"), col("seed").as("doc_id")))
       val r4 = {
           var r = seedRows.select(col("seed"), col("doc_id"),
             lit(FP).as("r"))
@@ -1819,7 +1774,7 @@ object Graph {
               .select(col("seed"), col("doc_id"),
                 expr("(CASE WHEN doc_id = seed THEN 15 * 1048576L " +
                   "ELSE 0L END + 85 * cs) div 100").as("r"))
-            r = if (ckptDir.isDefined) cut(next) else next
+            r = if (GraftSession.reliableCuts(s)) GraftSession.roundCut(s, next) else next
           }
           r
         }

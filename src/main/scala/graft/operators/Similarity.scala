@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDef
+import graft.{GraftSession, QueryDef}
 import graft.functions.Vectors
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -186,7 +186,7 @@ object Similarity {
     * the quantized top-MMR_CAND tier with ×10⁶-snapped relevance,
     * `pairs` the bounded candidate-candidate sim table, `selection`
     * the K greedy picks (probe_id, step, neighbor_id, rel_q6, mmr_fp).
-    * Each round's 1-row-per-probe pick is eagerly localCheckpoint()ed
+    * Each round's 1-row-per-probe pick is eagerly cut (GraftSession.roundCut)
     * — without the cut, round k's anti-join + penalty join each
     * re-embed round k−1's whole subtree and the plan doubles per round
     * (the audit measured 244 printed exchanges on the unpersisted
@@ -206,7 +206,8 @@ object Similarity {
       .select(col("probe_id"), col("neighbor_id"),
         floor(col("cos_q") * lit(1.0e6) + 0.5).cast(LongType).as("rel"),
         col("rn"))
-      .localCheckpoint() // ≤MMR_CAND×NPROBES rows; every greedy step re-reads
+      // ≤MMR_CAND×NPROBES rows; every greedy step re-reads
+      .transform(GraftSession.roundCut(s, _))
     val pa = cand.select(col("probe_id"), col("neighbor_id").as("a"))
     val pb = cand.select(col("probe_id").as("p2"),
       col("neighbor_id").as("b"))
@@ -223,12 +224,13 @@ object Similarity {
       .join(pb, col("probe_id") === col("p2") && col("a") =!= col("b"))
       .join(qa, "a").join(qb, "b")
       .select(col("probe_id"), col("a"), col("b"), pairSim.as("sim"))
-      .localCheckpoint() // MMR_CAND²×NPROBES pair table; K−1 steps re-read
+      // MMR_CAND²×NPROBES pair table; K−1 steps re-read
+      .transform(GraftSession.roundCut(s, _))
     // step 1: pure relevance — tier 1's rank-1 row IS the argmax
     val first = cand.filter(col("rn") === 1)
       .select(col("probe_id"), lit(1).as("step"), col("neighbor_id"),
         col("rel").as("rel_q6"), (col("rel") * 7).as("mmr_fp"))
-      .localCheckpoint()
+      .transform(GraftSession.roundCut(s, _))
     var steps = Vector(first)
     var selected = first.select(col("probe_id"), col("neighbor_id"))
     for (k <- 2 to K) {
@@ -252,7 +254,8 @@ object Similarity {
         .filter(col("rr") === 1)
         .select(col("probe_id"), lit(k).as("step"), col("neighbor_id"),
           col("rel").as("rel_q6"), col("mmr_fp"))
-        .localCheckpoint() // lineage cut: 1 row/probe feeds every later round
+        // lineage cut: 1 row/probe feeds every later round
+        .transform(GraftSession.roundCut(s, _))
       steps = steps :+ next
       selected = selected.unionByName(
         next.select(col("probe_id"), col("neighbor_id")))

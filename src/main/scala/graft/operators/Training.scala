@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDef
+import graft.{GraftSession, QueryDef}
 import graft.operators.TextOps.tokens
 import graft.sources.Tables
 import org.apache.spark.sql.Column
@@ -114,7 +114,7 @@ object Training {
     * alphabet admits at most |symbols|/2 disjoint picks, then the
     * effective batch widens as merged symbols grow the alphabet).
     * Returns (ranked merges, rounds executed). The replace-expression
-    * lineage over `cur` is CUT with a periodic localCheckpoint
+    * lineage over `cur` is CUT with a periodic GraftSession.roundCut
     * (vocab-bounded relation, exactly like the graph iterators) —
     * without the cut, round r re-evaluates all r prior replaces and
     * the Catalyst plan grows unboundedly, which is what used to bound
@@ -128,10 +128,11 @@ object Training {
       .select(regexp_replace(col("w"), "(.)", "<$1>").as("syms"), col("freq"))
       .persist() // vocab-sized; scanned once per merge round
     // adjacent-pair multiset of a (syms, freq) relation, each pair
-    // weighted freq·sign — the delta-maintenance building block
-    def pairsOf(df: org.apache.spark.sql.DataFrame,
-        sign: Long): org.apache.spark.sql.DataFrame =
-      df.select((col("freq") * sign).as("freq"),
+    // weighted by the word's freq. Recomputed in full every round:
+    // delta-maintained counts were measured ~2x slower at 60k words
+    // (a scan engine has no pair->word index; docs/SCALING.md).
+    def pairsOf(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+      df.select(col("freq"),
           split(expr("substring(syms, 2, length(syms) - 2)"), "><").as("l"))
         .filter(size(col("l")) >= 2)
         .select(col("freq"), explode(transform(
@@ -139,42 +140,15 @@ object Training {
           i => struct(element_at(col("l"), i).as("x"),
             element_at(col("l"), i + 1).as("y")))).as("b"))
         .select(col("b.x").as("x"), col("b.y").as("y"), col("freq"))
-    // r17 (judge #6, guide §1.2): DELTA-MAINTAINED pair counts,
-    // measured and REJECTED as the default. The identity is exact —
-    // only words whose symbol string CONTAINS a merged pattern change
-    // their pair multiset, so
-    //   pc' = pc − pairs(affected_before) + pairs(affected_after)
-    // — but in a scan-based engine the affected FILTER itself is a
-    // full pass over the vocabulary relation (there is no inverted
-    // pair→word index with point lookups, the structure the
-    // single-machine trainers exploit), and the delta round does TWO
-    // such passes (before/after) plus a 3-way union-agg where the
-    // full recompute does ONE pass into a map-side-combined agg.
-    // Measured (graft.tools.BpeScale, m=16): 3k-word corpus 83.1 s
-    // delta vs 81.0 s full; 60k-word corpus 49.7 s delta vs 23.9 s
-    // full — delta LOSES ~2× precisely where it was supposed to win,
-    // and the byte-identical merge sequence (asserted by the tool and
-    // BpeDeltaEquivalenceSpec) confirms both paths compute the same
-    // thing. The conf keeps the measured path auditable; the default
-    // stays the full recompute.
-    val delta = s.conf.getOption("spark.graft.bpe.delta")
-      .exists(_.toBoolean)
     var cur: org.apache.spark.sql.DataFrame = wf
-    var pc: org.apache.spark.sql.DataFrame =
-      if (delta)
-        pairsOf(wf, 1L).groupBy(col("x"), col("y"))
-          .agg(sum(col("freq")).as("freq")).localCheckpoint(false)
-      else null
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var rank = 0
     var rounds = 0
     var sinceCut = 0
     while (rank < totalMerges) {
       val want = math.min(math.max(m, 1), totalMerges - rank)
-      val pairCounts =
-        if (delta) pc
-        else pairsOf(cur, 1L)
-          .groupBy(col("x"), col("y")).agg(sum(col("freq")).as("freq"))
+      val pairCounts = pairsOf(cur)
+        .groupBy(col("x"), col("y")).agg(sum(col("freq")).as("freq"))
       val top = pairCounts
         .orderBy(col("freq").desc, col("x").asc, col("y").asc)
         .limit(math.max(4 * want, want + 1)).collect()
@@ -201,24 +175,6 @@ object Training {
           prefix.takeWhile(_._3 > top(prefix.length)._3)
         else prefix
       val batch = if (batch0.isEmpty) prefix.take(1) else batch0
-      if (delta) {
-        // delta update BEFORE cur advances: affected = rows containing
-        // any batch pattern (literal substring; tokens are [a-z0-9]+ so
-        // '<'/'>' delimiters cannot be spoofed)
-        val affected = cur.filter(batch
-          .map { case (x, y, _) => col("syms").contains(s"<$x><$y>") }
-          .reduce(_ || _))
-        var affNew = affected
-        batch.foreach { case (x, y, _) =>
-          affNew = affNew.withColumn("syms",
-            expr(s"replace(syms, '<$x><$y>', '<$x$y>')"))
-        }
-        pc = pc.unionByName(pairsOf(affected, -1L))
-          .unionByName(pairsOf(affNew, 1L))
-          .groupBy(col("x"), col("y")).agg(sum(col("freq")).as("freq"))
-          .filter(col("freq") > 0)
-          .localCheckpoint(false) // lazy — next round's collect runs it
-      }
       batch.foreach { case (x, y, f) =>
         rank += 1
         merges += ((rank, x, y, x + y, f))
@@ -228,7 +184,7 @@ object Training {
         sinceCut += 1
       }
       if (sinceCut >= 16) { // bound the replace chain (see header)
-        cur = cur.localCheckpoint(true)
+        cur = GraftSession.roundCut(s, cur)
         sinceCut = 0
       }
       rounds += 1

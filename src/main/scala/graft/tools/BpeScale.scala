@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * symbol-disjoint), so large m starves until merges grow the symbol
   * vocabulary; the study quantifies where.
   *
-  * Usage: runMain graft.tools.BpeScale [totalMerges] [m,m,...]
+  * Usage: runMain graft.tools.BpeScale [totalMerges] [m,m,...] [nWords]
   * Prints one line per m: rounds, effective batch, wall seconds, and
   * asserts every m produces the IDENTICAL merge sequence (the
   * sequential-equivalence theorem, checked at production shape).
@@ -56,10 +56,6 @@ object BpeScale {
     val ms = (if (args.length > 1) args(1) else "16,64,256")
       .split(",").map(_.trim.toInt).toSeq
     val nWords = if (args.length > 2) args(2).toInt else 3000
-    // 4th arg: comma-separated delta modes to A/B (true/false); the
-    // r17 delta-maintenance study runs both and asserts equivalence
-    val deltas = (if (args.length > 3) args(3) else "true")
-      .split(",").map(_.trim.toBoolean).toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -69,8 +65,7 @@ object BpeScale {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = syntheticCorpus(spark, nWords)
     var ref: Seq[(Int, String, String, String, Long)] = null
-    for (m <- ms; d <- deltas) {
-      spark.conf.set("spark.graft.bpe.delta", d.toString)
+    for (m <- ms) {
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val (merges, rounds) =
@@ -78,8 +73,8 @@ object BpeScale {
       val dt = (System.nanoTime() - t0) / 1e9
       if (ref == null) ref = merges
       else assert(merges == ref,
-        s"m=$m delta=$d diverged from the first run's merge sequence")
-      println(f"BPESCALE m=$m%-4d delta=$d%-5s nWords=$nWords " +
+        s"m=$m diverged from the first run's merge sequence")
+      println(f"BPESCALE m=$m%-4d nWords=$nWords " +
         f"merges=$totalMerges rounds=$rounds%-5d " +
         f"effective_batch=${totalMerges.toDouble / rounds}%.2f wall=$dt%.1fs " +
         f"seq_equivalent=${ref == merges}")

@@ -327,7 +327,7 @@ object ScaleStress {
           .join(sums, col("doc_id") === col("dst"), "left_outer")
           .select(col("doc_id"),
             expr(s"(15 * ${FP}L + 85 * coalesce(contrib_sum, 0L)) div 100").as("r"))
-        r = next.localCheckpoint(true)
+        r = graft.GraftSession.roundCut(spark, next)
         println(f"[stress]   round $round: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
       r.count()

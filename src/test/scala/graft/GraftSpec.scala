@@ -788,24 +788,38 @@ class LshCapSpec extends AnyFunSuite {
   }
 }
 
+/** Where reliable cuts land: the SparkContext checkpoint dir is a
+  * fresh UUID child of `spark.graft.checkpoint.dir`. */
+object CheckpointDirs {
+  import java.nio.file.{Files, Path, Paths}
+
+  /** The dir the active checkpoint dir was created under. */
+  def activeParent(spark: org.apache.spark.sql.SparkSession): Path =
+    Paths.get(java.net.URI.create(spark.sparkContext.getCheckpointDir.get))
+      .getParent.toRealPath()
+
+  def files(dir: Path): Long =
+    Files.walk(dir).filter(Files.isRegularFile(_)).count()
+}
+
 class ClusterCheckpointSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  test("reliable-checkpoint mode produces identical clusters") {
-    import java.nio.file.{Files, Paths}
-    def clusters(): Set[(Long, Long, Boolean)] =
-      SparkEntry.queries("dedup_cluster_assign")(spark, sf)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    val base = clusters()
-    val dir = Files.createTempDirectory("graft_ckpt_rel").toString
-    spark.conf.set("spark.graft.checkpoint.dir", dir)
-    try {
-      assert(clusters() == base)
-      // the rounds actually wrote reliable checkpoint data
-      assert(Files.walk(Paths.get(dir)).filter(Files.isRegularFile(_)).count() > 0,
-        s"no checkpoint files under $dir")
-    } finally spark.conf.unset("spark.graft.checkpoint.dir")
-  }
+  for (q <- Seq("dedup_cluster_assign", "graph_pagerank", "graph_hits"))
+    test(s"reliable-checkpoint mode: $q returns the local-mode rows and writes under the dir") {
+      import java.nio.file.Files
+      def rows(): Seq[String] =
+        SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq.sorted
+      val base = rows()
+      val dir = Files.createTempDirectory("graft_ckpt_rel").toRealPath()
+      spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
+      try {
+        assert(rows() == base)
+        // the cuts wrote reliable checkpoint data under THIS test's dir
+        assert(CheckpointDirs.activeParent(spark) == dir)
+        assert(CheckpointDirs.files(dir) > 0, s"no checkpoint files under $dir")
+      } finally spark.conf.unset("spark.graft.checkpoint.dir")
+    }
 }
 
 class Scd2MergeSpec extends AnyFunSuite {
@@ -5507,75 +5521,88 @@ class BpeBatchEquivalenceSpec extends AnyFunSuite {
 
 class ReliableCutSpec extends AnyFunSuite {
   import SparkTestSession._
+  import java.nio.file.Files
+  import org.apache.spark.sql.functions.col
+
+  private def persisted() = {
+    val df = spark.range(1000).toDF("id").repartition(4, col("id"))
+    df.persist(); df.count()
+    df
+  }
 
   test("GraftSession.cut takes the RELIABLE checkpoint path when spark.graft.checkpoint.dir is set") {
     // r16 judge #4: the loop-invariant base cuts must survive executor
     // loss on a real cluster — localCheckpoint blocks die with their
     // executor, so with the conf set the cut must write a reliable
     // checkpoint to the shared dir (and still preserve rows + layout).
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt")
+    val dir = Files.createTempDirectory("graft_ckpt").toRealPath()
+    val df = persisted()
     try {
       spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
-      val df = spark.range(1000).toDF("id")
-        .repartition(4, org.apache.spark.sql.functions.col("id"))
-      df.persist(); df.count()
       val cut = GraftSession.cut(spark, df)
       assert(cut.count() == 1000)
       // reliable checkpoints materialize as part files under the dir;
       // a localCheckpoint writes nothing there
-      val files = java.nio.file.Files.walk(dir).filter(
-        java.nio.file.Files.isRegularFile(_)).count()
-      assert(files > 0,
+      assert(CheckpointDirs.activeParent(spark) == dir)
+      assert(CheckpointDirs.files(dir) > 0,
         s"no checkpoint files under $dir — cut took the local path " +
           "despite spark.graft.checkpoint.dir being set")
-      df.unpersist()
     } finally {
       spark.conf.unset("spark.graft.checkpoint.dir")
+      df.unpersist()
+    }
+  }
+
+  test("a changed spark.graft.checkpoint.dir takes effect on the next cut") {
+    val a = Files.createTempDirectory("graft_ckpt_a").toRealPath()
+    val b = Files.createTempDirectory("graft_ckpt_b").toRealPath()
+    val df = persisted()
+    try {
+      spark.conf.set("spark.graft.checkpoint.dir", a.toString)
+      assert(GraftSession.cut(spark, df).count() == 1000)
+      assert(CheckpointDirs.activeParent(spark) == a)
+      spark.conf.set("spark.graft.checkpoint.dir", b.toString)
+      assert(GraftSession.cut(spark, df).count() == 1000)
+      assert(CheckpointDirs.activeParent(spark) == b)
+      assert(CheckpointDirs.files(b) > 0, s"no checkpoint files under $b — dir A stuck")
+    } finally {
+      spark.conf.unset("spark.graft.checkpoint.dir")
+      df.unpersist()
     }
   }
 
   test("GraftSession.cut preserves the child's hash partitioning") {
     // the r17 layout contract: the cut's LogicalRDD must report the
     // concrete HashPartitioning so loop joins stay exchange-free
-    val df = spark.range(1000).toDF("id")
-      .repartition(4, org.apache.spark.sql.functions.col("id"))
-    df.persist(); df.count()
+    val df = persisted()
     val cut = GraftSession.cut(spark, df)
     val part = cut.queryExecution.executedPlan.outputPartitioning.toString
     assert(part.contains("hashpartitioning") && part.contains("4"),
       s"cut lost the layout: $part")
     df.unpersist()
   }
-}
 
-class BpeDeltaEquivalenceSpec extends AnyFunSuite {
-  import SparkTestSession._
-
-  test("delta-maintained pair counts replay the full-recompute merge sequence byte-for-byte") {
-    // r17 (judge #6): pc' = pc − pairs(affected_before) +
-    // pairs(affected_after) must reproduce the full recompute EXACTLY
-    // — same merges, same ranks, same frequencies — on both the sf
-    // fixture and the production-shaped synthetic corpus. (The delta
-    // path is default-OFF after measurement — see bpeTrainBatched —
-    // but its correctness stays pinned so the A/B stays meaningful.)
-    def both(dir: String, m: Int, merges: Int) = {
-      spark.conf.set("spark.graft.bpe.delta", "false")
-      val (full, fullRounds) =
-        graft.operators.Training.bpeTrainBatched(spark, dir, m, merges)
-      spark.catalog.clearCache()
-      spark.conf.set("spark.graft.bpe.delta", "true")
-      val (delta, deltaRounds) =
-        try graft.operators.Training.bpeTrainBatched(spark, dir, m, merges)
-        finally spark.conf.set("spark.graft.bpe.delta", "false")
-      assert(delta == full,
-        s"delta diverged from full recompute:\n$delta\nvs\n$full")
-      assert(deltaRounds == fullRounds)
-      (full, fullRounds)
-    }
-    both(sf, m = 4, merges = 8)
-    val dir = graft.tools.BpeScale.syntheticCorpus(spark, nWords = 400)
-    val (_, rounds) = both(dir, m = 16, merges = 48)
-    info(s"synthetic corpus: identical sequences over $rounds rounds")
+  test("GraftSession.cut never writes the session's AQE conf") {
+    // a concurrent reader of the shared session (Verify's workers plan
+    // unrelated queries on it) must never observe AQE switched off
+    val df = persisted()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val sawOff = new java.util.concurrent.atomic.AtomicInteger(0)
+    val polls = new java.util.concurrent.atomic.AtomicInteger(0)
+    val poller = new Thread(() =>
+      while (!done.get()) {
+        if (spark.conf.get("spark.sql.adaptive.enabled") == "false")
+          sawOff.incrementAndGet()
+        polls.incrementAndGet()
+      })
+    poller.start()
+    try for (_ <- 0 until 20) assert(GraftSession.cut(spark, df).count() == 1000)
+    finally { done.set(true); poller.join() }
+    df.unpersist()
+    assert(polls.get() > 0)
+    assert(sawOff.get() == 0,
+      s"AQE read false ${sawOff.get()} times in ${polls.get()} polls")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
   }
 }
 

@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 /** Benchmark main: one JSON line with per-query wall-clock at the
   * driver-provided scale factor.
@@ -44,8 +43,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   *
   * TENANCY-INDEPENDENT metric (round-14): alongside wall-clock, each
   * timed pass publishes its SUM OF TASK DURATIONS (`queries_task`,
-  * min of the two passes) collected by a SparkListener keyed on the
-  * per-pass job group. Wall-clock on a shared machine conflates the
+  * min of the two passes) collected by the [[JobGroupListener]] keyed
+  * on the per-pass job group. Wall-clock on a shared machine conflates the
   * query's own cost with run-level tenancy (the r13 graded artifact
   * read 7.29 s on a query the same-code close run put at 0.48 s —
   * BOTH min-of-2 passes sat inside one hot window); task time counts
@@ -55,42 +54,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   */
 object Bench {
 
-  /** Accumulates per-job-group sums of task durations (ms). Stage →
-    * group resolution happens at job start (a job's stages inherit its
-    * group); onTaskEnd adds the task's duration to its stage's group. */
-  private final class TaskTimeListener extends SparkListener {
-    val stageToGroup = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val groupTaskMs = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.LongAdder]()
-    override def onJobStart(js: SparkListenerJobStart): Unit = {
-      val g = Option(js.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .getOrElse("")
-      js.stageIds.foreach(sid => stageToGroup.put(sid, g))
-    }
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-      val g = stageToGroup.get(te.stageId)
-      if (g != null && te.taskInfo != null)
-        groupTaskMs
-          .computeIfAbsent(g, _ => new java.util.concurrent.atomic.LongAdder)
-          .add(te.taskInfo.duration)
-    }
-    def taskSec(group: String): Double =
-      Option(groupTaskMs.get(group)).map(_.sum() / 1e3).getOrElse(0.0)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.tune(spark)
-    val listener = new TaskTimeListener
+    val spark = GraftSession.local()
+    val listener = new JobGroupListener
     spark.sparkContext.addSparkListener(listener)
 
     // local profiling aid: comma-separated names to bench a subset
@@ -125,42 +92,9 @@ object Bench {
     }
     val failed = outcomes.collect { case (k, (a, b)) if a.isEmpty || b.isEmpty => k }
     val results = outcomes.collect { case (k, (Some(a), Some(b))) => k -> (a, b) }
-    // listener events arrive asynchronously on the bus; drain before
-    // reading. A fixed sleep undercounts on a loaded machine (late
-    // task-end events still in flight silently shrink queries_task —
-    // the metric cross-round deltas are adjudicated on), so: first ask
-    // the bus itself via reflection (LiveListenerBus.waitUntilEmpty is
-    // private[spark]), then poll until the accumulated totals are
-    // stable across consecutive 250 ms reads — 2 stable reads when the
-    // reflective drain succeeded (the poll is then just a cheap
-    // confirmation), 4 when it threw (see needStable below: without
-    // the bus's own word, a short stable streak can coincide with a
-    // still-flushing bus) — 15 s ceiling either way.
-    val busDrained =
-      try {
-        val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-          .invoke(spark.sparkContext)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-        true
-      } catch { case _: Throwable => false }
-    {
-      import scala.jdk.CollectionConverters._
-      // If the reflective drain failed, two equal 250 ms reads can
-      // coincide with a still-flushing bus (events not yet delivered
-      // in the first 500 ms window) — require a longer stable streak
-      // in that case so the undercount the poll exists to prevent
-      // cannot sneak back in through the fallback path.
-      val needStable = if (busDrained) 2 else 4
-      var prev = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < needStable && waited < 15000) {
-        val cur = listener.groupTaskMs.values().asScala.map(_.sum()).sum
-        if (cur == prev) stable += 1 else stable = 0
-        prev = cur
-        Thread.sleep(250); waited += 250
-      }
-    }
+    // listener events arrive asynchronously on the bus; a late
+    // task-end event would silently shrink queries_task
+    GraftSqlBridge.drainListenerBus(spark)
     val taskMins = results.map { case (k, _) =>
       k -> math.min(listener.taskSec(s"$k#1"), listener.taskSec(s"$k#2"))
     }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Formal extension entry point: registers the graft native expressions
-  * with any session built via
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * with any session built through `GraftSession.local`, a builder's
+  * `withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`. (For sessions the
   * library doesn't own, [[graft.functions.Vectors.register]] installs
   * the same functions imperatively.)

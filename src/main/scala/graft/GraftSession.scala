@@ -148,15 +148,24 @@ object GraftSession {
       "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer")
   }
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
-    val spark = SparkSession
-      .builder()
-      .master(s"local[$cores]")
+  /** Core count of a local session: `SPARK_GRAFT_CPUS`, default 4. Every
+    * graft main reads it here, so the tools run the session the bench
+    * runs. */
+  private def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.trim.toInt)
+
+  /** The session every graft main and the test fixture run on:
+    * `local[cores]`, [[GraftExtensions]], one shuffle partition per core,
+    * then [[tune]]. `conf` adds static settings (e.g. the warehouse dir)
+    * that must be fixed before the session exists. The one session
+    * builder in graft. */
+  def local(cores: Int = cpus, conf: Map[String, String] = Map.empty): SparkSession = {
+    val spark = SparkSession.builder().master(s"local[$cores]")
       .withExtensions(new GraftExtensions)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
+      .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)

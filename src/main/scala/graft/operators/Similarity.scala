@@ -1395,7 +1395,7 @@ object Similarity {
       // warm cost was pure stage-scheduling latency (measured 40
       // stages/257 tasks ≈ 2.1 s at sf0.1 with IDENTICAL counts solo
       // and in-suite — the r12 "creep" was this noise floor, not cache
-      // interaction; SuiteCreepProbe has the instrumentation). Every
+      // interaction; see SURVEY.md's r12 creep notes). Every
       // double/floor/pow op below mirrors the previous distributed
       // expressions 1:1, so the DuckDB oracle is bit-unchanged.
       val scRows = sc.collect().map(r => (r.getInt(0), r.getInt(1), r.getLong(2)))

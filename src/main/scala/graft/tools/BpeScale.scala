@@ -56,13 +56,7 @@ object BpeScale {
     val ms = (if (args.length > 1) args(1) else "16,64,256")
       .split(",").map(_.trim.toInt).toSeq
     val nWords = if (args.length > 2) args(2).toInt else 3000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local()
     val dir = syntheticCorpus(spark, nWords)
     var ref: Seq[(Int, String, String, String, Long)] = null
     for (m <- ms) {

@@ -1,18 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dev utility: dump formatted executed plans of headline queries to
   * docs/PLANS.md as scale-design evidence. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.tune(spark)
+    val spark = graft.GraftSession.local()
     val dir = "/root/testdata/sf0.01"
     val headline = Seq("q1_agg", "q6_multijoin", "q16_agg_join", "asof_join",
       "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_embedding_xcell",
@@ -51,7 +45,7 @@ object PlanDump {
       "etl_grubbs_test", "ev_cochran_q", "ev_brier_calibration",
       "ev_newey_west")
     val sb = new StringBuilder
-    sb.append("# Executed plans (headline queries, sf0.01, local[8])\n\n")
+    sb.append(s"# Executed plans (headline queries, sf0.01, ${spark.sparkContext.master})\n\n")
     sb.append("Generated by `graft.tools.PlanDump`. What to look for: " +
       "`PushedFilters`/`ReadSchema` on every scan (pushdown + pruning), " +
       "`BroadcastHashJoin` for dims, map-side partial aggregation " +

@@ -1,14 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
 /** Dev utility: dump `.explain("formatted")` for named queries to
   * <outDir>/<query>_<tag>.txt — the before/after plan evidence the
-  * optimization rounds commit under plans/rN/. Runs under the Bench
-  * environment (same master/partitions/tune) so the snapshots match
-  * what the bench executes.
+  * optimization rounds commit under plans/rN/. Runs on the Bench
+  * session (`GraftSession.local`, `SPARK_GRAFT_CPUS` cores) so the
+  * snapshots match what the bench executes.
   * Usage: runMain graft.tools.PlanSnap <q1,q2,...|ALL> <outDir> <tag> [sfDir]
   */
 object PlanSnap {
@@ -20,14 +19,7 @@ object PlanSnap {
     val tag = args(2)
     val dir = if (args.length > 3) args(3) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.tune(spark)
+    val spark = graft.GraftSession.local()
     Files.createDirectories(outDir)
     for (name <- names) {
       try {

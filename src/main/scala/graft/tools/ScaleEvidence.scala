@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.functions._
 
 /** Published scaling evidence for the blocked/capped families
@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * reports, per (family, sf):
   *
   *   * wall seconds and rows out,
-  *   * shuffle bytes/records written (SparkListener task metrics, bus
-  *     drained before reading — the ScaleStress discipline),
+  *   * shuffle bytes/records written (the measurement's job group in
+  *     [[graft.JobGroupListener]], bus drained before reading),
   *   * for the candidate-generating families: the CAPPED candidate
   *     count the operator actually processes next to the UNCAPPED
   *     count a blocking-only implementation would face (Σ s(s−1)/2
@@ -26,48 +26,25 @@ object ScaleEvidence {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1", "target/sf1d")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.tune(spark)
-
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
-      }
-    }
+    val spark = graft.GraftSession.local()
+    val listener = new graft.JobGroupListener
     spark.sparkContext.addSparkListener(listener)
-    def drainBus(): Unit = {
-      val bus = spark.sparkContext.getClass
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
 
+    var measured = 0
     def measure(sf: String, family: String,
         extra: Map[String, Long] = Map.empty)(f: => Long): Unit = {
-      drainBus()
-      val b0 = shuffleBytes.get(); val r0 = shuffleRecords.get()
+      measured += 1
+      val group = s"measure-$measured"
+      spark.sparkContext.setJobGroup(group, group)
       val t0 = System.nanoTime()
-      val rows = f
+      val rows = try f finally spark.sparkContext.clearJobGroup()
       val sec = (System.nanoTime() - t0) / 1e9
-      drainBus()
+      GraftSqlBridge.drainListenerBus(spark)
+      val st = listener.stages(group)
       val extraJson = extra.map { case (k, v) => s""","$k":$v""" }.mkString
       println(s"""{"family":"$family","sf":"$sf","sec":${math.round(sec * 1000) / 1000.0},""" +
-        s""""rows_out":$rows,"shuffle_mb":${math.round((shuffleBytes.get - b0) / 1e4) / 100.0},""" +
-        s""""shuffle_records":${shuffleRecords.get - r0}$extraJson}""")
+        s""""rows_out":$rows,"shuffle_mb":${math.round(st.map(_.shuffleWriteBytes).sum / 1e4) / 100.0},""" +
+        s""""shuffle_records":${st.map(_.shuffleWriteRecords).sum}$extraJson}""")
     }
 
     // SPARK_GRAFT_FAMILIES restricts the sweep (comma set of: minhash,

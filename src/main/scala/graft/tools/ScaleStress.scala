@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,13 +13,9 @@ import org.apache.spark.sql.types._
 object ScaleStress {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 20000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.driver.memory", "8g")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftSession.tune(spark)
+    val spark = graft.GraftSession.local()
+    val listener = new graft.JobGroupListener
+    spark.sparkContext.addSparkListener(listener)
 
     val fact = spark.range(n).select(
       (col("id") % 1500000L).as("orderkey"),
@@ -598,24 +593,13 @@ object ScaleStress {
     // etl_bootstrap_ci's scale claim: the B=100 replicate expansion is
     // row-local and its map-side partials collapse to B groups per
     // partition BEFORE the exchange, so shuffle volume is B×partitions
-    // rows — independent of corpus size. Measured directly: a
-    // SparkListener sums shuffle-write records across the job at 1/10
-    // scale and full scale; the two counts must be (near-)identical
+    // rows — independent of corpus size. Measured directly: the job
+    // group's shuffle-write records (JobGroupListener) at 1/10 scale
+    // and full scale; the two counts must be (near-)identical
     // while input rows differ 10×.
     for (nBoot <- Seq(n / 10, n)) {
-      // AtomicLong: onTaskEnd fires on the listener-bus thread while
-      // the main thread reads the total afterwards — a plain var could
-      // tear or under-report
-      val shuffleRecords = new java.util.concurrent.atomic.AtomicLong(0L)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null)
-            shuffleRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
+      val group = s"bootstrap-$nBoot"
+      spark.sparkContext.setJobGroup(group, group)
       stressTime(s"poisson bootstrap B=100 over $nBoot rows", nBoot) {
         val base = spark.range(nBoot).select(col("id"),
           (pmod(hash(col("id")), lit(10000)) + 1).cast(LongType).as("xfp"))
@@ -632,15 +616,10 @@ object ScaleStress {
           .agg(sum(col("w") * col("xfp")).as("swx"), sum(col("w")).as("sw"))
           .count()
       }
-      // drain the listener bus deterministically before reading the
-      // counter — a fixed sleep can under-report when the bus is backed
-      // up. listenerBus is private[spark] (public in bytecode), so go
-      // through reflection.
-      val bus = spark.sparkContext.getClass
-        .getMethod("listenerBus").invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      spark.sparkContext.removeSparkListener(listener)
-      println(s"[stress]   shuffle records written: ${shuffleRecords.get} " +
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      val shuffleRecords = listener.stages(group).map(_.shuffleWriteRecords).sum
+      println(s"[stress]   shuffle records written: $shuffleRecords " +
         s"(B×maps bound, input-size-independent)")
     }
 

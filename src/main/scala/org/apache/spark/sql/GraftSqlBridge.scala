@@ -3,12 +3,12 @@ package org.apache.spark.sql
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection}
 
-/** The one sanctioned crossing into Spark's `private[sql]` surface:
-  * constructing a DataFrame from a custom [[LogicalPlan]] node
-  * (`Dataset.ofRows` has no public equivalent) and restating a
-  * checkpoint's layout. Everything else in the graft library stays on
-  * public API; keeping this file this small keeps the private-API blast
-  * radius auditable.
+/** The one sanctioned crossing into Spark's `private[sql]` and
+  * `private[spark]` surface: constructing a DataFrame from a custom
+  * [[LogicalPlan]] node (`Dataset.ofRows` has no public equivalent),
+  * restating a checkpoint's layout and draining the listener bus.
+  * Everything else in the graft library stays on public API; keeping
+  * this file this small keeps the private-API blast radius auditable.
   */
 object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -36,4 +36,11 @@ object GraftSqlBridge {
       firstLeaf(ran.outputPartitioning), ran.outputOrdering,
       Boolean.box(rdd.isStreaming), rdd.stream)))
   }
+
+  /** Blocks until every event posted so far has reached every listener
+    * (a listener reads stale totals otherwise); throws
+    * `java.util.concurrent.TimeoutException` if the bus does not drain
+    * within Spark's 10 s default. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

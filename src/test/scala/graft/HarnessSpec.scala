@@ -1,0 +1,100 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+class GraftSessionSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  test("the shared session carries GraftExtensions' injected functions") {
+    // none of these is registered imperatively (Vectors.register), so
+    // only a session built with the extensions knows them
+    for (f <- Seq("graft_topk_by_key", "graft_topk_by_skey",
+        "graft_kll_quantiles", "graft_gram"))
+      assert(spark.catalog.functionExists(f), s"$f is not registered")
+  }
+}
+
+class JobGroupListenerSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  private def underGroup[T](g: String)(f: => T): T = {
+    spark.sparkContext.setJobGroup(g, g)
+    try f finally spark.sparkContext.clearJobGroup()
+  }
+
+  private def withListener(f: JobGroupListener => Unit): Unit = {
+    val l = new JobGroupListener
+    spark.sparkContext.addSparkListener(l)
+    try f(l) finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a 4-partition job is counted under its group after the drain") {
+    withListener { l =>
+      val g = "job-group-listener-spec"
+      underGroup(g) {
+        spark.sparkContext.parallelize(1 to 4, 4)
+          .map { i => Thread.sleep(20); i }.count()
+      }
+      GraftSqlBridge.drainListenerBus(spark)
+      assert(l.jobs(g) == 1)
+      assert(l.stages(g).map(_.tasks).sum == 4)
+      assert(l.taskSec(g) > 0.0)
+      assert(l.stages(g).map(_.runMs).sum > 0L)
+      assert(l.jobs("no-such-group") == 0)
+      assert(l.stages("no-such-group").isEmpty)
+      assert(l.taskSec("no-such-group") == 0.0)
+    }
+  }
+
+  test("stage rows carry the group's shuffle traffic") {
+    withListener { l =>
+      val g = "job-group-listener-shuffle"
+      underGroup(g) {
+        spark.range(0, 10000, 1, 4).groupBy(col("id") % 10).count().collect()
+      }
+      GraftSqlBridge.drainListenerBus(spark)
+      val rows = l.stages(g)
+      assert(rows.map(_.shuffleWriteRecords).sum > 0L)
+      assert(rows.map(_.shuffleWriteBytes).sum > 0L)
+      assert(rows.map(_.shuffleReadBytes).sum > 0L)
+    }
+  }
+}
+
+/** Keeps the mains on one session factory, one listener and one bus
+  * drain: fails when `src/main/scala` grows a second of any. */
+class MainsGuardSpec extends AnyFunSuite {
+  private val root = Paths.get("src/main/scala")
+
+  private def hits(pattern: String): Seq[(String, Int)] = {
+    assert(Files.isRegularFile(root.resolve("graft/GraftSession.scala")),
+      s"no graft sources under ${root.toAbsolutePath}")
+    val re = pattern.r
+    val files = Files.walk(root)
+    try files.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map((p: Path) => root.relativize(p).toString ->
+        re.findAllIn(Files.readString(p)).size)
+      .filter(_._2 > 0).sortBy(_._1)
+    finally files.close()
+  }
+
+  test("GraftSession.local is the one SparkSession builder") {
+    assert(hits("""SparkSession\s*\.\s*builder""") ==
+      Seq("graft/GraftSession.scala" -> 1))
+  }
+
+  test("JobGroupListener is the one SparkListener") {
+    assert(hits("""(extends|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b""") ==
+      Seq("graft/JobGroupListener.scala" -> 1))
+  }
+
+  test("the listener bus is drained only through GraftSqlBridge") {
+    assert(hits("""getMethod\(\s*"listenerBus"""").isEmpty)
+  }
+}

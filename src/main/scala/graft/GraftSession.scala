@@ -155,17 +155,14 @@ object GraftSession {
 
   /** The session every graft main and the test fixture run on:
     * `local[cores]`, [[GraftExtensions]], one shuffle partition per core,
-    * then [[tune]]. `conf` adds static settings (e.g. the warehouse dir)
-    * that must be fixed before the session exists. The one session
-    * builder in graft. */
-  def local(cores: Int = cpus, conf: Map[String, String] = Map.empty): SparkSession = {
+    * then [[tune]]. The one session builder in graft. */
+  def local(cores: Int = cpus): SparkSession = {
     val spark = SparkSession.builder().master(s"local[$cores]")
       .withExtensions(new GraftExtensions)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
-      .config(conf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)

@@ -46,7 +46,7 @@ final class JobGroupListener extends SparkListener {
       stageRows.computeIfAbsent(g, _ => new ConcurrentLinkedQueue[StageRow])
         .add(StageRow(si.stageId, si.name.split("\n").head.take(90), si.numTasks,
           m.executorRunTime, m.executorCpuTime / 1000000L, m.jvmGCTime,
-          m.shuffleReadMetrics.totalBytesRead, m.shuffleReadMetrics.recordsRead,
+          m.shuffleReadMetrics.totalBytesRead,
           m.shuffleWriteMetrics.bytesWritten, m.shuffleWriteMetrics.recordsWritten,
           m.inputMetrics.bytesRead))
     }
@@ -67,6 +67,6 @@ object JobGroupListener {
   /** One completed stage: times in ms, sizes in bytes. */
   final case class StageRow(stageId: Int, name: String, tasks: Int,
       runMs: Long, cpuMs: Long, gcMs: Long,
-      shuffleReadBytes: Long, shuffleReadRecords: Long,
+      shuffleReadBytes: Long,
       shuffleWriteBytes: Long, shuffleWriteRecords: Long, inputBytes: Long)
 }

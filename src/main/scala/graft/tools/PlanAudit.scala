@@ -391,7 +391,8 @@ object PlanAudit {
       // the rewrite's vec_id exchanges (both sides of the merge join)
       // and the TopKByKey src_id agg, printed once per IMR-captured
       // reference of the PERSISTED knn base (truly cold, fresh-session
-      // count: 20 — distinctExchanges). All new exchanges ride (id, cell)
+      // count: 20, measured r16 with the since-deleted ExchangeProbe).
+      // All new exchanges ride (id, cell)
       // or the 3-per-src kNN relation; the knn base executes ONCE per
       // run (persisted at Similarity.scala's embedding_lof), so the
       // string-count growth is print duplication, not recomputation.
@@ -436,8 +437,8 @@ object PlanAudit {
       // Re-derived r17 after the one-anchor fold PERSISTS the 4-column
       // lineitem projection: the cached build's exchanges reprint per
       // InMemoryRelation reference (5 references across the two
-      // passes), pushing the printed count 20→30 (distinctExchanges
-      // 30 of 100 printed, every line l_returnflag-keyed
+      // passes), pushing the printed count 20→30 (r17, since-deleted
+      // ExchangeProbe: total=100 distinct=30, every line l_returnflag-keyed
       // bookkeeping); the executed corpus-scale moves are unchanged
       "etl_mad_robust" -> 30,
       // gap lag (user-keyed, 1 corpus move) + one rankSelectByKey pass
@@ -508,8 +509,8 @@ object PlanAudit {
       // Re-derived r17 after the native per-doc rewrite: the whole
       // 4-round recurrence runs inside graft_textrank_top3 over the
       // collected per-doc adjacency, so the plan is ONE doc_id-keyed
-      // exchange + two doc-local aggs + explode (distinctExchanges 1
-      // of 1 printed). +2 headroom for cache-state reprint
+      // exchange + two doc-local aggs + explode (r17, since-deleted
+      // ExchangeProbe: total=1 distinct=1). +2 headroom for cache-state reprint
       // variants of the tokenized-docs persist.
       "text_textrank" -> 3,
       // rides the full ann_ivf_assign budget (9) + its own ≤KCELLS-row

@@ -8,9 +8,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = GraftSession.local(4, Map(
-    "spark.sql.warehouse.dir" ->
-      java.nio.file.Files.createTempDirectory("graft_wh").toString))
+  // A static setting: SparkConf reads spark.* system properties when
+  // the session is built.
+  lazy val spark: SparkSession = {
+    sys.props("spark.sql.warehouse.dir") =
+      java.nio.file.Files.createTempDirectory("graft_wh").toString
+    GraftSession.local(4)
+  }
   val sf = "/root/testdata/sf0.001"
 }
 

@@ -243,6 +243,24 @@ object Dedup {
         col("nsh_a"))
   }
 
+  /** The verified near-dup graph: LSH candidate pairs (doc_a < doc_b)
+    * at exact jaccard ≥ 0.5. Mirrored in the oracle by [[nearDupPairsSql]]. */
+  private[operators] def nearDupPairs(s: SparkSession, dir: String): DataFrame =
+    verifiedCandidates(s, dir)
+      .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
+      .select(col("doc_a"), col("doc_b"))
+
+  /** Both directions (src, dst) of an undirected two-column pair relation. */
+  private[operators] def mirrored(pairs: DataFrame): DataFrame = {
+    val Array(a, b) = pairs.columns
+    pairs.select(col(a).as("src"), col(b).as("dst"))
+      .union(pairs.select(col(b).as("src"), col(a).as("dst")))
+  }
+
+  /** [[nearDupPairs]] as mirrored (src, dst) edges; oracle [[nearDupEdgesSql]]. */
+  private[operators] def nearDupEdges(s: SparkSession, dir: String): DataFrame =
+    mirrored(nearDupPairs(s, dir))
+
   /** Oracle mirror of the 60-bit md5 simhash: same hash, same ±1 bit
     * counts, same 4×15-bit banding — machine-generated 60-term SQL. */
   private val simhashOracleSql: String = {
@@ -294,6 +312,27 @@ object Dedup {
        |  FROM bands2 a JOIN bands2 b
        |    ON a.band = b.band AND a.sig = b.sig AND a.doc_id < b.doc_id)""".stripMargin
   }
+
+  /** Oracle mirror of [[nearDupPairs]]: a `WITH` prefix (shingleSql,
+    * candSql) ending at CTE `pairs` (doc_a, doc_b). Append `,` and
+    * further CTEs, or the final SELECT. */
+  private[operators] val nearDupPairsSql: String =
+    s"""WITH s AS ($shingleSql),
+       |$candSql,
+       |pairs AS MATERIALIZED (
+       |  SELECT c.doc_a, c.doc_b
+       |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
+       |  JOIN sh2 y ON y.doc_id = c.doc_b
+       |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
+       |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5)""".stripMargin
+
+  /** Oracle mirror of [[nearDupEdges]]: [[nearDupPairsSql]] plus CTE
+    * `edges` (src, dst). */
+  private[operators] val nearDupEdgesSql: String =
+    s"""$nearDupPairsSql,
+       |edges AS MATERIALIZED (
+       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs)""".stripMargin
 
   /** Oracle for dedup_minhash_lsh: the same 16 md5-string minhashes as
     * candSql but banded 4×4 (stricter collision rule than the 8×2
@@ -473,17 +512,7 @@ object Dedup {
     // deterministic edge set. Every doc gets a cluster id (= min doc_id
     // reachable); singletons are their own cluster.
     "dedup_cluster_assign" -> QueryDef.withOracle(
-      s"""WITH s AS ($shingleSql),
-         |$candSql,
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+      s"""$nearDupEdgesSql,
          |cc AS (
          |  WITH RECURSIVE walk(node, label) AS (
          |    SELECT doc_id, doc_id FROM documents
@@ -966,12 +995,7 @@ object Dedup {
     * labeling themselves. */
   private[operators] def clusterAssign(
       s: SparkSession, dir: String): DataFrame = {
-      val pairs = verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .persist()
+      val edges = nearDupEdges(s, dir).persist()
       // Propagate ONLY over docs that touch an edge: singletons can
       // never change label, so they stay out of the loop entirely (at
       // 100 TB the edge subgraph is a tiny fraction of the corpus —

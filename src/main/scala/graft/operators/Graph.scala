@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * Everything is FIXED-POINT integer arithmetic (2^20 scale, damping
   * 85/100 as exact integer ops), so per-node sums are order- and
   * partitioning-invariant — rank values are bit-identical across any
-  * cluster size, task retry, or engine, which is what lets an
-  * 8-iteration iterative job carry a full DuckDB oracle (unrolled
+  * cluster size, task retry, or engine, which is what lets a
+  * 6-iteration iterative job carry a full DuckDB oracle (unrolled
   * CTEs, no recursive-aggregation support needed).
   */
 object Graph {
@@ -50,13 +50,153 @@ object Graph {
   // would break the oracle replay)
   private val HitsRounds = 4
 
-  /** One unrolled oracle peel: survivors of round i+1 = nodes of round
-    * i whose degree WITHIN round i's subgraph is still ≥ k. */
-  private def peelSql(i: Int, k: Int): String =
-    s"""p${i + 1} AS MATERIALIZED (
+  /** Loop edge base: `edges` hash-partitioned by src and cached, then
+    * lineage-cut ([[GraftSession.cut]]); returns (cached, cut). Seeds
+    * and node sets derive from the cached relation, the rounds iterate
+    * over the cut. The cut is why a loop's rounds plan cheaply: without
+    * it every round's plan re-embeds the whole near-dup candidate
+    * subtree, and Catalyst re-analysis of that tree (driver time, not
+    * execution) was the measured per-round cost — 9.5 s lazy vs 2.5 s
+    * eager-cut for pageRanks at sf0.1. The src partitioning is the
+    * Pregel layout: it satisfies every round's src-side join, so only
+    * the (small) per-round state moves and the edges never shuffle
+    * again — one O(E) exchange per round instead of two. */
+  private[operators] def loopEdgeBase(
+      s: SparkSession, edges: DataFrame): (DataFrame, DataFrame) = {
+    val base = edges.repartition(col("src")).persist()
+    base.count() // force the cache before the lineage cut
+    (base, GraftSession.cut(s, base))
+  }
+
+  /** Synchronous multi-source min-distance BFS over a cut edge base.
+    * `init` holds the sources at dist 0, keyed by `keys` :+ doc_id (a
+    * `seed` key runs one BFS per seed in the same rounds). Each round
+    * joins the state to the edges on src, relaxes dist + 1 onto dst and
+    * keeps the min per key, under an eager [[GraftSession.roundCut]]:
+    * the state is read twice per round (carry and frontier join), so a
+    * lazy cascade would re-run every earlier round twice per round. */
+  private[operators] def frontierBfs(s: SparkSession, edgesCk: DataFrame,
+      init: DataFrame, keys: Seq[String], rounds: Int): DataFrame = {
+    var dist = GraftSession.roundCut(s, init)
+    for (_ <- 0 until rounds) {
+      val nxt = edgesCk
+        .join(dist.withColumnRenamed("doc_id", "src"), Seq("src"))
+        .select(keys.map(col) :+ col("dst").as("doc_id") :+
+          (col("dist") + 1).as("dist"): _*)
+      dist = GraftSession.roundCut(s, dist.unionByName(nxt)
+        .groupBy((keys :+ "doc_id").map(col): _*)
+        .agg(min(col("dist")).as("dist")))
+    }
+    dist
+  }
+
+  /** Oracle mirror of [[frontierBfs]]: CTEs d1 … d`rounds` from d0 over
+    * CTE `edges`. MATERIALIZED because d_i is read twice per step
+    * (carry and frontier join): inlined, DuckDB would re-run the chain
+    * 2^rounds times. */
+  private def bfsSql(keys: Seq[String], rounds: Int): String = {
+    val k = keys.map(_ + ", ").mkString
+    (0 until rounds).map { i =>
+      s"""d${i + 1} AS MATERIALIZED (
+         |  SELECT ${k}doc_id, CAST(min(dist) AS BIGINT) AS dist FROM (
+         |    SELECT ${k}doc_id, dist FROM d$i
+         |    UNION ALL
+         |    SELECT ${keys.map("d." + _ + ", ").mkString}e.dst AS doc_id, d.dist + 1 AS dist
+         |    FROM edges e JOIN d$i d ON d.doc_id = e.src)
+         |  GROUP BY ${k}doc_id)""".stripMargin
+    }.mkString(",\n")
+  }
+
+  /** The embedding near-dup graph (dedup_embedding's pairs) as mirrored
+    * (src, dst) edges; oracle [[embeddingEdgesSql]]. */
+  private def embeddingEdges(s: SparkSession, dir: String): DataFrame =
+    Dedup.mirrored(Dedup.defs.toMap.apply("dedup_embedding").fn(s, dir)
+      .select(col("vec_a"), col("vec_b")))
+
+  /** Oracle mirror of [[embeddingEdges]]: a `WITH` prefix ending at CTE
+    * `edges` (src, dst). */
+  private val embeddingEdgesSql: String =
+    """WITH p AS MATERIALIZED (
+      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+      |  FROM embeddings a JOIN embeddings b
+      |    ON a.label = b.label AND a.vec_id < b.vec_id
+      |  WHERE list_cosine_similarity(
+      |      list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
+      |      list_transform(b.embedding, x -> CAST(x AS DOUBLE))) >= 0.3),
+      |edges AS MATERIALIZED (
+      |  SELECT vec_a AS src, vec_b AS dst FROM p
+      |  UNION ALL SELECT vec_b AS src, vec_a AS dst FROM p)""".stripMargin
+
+  /** Node degrees (n, deg) of an undirected pair relation (doc_a, doc_b). */
+  private def pairDegrees(pairs: DataFrame): DataFrame =
+    pairs.select(col("doc_a").as("n"))
+      .union(pairs.select(col("doc_b").as("n")))
+      .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+
+  /** Closed triangles (u, x, y) of a pair relation with degrees `deg`,
+    * each once, by degree orientation: every pair is directed from its
+    * lower-(deg, id) endpoint to the higher, so each node's oriented
+    * out-degree is O(√E) and the wedge self-join is O(E^1.5) instead of
+    * Σ deg². The oriented edges `o` take an eager lineage cut: the
+    * closure reads o three times, and each reference re-embedded the
+    * whole LSH-candidate tree — Catalyst re-analysis that was the
+    * measured cost (1.5 s wall, 0.01 s task: pure driver time).
+    * Oracle: CTEs `deg` and `o` of [[orientedSql]]. */
+  private def closedTriangles(
+      s: SparkSession, pairs: DataFrame, deg: DataFrame): DataFrame = {
+    val aFirst = col("da") < col("db") ||
+      (col("da") === col("db") && col("doc_a") < col("doc_b"))
+    val o = GraftSession.roundCut(s, pairs
+      .join(deg.select(col("n").as("doc_a"), col("deg").as("da")), Seq("doc_a"))
+      .join(deg.select(col("n").as("doc_b"), col("deg").as("db")), Seq("doc_b"))
+      .select(
+        when(aFirst, col("doc_a")).otherwise(col("doc_b")).as("u"),
+        when(aFirst, col("doc_b")).otherwise(col("doc_a")).as("v"),
+        when(aFirst, col("db")).otherwise(col("da")).as("dv")))
+    val e1 = o.select(col("u"), col("v").as("x"), col("dv").as("dx"))
+    val e2 = o.select(col("u"), col("v").as("y"), col("dv").as("dy"))
+    e1.join(e2, Seq("u"))
+      .filter(col("dx") < col("dy") ||
+        (col("dx") === col("dy") && col("x") < col("y")))
+      .join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
+      .select(col("u"), col("x"), col("y"))
+  }
+
+  /** Oracle prefix for the triangle queries: [[Dedup.nearDupPairsSql]]
+    * plus CTEs `deg` (n, deg) and `o` (u, v, dv), the oriented pairs. */
+  private val orientedSql: String =
+    s"""${Dedup.nearDupPairsSql},
+       |deg AS MATERIALIZED (
+       |  SELECT n, CAST(count(*) AS BIGINT) AS deg FROM (
+       |    SELECT doc_a AS n FROM pairs
+       |    UNION ALL SELECT doc_b AS n FROM pairs) GROUP BY n),
+       |o AS (
+       |  SELECT
+       |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.doc_a < p.doc_b)
+       |         THEN p.doc_a ELSE p.doc_b END AS u,
+       |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.doc_a < p.doc_b)
+       |         THEN p.doc_b ELSE p.doc_a END AS v,
+       |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.doc_a < p.doc_b)
+       |         THEN db.deg ELSE da.deg END AS dv
+       |  FROM pairs p
+       |  JOIN deg da ON da.n = p.doc_a
+       |  JOIN deg db ON db.n = p.doc_b)""".stripMargin
+
+  /** One unrolled oracle peel of chain `pfx`: survivors of round i+1 =
+    * nodes of round i whose degree WITHIN round i's subgraph is still ≥ k. */
+  private def peelSql(pfx: String, i: Int, k: Int): String =
+    s"""$pfx${i + 1} AS MATERIALIZED (
        |  SELECT e.src AS id, CAST(count(*) AS BIGINT) AS d
-       |  FROM edges e JOIN p$i a ON a.id = e.src JOIN p$i b ON b.id = e.dst
+       |  FROM edges e JOIN $pfx$i a ON a.id = e.src
+       |  JOIN $pfx$i b ON b.id = e.dst
        |  GROUP BY e.src HAVING count(*) >= $k)""".stripMargin
+
+  /** Oracle peel chain `pfx`0 … `pfx`KcoreRounds at threshold k over CTE
+    * `edges`. */
+  private def peelChainSql(pfx: String, k: Int): String =
+    s"""${pfx}0 AS (SELECT DISTINCT src AS id FROM edges),
+       |${(0 until KcoreRounds).map(peelSql(pfx, _, k)).mkString(",\n")}"""
+      .stripMargin
 
   /** Survivor set (id, core_deg) after `rounds` synchronous peels at
     * threshold k — parameterized so KcoreConvergenceSpec can assert
@@ -69,21 +209,11 @@ object Graph {
     * per-k recurrences are independent, so carrying k in the group key
     * runs them side by side (graph_core_number: 4 lineage-cut jobs
     * instead of 3 chains × 4; per-round work is O(|ks|·E) keyed rows,
-    * exactly the three chains' combined volume). Edge lineage is
-    * truncated once (the pageRanks lineage-cut argument) so each
-    * round plans a constant-size fragment instead of re-analyzing the
-    * LSH candidate subtree. */
+    * exactly the three chains' combined volume), over one
+    * [[loopEdgeBase]]. */
   private[graft] def kcoreSurvivorsMulti(
       s: SparkSession, dir: String, ks: Seq[Int], rounds: Int): DataFrame = {
-    val pairs = Dedup.verifiedCandidates(s, dir)
-      .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-      .select(col("doc_a"), col("doc_b"))
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      // one fixed partitioning serves every round's src-side join
-      .repartition(col("src")).persist()
-    edges.count() // force the cache before the lineage cut
-    val edgesCk = GraftSession.cut(s, edges)
+    val (_, edgesCk) = loopEdgeBase(s, Dedup.nearDupEdges(s, dir))
     var cur = edgesCk.select(col("src").as("id")).distinct()
       .select(col("id"), explode(typedLit(ks)).as("k"))
     for (_ <- 0 until rounds) {
@@ -125,40 +255,21 @@ object Graph {
     * A caller needing multiple reads must cut the result itself
     * (lpaArtifacts cuts at the end for exactly this reason). */
   private[graft] def pageRanks(s: SparkSession, dir: String, iters: Int): DataFrame = {
-    val pairs = Dedup.verifiedCandidates(s, dir)
-      .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-      .select(col("doc_a"), col("doc_b"))
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+    val edges = Dedup.nearDupEdges(s, dir)
     val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // Pre-partition the edge relation by src ONCE: the cached
-    // partitioning satisfies every iteration's join requirement, so
-    // each round shuffles only the (small) rank vector and the
-    // per-dst messages — the edge relation never moves again. This
-    // is the standard Pregel layout and the difference between
-    // shuffling O(E) twice per round and once.
-    val edgesD = edges.join(deg, Seq("src"))
-      .repartition(col("src")).persist() // (src, dst, deg)
+    val (edgesD, edgesCk) = loopEdgeBase(s, edges.join(deg, Seq("src"))) // (src, dst, deg)
     // nodes that can ever receive rank mass = edge endpoints
     val nodesE = edgesD.select(col("dst").as("doc_id")).distinct().persist()
     // r16 loop shape (guide §1.2/§2.4): the rank vector is referenced
     // ONCE per round, so the whole `iters`-round recurrence can stay
     // LAZY — one query, one job, AQE pipelines every round's two
-    // exchanges — PROVIDED each round's logical tree is small. The
-    // r9-era eager-per-round cut existed because every round's plan
-    // re-embedded the full LSH-candidate subtree (superlinear Catalyst
-    // cost: lazy 9.5 s vs eager 2.5 s at sf0.1); truncating the edge
-    // relation's LINEAGE once (a local checkpoint over the materialized
-    // cache — a corpus-linear block copy, partitioning metadata
-    // preserved) makes each round a constant-size 2-join fragment and
-    // the r16 profile puts the lazy chain at 0.9 s wall / 0.03 s task
-    // vs 3.0 s / 15.8 s for the eager-cut AQE-off loop. With
-    // spark.graft.checkpoint.dir set a per-round RELIABLE checkpoint
-    // is taken so a 1000-executor run survives executor loss without
-    // replaying the whole iteration — the AQE-on round cut, since each
-    // round's plan has fresh exchanges.
-    edgesD.count() // force the cache before the lineage cut
-    val edgesCk = GraftSession.cut(s, edgesD)
+    // exchanges — because the loopEdgeBase cut keeps each round a
+    // constant-size 2-join fragment (r16 profile: the lazy chain at
+    // 0.9 s wall / 0.03 s task vs 3.0 s / 15.8 s for the eager-cut
+    // AQE-off loop). With spark.graft.checkpoint.dir set a per-round
+    // RELIABLE checkpoint is taken so a 1000-executor run survives
+    // executor loss without replaying the whole iteration — the AQE-on
+    // round cut, since each round's plan has fresh exchanges.
     val nodesCk = GraftSession.cut(s, nodesE)
     var r = nodesCk.withColumn("r", lit(FP))
     for (_ <- 0 until iters) {
@@ -192,17 +303,7 @@ object Graph {
     * rounds, ending at CTE l`LpaRounds` (doc_id, label) — consumed by
     * graph_lpa (final labels) and graph_modularity (partition quality). */
   private def lpaCtesSql: String =
-    s"""WITH s AS (${Dedup.shingleSql}),
-       |${Dedup.candSql},
-       |pairs AS MATERIALIZED (
-       |  SELECT c.doc_a, c.doc_b
-       |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-       |  JOIN sh2 y ON y.doc_id = c.doc_b
-       |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-       |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-       |edges AS MATERIALIZED (
-       |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+    s"""${Dedup.nearDupEdgesSql},
        |enodes AS (SELECT DISTINCT dst AS doc_id FROM edges),
        |l0 AS (SELECT doc_id, doc_id AS label FROM enodes),
        |${(0 until LpaRounds).map(lpaStep).mkString(",\n")}""".stripMargin
@@ -214,18 +315,11 @@ object Graph {
     * O(E) rows, node-keyed exchanges, lineage cut per round. */
   private[graft] def lpaArtifacts(
       s: SparkSession, dir: String, rounds: Int): (DataFrame, DataFrame) = {
-    val pairs = Dedup.verifiedCandidates(s, dir)
-      .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-      .select(col("doc_a"), col("doc_b"))
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(col("src")).persist()
     // r16 (the pageRanks lazy-cascade argument): the label vector is
     // referenced once per round, so the whole recurrence stays LAZY
-    // over a lineage-truncated edge base — one query, one job, no
-    // per-round checkpoint jobs.
-    edges.count() // force the cache before the lineage cut
-    val edgesCk = GraftSession.cut(s, edges)
+    // over the cut edge base — one query, one job, no per-round
+    // checkpoint jobs.
+    val (_, edgesCk) = loopEdgeBase(s, Dedup.nearDupEdges(s, dir))
     val enodes = edgesCk.select(col("dst").as("doc_id")).distinct()
     // every edge-subgraph node has in-neighbors (edges are mirrored),
     // so the round's argmax is total — no carry-over coalesce needed
@@ -257,7 +351,7 @@ object Graph {
   val defs: Seq[(String, QueryDef)] = Seq(
 
     // ------------------------------------------------------------------
-    // PageRank over the near-dup graph, 8 synchronous iterations.
+    // PageRank over the near-dup graph, 6 (Iters) synchronous iterations.
     // Scale shape = Pregel: per iteration ONE join of the rank vector
     // to the (src, dst, deg) edge relation and ONE keyed aggregation —
     // O(E) work and two bounded exchanges per round; the rounds form one
@@ -268,19 +362,9 @@ object Graph {
     // the closed-form base rank (15·FP) div 100 after round 1 and can
     // never influence a neighbor, so singletons — the overwhelming
     // majority of a 100 TB corpus — join once at the end instead of
-    // riding 8 shuffles.
+    // riding every round's shuffles.
     "graph_pagerank" -> QueryDef.withOracle(
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+      s"""${Dedup.nearDupEdgesSql},
          |deg AS MATERIALIZED (
          |  SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
          |  FROM edges GROUP BY src),
@@ -303,25 +387,13 @@ object Graph {
     // predicts skew in every per-node shuffle). Reuses the cached edge
     // relation; two keyed aggs, output is |distinct degrees| rows.
     "graph_degree_stats" -> QueryDef.withOracle(
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+      s"""${Dedup.nearDupEdgesSql},
          |deg AS MATERIALIZED (
          |  SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
          |  FROM edges GROUP BY src)
          |SELECT deg, CAST(count(*) AS BIGINT) AS n_nodes
          |FROM deg GROUP BY deg""".stripMargin) { (s, dir) =>
-      val pairs = Dedup.verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
+      val pairs = Dedup.nearDupPairs(s, dir)
       pairs.select(col("doc_a").as("src"))
         .union(pairs.select(col("doc_b").as("src")))
         .groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -340,14 +412,7 @@ object Graph {
     // agg; the k sweep expands the ≤|pairs| edge relation against a
     // 3-row literal — counts are exact, φ snaps ×10⁹.
     "graph_rich_club" -> QueryDef.withOracle(
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
+      s"""${Dedup.nearDupPairsSql},
          |deg AS MATERIALIZED (
          |  SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg FROM (
          |    SELECT doc_a AS src FROM pairs
@@ -370,9 +435,7 @@ object Graph {
          |      * 1e9 + 0.5) / 1.0e9
          |  END AS phi
          |FROM nk LEFT JOIN ek USING (k)""".stripMargin) { (s, dir) =>
-      val pairs = Dedup.verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
+      val pairs = Dedup.nearDupPairs(s, dir)
         .persist() // degree build + both endpoint-filter joins
       val deg = pairs.select(col("doc_a").as("doc_id"))
         .union(pairs.select(col("doc_b")))
@@ -412,68 +475,17 @@ object Graph {
     // oriented edge list with one equi-join; everything shuffles on
     // node ids only.
     "graph_triangles" -> QueryDef.withOracle(
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |deg AS MATERIALIZED (
-         |  SELECT n, CAST(count(*) AS BIGINT) AS deg FROM (
-         |    SELECT doc_a AS n FROM pairs
-         |    UNION ALL SELECT doc_b AS n FROM pairs) GROUP BY n),
-         |o AS (
-         |  SELECT
-         |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.doc_a < p.doc_b)
-         |         THEN p.doc_a ELSE p.doc_b END AS u,
-         |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.doc_a < p.doc_b)
-         |         THEN p.doc_b ELSE p.doc_a END AS v,
-         |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.doc_a < p.doc_b)
-         |         THEN db.deg ELSE da.deg END AS dv
-         |  FROM pairs p
-         |  JOIN deg da ON da.n = p.doc_a
-         |  JOIN deg db ON db.n = p.doc_b),
+      s"""$orientedSql,
          |w AS (
          |  SELECT e1.v AS x, e2.v AS y
          |  FROM o e1 JOIN o e2 ON e1.u = e2.u
          |  WHERE e1.dv < e2.dv OR (e1.dv = e2.dv AND e1.v < e2.v))
          |SELECT CAST(count(*) AS BIGINT) AS n_triangles
          |FROM w JOIN o ON o.u = w.x AND o.v = w.y""".stripMargin) { (s, dir) =>
-      // both edge relations are referenced 2-3 times (degree build,
-      // orientation, wedge closure) — persist so the LSH candidate
-      // pipeline and the orientation join each run ONCE, not per
-      // reference
-      val pairs = Dedup.verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-        .persist()
-      val deg = pairs.select(col("doc_a").as("n"))
-        .union(pairs.select(col("doc_b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      val aFirst = col("da") < col("db") ||
-        (col("da") === col("db") && col("doc_a") < col("doc_b"))
-      val o = pairs
-        .join(deg.select(col("n").as("doc_a"), col("deg").as("da")), Seq("doc_a"))
-        .join(deg.select(col("n").as("doc_b"), col("deg").as("db")), Seq("doc_b"))
-        .select(
-          when(aFirst, col("doc_a")).otherwise(col("doc_b")).as("u"),
-          when(aFirst, col("doc_b")).otherwise(col("doc_a")).as("v"),
-          when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-        // r16: eager lineage cut, not just persist. The wedge closure
-        // references o THREE times and each reference re-embeds the
-        // whole LSH-candidate logical tree — Catalyst re-analysis of
-        // that combinatorial tree was the measured cost (1.5 s wall,
-        // 0.01 s task: pure driver time). The cut reads the warm
-        // caches once per pass and leaves downstream plans tiny.
-        .transform(GraftSession.roundCut(s, _))
-      val e1 = o.select(col("u"), col("v").as("x"), col("dv").as("dx"))
-      val e2 = o.select(col("u"), col("v").as("y"), col("dv").as("dy"))
-      e1.join(e2, Seq("u"))
-        .filter(col("dx") < col("dy") ||
-          (col("dx") === col("dy") && col("x") < col("y")))
-        .join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
+      // the pairs feed the degree build, orientation and wedge
+      // closure — persisted so the LSH candidate pipeline runs ONCE
+      val pairs = Dedup.nearDupPairs(s, dir).persist()
+      closedTriangles(s, pairs, pairDegrees(pairs))
         .agg(count(lit(1)).as("n_triangles"))
     },
 
@@ -487,29 +499,7 @@ object Graph {
     // shuffles only. Nodes with deg < 2 have no defined coefficient
     // and are excluded (mirrored in the oracle).
     "graph_clustering_coeff" -> QueryDef.withOracle(
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |deg AS MATERIALIZED (
-         |  SELECT n, CAST(count(*) AS BIGINT) AS deg FROM (
-         |    SELECT doc_a AS n FROM pairs
-         |    UNION ALL SELECT doc_b AS n FROM pairs) GROUP BY n),
-         |o AS (
-         |  SELECT
-         |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.doc_a < p.doc_b)
-         |         THEN p.doc_a ELSE p.doc_b END AS u,
-         |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.doc_a < p.doc_b)
-         |         THEN p.doc_b ELSE p.doc_a END AS v,
-         |    CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND p.doc_a < p.doc_b)
-         |         THEN db.deg ELSE da.deg END AS dv
-         |  FROM pairs p
-         |  JOIN deg da ON da.n = p.doc_a
-         |  JOIN deg db ON db.n = p.doc_b),
+      s"""$orientedSql,
          |w AS (
          |  SELECT e1.u AS u, e1.v AS x, e2.v AS y
          |  FROM o e1 JOIN o e2 ON e1.u = e2.u
@@ -528,37 +518,11 @@ object Graph {
          |    AS coeff
          |FROM deg d LEFT JOIN tc t ON t.nd = d.n
          |WHERE d.deg >= 2""".stripMargin) { (s, dir) =>
-      val pairs = Dedup.verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-        .persist()
-      val deg = pairs.select(col("doc_a").as("n"))
-        .union(pairs.select(col("doc_b").as("n")))
-        .groupBy(col("n")).agg(count(lit(1)).as("deg"))
+      val pairs = Dedup.nearDupPairs(s, dir).persist()
+      val deg = pairDegrees(pairs)
         .persist() // read by the orientation AND the final coefficient join
-      val aFirst = col("da") < col("db") ||
-        (col("da") === col("db") && col("doc_a") < col("doc_b"))
-      val o = pairs
-        .join(deg.select(col("n").as("doc_a"), col("deg").as("da")), Seq("doc_a"))
-        .join(deg.select(col("n").as("doc_b"), col("deg").as("db")), Seq("doc_b"))
-        .select(
-          when(aFirst, col("doc_a")).otherwise(col("doc_b")).as("u"),
-          when(aFirst, col("doc_b")).otherwise(col("doc_a")).as("v"),
-          when(aFirst, col("db")).otherwise(col("da")).as("dv"))
-        // r16: eager lineage cut (the graph_triangles argument) — the
-        // wedge closure and 3-way explode nest o and tri so the
-        // combinatorial re-analysis of the LSH subtree was ~2.7 s of
-        // pure driver time per pass (task 0.00 s)
-        .transform(GraftSession.roundCut(s, _))
-      val e1 = o.select(col("u"), col("v").as("x"), col("dv").as("dx"))
-      val e2 = o.select(col("u"), col("v").as("y"), col("dv").as("dy"))
-      val tri = e1.join(e2, Seq("u"))
-        .filter(col("dx") < col("dy") ||
-          (col("dx") === col("dy") && col("x") < col("y")))
-        .join(o.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
-        .select(col("u"), col("x"), col("y"))
-        // the 3-way node explode reads the closure once
-        .transform(GraftSession.roundCut(s, _))
+      // the 3-way node explode reads the closure once
+      val tri = GraftSession.roundCut(s, closedTriangles(s, pairs, deg))
       val tc = tri.select(col("u").as("nd"))
         .union(tri.select(col("x").as("nd")))
         .union(tri.select(col("y").as("nd")))
@@ -586,16 +550,7 @@ object Graph {
     // its wedge count is the whole job). Every join shuffles node ids
     // only; the center's degree rides the edge relation.
     "graph_common_neighbors" -> QueryDef.withOracle(
-      """WITH p AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(
-        |      list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-        |      list_transform(b.embedding, x -> CAST(x AS DOUBLE))) >= 0.3),
-        |edges AS MATERIALIZED (
-        |  SELECT vec_a AS src, vec_b AS dst FROM p
-        |  UNION ALL SELECT vec_b AS src, vec_a AS dst FROM p),
+      s"""$embeddingEdgesSql,
         |deg AS MATERIALIZED (
         |  SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
         |  FROM edges GROUP BY src),
@@ -612,10 +567,7 @@ object Graph {
         |LEFT JOIN edges x ON x.src = w.vec_a AND x.dst = w.vec_b
         |WHERE x.src IS NULL
         |GROUP BY w.vec_a, w.vec_b""".stripMargin) { (s, dir) =>
-      val p = Dedup.defs.toMap.apply("dedup_embedding").fn(s, dir)
-        .select(col("vec_a"), col("vec_b"))
-      val edges = p.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-        .union(p.select(col("vec_b").as("src"), col("vec_a").as("dst")))
+      val edges = embeddingEdges(s, dir)
         .persist() // read 3×: degree build, both wedge sides, adjacency anti-join
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val centered = edges.join(deg, Seq("src")).filter(col("deg") <= 64)
@@ -642,16 +594,7 @@ object Graph {
     // order hazard the snapping discipline exists for — and Jaccard is
     // an exact |∩|/(da+db−|∩|) rational snapped once at output.
     "graph_link_jaccard" -> QueryDef.withOracle(
-      """WITH p AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(
-        |      list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-        |      list_transform(b.embedding, x -> CAST(x AS DOUBLE))) >= 0.3),
-        |edges AS MATERIALIZED (
-        |  SELECT vec_a AS src, vec_b AS dst FROM p
-        |  UNION ALL SELECT vec_b AS src, vec_a AS dst FROM p),
+      s"""$embeddingEdgesSql,
         |deg AS MATERIALIZED (
         |  SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
         |  FROM edges GROUP BY src),
@@ -679,10 +622,7 @@ object Graph {
         |FROM cn
         |JOIN deg da ON da.id = cn.vec_a
         |JOIN deg db ON db.id = cn.vec_b""".stripMargin) { (s, dir) =>
-      val p = Dedup.defs.toMap.apply("dedup_embedding").fn(s, dir)
-        .select(col("vec_a"), col("vec_b"))
-      val edges = p.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-        .union(p.select(col("vec_b").as("src"), col("vec_a").as("dst")))
+      val edges = embeddingEdges(s, dir)
         .persist() // degree build, both wedge sides, adjacency anti-join
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .persist() // wedge-center cap AND both endpoint joins
@@ -722,16 +662,7 @@ object Graph {
     // oracle replays it). One graph-level row, all exact integers; the
     // wedge join shuffles node ids only.
     "graph_square_count" -> QueryDef.withOracle(
-      """WITH p AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(
-        |      list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-        |      list_transform(b.embedding, x -> CAST(x AS DOUBLE))) >= 0.3),
-        |edges AS MATERIALIZED (
-        |  SELECT vec_a AS src, vec_b AS dst FROM p
-        |  UNION ALL SELECT vec_b AS src, vec_a AS dst FROM p),
+      s"""$embeddingEdgesSql,
         |deg AS (
         |  SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
         |  FROM edges GROUP BY src),
@@ -749,10 +680,7 @@ object Graph {
         |  CAST(sum(cnt * (cnt - 1) // 2) AS BIGINT) AS diag_square_sum,
         |  CAST(sum(cnt * (cnt - 1) // 2) // 2 AS BIGINT) AS squares
         |FROM wedge""".stripMargin) { (s, dir) =>
-      val p = Dedup.defs.toMap.apply("dedup_embedding").fn(s, dir)
-        .select(col("vec_a"), col("vec_b"))
-      val edges = p.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-        .union(p.select(col("vec_b").as("src"), col("vec_a").as("dst")))
+      val edges = embeddingEdges(s, dir)
         .persist() // degree build + both wedge sides
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val centered = edges.join(deg, Seq("src")).filter(col("deg") <= 64)
@@ -796,17 +724,7 @@ object Graph {
            |    CAST(floor(CAST(m.msum AS DOUBLE) / t.tot * nn.nfp) AS BIGINT)
            |      AS v
            |  FROM m$i m CROSS JOIN t$i t CROSS JOIN nn)""".stripMargin
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+      s"""${Dedup.nearDupEdgesSql},
          |enodes AS MATERIALIZED (SELECT DISTINCT dst AS doc_id FROM edges),
          |nn AS (SELECT CAST(count(*) AS BIGINT) * 1048576 AS nfp FROM enodes),
          |x0 AS (SELECT doc_id, CAST(1048576 AS BIGINT) AS v FROM enodes),
@@ -816,14 +734,8 @@ object Graph {
          |FROM documents d LEFT JOIN x$EigenIters x ON x.doc_id = d.doc_id"""
         .stripMargin
     } { (s, dir) =>
-      val pairs = Dedup.verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .repartition(col("src")).persist() // Pregel layout: edges never move
+      val (edges, edgesCk) = loopEdgeBase(s, Dedup.nearDupEdges(s, dir))
       val nodesE = edges.select(col("dst").as("doc_id")).distinct().persist()
-      edges.count() // force the cache before the lineage cut
       // r16 (guide §1.2): each round's message aggregate used to be
       // read TWICE (the 1-row total, then the renormalize), forcing an
       // extra materialization per round. The total is computable from
@@ -832,10 +744,7 @@ object Graph {
       // sum is bit-identical (long addition is order-invariant and
       // x·deg ≡ deg-fold addition even mod 2⁶⁴). With the aggregate
       // referenced once, each round is ONE lineage-cut job (+ the
-      // 1-row broadcast subquery); the edge lineage is truncated once
-      // (the pageRanks lineage-cut argument) so per-round plans
-      // stay constant-size.
-      val edgesCk = GraftSession.cut(s, edges)
+      // 1-row broadcast subquery).
       // degE derives from the CUT edge base: its layout is concrete, so
       // the degree agg plans exchange-free inside the cut
       val degE = GraftSession.cut(s,
@@ -872,26 +781,8 @@ object Graph {
     // frontier size is bounded by the contaminated neighborhoods, not
     // the corpus. Integer distances → fully oracled via 3 unrolled
     // min-propagation CTEs.
-    "graph_contamination_bfs" -> QueryDef.withOracle {
-      def stepSql(i: Int): String =
-        s"""d${i + 1} AS MATERIALIZED (
-           |  SELECT doc_id, CAST(min(dist) AS BIGINT) AS dist FROM (
-           |    SELECT doc_id, dist FROM d$i
-           |    UNION ALL
-           |    SELECT e.dst AS doc_id, d.dist + 1 AS dist
-           |    FROM edges e JOIN d$i d ON d.doc_id = e.src)
-           |  GROUP BY doc_id)""".stripMargin
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+    "graph_contamination_bfs" -> QueryDef.withOracle(
+      s"""${Dedup.nearDupEdgesSql},
          |ev AS (SELECT DISTINCT unnest(sh) AS g FROM sh2 WHERE doc_id < 20),
          |corp AS (SELECT doc_id, unnest(sh) AS g FROM sh2 WHERE doc_id >= 20),
          |seeds AS (
@@ -900,9 +791,9 @@ object Graph {
          |    FROM corp c JOIN ev USING (g) GROUP BY c.doc_id)
          |  WHERE n_hit >= 3),
          |d0 AS (SELECT doc_id, 0 AS dist FROM seeds),
-         |${(0 until 3).map(stepSql).mkString(",\n")}
+         |${bfsSql(Nil, 3)}
          |SELECT doc_id, dist FROM d3""".stripMargin
-    } { (s, dir) =>
+    ) { (s, dir) =>
       val sh2 = Dedup.shingled(s, dir).filter(size(col("sh")) > 0)
       val ev = sh2.filter(col("doc_id") < 20)
         .select(explode(col("sh")).as("g")).distinct()
@@ -912,33 +803,9 @@ object Graph {
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
         .filter(col("n_hit") >= 3)
         .select(col("doc_id"))
-      val p = Dedup.verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      // partition the edge relation by src ONCE; every round's frontier
-      // join reuses that layout (only the frontier moves per round).
-      // Rounds are cut eagerly (GraftSession.roundCut; the pageRanks lesson —
-      // a lazy 3-round cascade re-plans the whole LSH candidate
-      // pipeline per round), upgraded to a reliable checkpoint when
-      // spark.graft.checkpoint.dir is set.
-      val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .repartition(col("src")).persist()
-      // r16: truncate the edge lineage once so each round's cut plans
-      // a constant-size fragment instead of re-analyzing the LSH
-      // candidate subtree (the pageRanks argument; driver analysis,
-      // not execution, was the measured per-round cost)
-      edges.count()
-      val edgesCk = GraftSession.cut(s, edges)
-      var dist = GraftSession.roundCut(s, seeds.select(col("doc_id"), lit(0L).as("dist")))
-      for (_ <- 0 until 3) {
-        val nxt = edgesCk
-          .join(dist.withColumnRenamed("doc_id", "src"), Seq("src"))
-          .select(col("dst").as("doc_id"), (col("dist") + 1).as("dist"))
-        dist = GraftSession.roundCut(s, dist.unionByName(nxt)
-          .groupBy(col("doc_id")).agg(min(col("dist")).as("dist")))
-      }
-      dist
+      val (_, edgesCk) = loopEdgeBase(s, Dedup.nearDupEdges(s, dir))
+      frontierBfs(s, edgesCk, seeds.select(col("doc_id"), lit(0L).as("dist")),
+        Nil, 3)
     },
 
     // ------------------------------------------------------------------
@@ -1037,16 +904,7 @@ object Graph {
     // statistic adds O(E) keyed work on top of the shared edge
     // relation); r assembles in double from exact sums, ×10⁹ snapped.
     "graph_assortativity" -> QueryDef.withOracle(
-      """WITH p AS (
-        |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |  FROM embeddings a JOIN embeddings b
-        |    ON a.label = b.label AND a.vec_id < b.vec_id
-        |  WHERE list_cosine_similarity(
-        |      list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-        |      list_transform(b.embedding, x -> CAST(x AS DOUBLE))) >= 0.3),
-        |edges AS MATERIALIZED (
-        |  SELECT vec_a AS src, vec_b AS dst FROM p
-        |  UNION ALL SELECT vec_b AS src, vec_a AS dst FROM p),
+      s"""$embeddingEdgesSql,
         |deg AS MATERIALIZED (
         |  SELECT src AS id, CAST(count(*) AS BIGINT) AS deg
         |  FROM edges GROUP BY src),
@@ -1068,10 +926,7 @@ object Graph {
         |             * (CAST(m AS DOUBLE) * syy - CAST(sy AS DOUBLE) * sy))
         |      * 1000000000 + 0.5) / 1.0e9 AS assortativity
         |FROM m""".stripMargin) { (s, dir) =>
-      val p = Dedup.defs.toMap.apply("dedup_embedding").fn(s, dir)
-        .select(col("vec_a"), col("vec_b"))
-      val edges = p.select(col("vec_a").as("src"), col("vec_b").as("dst"))
-        .union(p.select(col("vec_b").as("src"), col("vec_a").as("dst")))
+      val edges = embeddingEdges(s, dir)
         .persist() // degree build + both endpoint joins
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val dd = edges
@@ -1104,19 +959,8 @@ object Graph {
     // once and never moves. Fixed 4-round budget (convergence pinned by
     // KcoreConvergenceSpec), so the unrolled DuckDB oracle is exact.
     "graph_kcore" -> QueryDef.withOracle(
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
-         |p0 AS (SELECT DISTINCT src AS id FROM edges),
-         |${(0 until KcoreRounds).map(peelSql(_, KcoreK)).mkString(",\n")}
+      s"""${Dedup.nearDupEdgesSql},
+         |${peelChainSql("p", KcoreK)}
          |SELECT id AS doc_id, d AS core_deg FROM p$KcoreRounds""".stripMargin) { (s, dir) =>
       kcoreSurvivors(s, dir, KcoreK, KcoreRounds)
         .select(col("id").as("doc_id"), col("d").as("core_deg"))
@@ -1137,31 +981,11 @@ object Graph {
     // share one cached edge relation; the combine is two left
     // semijoin-shaped joins on the 2-core survivor set. Oracle replays
     // the three MATERIALIZED peel chains and the same CASE combine.
-    "graph_core_number" -> QueryDef.withOracle {
-      def peel(pfx: String, i: Int, k: Int): String =
-        s"""$pfx${i + 1} AS MATERIALIZED (
-           |  SELECT e.src AS id, CAST(count(*) AS BIGINT) AS d
-           |  FROM edges e JOIN $pfx$i a ON a.id = e.src
-           |  JOIN $pfx$i b ON b.id = e.dst
-           |  GROUP BY e.src HAVING count(*) >= $k)""".stripMargin
-      def chain(pfx: String, k: Int): String =
-        s"""${pfx}0 AS (SELECT DISTINCT src AS id FROM edges),
-           |${(0 until KcoreRounds).map(peel(pfx, _, k)).mkString(",\n")}"""
-          .stripMargin
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
-         |${chain("q", 2)},
-         |${chain("r", 3)},
-         |${chain("t", 4)}
+    "graph_core_number" -> QueryDef.withOracle(
+      s"""${Dedup.nearDupEdgesSql},
+         |${peelChainSql("q", 2)},
+         |${peelChainSql("r", 3)},
+         |${peelChainSql("t", 4)}
          |SELECT q.id AS doc_id,
          |  CAST(2 + CASE WHEN r.id IS NULL THEN 0 ELSE 1 END
          |         + CASE WHEN t.id IS NULL THEN 0 ELSE 1 END AS BIGINT)
@@ -1169,7 +993,7 @@ object Graph {
          |FROM q$KcoreRounds q
          |LEFT JOIN r$KcoreRounds r ON r.id = q.id
          |LEFT JOIN t$KcoreRounds t ON t.id = q.id""".stripMargin
-    } { (s, dir) =>
+    ) { (s, dir) =>
       // one fused 3-threshold peel; the final round is already an
       // eager cut, so the three filtered reads below are free
       val multi = kcoreSurvivorsMulti(s, dir, Seq(2, 3, 4), KcoreRounds)
@@ -1199,62 +1023,27 @@ object Graph {
     // graph_contamination_bfs layout with a seed dimension), lineage
     // cut per round. Per-term 1e9//dist snaps are exact integers, so
     // the harmonic sum never touches a float.
-    "graph_harmonic" -> QueryDef.withOracle {
-      def stepSql(i: Int): String =
-        s"""d${i + 1} AS MATERIALIZED (
-           |  SELECT seed, doc_id, CAST(min(dist) AS BIGINT) AS dist FROM (
-           |    SELECT seed, doc_id, dist FROM d$i
-           |    UNION ALL
-           |    SELECT d.seed, e.dst AS doc_id, d.dist + 1 AS dist
-           |    FROM edges e JOIN d$i d ON d.doc_id = e.src)
-           |  GROUP BY 1, 2)""".stripMargin
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+    "graph_harmonic" -> QueryDef.withOracle(
+      s"""${Dedup.nearDupEdgesSql},
          |nodes AS (SELECT DISTINCT src AS id FROM edges),
          |seeds AS (
          |  SELECT id FROM nodes ORDER BY md5(CAST(id AS VARCHAR)), id LIMIT 8),
          |d0 AS (SELECT id AS seed, id AS doc_id, CAST(0 AS BIGINT) AS dist
          |       FROM seeds),
-         |${(0 until 3).map(stepSql).mkString(",\n")}
+         |${bfsSql(Seq("seed"), 3)}
          |SELECT doc_id,
          |  CAST(count(CASE WHEN dist > 0 THEN 1 END) AS BIGINT) AS n_reached,
          |  CAST(sum(CASE WHEN dist > 0 THEN 1000000000 // dist ELSE 0 END)
          |    AS BIGINT) AS harmonic_fp
          |FROM d3 GROUP BY doc_id""".stripMargin
-    } { (s, dir) =>
-      val p = Dedup.verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .repartition(col("src")).persist()
+    ) { (s, dir) =>
+      val (edges, edgesCk) = loopEdgeBase(s, Dedup.nearDupEdges(s, dir))
       val seeds = edges.select(col("src").as("id")).distinct()
         .orderBy(md5(col("id").cast("string")).asc, col("id").asc)
         .limit(8) // TakeOrdered top-8: no global sort materializes
-      // r16: truncate the edge lineage once so each round's cut plans
-      // a constant-size fragment instead of re-analyzing the LSH
-      // candidate subtree (the pageRanks argument)
-      edges.count()
-      val edgesCk = GraftSession.cut(s, edges)
-      var dist = GraftSession.roundCut(s,
-        seeds.select(col("id").as("seed"), col("id").as("doc_id"), lit(0L).as("dist")))
-      for (_ <- 0 until 3) {
-        val nxt = edgesCk
-          .join(dist.withColumnRenamed("doc_id", "src"), Seq("src"))
-          .select(col("seed"), col("dst").as("doc_id"),
-            (col("dist") + 1).as("dist"))
-        dist = GraftSession.roundCut(s, dist.unionByName(nxt)
-          .groupBy(col("seed"), col("doc_id")).agg(min(col("dist")).as("dist")))
-      }
+      val dist = frontierBfs(s, edgesCk,
+        seeds.select(col("id").as("seed"), col("id").as("doc_id"), lit(0L).as("dist")),
+        Seq("seed"), 3)
       dist.groupBy(col("doc_id"))
         .agg(count(when(col("dist") > 0, 1)).as("n_reached"),
           sum(when(col("dist") > 0, expr("1000000000 div dist"))
@@ -1274,7 +1063,7 @@ object Graph {
     // relation + a map-side-combined sum — per-round cost O(E), no
     // per-node windows. Oracle replays via MATERIALIZED per-round CTEs
     // (the DuckDB twice-read-CTE inlining lesson). Per-round lineage
-    // cut via (local)checkpoint — the Pregel loop discipline.
+    // cut via GraftSession.roundCut — the Pregel loop discipline.
     "graph_hits" -> QueryDef.withOracle {
       def stepSql(i: Int): String =
         s"""a$i AS MATERIALIZED (
@@ -1499,16 +1288,7 @@ object Graph {
            |    AND b.dist = ${d + 1}$dj
            |  GROUP BY a.seed, a.doc_id)""".stripMargin
       }
-      s"""WITH p AS MATERIALIZED (
-         |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-         |  FROM embeddings a JOIN embeddings b
-         |    ON a.label = b.label AND a.vec_id < b.vec_id
-         |  WHERE list_cosine_similarity(
-         |      list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-         |      list_transform(b.embedding, x -> CAST(x AS DOUBLE))) >= 0.3),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM p
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM p),
+      s"""$embeddingEdgesSql,
          |dg AS (SELECT src AS seed, CAST(count(*) AS BIGINT) AS deg
          |       FROM edges GROUP BY src),
          |seeds AS (
@@ -1526,11 +1306,7 @@ object Graph {
          |GROUP BY doc_id
          |ORDER BY bc_fp DESC, node_id ASC LIMIT 20""".stripMargin
     } { (s, dir) =>
-      val p = Dedup.defs.toMap.apply("dedup_embedding").fn(s, dir)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-      val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .repartition(col("src")).persist()
+      val (edges, edgesCk) = loopEdgeBase(s, embeddingEdges(s, dir))
       // hub seeding: the 8 highest-degree nodes (deterministic
       // (deg DESC, id ASC) — hubs anchor the dense neighborhoods where
       // multi-hop shortest paths actually exist; id-ordered seeds land
@@ -1539,11 +1315,6 @@ object Graph {
         .agg(count(lit(1)).as("deg"))
         .orderBy(col("deg").desc, col("seed").asc).limit(8)
         .select(col("seed"))
-      // r16: truncate the edge lineage once so each round's cut plans
-      // a constant-size fragment instead of re-analyzing the embedding
-      // near-dup subtree (the pageRanks argument)
-      edges.count()
-      val edgesCk = GraftSession.cut(s, edges)
       // forward: visited (seed, doc_id, dist, sigma), one frontier
       // join + one (seed, dst) keyed σ-sum + one anti-join per round
       var vis = GraftSession.roundCut(s, seeds.select(col("seed"),
@@ -1609,67 +1380,27 @@ object Graph {
     // closeness is undefined across components) stays EXACT: with
     // integer dists 1..4, 12·HC = 12n₁ + 6n₂ + 4n₃ + 3n₄ is an exact
     // BIGINT; no doubles anywhere until the final /12 display column.
-    "graph_closeness" -> QueryDef.withOracle {
-      def stepSql(i: Int): String =
-        s"""d${i + 1} AS MATERIALIZED (
-           |  SELECT seed, doc_id, CAST(min(dist) AS BIGINT) AS dist FROM (
-           |    SELECT seed, doc_id, dist FROM d$i
-           |    UNION ALL
-           |    SELECT d.seed, e.dst AS doc_id, d.dist + 1 AS dist
-           |    FROM edges e JOIN d$i d ON d.doc_id = e.src)
-           |  GROUP BY seed, doc_id)""".stripMargin
-      // MATERIALIZED per-round CTEs: d_i is read twice per step (carry
-      // + frontier join), so without the hint DuckDB inlines the whole
-      // LSH candidate pipeline 2^rounds times (the
-      // graph_eigencentrality oracle lesson)
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+    "graph_closeness" -> QueryDef.withOracle(
+      s"""${Dedup.nearDupEdgesSql},
          |seeds AS (
          |  SELECT DISTINCT src AS seed FROM edges ORDER BY seed ASC LIMIT 8),
          |d0 AS MATERIALIZED (
          |  SELECT seed, seed AS doc_id, CAST(0 AS BIGINT) AS dist
          |  FROM seeds),
-         |${(0 until 4).map(stepSql).mkString(",\n")}
+         |${bfsSql(Seq("seed"), 4)}
          |SELECT seed, CAST(count(*) - 1 AS BIGINT) AS n_reached,
          |  CAST(sum(CASE dist WHEN 1 THEN 12 WHEN 2 THEN 6 WHEN 3 THEN 4
          |                     WHEN 4 THEN 3 ELSE 0 END) AS BIGINT) AS hc12,
          |  sum(CASE dist WHEN 1 THEN 12 WHEN 2 THEN 6 WHEN 3 THEN 4
          |               WHEN 4 THEN 3 ELSE 0 END) / 12.0 AS harmonic
          |FROM d4 GROUP BY seed""".stripMargin
-    } { (s, dir) =>
-      val p = Dedup.verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .repartition(col("src")).persist()
+    ) { (s, dir) =>
+      val (edges, edgesCk) = loopEdgeBase(s, Dedup.nearDupEdges(s, dir))
       val seeds = edges.select(col("src").as("seed")).distinct()
         .orderBy(col("seed").asc).limit(8)
-      // r16: truncate the edge lineage once so each round's cut plans
-      // a constant-size fragment instead of re-analyzing the LSH
-      // candidate subtree (the pageRanks argument)
-      edges.count()
-      val edgesCk = GraftSession.cut(s, edges)
-      var dist = GraftSession.roundCut(s,
-        seeds.select(col("seed"), col("seed").as("doc_id"), lit(0L).as("dist")))
-      for (_ <- 0 until 4) {
-        val nxt = edgesCk
-          .join(dist.withColumnRenamed("doc_id", "src"), Seq("src"))
-          .select(col("seed"), col("dst").as("doc_id"),
-            (col("dist") + 1).as("dist"))
-        dist = GraftSession.roundCut(s, dist.unionByName(nxt)
-          .groupBy(col("seed"), col("doc_id"))
-          .agg(min(col("dist")).as("dist")))
-      }
+      val dist = frontierBfs(s, edgesCk,
+        seeds.select(col("seed"), col("seed").as("doc_id"), lit(0L).as("dist")),
+        Seq("seed"), 4)
       val hc12 = sum(when(col("dist") === 1, 12L)
         .when(col("dist") === 2, 6L).when(col("dist") === 3, 4L)
         .when(col("dist") === 4, 3L).otherwise(0L))
@@ -1708,17 +1439,7 @@ object Graph {
            |    SELECT seed, seed AS doc_id, CAST(0 AS BIGINT) AS csum
            |    FROM seeds)
            |  GROUP BY seed, doc_id)""".stripMargin
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+      s"""${Dedup.nearDupEdgesSql},
          |deg AS MATERIALIZED (
          |  SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
          |  FROM edges GROUP BY src),
@@ -1737,26 +1458,17 @@ object Graph {
          |  round(r / 1048576.0, 9) AS ppr
          |FROM rk WHERE rank <= 5""".stripMargin
     } { (s, dir) =>
-      val p = Dedup.verifiedCandidates(s, dir)
-        .filter(col("ni") * lit(1.0) / (col("ntot") - col("ni")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      val edges = Dedup.nearDupEdges(s, dir)
       val deg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      // Pregel layout: edge relation partitioned by src ONCE; every
-      // round shuffles only the (seed, node) score vector
-      val edgesD = edges.join(deg, Seq("src"))
-        .repartition(col("src")).persist()
+      val (edgesD, edgesCk) = loopEdgeBase(s, edges.join(deg, Seq("src")))
       val seeds = edgesD.select(col("src").as("seed")).distinct()
         .orderBy(col("seed").asc).limit(8)
       // r16 (the pageRanks lazy-cascade argument): the score vector is
-      // referenced once per round and seedRows twice — both tiny after
-      // a single lineage cut — so the 4-round recurrence stays LAZY
-      // over a lineage-truncated edge base: one query, one job, no
-      // per-round checkpoint jobs. With spark.graft.checkpoint.dir set
-      // the per-round RELIABLE cut is kept for executor-loss recovery.
-      edgesD.count() // force the cache before the lineage cut
-      val edgesCk = GraftSession.cut(s, edgesD)
+      // referenced once per round and seedRows twice — both tiny over
+      // the cut edge base — so the 4-round recurrence stays LAZY: one
+      // query, one job, no per-round checkpoint jobs. With
+      // spark.graft.checkpoint.dir set the per-round RELIABLE cut is
+      // kept for executor-loss recovery.
       val seedRows =
         GraftSession.roundCut(s, seeds.select(col("seed"), col("seed").as("doc_id")))
       val r4 = {

@@ -24,15 +24,8 @@ object Pipeline {
 
   val defs: Seq[(String, QueryDef)] = Seq(
     "pipe_clean_corpus" -> QueryDef.withOracle(
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |nearp AS (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |near AS (SELECT DISTINCT doc_b AS doc_id FROM nearp),
+      s"""${Dedup.nearDupPairsSql},
+         |near AS (SELECT DISTINCT doc_b AS doc_id FROM pairs),
          |exd AS (
          |  SELECT doc_id,
          |    doc_id <> min(doc_id) OVER (PARTITION BY
@@ -52,9 +45,7 @@ object Pipeline {
          |LEFT JOIN q ON e.doc_id = q.doc_id""".stripMargin) { (s, dir) =>
       val exact = Dedup.defs.toMap.apply("dedup_exact").fn(s, dir)
         .select(col("doc_id"), col("is_dup").as("exact_dup"))
-      val jac = col("ni") * lit(1.0) / (col("ntot") - col("ni"))
-      val nearPairs = Dedup.verifiedCandidates(s, dir)
-        .filter(jac >= 0.5)
+      val nearPairs = Dedup.nearDupPairs(s, dir)
         .select(col("doc_b").as("doc_id")).distinct()
         .withColumn("near_dup", lit(true))
       val quality = TextOps.defs.toMap.apply("text_quality").fn(s, dir)
@@ -306,17 +297,7 @@ object Pipeline {
     // (high-cardinality by construction: clusters ≈ documents), so no
     // single task ever sorts more than one template family.
     "pipe_canonical_select" -> QueryDef.withOracle(
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |pairs AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
-         |edges AS MATERIALIZED (
-         |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-         |  UNION ALL SELECT doc_b AS src, doc_a AS dst FROM pairs),
+      s"""${Dedup.nearDupEdgesSql},
          |cc AS (
          |  WITH RECURSIVE walk(node, label) AS (
          |    SELECT doc_id, doc_id FROM documents

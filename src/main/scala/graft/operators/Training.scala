@@ -805,14 +805,7 @@ object Training {
     // md5 keys), the shared banded-minhash candidate stage, one
     // survivor semijoin — output is |sources| rows.
     "pipe_dedup_funnel" -> QueryDef.withOracle(
-      s"""WITH s AS (${Dedup.shingleSql}),
-         |${Dedup.candSql},
-         |nd AS (
-         |  SELECT c.doc_a, c.doc_b
-         |  FROM cand c JOIN sh2 x ON x.doc_id = c.doc_a
-         |  JOIN sh2 y ON y.doc_id = c.doc_b
-         |  WHERE len(list_intersect(x.sh, y.sh)) * 1.0
-         |      / len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5),
+      s"""${Dedup.nearDupPairsSql},
          |f AS (
          |  SELECT doc_id, source,
          |    doc_id <> min(doc_id) OVER (PARTITION BY
@@ -828,7 +821,7 @@ object Training {
          |surv AS (SELECT doc_id FROM g WHERE NOT ex_dup AND NOT pf_dup),
          |ndrem AS (
          |  SELECT DISTINCT n.doc_b AS doc_id
-         |  FROM nd n JOIN surv v ON v.doc_id = n.doc_a),
+         |  FROM pairs n JOIN surv v ON v.doc_id = n.doc_a),
          |r AS (
          |  SELECT g.doc_id, g.source, g.ex_dup, g.pf_dup,
          |    (NOT g.ex_dup AND NOT g.pf_dup AND nr.doc_id IS NOT NULL)
@@ -856,9 +849,7 @@ object Training {
           min(col("doc_id")).over(wPf).as("pf_min"))
         .withColumn("pf_dup", !col("ex_dup") && col("doc_id") =!= col("pf_min"))
         .persist() // feeds the survivor set and the final rollup
-      val jac = col("ni") * lit(1.0) / (col("ntot") - col("ni"))
-      val nd = Dedup.verifiedCandidates(s, dir).filter(jac >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
+      val nd = Dedup.nearDupPairs(s, dir)
       val surv = flagged.filter(!col("ex_dup") && !col("pf_dup"))
         .select(col("doc_id").as("doc_a"))
       val ndrem = nd.join(surv, Seq("doc_a"))

@@ -25,7 +25,7 @@ object BpeScale {
     * defaults the derived word-frequency table feeds a pair vocabulary
     * of a few thousand distinct pairs — the shape the large-m question
     * needs, which the tiny sf fixtures (8 supported merges) cannot
-    * pose. Returns the corpus dir. */
+    * pose. Returns the corpus dir, deleted when the JVM exits. */
   def syntheticCorpus(spark: SparkSession, nWords: Int = 3000,
       seed: Long = 42L): String = {
     import spark.implicits._
@@ -44,7 +44,7 @@ object BpeScale {
     val docs = shuffled.grouped(100).zipWithIndex.map { case (ws, i) =>
       (i.toLong, ws.mkString(" "), "en", "synthetic", ws.map(_.length).sum.toLong)
     }.toSeq
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_corpus").toString
+    val dir = graft.TempDirs.deletedOnExit("graft_bpe_corpus").toString
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .repartition(8).write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")

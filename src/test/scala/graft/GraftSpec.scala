@@ -12,7 +12,7 @@ object SparkTestSession {
   // the session is built.
   lazy val spark: SparkSession = {
     sys.props("spark.sql.warehouse.dir") =
-      java.nio.file.Files.createTempDirectory("graft_wh").toString
+      TempDirs.deletedOnExit("graft_wh").toString
     GraftSession.local(4)
   }
   val sf = "/root/testdata/sf0.001"
@@ -812,7 +812,10 @@ class ClusterCheckpointSpec extends AnyFunSuite {
         // the cuts wrote reliable checkpoint data under THIS test's dir
         assert(CheckpointDirs.activeParent(spark) == dir)
         assert(CheckpointDirs.files(dir) > 0, s"no checkpoint files under $dir")
-      } finally spark.conf.unset("spark.graft.checkpoint.dir")
+      } finally {
+        spark.conf.unset("spark.graft.checkpoint.dir")
+        TempDirs.delete(dir)
+      }
     }
 }
 
@@ -5544,6 +5547,7 @@ class ReliableCutSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("spark.graft.checkpoint.dir")
       df.unpersist()
+      TempDirs.delete(dir)
     }
   }
 
@@ -5562,6 +5566,7 @@ class ReliableCutSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("spark.graft.checkpoint.dir")
       df.unpersist()
+      Seq(a, b).foreach(TempDirs.delete)
     }
   }
 

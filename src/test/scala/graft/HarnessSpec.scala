@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.regex.Pattern
 
 import scala.jdk.CollectionConverters._
 
@@ -96,5 +97,12 @@ class MainsGuardSpec extends AnyFunSuite {
 
   test("the listener bus is drained only through GraftSqlBridge") {
     assert(hits("""getMethod\(\s*"listenerBus"""").isEmpty)
+  }
+
+  test("the near-dup threshold is written once per engine, in Dedup") {
+    val owner = Seq("graft/operators/Dedup.scala" -> 1)
+    assert(hits(Pattern.quote("""(col("ntot") - col("ni")) >= 0.5""")) == owner)
+    assert(hits(Pattern.quote(
+      "/ len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5)")) == owner)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, QueryDef}
+import graft.{GraftSession, QueryDef, TempDirs}
 import graft.sources.{Connectors, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -486,7 +486,7 @@ object Etl {
         |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
         |  md5(text) AS content_md5
         |FROM documents WHERE doc_id < 300""".stripMargin) { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_binf")
+      val tmp = TempDirs.deletedOnExit("graft_binf")
       Tables.documents(s, dir).filter(col("doc_id") < 300)
         .select(col("doc_id"), col("text")).collect()
         .foreach { r =>
@@ -504,7 +504,7 @@ object Etl {
     // ------------------------------------------------------------------
     "src_csv_roundtrip" -> QueryDef.withOracle(
       "SELECT n_nationkey, n_name, n_regionkey FROM nation") { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_csv").toString
+      val tmp = TempDirs.deletedOnExit("graft_csv").toString
       Connectors.writeCsv(Tables.nation(s, dir), tmp)
       Connectors.readCsv(s, tmp, Tables.nationSchema)
         .select("n_nationkey", "n_name", "n_regionkey")
@@ -522,7 +522,7 @@ object Etl {
       """SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s,
         |  CAST(value AS DOUBLE) AS value
         |FROM events WHERE event_type = 'purchase'""".stripMargin) { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_part").toString
+      val tmp = TempDirs.deletedOnExit("graft_part").toString
       Connectors.writePartitioned(
         Tables.eventsTimed(s, dir)
           .select(col("event_id"), col("user_id"), col("ts_s"),
@@ -541,7 +541,7 @@ object Etl {
     // text in the lines themselves).
     "src_text_roundtrip" -> QueryDef.withOracle(
       "SELECT doc_id, md5(text) AS text_md5 FROM documents") { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_text").toString
+      val tmp = TempDirs.deletedOnExit("graft_text").toString
       Connectors.writeText(
         Tables.documents(s, dir).select(concat(
           col("doc_id").cast(StringType), lit("\t"),
@@ -555,7 +555,7 @@ object Etl {
     // ------------------------------------------------------------------
     "src_json_roundtrip" -> QueryDef.withOracle(
       "SELECT r_regionkey, r_name FROM region") { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_json").toString
+      val tmp = TempDirs.deletedOnExit("graft_json").toString
       Connectors.writeJson(Tables.region(s, dir), tmp)
       Connectors.readJson(s, tmp, Tables.regionSchema)
         .select("r_regionkey", "r_name")
@@ -564,7 +564,7 @@ object Etl {
     // ------------------------------------------------------------------
     "src_orc_roundtrip" -> QueryDef.withOracle(
       "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier") { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_orc").toString
+      val tmp = TempDirs.deletedOnExit("graft_orc").toString
       Connectors.writeOrc(Tables.supplier(s, dir), tmp)
       Connectors.readOrc(s, tmp, Tables.supplierSchema)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
@@ -573,7 +573,7 @@ object Etl {
     // ------------------------------------------------------------------
     "src_avro_roundtrip" -> QueryDef.withOracle(
       "SELECT p_partkey, p_name, p_type, p_size, p_retailprice FROM part") { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_avro").toString
+      val tmp = TempDirs.deletedOnExit("graft_avro").toString
       Connectors.writeAvro(Tables.part(s, dir), tmp)
       Connectors.readAvro(s, tmp, Tables.partSchema)
         .select("p_partkey", "p_name", "p_type", "p_size", "p_retailprice")
@@ -594,7 +594,7 @@ object Etl {
         |    x -> CAST(floor(CAST(x AS DOUBLE) * 1048576 + 0.5) AS BIGINT)), 'sum')
         |    AS BIGINT) AS e_fpsum
         |FROM embeddings""".stripMargin) { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_avro_emb").toString
+      val tmp = TempDirs.deletedOnExit("graft_avro_emb").toString
       Connectors.writeAvro(Tables.embeddings(s, dir), tmp)
       Connectors.readAvro(s, tmp, Tables.embeddingsSchema)
         .select(col("vec_id"), col("label"),
@@ -624,7 +624,7 @@ object Etl {
         |    AS ship_epoch_day,
         |  CAST(epoch_us(l_shipdate) AS BIGINT) AS ship_us
         |FROM lineitem WHERE l_orderkey % 10 = 0""".stripMargin) { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_avro_log").toString
+      val tmp = TempDirs.deletedOnExit("graft_avro_log").toString
       // a deterministic 1-in-10 key slice: the check verifies the
       // LOGICAL-TYPE mapping (full date/value range still covered),
       // not bulk throughput — the full-fact roundtrip benched 5-13×
@@ -662,7 +662,7 @@ object Etl {
       """SELECT s_suppkey, s_name, s_nationkey,
         |  CAST(s_acctbal AS DOUBLE) AS s_acctbal
         |FROM supplier""".stripMargin) { (s, dir) =>
-      val db = Files.createTempDirectory("graft_jdbc").resolve("db").toString
+      val db = TempDirs.deletedOnExit("graft_jdbc").resolve("db").toString
       val url = s"jdbc:derby:$db;create=true"
       val props = new java.util.Properties()
       val src = Tables.supplier(s, dir)
@@ -1288,21 +1288,8 @@ object Etl {
     // part-cardinality pivot, one keyed join to the part dim, one
     // 25-group agg — no corpus-scale shuffle after the first.
     "etl_price_index" -> QueryDef.withOracle(
-      """WITH py AS (
-        |  SELECT l_partkey, year(l_shipdate) AS y,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-        |  GROUP BY 1, 2),
-        |pp AS (
-        |  SELECT l_partkey,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN ep END)
-        |      / max(CASE WHEN y = 1995 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN ep END)
-        |      / max(CASE WHEN y = 1996 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN qty END) * 100 + 0.5) AS BIGINT) AS q0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN qty END) * 100 + 0.5) AS BIGINT) AS q1
-        |  FROM py GROUP BY 1 HAVING count(*) = 2),
+      s"""WITH ${partYearSql(1995, 1996)},
+        |${matchedSql("pp", 1995, 1996, 2)},
         |ix AS (
         |  SELECT p.p_brand, CAST(count(*) AS BIGINT) AS n_parts,
         |    CAST(sum(CAST(pp.p1 AS HUGEINT) * pp.q0) AS DOUBLE)
@@ -1317,27 +1304,7 @@ object Etl {
         |  round(100 * sqrt(lasp * paas), 6) AS fisher
         |FROM ix""".stripMargin) { (s, dir) =>
       val dec38 = DecimalType(38, 0)
-      val py = Tables.lineitem(s, dir)
-        // explicit range, not year(..).isin(..): the range pushes down
-        // to the parquet scan; a year() wrap would not
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1997-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
-      def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
-      val pp = py.groupBy(col("l_partkey"))
-        .agg(
-          floor(yv(1995, "ep") / yv(1995, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p0"),
-          floor(yv(1996, "ep") / yv(1996, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1"),
-          floor(yv(1995, "qty") * 100 + 0.5).cast(LongType).as("q0"),
-          floor(yv(1996, "qty") * 100 + 0.5).cast(LongType).as("q1"),
-          count(lit(1)).as("ny"))
-        .filter(col("ny") === 2)
+      val pp = matchedParts(partYears(s, dir, 1995, 1996), 1995, 1996, 2)
       val ix = pp
         .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
           col("p_partkey") === col("l_partkey"))
@@ -1367,28 +1334,14 @@ object Etl {
     // is bookkeeping-scale from there.
     "etl_chain_index" -> QueryDef.withOracle {
       def linkSql(k: Int, y0: Int, y1: Int): String =
-        s"""pp$k AS (
-           |  SELECT l_partkey,
-           |    CAST(floor(max(CASE WHEN y = $y0 THEN ep END)
-           |      / max(CASE WHEN y = $y0 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p0,
-           |    CAST(floor(max(CASE WHEN y = $y1 THEN ep END)
-           |      / max(CASE WHEN y = $y1 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1,
-           |    CAST(floor(max(CASE WHEN y = $y0 THEN qty END) * 100 + 0.5) AS BIGINT) AS q0
-           |  FROM py WHERE y IN ($y0, $y1) GROUP BY 1
-           |  HAVING count(*) = 2),
+        s"""${matchedSql(s"pp$k", y0, y1, 1)},
            |l$k AS (
            |  SELECT p.p_brand,
            |    CAST(sum(CAST(pp$k.p1 AS HUGEINT) * pp$k.q0) AS DOUBLE)
            |      / CAST(sum(CAST(pp$k.p0 AS HUGEINT) * pp$k.q0) AS DOUBLE) AS l
            |  FROM pp$k JOIN part p ON p.p_partkey = pp$k.l_partkey
            |  GROUP BY 1)""".stripMargin
-      s"""WITH py AS (
-         |  SELECT l_partkey, year(l_shipdate) AS y,
-         |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-         |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-         |  FROM lineitem
-         |  WHERE l_shipdate >= '1995-01-01' AND l_shipdate < '1999-01-01'
-         |  GROUP BY 1, 2),
+      s"""WITH ${partYearSql(1995, 1998)},
          |${linkSql(1, 1995, 1996)},
          |${linkSql(2, 1996, 1997)},
          |${linkSql(3, 1997, 1998)}
@@ -1401,34 +1354,16 @@ object Etl {
          |JOIN l3 ON l3.p_brand = l1.p_brand""".stripMargin
     } { (s, dir) =>
       val dec38 = DecimalType(38, 0)
-      val py = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1999-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
+      val py = partYears(s, dir, 1995, 1998)
         .persist() // one corpus agg feeds all three links
       val brand = Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))
-      def link(y0: Int, y1: Int, name: String) = {
-        def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
-        py.filter(col("y").isin(y0, y1))
-          .groupBy(col("l_partkey"))
-          .agg(
-            floor(yv(y0, "ep") / yv(y0, "qty") * 1000000 + 0.5)
-              .cast(LongType).as("p0"),
-            floor(yv(y1, "ep") / yv(y1, "qty") * 1000000 + 0.5)
-              .cast(LongType).as("p1"),
-            floor(yv(y0, "qty") * 100 + 0.5).cast(LongType).as("q0"),
-            count(lit(1)).as("ny"))
-          .filter(col("ny") === 2)
+      def link(y0: Int, y1: Int, name: String) =
+        matchedParts(py.filter(col("y").isin(y0, y1)), y0, y1, 1)
           .join(brand, col("p_partkey") === col("l_partkey"))
           .groupBy(col("p_brand"))
           .agg((sum((col("p1").cast(dec38) * col("q0")).cast(dec38)).cast(DoubleType)
             / sum((col("p0").cast(dec38) * col("q0")).cast(dec38)).cast(DoubleType))
             .as(name))
-      }
       link(1995, 1996, "l1")
         .join(link(1996, 1997, "l2"), Seq("p_brand"))
         .join(link(1997, 1998, "l3"), Seq("p_brand"))
@@ -1543,43 +1478,13 @@ object Etl {
     // lag/lead terms in one left-associated chain, NOT a window avg,
     // so the double addition order is pinned on both engines.
     "etl_seasonal_ma" -> QueryDef.withOracle(
-      """WITH m AS (
-        |  SELECT CAST(floor(epoch(date_trunc('month', o_orderdate))) AS BIGINT) AS mo_s,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |  FROM orders GROUP BY 1),
-        |w AS (
-        |  SELECT mo_s, total,
-        |    (0.5 * lag(total, 6) OVER o + lag(total, 5) OVER o + lag(total, 4) OVER o
-        |      + lag(total, 3) OVER o + lag(total, 2) OVER o + lag(total, 1) OVER o
-        |      + total + lead(total, 1) OVER o + lead(total, 2) OVER o
-        |      + lead(total, 3) OVER o + lead(total, 4) OVER o + lead(total, 5) OVER o
-        |      + 0.5 * lead(total, 6) OVER o) / 12 AS ma
-        |  FROM m WINDOW o AS (ORDER BY mo_s))
+      s"""WITH ${movingAvgSql()}
         |SELECT mo_s,
         |  floor(total * 100 + 0.5) / 100.0 AS total,
         |  floor(ma * 100 + 0.5) / 100.0 AS trend_ma,
         |  round(total / ma, 9) AS si_ratio
         |FROM w WHERE ma IS NOT NULL""".stripMargin) { (s, dir) =>
-      val m = Tables.orders(s, dir)
-        .groupBy(unix_timestamp(date_trunc("month", col("o_orderdate"))).as("mo_s"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("total"))
-      // single-partition window is safe here: the relation is one row
-      // per calendar month, bounded by the date span, not the corpus
-      val o = Window.orderBy(col("mo_s").asc)
-      val terms = lit(0.5) * lag(col("total"), 6).over(o) +
-        lag(col("total"), 5).over(o) + lag(col("total"), 4).over(o) +
-        lag(col("total"), 3).over(o) + lag(col("total"), 2).over(o) +
-        lag(col("total"), 1).over(o) + col("total") +
-        lead(col("total"), 1).over(o) + lead(col("total"), 2).over(o) +
-        lead(col("total"), 3).over(o) + lead(col("total"), 4).over(o) +
-        lead(col("total"), 5).over(o) + lit(0.5) * lead(col("total"), 6).over(o)
-      // money-magnitude outputs snap at cents via the floor idiom, not
-      // round(x, 6): sf1d monthly totals (~4.3e9) + 6 decimals exceed a
-      // double's 16 significant digits, where the engines' round()
-      // algorithms pick different neighboring doubles (round-14 sweep)
-      m.withColumn("ma", terms / 12)
-        .filter(col("ma").isNotNull)
+      movingAvg(s, dir)
         .select(col("mo_s"),
           (floor(col("total") * 100 + lit(0.5)) / lit(100.0)).as("total"),
           (floor(col("ma") * 100 + lit(0.5)) / lit(100.0)).as("trend_ma"),
@@ -1599,15 +1504,7 @@ object Etl {
     // exact DECIMAL; the rank·spend sum's accumulation-order noise is
     // ~1e-14 relative, far under the 9-dp rounding.
     "etl_gini" -> QueryDef.withOracle(
-      """WITH spend AS (
-        |  SELECT o_custkey,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-        |  FROM orders GROUP BY 1),
-        |j AS (
-        |  SELECT n.n_name, s.o_custkey AS custkey, s.spend
-        |  FROM spend s
-        |  JOIN customer c ON c.c_custkey = s.o_custkey
-        |  JOIN nation n ON n.n_nationkey = c.c_nationkey),
+      s"""WITH $nationSpendSql,
         |r AS (
         |  SELECT n_name, spend,
         |    row_number() OVER (PARTITION BY n_name
@@ -1619,15 +1516,7 @@ object Etl {
         |  round(2.0 * sum(rnk * spend) / (count(*) * sum(spend))
         |        - (count(*) + 1.0) / count(*), 9) AS gini
         |FROM r GROUP BY n_name""".stripMargin) { (s, dir) =>
-      val spend = Tables.orders(s, dir)
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("spend"))
-      val cust = Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey"))
-      val nat = Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))
-      val j = spend
-        .join(cust, col("c_custkey") === col("o_custkey")) // custkey-keyed shuffle join
-        .join(broadcast(nat), col("n_nationkey") === col("c_nationkey"))
+      val j = nationSpend(s, dir)
         .select(col("n_name"), col("o_custkey").as("custkey"), col("spend"))
       val mmx = j.agg(min(col("spend")), max(col("spend"))).head()
       val withB = j.withColumn("bkt",
@@ -2550,15 +2439,7 @@ object Etl {
     // protocol); the final ratio is fixed-point-rounded to 9 so the
     // double division chain can't drift between engines.
     "etl_herfindahl" -> QueryDef.withOracle(
-      """WITH spend AS (
-        |  SELECT o_custkey,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-        |  FROM orders GROUP BY 1),
-        |j AS (
-        |  SELECT n.n_name, s.spend
-        |  FROM spend s
-        |  JOIN customer c ON c.c_custkey = s.o_custkey
-        |  JOIN nation n ON n.n_nationkey = c.c_nationkey)
+      s"""WITH $nationSpendSql
         |SELECT n_name,
         |  CAST(count(*) AS BIGINT) AS n_cust,
         |  round(CAST(sum(CAST(spend AS DECIMAL(18,2))) AS DOUBLE), 2)
@@ -2568,16 +2449,8 @@ object Etl {
         |         * CAST(sum(CAST(spend AS DECIMAL(18,2))) AS DOUBLE))
         |      * 1000000000 + 0.5) / 1.0e9 AS hhi
         |FROM j GROUP BY n_name""".stripMargin) { (s, dir) =>
-      val spend = Tables.orders(s, dir)
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("spend"))
-      val cust = Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey"))
-      val nat = Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))
       val tot = sum(col("spend").cast(DecimalType(18, 2))).cast(DoubleType)
-      spend
-        .join(cust, col("c_custkey") === col("o_custkey"))
-        .join(broadcast(nat), col("n_nationkey") === col("c_nationkey"))
+      nationSpend(s, dir)
         .groupBy(col("n_name"))
         .agg(count(lit(1)).as("n_cust"),
           round(tot, 2).as("total_spend"),
@@ -4274,15 +4147,7 @@ object Etl {
     // exact long — order- and partitioning-invariant at any size. One
     // scan, one custkey shuffle, one nation agg; no windows.
     "etl_theil_index" -> QueryDef.withOracle(
-      """WITH spend AS (
-        |  SELECT o_custkey,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
-        |  FROM orders GROUP BY 1),
-        |j AS (
-        |  SELECT n.n_name, s.spend
-        |  FROM spend s
-        |  JOIN customer c ON c.c_custkey = s.o_custkey
-        |  JOIN nation n ON n.n_nationkey = c.c_nationkey),
+      s"""WITH $nationSpendSql,
         |mu AS (
         |  SELECT n_name, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(CAST(spend AS DECIMAL(18,2))) AS DOUBLE) / count(*) AS mu
@@ -4296,15 +4161,7 @@ object Etl {
         |  floor(CAST(sum(term_fp) AS BIGINT) / 1.0e6 / n * 1000000000 + 0.5)
         |    / 1.0e9 AS theil_t
         |FROM t GROUP BY n_name, n""".stripMargin) { (s, dir) =>
-      val spend = Tables.orders(s, dir)
-        .groupBy(col("o_custkey"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("spend"))
-      val cust = Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey"))
-      val nat = Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))
-      val j = spend
-        .join(cust, col("c_custkey") === col("o_custkey"))
-        .join(broadcast(nat), col("n_nationkey") === col("c_nationkey"))
+      val j = nationSpend(s, dir)
         .select(col("n_name"), col("spend"))
         .persist() // feeds the per-nation mean and the term pass
       val mu = j.groupBy(col("n_name"))
@@ -4505,7 +4362,7 @@ object Etl {
       """SELECT c_custkey, c_name,
         |  CASE WHEN c_custkey % 2 = 1 THEN c_acctbal END AS c_acctbal
         |FROM customer""".stripMargin) { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_evo").toString
+      val tmp = TempDirs.deletedOnExit("graft_evo").toString
       val c = Tables.customer(s, dir)
       c.filter(col("c_custkey") % 2 === 0)
         .select(col("c_custkey"), col("c_name"))
@@ -4528,33 +4385,8 @@ object Etl {
     // snap to ×10⁹ exact longs before ANY mean/normalizing sum, so the
     // whole factor table is order-invariant.
     "etl_seasonal_decompose" -> QueryDef.withOracle(
-      """WITH m AS (
-        |  SELECT CAST(floor(epoch(date_trunc('month', o_orderdate))) AS BIGINT)
-        |      AS mo_s,
-        |    CAST(month(o_orderdate) AS BIGINT) AS mo,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |  FROM orders GROUP BY 1, 2),
-        |w AS (
-        |  SELECT mo_s, mo, total,
-        |    (0.5 * lag(total, 6) OVER o + lag(total, 5) OVER o + lag(total, 4) OVER o
-        |      + lag(total, 3) OVER o + lag(total, 2) OVER o + lag(total, 1) OVER o
-        |      + total + lead(total, 1) OVER o + lead(total, 2) OVER o
-        |      + lead(total, 3) OVER o + lead(total, 4) OVER o + lead(total, 5) OVER o
-        |      + 0.5 * lead(total, 6) OVER o) / 12 AS ma
-        |  FROM m WINDOW o AS (ORDER BY mo_s)),
-        |si AS (
-        |  SELECT mo_s, mo, total, ma,
-        |    CAST(floor(total / ma * 1000000000 + 0.5) AS BIGINT) AS si_fp
-        |  FROM w WHERE ma IS NOT NULL),
-        |f AS (
-        |  SELECT mo,
-        |    CAST(floor(CAST(sum(si_fp) AS BIGINT) / count(*) + 0.5) AS BIGINT)
-        |      AS m_fp
-        |  FROM si GROUP BY mo),
-        |nrm AS (SELECT CAST(sum(m_fp) AS BIGINT) AS fsum FROM f),
-        |fac AS (
-        |  SELECT f.mo, f.m_fp * 12.0 / nrm.fsum AS seasonal
-        |  FROM f CROSS JOIN nrm)
+      s"""WITH ${movingAvgSql("CAST(month(o_orderdate) AS BIGINT) AS mo")},
+        |$seasonalFactorsSql
         |SELECT si.mo_s,
         |  floor(si.total * 100 + 0.5) / 100.0 AS total,
         |  floor(si.ma * 100 + 0.5) / 100.0 AS trend,
@@ -4564,39 +4396,12 @@ object Etl {
         |  floor(si.total / (si.ma * fac.seasonal) * 1000000000 + 0.5) / 1.0e9
         |    AS irregular
         |FROM si JOIN fac ON fac.mo = si.mo""".stripMargin) { (s, dir) =>
-      val m = Tables.orders(s, dir)
-        .groupBy(
-          unix_timestamp(date_trunc("month", col("o_orderdate"))).as("mo_s"),
-          month(col("o_orderdate")).cast(LongType).as("mo"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("total"))
-      // months-bounded relation from here down (see etl_seasonal_ma)
-      val o = Window.orderBy(col("mo_s").asc)
-      val terms = lit(0.5) * lag(col("total"), 6).over(o) +
-        lag(col("total"), 5).over(o) + lag(col("total"), 4).over(o) +
-        lag(col("total"), 3).over(o) + lag(col("total"), 2).over(o) +
-        lag(col("total"), 1).over(o) + col("total") +
-        lead(col("total"), 1).over(o) + lead(col("total"), 2).over(o) +
-        lead(col("total"), 3).over(o) + lead(col("total"), 4).over(o) +
-        lead(col("total"), 5).over(o) + lit(0.5) * lead(col("total"), 6).over(o)
-      val si = m.withColumn("ma", terms / 12)
-        .filter(col("ma").isNotNull)
+      val si = movingAvg(s, dir,
+        month(col("o_orderdate")).cast(LongType).as("mo"))
         .withColumn("si_fp",
           floor(col("total") / col("ma") * lit(1.0e9) + lit(0.5)).cast(LongType))
         .persist() // months-bounded; feeds factors and the final join
-      val f = si.groupBy(col("mo"))
-        .agg(floor(sum(col("si_fp")) / count(lit(1)) + lit(0.5))
-          .cast(LongType).as("m_fp"))
-      val nrm = f.agg(sum(col("m_fp")).as("fsum"))
-      val fac = f.crossJoin(broadcast(nrm))
-        .select(col("mo"), (col("m_fp") * lit(12.0) / col("fsum")).as("seasonal"))
-      // money-magnitude columns snap at CENTS via the floor idiom, not
-      // round(x, 6): at sf1d the monthly total is ~4.3e9, and 1e9 + 6
-      // decimals = 16 significant digits — more than a double holds, so
-      // the two engines' round() algorithms legitimately disagree by
-      // one ulp (found by the round-14 full sf1d sweep). floor(x*100 +
-      // 0.5)/100.0 is pure IEEE ops, bit-identical on both engines, and
-      // exact until 2^53/100.
+      val fac = seasonalFactors(si)
       si.join(broadcast(fac), Seq("mo"))
         .select(col("mo_s"),
           (floor(col("total") * 100 + lit(0.5)) / lit(100.0)).as("total"),
@@ -4872,7 +4677,7 @@ object Etl {
       """SELECT codec, s_suppkey, s_name, s_nationkey, s_acctbal
         |FROM supplier
         |CROSS JOIN (VALUES ('snappy'), ('gzip'), ('zstd')) AS c(codec)""".stripMargin) { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_codec").toString
+      val tmp = TempDirs.deletedOnExit("graft_codec").toString
       val sup = Tables.supplier(s, dir)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
       val codecs = Seq("snappy", "gzip", "zstd")
@@ -5068,7 +4873,7 @@ object Etl {
     // over months. Exact fixed-point longs until the double ratio,
     // outputs ×100 / ×10⁹ snapped.
     "etl_benchmark_prorata" -> QueryDef.withOracle(
-      """WITH mo AS (
+      s"""WITH mo AS (
         |  SELECT CAST(floor(epoch(date_trunc('month', o_orderdate))) AS BIGINT)
         |      AS mo_s,
         |    year(o_orderdate) AS yr,
@@ -5076,16 +4881,7 @@ object Etl {
         |      AS BIGINT) AS mfp
         |  FROM orders GROUP BY 1, 2),
         |ind AS (SELECT yr, CAST(sum(mfp) AS BIGINT) AS ifp FROM mo GROUP BY yr),
-        |lo AS (
-        |  SELECT l_orderkey,
-        |    CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
-        |      * (1 + l_tax) * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS line_fp
-        |  FROM lineitem GROUP BY l_orderkey),
-        |ctl AS (
-        |  SELECT year(o.o_orderdate) AS yr,
-        |    CAST(sum(coalesce(lo.line_fp, 0)) AS BIGINT) AS cfp
-        |  FROM orders o LEFT JOIN lo ON lo.l_orderkey = o.o_orderkey
-        |  GROUP BY 1),
+        |$annualControlSql,
         |r AS (
         |  SELECT i.yr,
         |    (CAST(c.cfp AS DOUBLE) / 10000) / (CAST(i.ifp AS DOUBLE) / 100)
@@ -5097,23 +4893,10 @@ object Etl {
         |  floor(CAST(mo.mfp AS DOUBLE) / 100 * r.ratio * 100 + 0.5) / 100.0
         |    AS monthly_benchmarked
         |FROM mo JOIN r ON r.yr = mo.yr""".stripMargin) { (s, dir) =>
-      val mo = Tables.orders(s, dir)
-        .groupBy(
-          unix_timestamp(date_trunc("month", col("o_orderdate"))).as("mo_s"),
-          year(col("o_orderdate")).as("yr"))
-        .agg(sum(floor(col("o_totalprice") * lit(100) + lit(0.5))
-          .cast(LongType)).as("mfp"))
+      val mo = monthlyIndicator(s, dir)
         .persist() // feeds the annual indicator sum and the output join
       val ind = mo.groupBy(col("yr")).agg(sum(col("mfp")).as("ifp"))
-      val lo = Tables.lineitem(s, dir)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount"))
-          * (lit(1) + col("l_tax")) * lit(10000) + lit(0.5)).cast(LongType))
-          .as("line_fp"))
-      val ctl = Tables.orders(s, dir)
-        .join(lo, col("l_orderkey") === col("o_orderkey"), "left_outer")
-        .groupBy(year(col("o_orderdate")).as("yr"))
-        .agg(sum(coalesce(col("line_fp"), lit(0L))).as("cfp"))
+      val ctl = annualControl(s, dir)
       val r = ind.join(ctl, Seq("yr"))
         .select(col("yr"),
           ((col("cfp").cast(DoubleType) / lit(10000))
@@ -5217,19 +5000,8 @@ object Etl {
     // discipline — order-invariant integer addition), the log index is
     // exact ×10⁹-snapped, and the exp'd index level rounds to 6 dp.
     "etl_jevons_index" -> QueryDef.withOracle(
-      """WITH py AS (
-        |  SELECT l_partkey, year(l_shipdate) AS y,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-        |  GROUP BY 1, 2),
-        |pp AS (
-        |  SELECT l_partkey,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN ep END)
-        |      / max(CASE WHEN y = 1995 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN ep END)
-        |      / max(CASE WHEN y = 1996 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1
-        |  FROM py GROUP BY 1 HAVING count(*) = 2),
+      s"""WITH ${partYearSql(1995, 1996)},
+        |${matchedSql("pp", 1995, 1996, 0)},
         |t AS (
         |  SELECT p.p_brand,
         |    CAST(floor(ln(CAST(pp.p1 AS DOUBLE) / pp.p0) * 1000000 + 0.5)
@@ -5241,23 +5013,7 @@ object Etl {
         |  round(100 * exp(CAST(sum(lr_fp) AS BIGINT) / 1.0e6 / count(*)), 6)
         |    AS jevons
         |FROM t GROUP BY p_brand""".stripMargin) { (s, dir) =>
-      val py = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1997-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
-      def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
-      val pp = py.groupBy(col("l_partkey"))
-        .agg(
-          floor(yv(1995, "ep") / yv(1995, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p0"),
-          floor(yv(1996, "ep") / yv(1996, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1"),
-          count(lit(1)).as("ny"))
-        .filter(col("ny") === 2)
+      val pp = matchedParts(partYears(s, dir, 1995, 1996), 1995, 1996, 0)
       pp.join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
           col("p_partkey") === col("l_partkey"))
         .select(col("p_brand"),
@@ -5292,16 +5048,7 @@ object Etl {
     // collapses to one part×year agg that feeds all three links.
     "etl_chained_index" -> QueryDef.withOracle {
       def linkSql(k: Int, y0: Int, y1: Int): String =
-        s"""pp$k AS (
-           |  SELECT l_partkey,
-           |    CAST(floor(max(CASE WHEN y = $y0 THEN ep END)
-           |      / max(CASE WHEN y = $y0 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p0,
-           |    CAST(floor(max(CASE WHEN y = $y1 THEN ep END)
-           |      / max(CASE WHEN y = $y1 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1,
-           |    CAST(floor(max(CASE WHEN y = $y0 THEN qty END) * 100 + 0.5) AS BIGINT) AS q0,
-           |    CAST(floor(max(CASE WHEN y = $y1 THEN qty END) * 100 + 0.5) AS BIGINT) AS q1
-           |  FROM py WHERE y IN ($y0, $y1) GROUP BY 1
-           |  HAVING count(*) = 2),
+        s"""${matchedSql(s"pp$k", y0, y1, 2)},
            |j$k AS (
            |  SELECT pp$k.*, p.p_brand FROM pp$k
            |  JOIN part p ON p.p_partkey = pp$k.l_partkey),
@@ -5325,13 +5072,7 @@ object Etl {
            |    sqrt((e10 / e00) * (e11 / e01)) AS fish,
            |    exp(tq$k.tfp / 1.0e6) AS torn
            |  FROM tot$k t JOIN tq$k USING (p_brand))""".stripMargin
-      s"""WITH py AS (
-         |  SELECT l_partkey, year(l_shipdate) AS y,
-         |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-         |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-         |  FROM lineitem
-         |  WHERE l_shipdate >= '1995-01-01' AND l_shipdate < '1999-01-01'
-         |  GROUP BY 1, 2),
+      s"""WITH ${partYearSql(1995, 1998)},
          |${linkSql(1, 1995, 1996)},
          |${linkSql(2, 1996, 1997)},
          |${linkSql(3, 1997, 1998)}
@@ -5346,31 +5087,17 @@ object Etl {
          |JOIN l3 ON l3.p_brand = l1.p_brand""".stripMargin
     } { (s, dir) =>
       val dec38 = DecimalType(38, 0)
-      val py = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1999-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
+      val py = partYears(s, dir, 1995, 1998)
       val brand = Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))
       // ONE part-keyed pivot serves all three links (each link then
       // filters the two years it needs — p_y is null exactly when the
       // part missed year y, so the null check ≡ the oracle's
       // HAVING count(*) = 2): 2 corpus-keyed exchanges total instead
       // of 1 + one per link.
-      def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
+      val cols = (1995 to 1998).flatMap(y =>
+        Seq(unitPrice(y).as(s"p$y"), qtyFp(y).as(s"q$y")))
       val pp = py.groupBy(col("l_partkey"))
-        .agg(
-          (1995 to 1998).flatMap(y => Seq(
-            floor(yv(y, "ep") / yv(y, "qty") * 1000000 + 0.5)
-              .cast(LongType).as(s"p$y"),
-            floor(yv(y, "qty") * 100 + 0.5).cast(LongType).as(s"q$y"))).head,
-          (1995 to 1998).flatMap(y => Seq(
-            floor(yv(y, "ep") / yv(y, "qty") * 1000000 + 0.5)
-              .cast(LongType).as(s"p$y"),
-            floor(yv(y, "qty") * 100 + 0.5).cast(LongType).as(s"q$y"))).tail: _*)
+        .agg(cols.head, cols.tail: _*)
         .join(broadcast(brand), col("p_partkey") === col("l_partkey"))
         .persist() // part-level 4-year basket feeds all six brand aggs
       def link(y0: Int, y1: Int, suffix: String): DataFrame = {
@@ -5435,6 +5162,8 @@ object Etl {
     // period it is used). One part×year corpus agg + one part pivot;
     // everything after is brand-level bookkeeping.
     "etl_lowe_young" -> QueryDef.withOracle {
+      val lowePrices =
+        (1995 to 1998).map(y => s"${unitPriceSql(y)} AS p$y").mkString(",\n    ")
       def tBlock(t: Int): String =
         s"""j$t AS (
            |  SELECT p_brand, p1996, p$t, q1995, e95
@@ -5458,24 +5187,11 @@ object Etl {
            |    round(100 * w.num / w.den, 6) AS lowe_$t,
            |    round(100 * (y.yfp / 1.0e8), 6) AS young_$t
            |  FROM w$t w JOIN y$t y USING (p_brand))""".stripMargin
-      s"""WITH py AS (
-         |  SELECT l_partkey, year(l_shipdate) AS y,
-         |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-         |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-         |  FROM lineitem
-         |  WHERE l_shipdate >= '1995-01-01' AND l_shipdate < '1999-01-01'
-         |  GROUP BY 1, 2),
+      s"""WITH ${partYearSql(1995, 1998)},
          |pv AS (
          |  SELECT l_partkey,
-         |    CAST(floor(max(CASE WHEN y = 1995 THEN ep END)
-         |      / max(CASE WHEN y = 1995 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1995,
-         |    CAST(floor(max(CASE WHEN y = 1996 THEN ep END)
-         |      / max(CASE WHEN y = 1996 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1996,
-         |    CAST(floor(max(CASE WHEN y = 1997 THEN ep END)
-         |      / max(CASE WHEN y = 1997 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1997,
-         |    CAST(floor(max(CASE WHEN y = 1998 THEN ep END)
-         |      / max(CASE WHEN y = 1998 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1998,
-         |    CAST(floor(max(CASE WHEN y = 1995 THEN qty END) * 100 + 0.5) AS BIGINT) AS q1995
+         |    $lowePrices,
+         |    ${qtyFpSql(1995)} AS q1995
          |  FROM py GROUP BY 1),
          |pp AS (
          |  SELECT pv.*, p.p_brand,
@@ -5489,27 +5205,12 @@ object Etl {
          |FROM l1997 a JOIN l1998 b ON b.p_brand = a.p_brand""".stripMargin
     } { (s, dir) =>
       val hug = DecimalType(38, 0)
-      val py = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1999-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
-      def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
+      val py = partYears(s, dir, 1995, 1998)
       val brand = Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))
       val pp = py.groupBy(col("l_partkey"))
-        .agg(
-          floor(yv(1995, "ep") / yv(1995, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1995"),
-          floor(yv(1996, "ep") / yv(1996, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1996"),
-          floor(yv(1997, "ep") / yv(1997, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1997"),
-          floor(yv(1998, "ep") / yv(1998, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1998"),
-          floor(yv(1995, "qty") * 100 + 0.5).cast(LongType).as("q1995"))
+        .agg(unitPrice(1995).as("p1995"),
+          (1996 to 1998).map(y => unitPrice(y).as(s"p$y")) :+
+            qtyFp(1995).as("q1995"): _*)
         .join(broadcast(brand), col("p_partkey") === col("l_partkey"))
         .withColumn("e95", (col("p1995").cast(hug) * col("q1995")).cast(hug))
         .persist() // one pivot feeds both current periods
@@ -5553,21 +5254,8 @@ object Etl {
     // on any engine) before the exact cross-term sums. 1995→1996 over
     // parts present in both years, per brand.
     "etl_walsh_marshall" -> QueryDef.withOracle(
-      """WITH py AS (
-        |  SELECT l_partkey, year(l_shipdate) AS y,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-        |  GROUP BY 1, 2),
-        |pv AS (
-        |  SELECT l_partkey,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN ep END)
-        |      / max(CASE WHEN y = 1995 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN ep END)
-        |      / max(CASE WHEN y = 1996 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN qty END) * 100 + 0.5) AS BIGINT) AS q0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN qty END) * 100 + 0.5) AS BIGINT) AS q1
-        |  FROM py GROUP BY 1 HAVING count(*) = 2),
+      s"""WITH ${partYearSql(1995, 1996)},
+        |${matchedSql("pv", 1995, 1996, 2)},
         |j AS (
         |  SELECT p.p_brand, pv.p0, pv.p1, pv.q0, pv.q1,
         |    CAST(floor(sqrt(CAST(CAST(pv.q0 AS HUGEINT) * pv.q1 AS DOUBLE))
@@ -5582,25 +5270,7 @@ object Etl {
         |    AS walsh_1996
         |FROM j GROUP BY 1""".stripMargin) { (s, dir) =>
       val hug = DecimalType(38, 0)
-      val py = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1997-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
-      def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
-      val pv = py.groupBy(col("l_partkey"))
-        .agg(
-          floor(yv(1995, "ep") / yv(1995, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p0"),
-          floor(yv(1996, "ep") / yv(1996, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1"),
-          floor(yv(1995, "qty") * 100 + 0.5).cast(LongType).as("q0"),
-          floor(yv(1996, "qty") * 100 + 0.5).cast(LongType).as("q1"),
-          count(lit(1)).as("ny"))
-        .filter(col("ny") === 2)
+      val pv = matchedParts(partYears(s, dir, 1995, 1996), 1995, 1996, 2)
       val brand = Tables.part(s, dir).select(col("p_partkey"), col("p_brand"))
       pv.join(broadcast(brand), col("p_partkey") === col("l_partkey"))
         .withColumn("wq",
@@ -5766,7 +5436,7 @@ object Etl {
         |  (SELECT CAST(count(*) AS BIGINT) FROM supplier
         |   WHERE s_suppkey % 10 = 0) AS n_corrupt
         |FROM supplier WHERE s_suppkey % 10 <> 0""".stripMargin) { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_badjson").toString
+      val tmp = TempDirs.deletedOnExit("graft_badjson").toString
       val src = Tables.supplier(s, dir)
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
       src.select(
@@ -5803,7 +5473,7 @@ object Etl {
         |  (SELECT CAST(count(*) AS BIGINT) FROM supplier
         |   WHERE s_suppkey % 10 = 0) AS n_corrupt
         |FROM supplier WHERE s_suppkey % 10 <> 0""".stripMargin) { (s, dir) =>
-      val tmp = Files.createTempDirectory("graft_badcsv").toString
+      val tmp = TempDirs.deletedOnExit("graft_badcsv").toString
       val src = Tables.supplier(s, dir)
         .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
       // names carry no commas/quotes in this schema, so hand-built
@@ -6027,22 +5697,13 @@ object Etl {
     // recomputes the anchors and asserts the verdicts are uniformly
     // TRUE. Raw benchmarked series: [[dentonRaw]].
     "etl_denton_pfd" -> QueryDef.withOracle(
-      """WITH mo AS (
+      s"""WITH mo AS (
         |  SELECT year(o_orderdate) AS yr,
         |    CAST(count(DISTINCT date_trunc('month', o_orderdate)) AS BIGINT)
         |      AS n_months
         |  FROM orders GROUP BY 1),
-        |lo AS (
-        |  SELECT l_orderkey,
-        |    CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
-        |      * (1 + l_tax) * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS line_fp
-        |  FROM lineitem GROUP BY l_orderkey),
-        |ctl AS (
-        |  SELECT year(o.o_orderdate) AS yr,
-        |    CAST(sum(coalesce(lo.line_fp, 0)) AS BIGINT) AS control_fp
-        |  FROM orders o LEFT JOIN lo ON lo.l_orderkey = o.o_orderkey
-        |  GROUP BY 1)
-        |SELECT mo.yr, mo.n_months, ctl.control_fp,
+        |$annualControlSql
+        |SELECT mo.yr, mo.n_months, ctl.cfp AS control_fp,
         |  TRUE AS sum_ok, TRUE AS movement_ok
         |FROM mo JOIN ctl ON ctl.yr = mo.yr""".stripMargin) { (s, dir) =>
       val book = dentonBook(s, dir)
@@ -6154,19 +5815,8 @@ object Etl {
     // z-statistic assembles from mirrored double chains and snaps to
     // ×10⁹.
     "etl_wilcoxon_signrank" -> QueryDef.withOracle(
-      """WITH py AS (
-        |  SELECT l_partkey, year(l_shipdate) AS y,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-        |  GROUP BY 1, 2),
-        |pp AS (
-        |  SELECT l_partkey,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN ep END)
-        |      / max(CASE WHEN y = 1995 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN ep END)
-        |      / max(CASE WHEN y = 1996 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1
-        |  FROM py GROUP BY 1 HAVING count(*) = 2),
+      s"""WITH ${partYearSql(1995, 1996)},
+        |${matchedSql("pp", 1995, 1996, 0)},
         |d AS (
         |  SELECT d FROM (
         |    SELECT CAST(floor(CAST(p1 AS DOUBLE) * 100 / p0 + 0.5) AS BIGINT)
@@ -6194,23 +5844,7 @@ object Etl {
         |        - CAST(ties AS DOUBLE) / 48)
         |    * 1000000000 + 0.5) AS BIGINT) / 1.0e9 AS z
         |FROM s""".stripMargin) { (s, dir) =>
-      val py = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1997-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
-      def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
-      val pp = py.groupBy(col("l_partkey"))
-        .agg(
-          floor(yv(1995, "ep") / yv(1995, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p0"),
-          floor(yv(1996, "ep") / yv(1996, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1"),
-          count(lit(1)).as("ny"))
-        .filter(col("ny") === 2)
+      val pp = matchedParts(partYears(s, dir, 1995, 1996), 1995, 1996, 0)
       val d = pp
         .select((floor(col("p1").cast(DoubleType) * 100 / col("p0") + 0.5)
           .cast(LongType) - 100).as("d"))
@@ -6549,21 +6183,8 @@ object Etl {
     // to a long BEFORE its sum so the reduction is exact and
     // partitioning-invariant — an unordered double sum would not be.
     "etl_tornqvist" -> QueryDef.withOracle(
-      """WITH py AS (
-        |  SELECT l_partkey, year(l_shipdate) AS y,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-        |  GROUP BY 1, 2),
-        |pp AS (
-        |  SELECT l_partkey,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN ep END)
-        |      / max(CASE WHEN y = 1995 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN ep END)
-        |      / max(CASE WHEN y = 1996 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN qty END) * 100 + 0.5) AS BIGINT) AS q0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN qty END) * 100 + 0.5) AS BIGINT) AS q1
-        |  FROM py GROUP BY 1 HAVING count(*) = 2),
+      s"""WITH ${partYearSql(1995, 1996)},
+        |${matchedSql("pp", 1995, 1996, 2)},
         |pb AS (
         |  SELECT p.p_brand, pp.p0, pp.p1, pp.q0, pp.q1,
         |    CAST(pp.p0 AS HUGEINT) * pp.q0 AS v0,
@@ -6591,25 +6212,7 @@ object Etl {
         |    / 1.0e6 AS walsh
         |FROM terms GROUP BY 1""".stripMargin) { (s, dir) =>
       val dec38 = DecimalType(38, 0)
-      val py = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1997-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
-      def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
-      val pp = py.groupBy(col("l_partkey"))
-        .agg(
-          floor(yv(1995, "ep") / yv(1995, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p0"),
-          floor(yv(1996, "ep") / yv(1996, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1"),
-          floor(yv(1995, "qty") * 100 + 0.5).cast(LongType).as("q0"),
-          floor(yv(1996, "qty") * 100 + 0.5).cast(LongType).as("q1"),
-          count(lit(1)).as("ny"))
-        .filter(col("ny") === 2)
+      val pp = matchedParts(partYears(s, dir, 1995, 1996), 1995, 1996, 2)
       val pb = pp
         .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
           col("p_partkey") === col("l_partkey"))
@@ -6652,33 +6255,8 @@ object Etl {
     // is partitioning-invariant. Corpus collapses to months in one
     // agg; everything after is bookkeeping-scale.
     "etl_seasonal_strength" -> QueryDef.withOracle(
-      """WITH m AS (
-        |  SELECT CAST(floor(epoch(date_trunc('month', o_orderdate))) AS BIGINT)
-        |      AS mo_s,
-        |    CAST(month(o_orderdate) AS BIGINT) AS mo,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |  FROM orders GROUP BY 1, 2),
-        |w AS (
-        |  SELECT mo_s, mo, total,
-        |    (0.5 * lag(total, 6) OVER o + lag(total, 5) OVER o + lag(total, 4) OVER o
-        |      + lag(total, 3) OVER o + lag(total, 2) OVER o + lag(total, 1) OVER o
-        |      + total + lead(total, 1) OVER o + lead(total, 2) OVER o
-        |      + lead(total, 3) OVER o + lead(total, 4) OVER o + lead(total, 5) OVER o
-        |      + 0.5 * lead(total, 6) OVER o) / 12 AS ma
-        |  FROM m WINDOW o AS (ORDER BY mo_s)),
-        |si AS (
-        |  SELECT mo_s, mo, total, ma,
-        |    CAST(floor(total / ma * 1000000000 + 0.5) AS BIGINT) AS si_fp
-        |  FROM w WHERE ma IS NOT NULL),
-        |f AS (
-        |  SELECT mo,
-        |    CAST(floor(CAST(sum(si_fp) AS BIGINT) / count(*) + 0.5) AS BIGINT)
-        |      AS m_fp
-        |  FROM si GROUP BY mo),
-        |nrm AS (SELECT CAST(sum(m_fp) AS BIGINT) AS fsum FROM f),
-        |fac AS (
-        |  SELECT f.mo, f.m_fp * 12.0 / nrm.fsum AS seasonal
-        |  FROM f CROSS JOIN nrm),
+      s"""WITH ${movingAvgSql("CAST(month(o_orderdate) AS BIGINT) AS mo")},
+        |$seasonalFactorsSql,
         |lg AS (
         |  SELECT
         |    CAST(floor(ln(si.ma) * 1e9 + 0.5) AS BIGINT) AS lt_fp,
@@ -6705,31 +6283,12 @@ object Etl {
         |    AS seasonal_strength
         |FROM v""".stripMargin) { (s, dir) =>
       val dec38 = DecimalType(38, 0)
-      val m = Tables.orders(s, dir)
-        .groupBy(
-          unix_timestamp(date_trunc("month", col("o_orderdate"))).as("mo_s"),
-          month(col("o_orderdate")).cast(LongType).as("mo"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("total"))
-      val o = Window.orderBy(col("mo_s").asc) // months-bounded relation
-      val terms = lit(0.5) * lag(col("total"), 6).over(o) +
-        lag(col("total"), 5).over(o) + lag(col("total"), 4).over(o) +
-        lag(col("total"), 3).over(o) + lag(col("total"), 2).over(o) +
-        lag(col("total"), 1).over(o) + col("total") +
-        lead(col("total"), 1).over(o) + lead(col("total"), 2).over(o) +
-        lead(col("total"), 3).over(o) + lead(col("total"), 4).over(o) +
-        lead(col("total"), 5).over(o) + lit(0.5) * lead(col("total"), 6).over(o)
-      val si = m.withColumn("ma", terms / 12)
-        .filter(col("ma").isNotNull)
+      val si = movingAvg(s, dir,
+        month(col("o_orderdate")).cast(LongType).as("mo"))
         .withColumn("si_fp",
           floor(col("total") / col("ma") * lit(1.0e9) + lit(0.5)).cast(LongType))
         .persist() // months-bounded; feeds factors and the log-components
-      val f = si.groupBy(col("mo"))
-        .agg(floor(sum(col("si_fp")) / count(lit(1)) + lit(0.5))
-          .cast(LongType).as("m_fp"))
-      val nrm = f.agg(sum(col("m_fp")).as("fsum"))
-      val fac = f.crossJoin(broadcast(nrm))
-        .select(col("mo"), (col("m_fp") * lit(12.0) / col("fsum")).as("seasonal"))
+      val fac = seasonalFactors(si)
       val lg = si.join(broadcast(fac), Seq("mo"))
         .select(
           floor(log(col("ma")) * lit(1.0e9) + 0.5).cast(LongType).as("lt_fp"),
@@ -7144,12 +6703,7 @@ object Etl {
     // divided as identically-sequenced doubles; medians use explicit
     // rank selection with full deterministic tiebreaks.
     "etl_theil_sen" -> QueryDef.withOracle(
-      """WITH mo AS (
-        |  SELECT l_returnflag AS f,
-        |    CAST(year(l_shipdate) * 12 + month(l_shipdate) AS BIGINT) AS mi,
-        |    CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
-        |      AS BIGINT) AS rev_c
-        |  FROM lineitem GROUP BY 1, 2),
+      s"""WITH $monthlyRevenueSql,
         |pr AS (
         |  SELECT a.f, a.mi AS mi_a, b.mi AS mi_b,
         |    CAST(b.rev_c - a.rev_c AS DOUBLE) / (b.mi - a.mi) AS slope
@@ -7180,12 +6734,7 @@ object Etl {
         |  floor(sl.slope / 100 * 1e6 + 0.5) / 1.0e6 AS sen_slope,
         |  floor(b0.b0 / 100 * 1e2 + 0.5) / 1.0e2 AS sen_intercept
         |FROM sl JOIN b0 ON b0.f = sl.f""".stripMargin) { (s, dir) =>
-      val mo = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("f"),
-          (year(col("l_shipdate")) * 12 + month(col("l_shipdate")))
-            .cast(LongType).as("mi"))
-        .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast(LongType))
-          .as("rev_c"))
+      val mo = monthlyRevenue(s, dir)
         .persist() // ≤|months|·|flags| rows; pair join + intercept pass
       val pr = mo.as("a").join(mo.as("b"),
           col("b.f") === col("a.f") && col("b.mi") > col("a.mi"))
@@ -7760,20 +7309,7 @@ object Etl {
     // from the identical number. Corpus → monthly relation in one
     // agg; everything after is months-bounded bookkeeping.
     "etl_x11_ftest" -> QueryDef.withOracle(
-      """WITH m AS (
-        |  SELECT CAST(floor(epoch(date_trunc('month', o_orderdate))) AS BIGINT)
-        |      AS mo_s,
-        |    CAST(month(o_orderdate) AS BIGINT) AS mo,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |  FROM orders GROUP BY 1, 2),
-        |w AS (
-        |  SELECT mo_s, mo, total,
-        |    (0.5 * lag(total, 6) OVER o + lag(total, 5) OVER o + lag(total, 4) OVER o
-        |      + lag(total, 3) OVER o + lag(total, 2) OVER o + lag(total, 1) OVER o
-        |      + total + lead(total, 1) OVER o + lead(total, 2) OVER o
-        |      + lead(total, 3) OVER o + lead(total, 4) OVER o + lead(total, 5) OVER o
-        |      + 0.5 * lead(total, 6) OVER o) / 12 AS ma
-        |  FROM m WINDOW o AS (ORDER BY mo_s)),
+      s"""WITH ${movingAvgSql("CAST(month(o_orderdate) AS BIGINT) AS mo")},
         |si AS (
         |  SELECT mo, CAST(floor(total / ma * 1000000000 + 0.5) AS BIGINT) AS si_fp
         |  FROM w WHERE ma IS NOT NULL),
@@ -7794,22 +7330,8 @@ object Etl {
         |      / ((ss - sgm) / (n - k)) * 1000000000 + 0.5) / 1.0e9 > 7.0
         |    AS seasonality_identifiable
         |FROM t""".stripMargin) { (s, dir) =>
-      val m = Tables.orders(s, dir)
-        .groupBy(
-          unix_timestamp(date_trunc("month", col("o_orderdate"))).as("mo_s"),
-          month(col("o_orderdate")).cast(LongType).as("mo"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("total"))
-      val o = Window.orderBy(col("mo_s").asc)
-      val terms = lit(0.5) * lag(col("total"), 6).over(o) +
-        lag(col("total"), 5).over(o) + lag(col("total"), 4).over(o) +
-        lag(col("total"), 3).over(o) + lag(col("total"), 2).over(o) +
-        lag(col("total"), 1).over(o) + col("total") +
-        lead(col("total"), 1).over(o) + lead(col("total"), 2).over(o) +
-        lead(col("total"), 3).over(o) + lead(col("total"), 4).over(o) +
-        lead(col("total"), 5).over(o) + lit(0.5) * lead(col("total"), 6).over(o)
-      val si = m.withColumn("ma", terms / 12)
-        .filter(col("ma").isNotNull)
+      val si = movingAvg(s, dir,
+        month(col("o_orderdate")).cast(LongType).as("mo"))
         .select(col("mo"),
           floor(col("total") / col("ma") * lit(1.0e9) + lit(0.5))
             .cast(LongType).as("si_fp"))
@@ -7904,12 +7426,7 @@ object Etl {
             col("pe").cast(dec38) * col("pe").cast(dec38)))
             .cast(DoubleType)
           * lit(1000000000L) + lit(0.5)).cast(LongType).as("rho_fp"))
-      val mo = Tables.lineitem(s, dir)
-        .groupBy(col("l_returnflag").as("f"),
-          (year(col("l_shipdate")) * 12 + month(col("l_shipdate")))
-            .cast(LongType).as("mi"))
-        .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast(LongType))
-          .as("rev_c"))
+      val mo = monthlyRevenue(s, dir)
       val q = mo.join(broadcast(rho), Seq("f"))
         .withColumn("py", lag(col("rev_c"), 1).over(wF))
         .withColumn("px", lag(col("mi"), 1).over(wF))
@@ -8035,21 +7552,8 @@ object Etl {
     // every published number (F_s, F_m, M7) snaps ×10⁶ BEFORE the
     // boolean, so both engines decide from the identical value.
     "etl_x11_m7" -> QueryDef.withOracle(
-      """WITH m AS (
-        |  SELECT CAST(floor(epoch(date_trunc('month', o_orderdate))) AS BIGINT)
-        |      AS mo_s,
-        |    CAST(month(o_orderdate) AS BIGINT) AS mo,
-        |    CAST(year(o_orderdate) AS BIGINT) AS yr,
-        |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |  FROM orders GROUP BY 1, 2, 3),
-        |w AS (
-        |  SELECT mo_s, mo, yr, total,
-        |    (0.5 * lag(total, 6) OVER o + lag(total, 5) OVER o + lag(total, 4) OVER o
-        |      + lag(total, 3) OVER o + lag(total, 2) OVER o + lag(total, 1) OVER o
-        |      + total + lead(total, 1) OVER o + lead(total, 2) OVER o
-        |      + lead(total, 3) OVER o + lead(total, 4) OVER o + lead(total, 5) OVER o
-        |      + 0.5 * lead(total, 6) OVER o) / 12 AS ma
-        |  FROM m WINDOW o AS (ORDER BY mo_s)),
+      s"""WITH ${movingAvgSql("CAST(month(o_orderdate) AS BIGINT) AS mo",
+          "CAST(year(o_orderdate) AS BIGINT) AS yr")},
         |si AS (
         |  SELECT mo, yr,
         |    CAST(floor(total / ma * 1000000000 + 0.5) AS BIGINT) AS si_fp
@@ -8085,23 +7589,9 @@ object Etl {
         |  floor(sqrt((7.0 / f_stable + 3.0 * f_moving / f_stable) / 2)
         |    * 1000000 + 0.5) / 1.0e6 < 1.0 AS seasonality_identifiable
         |FROM f""".stripMargin) { (s, dir) =>
-      val m = Tables.orders(s, dir)
-        .groupBy(
-          unix_timestamp(date_trunc("month", col("o_orderdate"))).as("mo_s"),
-          month(col("o_orderdate")).cast(LongType).as("mo"),
-          year(col("o_orderdate")).cast(LongType).as("yr"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .cast(DoubleType).as("total"))
-      val o = Window.orderBy(col("mo_s").asc)
-      val terms = lit(0.5) * lag(col("total"), 6).over(o) +
-        lag(col("total"), 5).over(o) + lag(col("total"), 4).over(o) +
-        lag(col("total"), 3).over(o) + lag(col("total"), 2).over(o) +
-        lag(col("total"), 1).over(o) + col("total") +
-        lead(col("total"), 1).over(o) + lead(col("total"), 2).over(o) +
-        lead(col("total"), 3).over(o) + lead(col("total"), 4).over(o) +
-        lead(col("total"), 5).over(o) + lit(0.5) * lead(col("total"), 6).over(o)
-      val si = m.withColumn("ma", terms / 12)
-        .filter(col("ma").isNotNull)
+      val si = movingAvg(s, dir,
+        month(col("o_orderdate")).cast(LongType).as("mo"),
+        year(col("o_orderdate")).cast(LongType).as("yr"))
         .select(col("mo"), col("yr"),
           floor(col("total") / col("ma") * lit(1.0e9) + lit(0.5))
             .cast(LongType).as("si_fp"))
@@ -8254,19 +7744,8 @@ object Etl {
     // long sums, one division); each Carli relative snaps ×10⁹ to a
     // long before the order-invariant integer sum.
     "etl_carli_dutot" -> QueryDef.withOracle(
-      """WITH py AS (
-        |  SELECT l_partkey, year(l_shipdate) AS y,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-        |  GROUP BY 1, 2),
-        |pp AS (
-        |  SELECT l_partkey,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN ep END)
-        |      / max(CASE WHEN y = 1995 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN ep END)
-        |      / max(CASE WHEN y = 1996 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1
-        |  FROM py GROUP BY 1 HAVING count(*) = 2),
+      s"""WITH ${partYearSql(1995, 1996)},
+        |${matchedSql("pp", 1995, 1996, 0)},
         |t AS (
         |  SELECT p.p_brand, pp.p0, pp.p1,
         |    CAST(floor(CAST(pp.p1 AS DOUBLE) / pp.p0 * 1e9 + 0.5) AS BIGINT)
@@ -8278,23 +7757,7 @@ object Etl {
         |  round(100 * CAST(sum(p1) AS DOUBLE) / CAST(sum(p0) AS BIGINT), 6)
         |    AS dutot
         |FROM t GROUP BY p_brand""".stripMargin) { (s, dir) =>
-      val py = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1997-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
-      def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
-      val pp = py.groupBy(col("l_partkey"))
-        .agg(
-          floor(yv(1995, "ep") / yv(1995, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p0"),
-          floor(yv(1996, "ep") / yv(1996, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1"),
-          count(lit(1)).as("ny"))
-        .filter(col("ny") === 2)
+      val pp = matchedParts(partYears(s, dir, 1995, 1996), 1995, 1996, 0)
       pp.join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
           col("p_partkey") === col("l_partkey"))
         .select(col("p_brand"), col("p0"), col("p1"),
@@ -8437,19 +7900,8 @@ object Etl {
     // ×10⁹; the intercept uses the SNAPPED slope. Pearson r published
     // alongside (the attenuation diagnostic).
     "etl_deming_regression" -> QueryDef.withOracle(
-      """WITH py AS (
-        |  SELECT l_partkey, year(l_shipdate) AS y,
-        |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-        |  FROM lineitem WHERE year(l_shipdate) IN (1995, 1996)
-        |  GROUP BY 1, 2),
-        |pp AS (
-        |  SELECT l_partkey,
-        |    CAST(floor(max(CASE WHEN y = 1995 THEN ep END)
-        |      / max(CASE WHEN y = 1995 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p0,
-        |    CAST(floor(max(CASE WHEN y = 1996 THEN ep END)
-        |      / max(CASE WHEN y = 1996 THEN qty END) * 1000000 + 0.5) AS BIGINT) AS p1
-        |  FROM py GROUP BY 1 HAVING count(*) = 2),
+      s"""WITH ${partYearSql(1995, 1996)},
+        |${matchedSql("pp", 1995, 1996, 0)},
         |m AS (
         |  SELECT p.p_brand, CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(pp.p0) AS BIGINT) AS sx,
@@ -8477,23 +7929,7 @@ object Etl {
         |  floor(cxy / sqrt(cxx * cyy) * 1e9 + 0.5) / 1.0e9 AS pearson_r
         |FROM b""".stripMargin) { (s, dir) =>
       val dec38 = DecimalType(38, 0)
-      val py = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= lit("1995-01-01").cast(TimestampType) &&
-          col("l_shipdate") < lit("1997-01-01").cast(TimestampType))
-        .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
-        .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("ep"),
-          sum(col("l_quantity").cast(DecimalType(18, 2)))
-            .cast(DoubleType).as("qty"))
-      def yv(y: Int, c: String) = max(when(col("y") === y, col(c)))
-      val pp = py.groupBy(col("l_partkey"))
-        .agg(
-          floor(yv(1995, "ep") / yv(1995, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p0"),
-          floor(yv(1996, "ep") / yv(1996, "qty") * 1000000 + 0.5)
-            .cast(LongType).as("p1"),
-          count(lit(1)).as("ny"))
-        .filter(col("ny") === 2)
+      val pp = matchedParts(partYears(s, dir, 1995, 1996), 1995, 1996, 0)
       val m = pp
         .join(Tables.part(s, dir).select(col("p_partkey"), col("p_brand")),
           col("p_partkey") === col("l_partkey"))
@@ -8983,22 +8419,7 @@ object Etl {
     * control in exact ×10⁴ fixed point — |years| × ≤12 rows. */
   private[graft] def dentonBook(s: SparkSession, dir: String)
       : Array[org.apache.spark.sql.Row] = {
-    val mo = Tables.orders(s, dir)
-      .groupBy(
-        unix_timestamp(date_trunc("month", col("o_orderdate"))).as("mo_s"),
-        year(col("o_orderdate")).as("yr"))
-      .agg(sum(floor(col("o_totalprice") * lit(100) + lit(0.5))
-        .cast(LongType)).as("mfp"))
-    val lo = Tables.lineitem(s, dir)
-      .groupBy(col("l_orderkey"))
-      .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount"))
-        * (lit(1) + col("l_tax")) * lit(10000) + lit(0.5)).cast(LongType))
-        .as("line_fp"))
-    val ctl = Tables.orders(s, dir)
-      .join(lo, col("l_orderkey") === col("o_orderkey"), "left_outer")
-      .groupBy(year(col("o_orderdate")).as("yr"))
-      .agg(sum(coalesce(col("line_fp"), lit(0L))).as("cfp"))
-    mo.join(ctl, Seq("yr"))
+    monthlyIndicator(s, dir).join(annualControl(s, dir), Seq("yr"))
       .select(col("yr"), col("mo_s"), col("mfp"), col("cfp"))
       .collect()
   }
@@ -9091,19 +8512,246 @@ object Etl {
           .as(r2Name))
   }
 
-  /** Shared oracle prefix for the monthly-OLS residual family
-    * (etl_durbin_watson, etl_cooks_distance): the exact-cent monthly
-    * revenue series per return flag (etl_theil_sen's `mo` relation),
-    * its per-flag OLS fit via the etl_regression_ols pinned double
-    * chain, and the ×100-snapped residuals `e_fp` (BIGINT — squares go
-    * HUGEINT at the use sites). One-sided edits fail verify. */
-  private def monthlyOlsSql: String =
+  /** Multiplicative seasonal factors `(mo, seasonal)` from the ×10⁹
+    * SI ratios `si_fp` per calendar month `mo`: the per-month mean,
+    * rescaled so the 12 factors average 1. Oracle twin:
+    * [[seasonalFactorsSql]]. */
+  private def seasonalFactors(si: DataFrame): DataFrame = {
+    val f = si.groupBy(col("mo"))
+      .agg(floor(sum(col("si_fp")) / count(lit(1)) + lit(0.5))
+        .cast(LongType).as("m_fp"))
+    val nrm = f.agg(sum(col("m_fp")).as("fsum"))
+    f.crossJoin(broadcast(nrm))
+      .select(col("mo"), (col("m_fp") * lit(12.0) / col("fsum")).as("seasonal"))
+  }
+
+  /** DuckDB CTEs `si` (the SI ratios of [[movingAvgSql]]'s `w`), `f`,
+    * `nrm` and `fac (mo, seasonal)`, mirroring [[seasonalFactors]]. */
+  private def seasonalFactorsSql: String =
+    """si AS (
+      |  SELECT mo_s, mo, total, ma,
+      |    CAST(floor(total / ma * 1000000000 + 0.5) AS BIGINT) AS si_fp
+      |  FROM w WHERE ma IS NOT NULL),
+      |f AS (
+      |  SELECT mo,
+      |    CAST(floor(CAST(sum(si_fp) AS BIGINT) / count(*) + 0.5) AS BIGINT)
+      |      AS m_fp
+      |  FROM si GROUP BY mo),
+      |nrm AS (SELECT CAST(sum(m_fp) AS BIGINT) AS fsum FROM f),
+      |fac AS (
+      |  SELECT f.mo, f.m_fp * 12.0 / nrm.fsum AS seasonal
+      |  FROM f CROSS JOIN nrm)""".stripMargin
+
+  /** Each customer's order spend (exact decimal sum as a double) with
+    * their nation: `(o_custkey, spend, c_custkey, c_nationkey,
+    * n_nationkey, n_name)`, one custkey-keyed shuffle join plus the
+    * broadcast nation dim. Oracle twin: [[nationSpendSql]]. */
+  private def nationSpend(s: SparkSession, dir: String): DataFrame = {
+    val spend = Tables.orders(s, dir)
+      .groupBy(col("o_custkey"))
+      .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
+        .cast(DoubleType).as("spend"))
+    val cust = Tables.customer(s, dir).select(col("c_custkey"), col("c_nationkey"))
+    val nat = Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))
+    spend
+      .join(cust, col("c_custkey") === col("o_custkey"))
+      .join(broadcast(nat), col("n_nationkey") === col("c_nationkey"))
+  }
+
+  /** DuckDB CTEs `spend` and `j (n_name, custkey, spend)` mirroring
+    * [[nationSpend]]. */
+  private def nationSpendSql: String =
+    """spend AS (
+      |  SELECT o_custkey,
+      |    CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS spend
+      |  FROM orders GROUP BY 1),
+      |j AS (
+      |  SELECT n.n_name, s.o_custkey AS custkey, s.spend
+      |  FROM spend s
+      |  JOIN customer c ON c.c_custkey = s.o_custkey
+      |  JOIN nation n ON n.n_nationkey = c.c_nationkey)""".stripMargin
+
+  /** The centered 2×12 moving average of X-11 seasonal adjustment:
+    * orders' monthly totals `(mo_s, keys…, total)` (exact decimal sums)
+    * with `ma`, kept for the months that have six months on each side.
+    * The MA is summed via explicit lag/lead terms in one left-associated
+    * chain, NOT a window avg, so the double addition order is pinned on
+    * both engines. The single-partition window is safe here: the
+    * relation is one row per calendar month, bounded by the date span,
+    * not the corpus. Callers snap money-magnitude outputs (total, ma) at
+    * cents via floor(x·100 + 0.5)/100.0, not round(x, 6): at sf1d a
+    * monthly total is ~4.3e9, and 6 decimals on top exceed a double's
+    * 16 significant digits, where the engines' round() algorithms pick
+    * different neighbouring doubles (round-14 sf1d sweep); the floor
+    * idiom is pure IEEE ops, bit-identical on both engines and exact
+    * until 2^53/100. Oracle twin: [[movingAvgSql]]. */
+  private def movingAvg(s: SparkSession, dir: String, keys: Column*): DataFrame = {
+    val m = Tables.orders(s, dir)
+      .groupBy(unix_timestamp(date_trunc("month", col("o_orderdate"))).as("mo_s")
+        +: keys: _*)
+      .agg(sum(col("o_totalprice").cast(DecimalType(18, 2)))
+        .cast(DoubleType).as("total"))
+    val o = Window.orderBy(col("mo_s").asc)
+    val terms = lit(0.5) * lag(col("total"), 6).over(o) +
+      lag(col("total"), 5).over(o) + lag(col("total"), 4).over(o) +
+      lag(col("total"), 3).over(o) + lag(col("total"), 2).over(o) +
+      lag(col("total"), 1).over(o) + col("total") +
+      lead(col("total"), 1).over(o) + lead(col("total"), 2).over(o) +
+      lead(col("total"), 3).over(o) + lead(col("total"), 4).over(o) +
+      lead(col("total"), 5).over(o) + lit(0.5) * lead(col("total"), 6).over(o)
+    m.withColumn("ma", terms / 12)
+      .filter(col("ma").isNotNull)
+  }
+
+  /** DuckDB CTEs `m` (monthly totals, select items `keys` after `mo_s`)
+    * and `w` (`m` plus the centered 2×12 `ma`, null at the ends),
+    * mirroring [[movingAvg]]. */
+  private def movingAvgSql(keys: String*): String =
+    (("CAST(floor(epoch(date_trunc('month', o_orderdate))) AS BIGINT)\n      AS mo_s" +:
+      keys) :+ "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total")
+      .mkString("m AS (\n  SELECT ", ",\n    ",
+        (1 to keys.size + 1).mkString("\n  FROM orders GROUP BY ", ", ", "),\n")) +
+      """w AS (
+        |  SELECT *,
+        |    (0.5 * lag(total, 6) OVER o + lag(total, 5) OVER o + lag(total, 4) OVER o
+        |      + lag(total, 3) OVER o + lag(total, 2) OVER o + lag(total, 1) OVER o
+        |      + total + lead(total, 1) OVER o + lead(total, 2) OVER o
+        |      + lead(total, 3) OVER o + lead(total, 4) OVER o + lead(total, 5) OVER o
+        |      + 0.5 * lead(total, 6) OVER o) / 12 AS ma
+        |  FROM m WINDOW o AS (ORDER BY mo_s))""".stripMargin
+
+  /** The part-year price panel `(l_partkey, y, ep, qty)` of the
+    * price-index family: lineitem shipped in years `y0`..`y1`, exact
+    * DECIMAL(18,2) revenue and quantity sums per part and year, as
+    * doubles. The ship-date filter is an explicit range, not
+    * year(..).isin(..): the range pushes down to the parquet scan; a
+    * year() wrap would not. Oracle twin: [[partYearSql]]. */
+  private def partYears(s: SparkSession, dir: String, y0: Int, y1: Int): DataFrame =
+    Tables.lineitem(s, dir)
+      .filter(col("l_shipdate") >= lit(s"$y0-01-01").cast(TimestampType) &&
+        col("l_shipdate") < lit(s"${y1 + 1}-01-01").cast(TimestampType))
+      .groupBy(col("l_partkey"), year(col("l_shipdate")).as("y"))
+      .agg(sum(col("l_extendedprice").cast(DecimalType(18, 2)))
+          .cast(DoubleType).as("ep"),
+        sum(col("l_quantity").cast(DecimalType(18, 2)))
+          .cast(DoubleType).as("qty"))
+
+  /** Year-`y` value of panel column `c`, for a per-part pivot of
+    * [[partYears]] (null when the part has no sales that year). */
+  private def yv(y: Int, c: String): Column = max(when(col("y") === y, col(c)))
+
+  /** Year-`y` unit value snapped to a ×10⁶ micro-unit long. */
+  private def unitPrice(y: Int): Column =
+    floor(yv(y, "ep") / yv(y, "qty") * 1000000 + 0.5).cast(LongType)
+
+  /** Year-`y` quantity snapped to a ×10² long. */
+  private def qtyFp(y: Int): Column = floor(yv(y, "qty") * 100 + 0.5).cast(LongType)
+
+  /** Parts priced in both `y0` and `y1`: `(l_partkey, p0, p1, q0…,
+    * ny)`, with the first `nq` of the quantities `q0, q1`, pivoted from
+    * a panel holding no other years. Oracle twin: [[matchedSql]]. */
+  private def matchedParts(py: DataFrame, y0: Int, y1: Int, nq: Int): DataFrame = {
+    val qs = Seq(y0, y1).take(nq).zipWithIndex.map { case (y, i) => qtyFp(y).as(s"q$i") }
+    py.groupBy(col("l_partkey"))
+      .agg(unitPrice(y0).as("p0"),
+        (unitPrice(y1).as("p1") +: qs :+ count(lit(1)).as("ny")): _*)
+      .filter(col("ny") === 2)
+  }
+
+  /** DuckDB `py` CTE mirroring [[partYears]]. */
+  private def partYearSql(y0: Int, y1: Int): String =
+    s"""py AS (
+       |  SELECT l_partkey, year(l_shipdate) AS y,
+       |    CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS ep,
+       |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+       |  FROM lineitem
+       |  WHERE l_shipdate >= '$y0-01-01' AND l_shipdate < '${y1 + 1}-01-01'
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** SQL mirror of [[unitPrice]] over `py`. */
+  private def unitPriceSql(y: Int): String =
+    s"""CAST(floor(max(CASE WHEN y = $y THEN ep END)
+       |      / max(CASE WHEN y = $y THEN qty END) * 1000000 + 0.5) AS BIGINT)""".stripMargin
+
+  /** SQL mirror of [[qtyFp]] over `py`. */
+  private def qtyFpSql(y: Int): String =
+    s"CAST(floor(max(CASE WHEN y = $y THEN qty END) * 100 + 0.5) AS BIGINT)"
+
+  /** CTE `name` mirroring [[matchedParts]] over `py`. */
+  private def matchedSql(name: String, y0: Int, y1: Int, nq: Int): String =
+    (Seq(s"${unitPriceSql(y0)} AS p0", s"${unitPriceSql(y1)} AS p1") ++
+      Seq(y0, y1).take(nq).zipWithIndex.map { case (y, i) => s"${qtyFpSql(y)} AS q$i" })
+      .mkString(s"$name AS (\n  SELECT l_partkey,\n    ", ",\n    ",
+        s"\n  FROM py WHERE y IN ($y0, $y1) GROUP BY 1\n  HAVING count(*) = 2)")
+
+  /** Monthly revenue per return flag `(f, mi, rev_c)`: `mi` is the
+    * month index year·12 + month, `rev_c` the sum of exact-cent line
+    * prices — ≤|months| rows per flag. Oracle twin:
+    * [[monthlyRevenueSql]]. */
+  private def monthlyRevenue(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .groupBy(col("l_returnflag").as("f"),
+        (year(col("l_shipdate")) * 12 + month(col("l_shipdate")))
+          .cast(LongType).as("mi"))
+      .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast(LongType))
+        .as("rev_c"))
+
+  /** DuckDB CTE `mo` mirroring [[monthlyRevenue]]. */
+  private def monthlyRevenueSql: String =
     """mo AS (
       |  SELECT l_returnflag AS f,
       |    CAST(year(l_shipdate) * 12 + month(l_shipdate) AS BIGINT) AS mi,
       |    CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT))
       |      AS BIGINT) AS rev_c
-      |  FROM lineitem GROUP BY 1, 2),
+      |  FROM lineitem GROUP BY 1, 2)""".stripMargin
+
+  /** The Denton family's monthly indicator `(mo_s, yr, mfp)`: orders'
+    * monthly totals in exact cents. */
+  private def monthlyIndicator(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .groupBy(
+        unix_timestamp(date_trunc("month", col("o_orderdate"))).as("mo_s"),
+        year(col("o_orderdate")).as("yr"))
+      .agg(sum(floor(col("o_totalprice") * lit(100) + lit(0.5))
+        .cast(LongType)).as("mfp"))
+
+  /** The Denton family's annual control `(yr, cfp)`: each year's
+    * order value rebuilt from its lines (price × discount × tax) in
+    * exact ×10⁴ fixed point; an order without lines counts 0. Oracle
+    * twin: [[annualControlSql]]. */
+  private def annualControl(s: SparkSession, dir: String): DataFrame = {
+    val lo = Tables.lineitem(s, dir)
+      .groupBy(col("l_orderkey"))
+      .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount"))
+        * (lit(1) + col("l_tax")) * lit(10000) + lit(0.5)).cast(LongType))
+        .as("line_fp"))
+    Tables.orders(s, dir)
+      .join(lo, col("l_orderkey") === col("o_orderkey"), "left_outer")
+      .groupBy(year(col("o_orderdate")).as("yr"))
+      .agg(sum(coalesce(col("line_fp"), lit(0L))).as("cfp"))
+  }
+
+  /** DuckDB CTEs `lo` and `ctl (yr, cfp)` mirroring [[annualControl]]. */
+  private def annualControlSql: String =
+    """lo AS (
+      |  SELECT l_orderkey,
+      |    CAST(sum(CAST(floor(l_extendedprice * (1 - l_discount)
+      |      * (1 + l_tax) * 10000 + 0.5) AS BIGINT)) AS BIGINT) AS line_fp
+      |  FROM lineitem GROUP BY l_orderkey),
+      |ctl AS (
+      |  SELECT year(o.o_orderdate) AS yr,
+      |    CAST(sum(coalesce(lo.line_fp, 0)) AS BIGINT) AS cfp
+      |  FROM orders o LEFT JOIN lo ON lo.l_orderkey = o.o_orderkey
+      |  GROUP BY 1)""".stripMargin
+
+  /** Shared oracle prefix for the monthly-OLS residual family
+    * (etl_durbin_watson, etl_cooks_distance): the exact-cent monthly
+    * revenue series per return flag ([[monthlyRevenueSql]]),
+    * its per-flag OLS fit via the etl_regression_ols pinned double
+    * chain, and the ×100-snapped residuals `e_fp` (BIGINT — squares go
+    * HUGEINT at the use sites). One-sided edits fail verify. */
+  private def monthlyOlsSql: String =
+    s"""$monthlyRevenueSql,
       |m AS (
       |  SELECT f, CAST(count(*) AS BIGINT) AS n,
       |    CAST(CAST(sum(mi) AS HUGEINT) AS DOUBLE) AS sx,
@@ -9128,12 +8776,7 @@ object Etl {
     * calendar-bounded residual relation (≤|months| rows per flag). */
   private def monthlyOlsResiduals(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
-    val mo = Tables.lineitem(s, dir)
-      .groupBy(col("l_returnflag").as("f"),
-        (year(col("l_shipdate")) * 12 + month(col("l_shipdate")))
-          .cast(LongType).as("mi"))
-      .agg(sum(floor(col("l_extendedprice") * 100 + 0.5).cast(LongType))
-        .as("rev_c"))
+    val mo = monthlyRevenue(s, dir)
     val dec38 = DecimalType(38, 0)
     // sums over DECIMAL(38) inputs: exact like the oracle's HUGEINT
     // accumulation even where a raw long sum would saturate

@@ -2,7 +2,8 @@ package graft.operators
 
 import graft.QueryDef
 import graft.sources.Tables
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -134,39 +135,8 @@ object Temporal {
     // As-of join: each purchase matched to the user's most recent click
     // at-or-before it. Single shuffle on user_id via union+window.
     "asof_join" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |u AS (
-        |  SELECT user_id, ts_s, event_id,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-        |    last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id
-        |            ORDER BY ts_s ASC, (CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) DESC,
-        |                     event_id ASC
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_id,
-        |    last_value(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id
-        |            ORDER BY ts_s ASC, (CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) DESC,
-        |                     event_id ASC
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_ts_s
-        |  FROM e)
-        |SELECT event_id AS purchase_id, user_id, ts_s AS purchase_ts_s,
-        |  click_id, click_ts_s, ts_s - click_ts_s AS gap_s
-        |FROM u WHERE is_click = 0""".stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("user_id"), col("event_id"), col("ts_s"),
-          when(col("event_type") === "click", 1).otherwise(0).as("is_click"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_s").asc, col("is_click").desc, col("event_id").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      e.withColumn("click_id",
-          last(when(col("is_click") === 1, col("event_id")), ignoreNulls = true).over(w))
-        .withColumn("click_ts_s",
-          last(when(col("is_click") === 1, col("ts_s")), ignoreNulls = true).over(w))
-        .filter(col("is_click") === 0)
+      asofSql("click_id, click_ts_s, ts_s - click_ts_s AS gap_s")) { (s, dir) =>
+      latestClick(s, dir, "click_id", "click_ts_s")
         .select(col("event_id").as("purchase_id"), col("user_id"),
           col("ts_s").as("purchase_ts_s"), col("click_id"), col("click_ts_s"),
           (col("ts_s") - col("click_ts_s")).as("gap_s"))
@@ -185,27 +155,7 @@ object Temporal {
     // plan's answer bit-for-bit (AsofNativeSpec also asserts
     // row-equality between the two operators and the physical shape).
     "asof_join_native" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |u AS (
-        |  SELECT user_id, ts_s, event_id,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-        |    last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id
-        |            ORDER BY ts_s ASC, (CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) DESC,
-        |                     event_id ASC
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_id,
-        |    last_value(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id
-        |            ORDER BY ts_s ASC, (CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) DESC,
-        |                     event_id ASC
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_ts_s
-        |  FROM e)
-        |SELECT event_id AS purchase_id, user_id, ts_s AS purchase_ts_s,
-        |  click_id, click_ts_s, ts_s - click_ts_s AS gap_s
-        |FROM u WHERE is_click = 0""".stripMargin) { (s, dir) =>
+      asofSql("click_id, click_ts_s, ts_s - click_ts_s AS gap_s")) { (s, dir) =>
       val ev = Tables.eventsTimed(s, dir)
       val purchases = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id"), col("ts_s"))
@@ -410,13 +360,7 @@ object Temporal {
     // days², not rows²); concordant/discordant/tie counts are exact
     // integers and only the final tau divides as doubles.
     "ev_kendall_tau" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS x,
-        |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
+      s"""WITH $clickPurchaseDaysSql,
         |p AS (
         |  SELECT
         |    CAST(count(*) AS BIGINT) AS n_pairs,
@@ -434,10 +378,7 @@ object Temporal {
         |    / sqrt(CAST(p.n_pairs - p.tied_x AS DOUBLE)
         |           * (p.n_pairs - p.tied_y)) * 1e9 + 0.5) / 1.0e9 AS tau_b
         |FROM p CROSS JOIN nd""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(expr("ts_s div 86400").as("day"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
+      val d = clickPurchaseDays(s, dir)
         .persist() // calendar-bounded; both pair-join sides + the count
       val a = d.select(col("day").as("da"), col("x").as("xa"), col("y").as("ya"))
       val b = d.select(col("day").as("db"), col("x").as("xb"), col("y").as("yb"))
@@ -534,11 +475,7 @@ object Temporal {
     // moment sums over the calendar-bounded relation; the D/z double
     // chain is pinned and ×10⁶-snapped.
     "ev_dispersion_test" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
         |m AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
         |    CAST(sum(n) AS BIGINT) AS s1,
@@ -558,9 +495,7 @@ object Temporal {
         |    - sqrt(2 * (nd - 1.0) - 1)) * 1e6 + 0.5) / 1.0e6) > 1.96
         |    AS overdispersed
         |FROM m""".stripMargin) { (s, dir) =>
-      val m = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val m = dailyCounts(s, dir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("nd"), sum(col("n")).as("s1"),
           sum(col("n") * col("n")).as("s2"))
@@ -629,11 +564,7 @@ object Temporal {
     // count ride that calendar-bounded relation; all counts exact
     // integers, the z chain pinned doubles ×10⁶.
     "ev_runs_test" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
         |s AS (
         |  SELECT event_type, day,
         |    CASE WHEN n > lag(n) OVER w THEN 1
@@ -665,9 +596,7 @@ object Temporal {
         |           / (CAST(n AS DOUBLE) * n * (n - 1))) * 1e6 + 0.5) / 1.0e6)
         |    > 1.96 AS reject_randomness
         |FROM m""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day").asc)
       val sgn = when(col("n") > lag(col("n"), 1).over(w), 1)
         .when(col("n") < lag(col("n"), 1).over(w), -1)
@@ -701,11 +630,7 @@ object Temporal {
     // integers, z pinned ×10⁶. Ties break neither condition (strict
     // inequalities — the standard treatment).
     "ev_turning_points" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
         |s AS (
         |  SELECT event_type, n,
         |    lag(n) OVER w AS prev, lead(n) OVER w AS next
@@ -724,9 +649,7 @@ object Temporal {
         |    / sqrt((16.0 * nd - 29) / 90) * 1e6 + 0.5) / 1.0e6) > 1.96
         |    AS reject_randomness
         |FROM m""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day").asc)
       val sdf = d.select(col("event_type"), col("n"),
         lag(col("n"), 1).over(w).as("prev"), lead(col("n"), 1).over(w).as("next"))
@@ -756,11 +679,7 @@ object Temporal {
     // double addition order), z pinned ×10⁶. Day 1 counts as a record
     // (k = 1 term included), ties are not records.
     "ev_records_test" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
         |s AS (
         |  SELECT event_type, n,
         |    CAST(row_number() OVER w AS BIGINT) AS k,
@@ -784,9 +703,7 @@ object Temporal {
         |    / sqrt(CAST(var_fp AS DOUBLE) / 1e9) * 1e6 + 0.5) / 1.0e6 > 1.96
         |    AS trending_up
         |FROM m""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
       val w = Window.partitionBy(col("event_type")).orderBy(col("day").asc)
       val sdf = d.select(col("event_type"), col("n"),
         row_number().over(w).cast(LongType).as("k"),
@@ -896,11 +813,7 @@ object Temporal {
     // (S = 0 has no defined rescale); types with < 2 surviving scales
     // are dropped rather than shipped with a 0/0 slope.
     "ev_hurst" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
         |ix AS (
         |  SELECT event_type, day, n,
         |    CAST(row_number() OVER (PARTITION BY event_type
@@ -966,9 +879,7 @@ object Temporal {
         |    / 1.0e4 > 0.5 AS persistent
         |FROM fit WHERE k >= 2""".stripMargin) { (s, dir) =>
       val dec38 = DecimalType(38, 0)
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
       val wT = Window.partitionBy(col("event_type")).orderBy(col("day").asc)
       val wAll = Window.partitionBy(col("event_type"))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -1038,42 +949,13 @@ object Temporal {
     // post-filter on the already-found latest match (NOT a second
     // window), so the cost is identical.
     "asof_join_tolerance" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
-        |  FROM events WHERE event_type IN ('click', 'purchase')),
-        |u AS (
-        |  SELECT user_id, ts_s, event_id,
-        |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
-        |    last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id
-        |            ORDER BY ts_s ASC, (CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) DESC,
-        |                     event_id ASC
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_id,
-        |    last_value(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
-        |      OVER (PARTITION BY user_id
-        |            ORDER BY ts_s ASC, (CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) DESC,
-        |                     event_id ASC
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_ts_s
-        |  FROM e)
-        |SELECT event_id AS purchase_id, user_id, ts_s AS purchase_ts_s,
-        |  CASE WHEN ts_s - click_ts_s <= 600 THEN click_id END AS click_id,
-        |  CASE WHEN ts_s - click_ts_s <= 600 THEN click_ts_s END AS click_ts_s,
-        |  CASE WHEN ts_s - click_ts_s <= 600 THEN ts_s - click_ts_s END AS gap_s
-        |FROM u WHERE is_click = 0""".stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-        .filter(col("event_type").isin("click", "purchase"))
-        .select(col("user_id"), col("event_id"), col("ts_s"),
-          when(col("event_type") === "click", 1).otherwise(0).as("is_click"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts_s").asc, col("is_click").desc, col("event_id").asc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      asofSql(
+        """CASE WHEN ts_s - click_ts_s <= 600 THEN click_id END AS click_id,
+          |  CASE WHEN ts_s - click_ts_s <= 600 THEN click_ts_s END AS click_ts_s,
+          |  CASE WHEN ts_s - click_ts_s <= 600 THEN ts_s - click_ts_s END AS gap_s"""
+          .stripMargin)) { (s, dir) =>
       val inTol = col("ts_s") - col("raw_ts") <= 600
-      e.withColumn("raw_id",
-          last(when(col("is_click") === 1, col("event_id")), ignoreNulls = true).over(w))
-        .withColumn("raw_ts",
-          last(when(col("is_click") === 1, col("ts_s")), ignoreNulls = true).over(w))
-        .filter(col("is_click") === 0)
+      latestClick(s, dir, "raw_id", "raw_ts")
         .select(col("event_id").as("purchase_id"), col("user_id"),
           col("ts_s").as("purchase_ts_s"),
           when(inTol, col("raw_id")).as("click_id"),
@@ -1263,45 +1145,15 @@ object Temporal {
     // identical expressions on both engines. No per-row p-values, no
     // UDFs, no second scan.
     "ev_ab_ttest" -> QueryDef.withOracle(
-      """WITH m AS (
-        |  SELECT event_type,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2)))
-        |      AS DOUBLE) AS s2
-        |  FROM events WHERE event_type IN ('purchase', 'view')
-        |  GROUP BY 1),
-        |w AS (
-        |  SELECT event_type, n, round(s1 / n, 9) AS mean,
-        |    (s2 - s1 * s1 / n) / (n - 1) AS var
-        |  FROM m),
-        |ab AS (
-        |  SELECT a.n AS n_a, a.mean AS mean_a, a.var AS var_a,
-        |         b.n AS n_b, b.mean AS mean_b, b.var AS var_b
-        |  FROM w a JOIN w b
-        |    ON a.event_type = 'purchase' AND b.event_type = 'view')
+      s"""WITH $abArmsSql
         |SELECT n_a, n_b, mean_a, mean_b,
         |  round((mean_a - mean_b) / sqrt(var_a / n_a + var_b / n_b), 9) AS t_stat,
         |  round(pow(var_a / n_a + var_b / n_b, 2)
         |    / (pow(var_a / n_a, 2) / (n_a - 1) + pow(var_b / n_b, 2) / (n_b - 1)),
         |    9) AS df_welch
         |FROM ab""".stripMargin) { (s, dir) =>
-      val v = col("value").cast(dec2)
-      val m = Tables.events(s, dir)
-        .filter(col("event_type").isin("purchase", "view"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(v).cast(DoubleType).as("s1"),
-          sum(v * v).cast(DoubleType).as("s2"))
-        .withColumn("mean", round(col("s1") / col("n"), 9))
-        .withColumn("var",
-          (col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1))
-      val a = m.filter(col("event_type") === "purchase")
-        .select(col("n").as("n_a"), col("mean").as("mean_a"), col("var").as("var_a"))
-      val b = m.filter(col("event_type") === "view")
-        .select(col("n").as("n_b"), col("mean").as("mean_b"), col("var").as("var_b"))
       val se2 = col("var_a") / col("n_a") + col("var_b") / col("n_b")
-      a.crossJoin(b) // two 1-row relations
+      abArms(s, dir)
         .select(col("n_a"), col("n_b"), col("mean_a"), col("mean_b"),
           round((col("mean_a") - col("mean_b")) / sqrt(se2), 9).as("t_stat"),
           round(pow(se2, 2) /
@@ -1910,37 +1762,7 @@ object Temporal {
     // ever the cohort's last) short-circuits to exactly 0.0 instead of
     // pushing ln(0) through the sum.
     "ev_survival" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT user_id, event_type, value,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s FROM events),
-        |g AS (SELECT max(ts_s) AS gmax FROM e),
-        |u AS (SELECT user_id, min(ts_s) AS first_s FROM e GROUP BY 1),
-        |cv AS (
-        |  SELECT user_id, min(ts_s) AS conv_s FROM e
-        |  WHERE event_type = 'purchase' AND value >= 90 GROUP BY 1),
-        |d AS (
-        |  SELECT u.first_s // 604800 AS cohort_week,
-        |    CASE WHEN cv.conv_s IS NOT NULL
-        |         THEN (cv.conv_s - u.first_s) // 3600
-        |         ELSE (g.gmax - u.first_s) // 3600 END AS t_hours,
-        |    CASE WHEN cv.conv_s IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM u LEFT JOIN cv ON cv.user_id = u.user_id CROSS JOIN g),
-        |ct AS (
-        |  SELECT cohort_week, CAST(t_hours AS BIGINT) AS t_hours,
-        |    CAST(sum(ev) AS BIGINT) AS d_converted,
-        |    CAST(count(*) - sum(ev) AS BIGINT) AS c_censored
-        |  FROM d GROUP BY 1, 2),
-        |w AS (
-        |  SELECT *,
-        |    CAST(coalesce(sum(d_converted + c_censored) OVER (PARTITION BY cohort_week
-        |      ORDER BY t_hours ASC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      0) AS BIGINT) AS removed,
-        |    CAST(sum(d_converted + c_censored) OVER (PARTITION BY cohort_week)
-        |      AS BIGINT) AS n_cohort
-        |  FROM ct),
-        |k AS (
-        |  SELECT cohort_week, t_hours, d_converted, c_censored,
-        |    n_cohort - removed AS n_at_risk FROM w),
+      s"""WITH ${riskTableSql("d_converted")},
         |t AS (
         |  SELECT *, CASE WHEN d_converted < n_at_risk
         |    THEN CAST(floor(ln(1.0 - d_converted * 1.0 / n_at_risk) * 1000000) AS BIGINT)
@@ -1952,37 +1774,14 @@ object Temporal {
         |  CASE WHEN d_converted = n_at_risk THEN 0.0
         |       ELSE round(exp(cum / 1000000.0), 6) END AS surv
         |FROM s""".stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-        .select(col("user_id"), col("event_type"), col("value"), col("ts_s"))
-      val g = e.agg(max(col("ts_s")).as("gmax"))
-      val u = e.groupBy(col("user_id")).agg(min(col("ts_s")).as("first_s"))
-      val cv = e.filter(col("event_type") === "purchase" && col("value") >= 90)
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("conv_s"))
-      val ct = u.join(cv, Seq("user_id"), "left_outer")
-        .crossJoin(broadcast(g)) // 1-row observation-end anchor
-        .select(expr("first_s div 604800").as("cohort_week"),
-          when(col("conv_s").isNotNull, expr("(conv_s - first_s) div 3600"))
-            .otherwise(expr("(gmax - first_s) div 3600")).as("t_hours"),
-          when(col("conv_s").isNotNull, 1L).otherwise(0L).as("ev"))
-        .groupBy(col("cohort_week"), col("t_hours"))
-        .agg(sum(col("ev")).as("d_converted"),
-          (count(lit(1)) - sum(col("ev"))).as("c_censored"))
-      // calendar-bounded relation from here down: rows = cohorts × hours
-      val wc = Window.partitionBy(col("cohort_week")).orderBy(col("t_hours").asc)
-      val k = ct
-        .withColumn("removed", coalesce(
-          sum(col("d_converted") + col("c_censored"))
-            .over(wc.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("n_cohort",
-          sum(col("d_converted") + col("c_censored"))
-            .over(wc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .withColumn("n_at_risk", col("n_cohort") - col("removed"))
+      val k = riskTable(s, dir, "d_converted")
       val termFp = when(col("d_converted") < col("n_at_risk"),
         floor(log(lit(1.0) - col("d_converted") * lit(1.0) / col("n_at_risk")) * 1000000)
           .cast(LongType)).otherwise(lit(0L))
       k.withColumn("term_fp", termFp)
         .withColumn("cum",
-          sum(col("term_fp")).over(wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          sum(col("term_fp")).over(
+            cohortHours.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .select(col("cohort_week"), col("t_hours"), col("n_at_risk"),
           col("d_converted"), col("c_censored"),
           when(col("d_converted") === col("n_at_risk"), lit(0.0))
@@ -2001,37 +1800,7 @@ object Temporal {
     // integer partitioning-invariant — no float accumulation, unlike
     // the KM product which needs the ln/exp trick.
     "ev_nelson_aalen" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT user_id, event_type, value,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s FROM events),
-        |g AS (SELECT max(ts_s) AS gmax FROM e),
-        |u AS (SELECT user_id, min(ts_s) AS first_s FROM e GROUP BY 1),
-        |cv AS (
-        |  SELECT user_id, min(ts_s) AS conv_s FROM e
-        |  WHERE event_type = 'purchase' AND value >= 90 GROUP BY 1),
-        |d AS (
-        |  SELECT u.first_s // 604800 AS cohort_week,
-        |    CASE WHEN cv.conv_s IS NOT NULL
-        |         THEN (cv.conv_s - u.first_s) // 3600
-        |         ELSE (g.gmax - u.first_s) // 3600 END AS t_hours,
-        |    CASE WHEN cv.conv_s IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM u LEFT JOIN cv ON cv.user_id = u.user_id CROSS JOIN g),
-        |ct AS (
-        |  SELECT cohort_week, CAST(t_hours AS BIGINT) AS t_hours,
-        |    CAST(sum(ev) AS BIGINT) AS d_events,
-        |    CAST(count(*) - sum(ev) AS BIGINT) AS c_censored
-        |  FROM d GROUP BY 1, 2),
-        |w AS (
-        |  SELECT *,
-        |    CAST(coalesce(sum(d_events + c_censored) OVER (PARTITION BY cohort_week
-        |      ORDER BY t_hours ASC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      0) AS BIGINT) AS removed,
-        |    CAST(sum(d_events + c_censored) OVER (PARTITION BY cohort_week)
-        |      AS BIGINT) AS n_cohort
-        |  FROM ct),
-        |k AS (
-        |  SELECT cohort_week, t_hours, d_events, c_censored,
-        |    n_cohort - removed AS n_at_risk FROM w),
+      s"""WITH ${riskTableSql("d_events")},
         |t AS (
         |  SELECT *,
         |    CAST(floor(CAST(d_events AS DOUBLE) / n_at_risk * 1e9 + 0.5)
@@ -2050,32 +1819,8 @@ object Temporal {
         |  cum_v / 1.0e9 AS hazard_var,
         |  round(exp(-cum_h / 1.0e9), 6) AS fh_surv
         |FROM s""".stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-        .select(col("user_id"), col("event_type"), col("value"), col("ts_s"))
-      val g = e.agg(max(col("ts_s")).as("gmax"))
-      val u = e.groupBy(col("user_id")).agg(min(col("ts_s")).as("first_s"))
-      val cv = e.filter(col("event_type") === "purchase" && col("value") >= 90)
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("conv_s"))
-      val ct = u.join(cv, Seq("user_id"), "left_outer")
-        .crossJoin(broadcast(g)) // 1-row observation-end anchor
-        .select(expr("first_s div 604800").as("cohort_week"),
-          when(col("conv_s").isNotNull, expr("(conv_s - first_s) div 3600"))
-            .otherwise(expr("(gmax - first_s) div 3600")).as("t_hours"),
-          when(col("conv_s").isNotNull, 1L).otherwise(0L).as("ev"))
-        .groupBy(col("cohort_week"), col("t_hours"))
-        .agg(sum(col("ev")).as("d_events"),
-          (count(lit(1)) - sum(col("ev"))).as("c_censored"))
-      // calendar-bounded relation from here down: rows = cohorts × hours
-      val wc = Window.partitionBy(col("cohort_week")).orderBy(col("t_hours").asc)
-      val k = ct
-        .withColumn("removed", coalesce(
-          sum(col("d_events") + col("c_censored"))
-            .over(wc.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("n_cohort",
-          sum(col("d_events") + col("c_censored"))
-            .over(wc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .withColumn("n_at_risk", col("n_cohort") - col("removed"))
-      val cumW = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val k = riskTable(s, dir, "d_events")
+      val cumW = cohortHours.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       k.withColumn("h_fp",
           floor(col("d_events").cast(DoubleType) / col("n_at_risk") * lit(1.0e9)
             + 0.5).cast(LongType))
@@ -2101,37 +1846,7 @@ object Temporal {
     // the log-scale form that keeps the limits inside [0,1] without
     // clipping artifacts. Bounded bookkeeping after the one corpus agg.
     "ev_survival_ci" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT user_id, event_type, value,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s FROM events),
-        |g AS (SELECT max(ts_s) AS gmax FROM e),
-        |u AS (SELECT user_id, min(ts_s) AS first_s FROM e GROUP BY 1),
-        |cv AS (
-        |  SELECT user_id, min(ts_s) AS conv_s FROM e
-        |  WHERE event_type = 'purchase' AND value >= 90 GROUP BY 1),
-        |d AS (
-        |  SELECT u.first_s // 604800 AS cohort_week,
-        |    CASE WHEN cv.conv_s IS NOT NULL
-        |         THEN (cv.conv_s - u.first_s) // 3600
-        |         ELSE (g.gmax - u.first_s) // 3600 END AS t_hours,
-        |    CASE WHEN cv.conv_s IS NOT NULL THEN 1 ELSE 0 END AS ev
-        |  FROM u LEFT JOIN cv ON cv.user_id = u.user_id CROSS JOIN g),
-        |ct AS (
-        |  SELECT cohort_week, CAST(t_hours AS BIGINT) AS t_hours,
-        |    CAST(sum(ev) AS BIGINT) AS d_converted,
-        |    CAST(count(*) - sum(ev) AS BIGINT) AS c_censored
-        |  FROM d GROUP BY 1, 2),
-        |w AS (
-        |  SELECT *,
-        |    CAST(coalesce(sum(d_converted + c_censored) OVER (PARTITION BY cohort_week
-        |      ORDER BY t_hours ASC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |      0) AS BIGINT) AS removed,
-        |    CAST(sum(d_converted + c_censored) OVER (PARTITION BY cohort_week)
-        |      AS BIGINT) AS n_cohort
-        |  FROM ct),
-        |k AS (
-        |  SELECT cohort_week, t_hours, d_converted, c_censored,
-        |    n_cohort - removed AS n_at_risk FROM w),
+      s"""WITH ${riskTableSql("d_converted")},
         |t AS (
         |  SELECT *, CASE WHEN d_converted < n_at_risk
         |    THEN CAST(floor(ln(1.0 - d_converted * 1.0 / n_at_risk) * 1000000) AS BIGINT)
@@ -2158,30 +1873,7 @@ object Temporal {
         |         * exp(1.96 * sqrt(cum_gw / 1e12)) * 1e6 + 0.5) / 1.0e6)
         |       END AS ci_hi
         |FROM s""".stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-        .select(col("user_id"), col("event_type"), col("value"), col("ts_s"))
-      val g = e.agg(max(col("ts_s")).as("gmax"))
-      val u = e.groupBy(col("user_id")).agg(min(col("ts_s")).as("first_s"))
-      val cv = e.filter(col("event_type") === "purchase" && col("value") >= 90)
-        .groupBy(col("user_id")).agg(min(col("ts_s")).as("conv_s"))
-      val ct = u.join(cv, Seq("user_id"), "left_outer")
-        .crossJoin(broadcast(g)) // 1-row observation-end anchor
-        .select(expr("first_s div 604800").as("cohort_week"),
-          when(col("conv_s").isNotNull, expr("(conv_s - first_s) div 3600"))
-            .otherwise(expr("(gmax - first_s) div 3600")).as("t_hours"),
-          when(col("conv_s").isNotNull, 1L).otherwise(0L).as("ev"))
-        .groupBy(col("cohort_week"), col("t_hours"))
-        .agg(sum(col("ev")).as("d_converted"),
-          (count(lit(1)) - sum(col("ev"))).as("c_censored"))
-      val wc = Window.partitionBy(col("cohort_week")).orderBy(col("t_hours").asc)
-      val k = ct
-        .withColumn("removed", coalesce(
-          sum(col("d_converted") + col("c_censored"))
-            .over(wc.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-        .withColumn("n_cohort",
-          sum(col("d_converted") + col("c_censored"))
-            .over(wc.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-        .withColumn("n_at_risk", col("n_cohort") - col("removed"))
+      val k = riskTable(s, dir, "d_converted")
       val termFp = when(col("d_converted") < col("n_at_risk"),
         floor(log(lit(1.0) - col("d_converted") * lit(1.0) / col("n_at_risk")) * 1000000)
           .cast(LongType)).otherwise(lit(0L))
@@ -2189,7 +1881,7 @@ object Temporal {
         floor(col("d_converted").cast(DoubleType) / col("n_at_risk")
           / (col("n_at_risk") - col("d_converted")) * lit(1.0e12) + 0.5)
           .cast(LongType)).otherwise(lit(0L))
-      val cumW = wc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val cumW = cohortHours.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val surv = exp(col("cum") / 1000000.0)
       k.withColumn("term_fp", termFp).withColumn("gw_fp", gwFp)
         .withColumn("cum", sum(col("term_fp")).over(cumW))
@@ -2294,13 +1986,7 @@ object Temporal {
     // Per-pair credits are FIXED-POINT (floor(10⁶/n + 0.5) longs) so
     // the per-channel credit sums are exact and order-invariant.
     "ev_attribution_linear" -> QueryDef.withOracle(
-      """WITH p AS (
-        |  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
-        |  FROM events WHERE event_type = 'purchase'),
-        |t AS (
-        |  SELECT event_id AS touch_id, user_id, event_type AS touch_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS touch_s
-        |  FROM events WHERE event_type IN ('click', 'view', 'signup')),
+      s"""WITH $touchSql,
         |pairs AS (
         |  SELECT p.event_id, p.ts_s, t.touch_id, t.touch_type
         |  FROM p LEFT JOIN t ON t.user_id = p.user_id
@@ -2315,17 +2001,8 @@ object Temporal {
         |    ELSE CAST(floor(1000000.0 / n + 0.5) AS BIGINT) END) AS BIGINT)
         |    / 1.0e6 AS credit
         |FROM cr GROUP BY 1""".stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-      val p = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_s"))
-      val t = e.filter(col("event_type").isin("click", "view", "signup"))
-        .select(col("event_id").as("touch_id"), col("user_id").as("t_user"),
-          col("event_type").as("touch_type"), col("ts_s").as("touch_s"))
       val w = Window.partitionBy(col("event_id"))
-      p.join(t,
-          col("t_user") === col("user_id") &&
-            col("touch_s") <= col("ts_s") &&
-            col("touch_s") >= col("ts_s") - 604800L, "left_outer")
+      touchPairs(s, dir)
         .select(col("event_id"), col("touch_id"), col("touch_type"))
         .withColumn("n", count(col("touch_id")).over(w))
         .groupBy(coalesce(col("touch_type"), lit("organic")).as("channel"))
@@ -2532,11 +2209,7 @@ object Temporal {
     // the running sum is order-invariant; the ÷D happens once at
     // output, snapped to ×10⁹ fixed point.
     "ev_changepoint_cusum" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
         |t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
         |             CAST(sum(n) AS BIGINT) AS total FROM d GROUP BY event_type),
         |c AS (
@@ -2553,9 +2226,7 @@ object Temporal {
         |    AS BIGINT) / 1.0e9 AS cusum,
         |  abs(c.cusum_fp) = m.mx AS is_peak
         |FROM c JOIN m USING (event_type)""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
         .persist() // type×day bookkeeping; feeds totals + the cusum walk
       val t = d.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_days"), sum(col("n")).as("total"))
@@ -2583,51 +2254,20 @@ object Temporal {
     // bookkeeping relation; numerator/denominator are exact long sums,
     // the ratio snaps ×10⁹.
     "ev_autocorrelation" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
-        |             CAST(sum(n) AS BIGINT) AS tot FROM d GROUP BY event_type),
-        |v AS (
-        |  SELECT d.event_type, d.day, d.n * t.nd - t.tot AS dev
-        |  FROM d JOIN t USING (event_type)),
-        |den AS (
-        |  SELECT event_type, CAST(sum(dev * dev) AS BIGINT) AS ss
-        |  FROM v GROUP BY event_type),
-        |num AS (
-        |  SELECT a.event_type, l.lag, CAST(count(*) AS BIGINT) AS n_pairs,
-        |    CAST(sum(a.dev * b.dev) AS BIGINT) AS sp
-        |  FROM v a
-        |  CROSS JOIN (SELECT unnest([1, 7]) AS lag) l
-        |  JOIN v b ON b.event_type = a.event_type AND b.day = a.day + l.lag
-        |  GROUP BY a.event_type, l.lag)
+      s"""WITH ${dailyCountsSql("d")},
+        |${acfSql("1, 7")}
         |SELECT n.event_type, CAST(n.lag AS INT) AS lag, n.n_pairs,
         |  CAST(floor(CAST(n.sp AS DOUBLE) * 1000000000 / den.ss + 0.5) AS BIGINT)
         |    / 1.0e9 AS acf
         |FROM num n JOIN den USING (event_type)""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
         .persist() // type×day bookkeeping; totals + both join sides
-      val t = d.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("nd"), sum(col("n")).as("tot"))
-      val v = d.join(broadcast(t), "event_type")
-        .select(col("event_type"), col("day"),
-          (col("n") * col("nd") - col("tot")).as("dev"))
+      val t = typeTotals(d)
+      val v = deviations(d, t)
       val den = v.groupBy(col("event_type"))
         .agg(sum(col("dev") * col("dev")).as("ss"))
       import s.implicits._
-      val lags = Seq(1, 7).toDF("lag")
-      val num = v.as("a")
-        .crossJoin(broadcast(lags))
-        .join(v.as("b"),
-          col("b.event_type") === col("a.event_type")
-            && col("b.day") === col("a.day") + col("lag"))
-        .groupBy(col("a.event_type").as("event_type"), col("lag"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(col("a.dev") * col("b.dev")).as("sp"))
+      val num = lagProducts(v, Seq(1, 7).toDF("lag"), count(lit(1)).as("n_pairs"))
       num.join(broadcast(den), "event_type")
         .select(col("event_type"), col("lag").cast(IntegerType).as("lag"),
           col("n_pairs"),
@@ -2647,26 +2287,8 @@ object Temporal {
     // both sides engine-identical. Corpus collapses to (type, day) in
     // one agg; the lag self-join rides that bookkeeping relation.
     "ev_ljung_box" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
-        |             CAST(sum(n) AS BIGINT) AS tot FROM d GROUP BY event_type),
-        |v AS (
-        |  SELECT d.event_type, d.day, d.n * t.nd - t.tot AS dev
-        |  FROM d JOIN t USING (event_type)),
-        |den AS (
-        |  SELECT event_type, CAST(sum(dev * dev) AS BIGINT) AS ss
-        |  FROM v GROUP BY event_type),
-        |num AS (
-        |  SELECT a.event_type, l.lag,
-        |    CAST(sum(a.dev * b.dev) AS BIGINT) AS sp
-        |  FROM v a
-        |  CROSS JOIN (SELECT unnest([1, 2, 3, 4, 5, 6]) AS lag) l
-        |  JOIN v b ON b.event_type = a.event_type AND b.day = a.day + l.lag
-        |  GROUP BY a.event_type, l.lag),
+      s"""WITH ${dailyCountsSql("d")},
+        |${acfSql("1, 2, 3, 4, 5, 6")},
         |r AS (
         |  SELECT n.event_type, n.lag, t.nd,
         |    CAST(floor(CAST(n.sp AS DOUBLE) * 1000000000 / den.ss + 0.5)
@@ -2683,27 +2305,15 @@ object Temporal {
         |  floor(CAST(nd AS DOUBLE) * (nd + 2) * s_fp / 1e9 * 1e6 + 0.5) / 1.0e6
         |    > 12.591587 AS reject_white_noise
         |FROM s""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
         .persist() // type×day bookkeeping; totals + both lag-join sides
-      val t = d.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("nd"), sum(col("n")).as("tot"))
-      val v = d.join(broadcast(t), "event_type")
-        .select(col("event_type"), col("day"),
-          (col("n") * col("nd") - col("tot")).as("dev"))
+      val t = typeTotals(d)
+      val v = deviations(d, t)
         .persist() // both sides of the 6-lag self-join + the denominator
       val den = v.groupBy(col("event_type"))
         .agg(sum(col("dev") * col("dev")).as("ss"))
       import s.implicits._
-      val lags = (1 to 6).toDF("lag")
-      val num = v.as("a")
-        .crossJoin(broadcast(lags))
-        .join(v.as("b"),
-          col("b.event_type") === col("a.event_type")
-            && col("b.day") === col("a.day") + col("lag"))
-        .groupBy(col("a.event_type").as("event_type"), col("lag"))
-        .agg(sum(col("a.dev") * col("b.dev")).as("sp"))
+      val num = lagProducts(v, (1 to 6).toDF("lag"))
       val r = num.join(broadcast(den), "event_type")
         .join(broadcast(t.select(col("event_type"), col("nd"))), "event_type")
         .select(col("event_type"), col("lag"), col("nd"),
@@ -2773,26 +2383,8 @@ object Temporal {
     // φ33 = (r3−φ21·r2−φ22·r1)/(1−φ21·r1−φ22·r2) — is IEEE-identical
     // term by term. Same bookkeeping-scale lag self-join as the ACF.
     "ev_pacf" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
-        |             CAST(sum(n) AS BIGINT) AS tot FROM d GROUP BY event_type),
-        |v AS (
-        |  SELECT d.event_type, d.day, d.n * t.nd - t.tot AS dev
-        |  FROM d JOIN t USING (event_type)),
-        |den AS (
-        |  SELECT event_type, CAST(sum(dev * dev) AS BIGINT) AS ss
-        |  FROM v GROUP BY event_type),
-        |num AS (
-        |  SELECT a.event_type, l.lag,
-        |    CAST(sum(a.dev * b.dev) AS BIGINT) AS sp
-        |  FROM v a
-        |  CROSS JOIN (SELECT unnest([1, 2, 3]) AS lag) l
-        |  JOIN v b ON b.event_type = a.event_type AND b.day = a.day + l.lag
-        |  GROUP BY a.event_type, l.lag),
+      s"""WITH ${dailyCountsSql("d")},
+        |${acfSql("1, 2, 3")},
         |r AS (
         |  SELECT n.event_type,
         |    max(CASE WHEN lag = 1 THEN CAST(floor(CAST(sp AS DOUBLE)
@@ -2815,27 +2407,15 @@ object Temporal {
         |  floor((r3 - f21 * r2 - f22 * r1) / (1 - f21 * r1 - f22 * r2) * 1e9
         |    + 0.5) / 1.0e9 AS pacf3
         |FROM p3""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
         .persist()
-      val t = d.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("nd"), sum(col("n")).as("tot"))
-      val v = d.join(broadcast(t), "event_type")
-        .select(col("event_type"), col("day"),
-          (col("n") * col("nd") - col("tot")).as("dev"))
+      val t = typeTotals(d)
+      val v = deviations(d, t)
         .persist()
       val den = v.groupBy(col("event_type"))
         .agg(sum(col("dev") * col("dev")).as("ss"))
       import s.implicits._
-      val lags = (1 to 3).toDF("lag")
-      val num = v.as("a")
-        .crossJoin(broadcast(lags))
-        .join(v.as("b"),
-          col("b.event_type") === col("a.event_type")
-            && col("b.day") === col("a.day") + col("lag"))
-        .groupBy(col("a.event_type").as("event_type"), col("lag"))
-        .agg(sum(col("a.dev") * col("b.dev")).as("sp"))
+      val num = lagProducts(v, (1 to 3).toDF("lag"))
       def rk(k: Int) = (max(when(col("lag") === k,
         floor(col("sp").cast(DoubleType) * lit(1.0e9) / col("ss") + 0.5)
           .cast(LongType))) / lit(1.0e9)).as(s"r$k")
@@ -2863,11 +2443,7 @@ object Temporal {
     // after the first agg scales with the corpus. Errors stay in exact
     // integer space; divisions snap to ×10⁹ fixed point at output.
     "ev_forecast_snaive" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
         |j AS (
         |  SELECT a.event_type, a.day, a.n, b.n AS pred
         |  FROM d a JOIN d b
@@ -2880,9 +2456,7 @@ object Temporal {
         |  CAST(floor(CAST(sum(abs(n - pred)) AS DOUBLE) * 1000000000
         |    / CAST(sum(n) AS DOUBLE) + 0.5) AS BIGINT) / 1.0e9 AS rel_mae
         |FROM j GROUP BY event_type""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
         .persist() // type×day bookkeeping; both join sides
       val j = d.as("a").join(d.as("b"),
         col("b.event_type") === col("a.event_type")
@@ -3258,23 +2832,7 @@ object Temporal {
     // z quantiles are shared literal constants, the double chain is
     // mirrored verbatim, outputs round(…, 9)-snapped.
     "ev_power_analysis" -> QueryDef.withOracle(
-      """WITH m AS (
-        |  SELECT event_type,
-        |    CAST(count(*) AS BIGINT) AS n,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s1,
-        |    CAST(sum(CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2)))
-        |      AS DOUBLE) AS s2
-        |  FROM events WHERE event_type IN ('purchase', 'view')
-        |  GROUP BY 1),
-        |w AS (
-        |  SELECT event_type, n, round(s1 / n, 9) AS mean,
-        |    (s2 - s1 * s1 / n) / (n - 1) AS var
-        |  FROM m),
-        |ab AS (
-        |  SELECT a.n AS n_a, a.mean AS mean_a, a.var AS var_a,
-        |         b.n AS n_b, b.mean AS mean_b, b.var AS var_b
-        |  FROM w a JOIN w b
-        |    ON a.event_type = 'purchase' AND b.event_type = 'view')
+      s"""WITH $abArmsSql
         |SELECT n_a, n_b, mean_a, mean_b,
         |  round(mean_a - mean_b, 9) AS delta,
         |  CAST(ceil(
@@ -3285,23 +2843,9 @@ object Temporal {
         |  round((1.959963985 + 0.841621234)
         |    * sqrt(var_a / n_a + var_b / n_b), 9) AS mde
         |FROM ab""".stripMargin) { (s, dir) =>
-      val v = col("value").cast(dec2)
-      val m = Tables.events(s, dir)
-        .filter(col("event_type").isin("purchase", "view"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(v).cast(DoubleType).as("s1"),
-          sum(v * v).cast(DoubleType).as("s2"))
-        .withColumn("mean", round(col("s1") / col("n"), 9))
-        .withColumn("var",
-          (col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1))
-      val a = m.filter(col("event_type") === "purchase")
-        .select(col("n").as("n_a"), col("mean").as("mean_a"), col("var").as("var_a"))
-      val b = m.filter(col("event_type") === "view")
-        .select(col("n").as("n_b"), col("mean").as("mean_b"), col("var").as("var_b"))
       val z = lit(1.959963985) + lit(0.841621234)
       val delta = col("mean_a") - col("mean_b")
-      a.crossJoin(b) // two 1-row relations
+      abArms(s, dir)
         .select(col("n_a"), col("n_b"), col("mean_a"), col("mean_b"),
           round(delta, 9).as("delta"),
           ceil(lit(2) * z * z * ((col("var_a") + col("var_b")) / lit(2))
@@ -3428,13 +2972,7 @@ object Temporal {
     // integer division (×10⁹ fp) so the per-channel credit sums are
     // order-invariant longs, never a float accumulation.
     "ev_attribution_decay" -> QueryDef.withOracle(
-      """WITH p AS (
-        |  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
-        |  FROM events WHERE event_type = 'purchase'),
-        |t AS (
-        |  SELECT event_id AS touch_id, user_id, event_type AS touch_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) AS touch_s
-        |  FROM events WHERE event_type IN ('click', 'view', 'signup')),
+      s"""WITH $touchSql,
         |pairs AS (
         |  SELECT p.event_id, t.touch_id, t.touch_type,
         |    CASE WHEN t.touch_id IS NULL THEN NULL
@@ -3451,17 +2989,8 @@ object Temporal {
         |  CAST(sum(CASE WHEN touch_id IS NULL THEN 1000000000
         |    ELSE (1000000000 * w_fp) // wtot END) AS BIGINT) / 1.0e9 AS credit
         |FROM cr GROUP BY 1""".stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-      val p = e.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts_s"))
-      val t = e.filter(col("event_type").isin("click", "view", "signup"))
-        .select(col("event_id").as("touch_id"), col("user_id").as("t_user"),
-          col("event_type").as("touch_type"), col("ts_s").as("touch_s"))
       val w = Window.partitionBy(col("event_id"))
-      p.join(t,
-          col("t_user") === col("user_id") &&
-            col("touch_s") <= col("ts_s") &&
-            col("touch_s") >= col("ts_s") - 604800L, "left_outer")
+      touchPairs(s, dir)
         .select(col("event_id"), col("touch_id"), col("touch_type"),
           when(col("touch_id").isNull, lit(null))
             .otherwise(floor(exp(-(col("ts_s") - col("touch_s"))
@@ -3566,51 +3095,20 @@ object Temporal {
     // replays the identical IEEE chain as a recursive CTE, so the
     // doubles match bit-for-bit before the round(…, 9) snap.
     "ev_holt_forecast" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |a AS (
-        |  SELECT event_type,
-        |    list(CAST(n AS DOUBLE) ORDER BY day) AS v,
-        |    CAST(count(*) AS BIGINT) AS nd
-        |  FROM e GROUP BY event_type),
+      s"""WITH ${dailyCountsSql("e")},
+        |${dailyArraysSql("e")},
         |rec AS (
-        |  WITH RECURSIVE h(event_type, i, l, b) AS (
-        |    SELECT event_type, CAST(2 AS BIGINT), v[2],
-        |      v[2] - v[1]
-        |    FROM a WHERE nd >= 2
-        |    UNION ALL
-        |    SELECT h.event_type, h.i + 1,
-        |      0.3 * a.v[CAST(h.i + 1 AS INT)] + 0.7 * (h.l + h.b),
-        |      0.1 * ((0.3 * a.v[CAST(h.i + 1 AS INT)]
-        |          + 0.7 * (h.l + h.b)) - h.l) + 0.9 * h.b
-        |    FROM h JOIN a ON a.event_type = h.event_type
-        |    WHERE h.i < a.nd)
+        |  WITH RECURSIVE $holtRecursion
         |  SELECT * FROM h)
         |SELECT r.event_type, a.nd AS n_days,
         |  round(r.l, 9) AS level, round(r.b, 9) AS trend,
         |  round(r.l + r.b, 9) AS fc_1, round(r.l + 7 * r.b, 9) AS fc_7
         |FROM rec r JOIN a ON a.event_type = r.event_type AND r.i = a.nd"""
         .stripMargin) { (s, dir) =>
-      val daily = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
-      val a = daily.groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("day"), col("n"))))
-          .as("arr"), count(lit(1)).as("nd"))
-        .filter(col("nd") >= 2)
-      val v = transform(col("arr"), e => e("n").cast(DoubleType))
-      val init = struct(element_at(v, 2).as("l"),
-        (element_at(v, 2) - element_at(v, 1)).as("b"))
-      val folded = aggregate(
-        slice(v, lit(3), greatest(size(v) - 2, lit(0))), init,
-        (acc, x) => {
-          val lNew = lit(0.3) * x + lit(0.7) * (acc("l") + acc("b"))
-          struct(lNew.as("l"),
-            (lit(0.1) * (lNew - acc("l")) + lit(0.9) * acc("b")).as("b"))
-        })
+      val daily = dailyCounts(s, dir)
+      val a = dailyArrays(daily, 2)
+      val v = dailyValues
+      val folded = holt(v)
       a.select(col("event_type"), col("nd").as("n_days"),
           folded.as("h"))
         .select(col("event_type"), col("n_days"),
@@ -3633,16 +3131,8 @@ object Temporal {
     // written with the SAME literal arithmetic on both engines (no
     // pow() — cross-libm pow is not trusted at the last ulp).
     "ev_holt_damped" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |a AS (
-        |  SELECT event_type,
-        |    list(CAST(n AS DOUBLE) ORDER BY day) AS v,
-        |    CAST(count(*) AS BIGINT) AS nd
-        |  FROM e GROUP BY event_type),
+      s"""WITH ${dailyCountsSql("e")},
+        |${dailyArraysSql("e")},
         |rec AS (
         |  WITH RECURSIVE h(event_type, i, l, b) AS (
         |    SELECT event_type, CAST(2 AS BIGINT), v[2],
@@ -3666,18 +3156,11 @@ object Temporal {
         |  round(r.l + 0.9 / 0.1 * r.b, 9) AS fc_inf
         |FROM rec r JOIN a ON a.event_type = r.event_type AND r.i = a.nd"""
         .stripMargin) { (s, dir) =>
-      val daily = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
-      val a = daily.groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("day"), col("n"))))
-          .as("arr"), count(lit(1)).as("nd"))
-        .filter(col("nd") >= 2)
-      val v = transform(col("arr"), e => e("n").cast(DoubleType))
-      val init = struct(element_at(v, 2).as("l"),
-        (element_at(v, 2) - element_at(v, 1)).as("b"))
+      val daily = dailyCounts(s, dir)
+      val a = dailyArrays(daily, 2)
+      val v = dailyValues
       val folded = aggregate(
-        slice(v, lit(3), greatest(size(v) - 2, lit(0))), init,
+        slice(v, lit(3), greatest(size(v) - 2, lit(0))), holtInit(v),
         (acc, x) => {
           val lNew = lit(0.3) * x + lit(0.7) * (acc("l") + lit(0.9) * acc("b"))
           struct(lNew.as("l"),
@@ -3710,16 +3193,8 @@ object Temporal {
     // every error term is bit-equal. Verdicts compare the ×10⁶-SNAPPED
     // SSEs (engine-stable ties broken ses → holt → damped).
     "ev_ets_select" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |a AS (
-        |  SELECT event_type,
-        |    list(CAST(n AS DOUBLE) ORDER BY day) AS v,
-        |    CAST(count(*) AS BIGINT) AS nd
-        |  FROM e GROUP BY event_type),
+      s"""WITH ${dailyCountsSql("e")},
+        |${dailyArraysSql("e")},
         |rec AS (
         |  WITH RECURSIVE h(event_type, i, l1, s1, l2, b2, s2, l3, b3, s3) AS (
         |    SELECT event_type, CAST(2 AS BIGINT),
@@ -3759,14 +3234,9 @@ object Temporal {
         |  CASE WHEN f1 <= f2 AND f1 <= f3 THEN 'ses'
         |       WHEN f2 <= f3 THEN 'holt' ELSE 'damped' END AS best_model
         |FROM f""".stripMargin) { (s, dir) =>
-      val daily = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
-      val a = daily.groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("day"), col("n"))))
-          .as("arr"), count(lit(1)).as("nd"))
-        .filter(col("nd") >= 3)
-      val v = transform(col("arr"), e => e("n").cast(DoubleType))
+      val daily = dailyCounts(s, dir)
+      val a = dailyArrays(daily, 3)
+      val v = dailyValues
       val init = struct(
         element_at(v, 2).as("l1"), lit(0.0).as("s1"),
         element_at(v, 2).as("l2"),
@@ -3820,17 +3290,8 @@ object Temporal {
     // Spark, replayed bit-for-bit by a recursive CTE in the oracle.
     // One corpus agg; everything after is days-per-type bookkeeping.
     "ev_theta_forecast" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |a AS (
-        |  SELECT event_type,
-        |    list(CAST(n AS DOUBLE) ORDER BY day) AS v,
-        |    CAST(count(*) AS BIGINT) AS nd,
-        |    CAST(sum(n) AS BIGINT) AS sy
-        |  FROM e GROUP BY event_type),
+      s"""WITH ${dailyCountsSql("e")},
+        |${dailyArraysSql("e", "CAST(sum(n) AS BIGINT) AS sy")},
         |tidx AS (
         |  SELECT event_type, n, row_number() OVER (
         |    PARTITION BY event_type ORDER BY day) AS t FROM e),
@@ -3869,14 +3330,9 @@ object Temporal {
         |  round(0.5 * r.l + 0.5 * (ab.ia + ab.ib * (ab.nd + 7)), 9) AS fc_7
         |FROM rec r JOIN ab ON ab.event_type = r.event_type AND r.i = ab.nd"""
         .stripMargin) { (s, dir) =>
-      val daily = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
-      val a = daily.groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("day"), col("n"))))
-          .as("arr"), count(lit(1)).as("nd"), sum(col("n")).as("sy"))
-        .filter(col("nd") >= 2)
-      val v = transform(col("arr"), e => e("n").cast(DoubleType))
+      val daily = dailyCounts(s, dir)
+      val a = dailyArrays(daily, 2, sum(col("n")).as("sy"))
+      val v = dailyValues
       // Σt·y as an exact long via an indexed fold (acc = (t, sty))
       val sty = aggregate(
         transform(col("arr"), e => e("n")),
@@ -3934,29 +3390,13 @@ object Temporal {
     // Each absolute error snaps to a ×10⁶ long BEFORE the per-method
     // mean so the comparison is order-invariant.
     "ev_forecast_eval" -> QueryDef.withOracle(
-      s"""WITH e AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("e")},
         |bd AS (SELECT max(day) - 7 AS cut FROM e),
         |tr AS (SELECT e.* FROM e CROSS JOIN bd WHERE e.day <= bd.cut),
         |te AS (SELECT e.* FROM e CROSS JOIN bd WHERE e.day > bd.cut),
-        |a AS (
-        |  SELECT event_type, list(CAST(n AS DOUBLE) ORDER BY day) AS v,
-        |    CAST(count(*) AS BIGINT) AS nd, max(day) AS last_day
-        |  FROM tr GROUP BY event_type),
+        |${dailyArraysSql("tr", "max(day) AS last_day")},
         |rec AS (
-        |  WITH RECURSIVE h(event_type, i, l, b) AS (
-        |    SELECT event_type, CAST(2 AS BIGINT), v[2], v[2] - v[1]
-        |    FROM a WHERE nd >= 2
-        |    UNION ALL
-        |    SELECT h.event_type, h.i + 1,
-        |      0.3 * a.v[CAST(h.i + 1 AS INT)] + 0.7 * (h.l + h.b),
-        |      0.1 * ((0.3 * a.v[CAST(h.i + 1 AS INT)]
-        |          + 0.7 * (h.l + h.b)) - h.l) + 0.9 * h.b
-        |    FROM h JOIN a ON a.event_type = h.event_type
-        |    WHERE h.i < a.nd)
+        |  WITH RECURSIVE $holtRecursion
         |  SELECT h.event_type, h.l, h.b, a.last_day
         |  FROM h JOIN a ON a.event_type = h.event_type AND h.i = a.nd),
         |rec2 AS (
@@ -4000,9 +3440,7 @@ object Temporal {
         |  floor(CAST(shw AS DOUBLE) / 1000000 / n_days * 1000000000 + 0.5)
         |    / 1.0e9 AS mae
         |FROM m""".stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val e = dailyCounts(s, dir)
         .persist() // feeds the split, the snaive lookback and scoring
       val bd = e.agg((max(col("day")) - 7).as("cut"))
       val withCut = e.crossJoin(broadcast(bd))
@@ -4010,25 +3448,14 @@ object Temporal {
         .select(col("event_type"), col("day"), col("n"))
       val te = withCut.filter(col("day") > col("cut"))
         .select(col("event_type"), col("day"), col("n"))
-      val a = tr.groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("day"), col("n"))))
-          .as("arr"), count(lit(1)).as("nd"), max(col("day")).as("last_day"))
-        .filter(col("nd") >= 2)
-      val v = transform(col("arr"), x => x("n").cast(DoubleType))
-      val init = struct(element_at(v, 2).as("l"),
-        (element_at(v, 2) - element_at(v, 1)).as("b"))
-      val folded = aggregate(
-        slice(v, lit(3), greatest(size(v) - 2, lit(0))), init,
-        (acc, x) => {
-          val lNew = lit(0.3) * x + lit(0.7) * (acc("l") + acc("b"))
-          struct(lNew.as("l"),
-            (lit(0.1) * (lNew - acc("l")) + lit(0.9) * acc("b")).as("b"))
-        })
+      val a = dailyArrays(tr, 2, max(col("day")).as("last_day"))
+      val v = dailyValues
+      val folded = holt(v)
       val rec = a.select(col("event_type"), folded.as("h"),
         col("last_day"))
       val rec2 = a.filter(col("nd") >= 14)
         .select(col("event_type"),
-          hwFold(transform(col("arr"), x => x("n").cast(DoubleType))).as("hw"),
+          hwFold(dailyValues).as("hw"),
           col("last_day").as("last_day2"), col("nd"))
       val sc = te
         .join(rec, Seq("event_type"))
@@ -4191,14 +3618,9 @@ object Temporal {
     // bit-equal (the ev_holt_forecast discipline, extended to a
     // vector-valued state).
     "ev_holtwinters_forecast" -> QueryDef.withOracle(hwOracleSql) { (s, dir) =>
-      val daily = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
-      val a = daily.groupBy(col("event_type"))
-        .agg(sort_array(collect_list(struct(col("day"), col("n"))))
-          .as("arr"), count(lit(1)).as("nd"))
-        .filter(col("nd") >= 14)
-      val folded = hwFold(transform(col("arr"), e => e("n").cast(DoubleType)))
+      val daily = dailyCounts(s, dir)
+      val a = dailyArrays(daily, 14)
+      val folded = hwFold(dailyValues)
       a.select(col("event_type"), col("nd").as("n_days"), folded.as("h"))
         .select(col("event_type"), col("n_days"),
           round(col("h.l"), 9).as("level"), round(col("h.b"), 9).as("trend"),
@@ -4286,11 +3708,7 @@ object Temporal {
     // engines. ONE corpus agg to daily grain; everything after rides
     // the calendar-bounded (type × day) relation.
     "ev_anomaly_seasonal" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("e")},
         |wd AS (
         |  SELECT event_type, day % 7 AS w, CAST(sum(n) AS BIGINT) AS sn,
         |    CAST(count(*) AS BIGINT) AS c
@@ -4314,9 +3732,7 @@ object Temporal {
         |    - CAST(st.s1 AS DOUBLE) * st.s1 / st.nd) / st.nd) AS is_anomaly
         |FROM r JOIN st ON st.event_type = r.event_type""".stripMargin
     ) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val e = dailyCounts(s, dir)
       val wd = e.groupBy(col("event_type").as("et2"), (col("day") % 7).as("w"))
         .agg(sum(col("n")).as("sn"), count(lit(1)).as("c"))
       val expN = col("sn").cast(DoubleType) / col("c")
@@ -4356,13 +3772,7 @@ object Temporal {
     // standard full-series mean/sd normalization (denominator n·sx·sy)
     // through one pinned double chain, ×10⁶ snapped.
     "ev_cross_correlation" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS x,
-        |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
+      s"""WITH $clickPurchaseDaysSql,
         |g AS (
         |  SELECT CAST(count(*) AS BIGINT) AS n,
         |    CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
@@ -4389,10 +3799,7 @@ object Temporal {
         |         - (CAST(g.sy AS DOUBLE) / g.n) * (CAST(g.sy AS DOUBLE) / g.n)))
         |    * 1e6 + 0.5) / 1.0e6 AS ccf
         |FROM p CROSS JOIN g""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(expr("ts_s div 86400").as("day"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
+      val d = clickPurchaseDays(s, dir)
         .persist() // calendar-bounded; globals + both shifted-join sides
       val g = d.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
         sum(col("y")).as("sy"), sum(col("x") * col("x")).as("sxx"),
@@ -4432,13 +3839,7 @@ object Temporal {
     // χ²/F(1,∞) 95% point 3.841 — n−3 here is large enough that the
     // asymptote is the honest constant, not a per-n t-table).
     "ev_granger_causality" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS x,
-        |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS y
-        |  FROM events GROUP BY 1),
+      s"""WITH $clickPurchaseDaysSql,
         |pr AS (
         |  SELECT a.x AS xa, a.y AS ya, b.x AS xb, b.y AS yb
         |  FROM d a JOIN d b ON b.day = a.day + 1),
@@ -4489,10 +3890,7 @@ object Temporal {
         |    AS f_stat,
         |  (sse_r - sse_f) * (n - 3) / sse_f > 3.841 AS granger_causes
         |FROM z""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(expr("ts_s div 86400").as("day"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
+      val d = clickPurchaseDays(s, dir)
         .persist() // calendar-bounded; both consecutive-join sides
       val a = d.select(col("day").as("da"), col("x").as("xa"), col("y").as("ya"))
       val b = d.select(col("day").as("db"), col("x").as("xb"), col("y").as("yb"))
@@ -4664,11 +4062,7 @@ object Temporal {
     // domain, continuity-corrected Z against ±1.96. S and tie sums
     // are exact integers; only Z divides, ×10⁶ snapped.
     "ev_mann_kendall" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
         |p AS (
         |  SELECT a.event_type,
         |    CAST(sum(CASE WHEN b.n > a.n THEN 1
@@ -4702,9 +4096,7 @@ object Temporal {
         |                  ELSE 0.0 END) < -1.96 THEN 'decreasing'
         |       ELSE 'none' END AS trend
         |FROM v""".stripMargin) { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
         .persist() // calendar-bounded; pair join sides + ties + counts
       val a = d.select(col("event_type"), col("day").as("da"),
         col("n").as("na"))
@@ -4747,11 +4139,7 @@ object Temporal {
     // BOUNDED daily relation — U is exact integer fixed point ×2
     // throughout; only the p-value exponentiates, ×10⁹ snapped.
     "ev_pettitt" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
         |vdom AS (
         |  SELECT event_type, n, CAST(count(*) AS BIGINT) AS cnt
         |  FROM d GROUP BY 1, 2),
@@ -4790,9 +4178,7 @@ object Temporal {
         |    * 1e9 + 0.5) / 1.0e9 AS p_value
         |FROM loc""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.{Window => W}
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
         .persist() // calendar-bounded; ranks, counts, U-walk
       val vdom = d.groupBy(col("event_type"), col("n"))
         .agg(count(lit(1)).as("cnt"))
@@ -5038,11 +4424,7 @@ object Temporal {
     // the horizon is a constant). One corpus scan; all else rides the
     // bounded daily relation. ×10⁹/×10⁶ snaps at output.
     "ev_ar2_forecast" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("e")},
         |a AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
         |    CAST(sum(n) AS BIGINT) AS s,
@@ -5091,9 +4473,7 @@ object Temporal {
         |  floor((mu + k1) * 1e6 + 0.5) / 1.0e6 AS fc_1,
         |  floor((mu + k7) * 1e6 + 0.5) / 1.0e6 AS fc_7
         |FROM f7""".stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val e = dailyCounts(s, dir)
       val a = e.groupBy(col("event_type"))
         .agg(count(lit(1)).as("nd"), sum(col("n")).as("s"),
           sort_array(collect_list(struct(col("day"), col("n")))).as("arr"))
@@ -5481,11 +4861,7 @@ object Temporal {
       val lpTerms = (-3 to 3).map(k =>
         Loess.nbSql("c_fp", k, "tw")).mkString(" + ")
       val oracle =
-        s"""WITH d AS (
-           |  SELECT event_type,
-           |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-           |    CAST(count(*) AS BIGINT) AS n
-           |  FROM events GROUP BY 1, 2),
+        s"""WITH ${dailyCountsSql("d")},
            |t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
            |             CAST(sum(n) AS BIGINT) AS total FROM d GROUP BY 1),
            |z AS (SELECT d.event_type, d.day, d.day // 7 AS week,
@@ -5540,9 +4916,7 @@ object Temporal {
            |FROM dv d JOIN mad m USING (event_type)""".stripMargin
       QueryDef.withOracle(oracle) { (s, dir) =>
         import graft.operators.Loess.{beta, nb, sums}
-        val d = Tables.eventsTimed(s, dir)
-          .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-          .agg(count(lit(1)).as("n"))
+        val d = dailyCounts(s, dir)
           .persist() // type×day bookkeeping; feeds anchors + windows
         val t = d.groupBy(col("event_type"))
           .agg(count(lit(1)).as("n_days"), sum(col("n")).as("total"))
@@ -5708,24 +5082,7 @@ object Temporal {
     // Engle-Granger 5% critical value −3.37 (2 variables, n ≈ 30).
     // One corpus agg; everything after rides the ≤|days| relation.
     "ev_engle_granger" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS c,
-        |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS v
-        |  FROM events WHERE event_type IN ('click', 'view')
-        |  GROUP BY 1),
-        |an AS (SELECT CAST(count(*) AS BIGINT) AS nd,
-        |    CAST(sum(c) AS BIGINT) AS tc, CAST(sum(v) AS BIGINT) AS tv
-        |  FROM d),
-        |z AS (
-        |  SELECT day,
-        |    CAST(floor(CAST(c AS DOUBLE) * nd / tc * 1000 + 0.5) AS BIGINT)
-        |      AS cf,
-        |    CAST(floor(CAST(v AS DOUBLE) * nd / tv * 1000 + 0.5) AS BIGINT)
-        |      AS vf
-        |  FROM d CROSS JOIN an),
+      s"""WITH $clickViewSql,
         |m1 AS (
         |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cf) AS BIGINT) AS sc,
         |    CAST(sum(vf) AS BIGINT) AS sv, CAST(sum(cf * cf) AS BIGINT) AS scc,
@@ -5764,19 +5121,7 @@ object Temporal {
         |FROM co CROSS JOIN t2
         |WHERE co.den > 0 AND t2.a > 0 AND t2.n2 > 2""".stripMargin) { (s, dir) =>
       val dec38 = DecimalType(38, 0)
-      val d = Tables.eventsTimed(s, dir)
-        .filter(col("event_type").isin("click", "view"))
-        .groupBy(expr("ts_s div 86400").as("day"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
-          sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("v"))
-      val an = d.agg(count(lit(1)).as("nd"), sum(col("c")).as("tc"),
-        sum(col("v")).as("tv"))
-      val z = d.crossJoin(broadcast(an))
-        .select(col("day"),
-          floor(col("c").cast(DoubleType) * col("nd") / col("tc") * lit(1000)
-            + lit(0.5)).cast(LongType).as("cf"),
-          floor(col("v").cast(DoubleType) * col("nd") / col("tv") * lit(1000)
-            + lit(0.5)).cast(LongType).as("vf"))
+      val z = clickViewDays(s, dir)
         .persist() // ≤|days| bookkeeping; feeds the moments + residuals
       val m1 = z.agg(count(lit(1)).as("n"), sum(col("cf")).as("sc"),
         sum(col("vf")).as("sv"), sum(col("cf") * col("cf")).as("scc"),
@@ -5941,24 +5286,7 @@ object Temporal {
     // the complex pair, ×10⁶-snapped before the |λ|<1 verdict. One
     // corpus agg; lags ride the ≤|days| calendar relation.
     "ev_var1_stability" -> QueryDef.withOracle(
-      """WITH d AS (
-        |  SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS c,
-        |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS v
-        |  FROM events WHERE event_type IN ('click', 'view')
-        |  GROUP BY 1),
-        |an AS (SELECT CAST(count(*) AS BIGINT) AS nd,
-        |    CAST(sum(c) AS BIGINT) AS tc, CAST(sum(v) AS BIGINT) AS tv
-        |  FROM d),
-        |z AS (
-        |  SELECT day,
-        |    CAST(floor(CAST(c AS DOUBLE) * nd / tc * 1000 + 0.5) AS BIGINT)
-        |      AS cf,
-        |    CAST(floor(CAST(v AS DOUBLE) * nd / tv * 1000 + 0.5) AS BIGINT)
-        |      AS vf
-        |  FROM d CROSS JOIN an),
+      s"""WITH $clickViewSql,
         |l AS (
         |  SELECT cf, vf,
         |    lag(cf) OVER (ORDER BY day ASC) AS cl,
@@ -6018,19 +5346,7 @@ object Temporal {
         |  floor(radius * 1e6 + 0.5) < 1000000 AS stable
         |FROM rr WHERE n > 3""".stripMargin) { (s, dir) =>
       val dec38 = DecimalType(38, 0)
-      val d = Tables.eventsTimed(s, dir)
-        .filter(col("event_type").isin("click", "view"))
-        .groupBy(expr("ts_s div 86400").as("day"))
-        .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
-          sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("v"))
-      val an = d.agg(count(lit(1)).as("nd"), sum(col("c")).as("tc"),
-        sum(col("v")).as("tv"))
-      val z = d.crossJoin(broadcast(an))
-        .select(col("day"),
-          floor(col("c").cast(DoubleType) * col("nd") / col("tc") * lit(1000)
-            + lit(0.5)).cast(LongType).as("cf"),
-          floor(col("v").cast(DoubleType) * col("nd") / col("tv") * lit(1000)
-            + lit(0.5)).cast(LongType).as("vf"))
+      val z = clickViewDays(s, dir)
       val lw = Window.orderBy(col("day").asc)
       val l = z.withColumn("cl", lag(col("cf"), 1).over(lw))
         .withColumn("vl", lag(col("vf"), 1).over(lw))
@@ -6457,11 +5773,7 @@ object Temporal {
            |  SELECT event_type, $i AS level, CAST(sum(d * d) AS BIGINT) AS energy
            |  FROM l$i GROUP BY 1)""".stripMargin
       }
-      s"""WITH d AS (
-         |  SELECT event_type,
-         |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("d")},
          |t AS (
          |  SELECT *, row_number() OVER (PARTITION BY event_type
          |    ORDER BY day DESC) AS rd
@@ -6490,9 +5802,7 @@ object Temporal {
          |      + 0.5) / 1.0e9 END AS energy_frac
          |FROM es JOIN te USING (event_type)""".stripMargin
     } { (s, dir) =>
-      val d = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val d = dailyCounts(s, dir)
       // Dyadic-length contract, explicit and symmetric with the oracle:
       // a type with < 16 distinct days is excluded (the Spark pyramid
       // hardcodes n = 16 >> level; element_at past the array end would
@@ -6561,11 +5871,7 @@ object Temporal {
     // under fixed (h, q). Oracle replays the identical chain via a
     // recursive CTE. ONE corpus agg; the fold is 5-row bookkeeping.
     "ev_kalman_level" -> QueryDef.withOracle(
-      """WITH e AS (
-        |  SELECT event_type,
-        |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-        |    CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
+      s"""WITH ${dailyCountsSql("e")},
         |t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
         |             CAST(sum(n) AS BIGINT) AS total FROM e GROUP BY 1),
         |a AS (
@@ -6595,9 +5901,7 @@ object Temporal {
         |  round(r.ssq, 9) AS ssq_std_innov
         |FROM rec r JOIN a ON a.event_type = r.event_type AND r.i = a.nd"""
         .stripMargin) { (s, dir) =>
-      val e = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val e = dailyCounts(s, dir)
       val t = e.groupBy(col("event_type"))
         .agg(count(lit(1)).as("nd"), sum(col("n")).as("total"))
       val a = e.join(broadcast(t), "event_type")
@@ -6646,15 +5950,8 @@ object Temporal {
     // forecast ẑ = z_nd + z_{nd−6} − z_{nd−7} − θe₁ − Θe₇ + θΘe₈.
     "ev_airline_sarima" -> QueryDef.withOracle {
       val shift = (1 to 7).map(k => s"h.e$k").mkString(", ")
-      s"""WITH e AS (
-         |  SELECT event_type,
-         |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-         |    CAST(count(*) AS BIGINT) AS n
-         |  FROM events GROUP BY 1, 2),
-         |a AS (
-         |  SELECT event_type, list(CAST(n AS DOUBLE) ORDER BY day) AS v,
-         |    CAST(count(*) AS BIGINT) AS nd
-         |  FROM e GROUP BY event_type),
+      s"""WITH ${dailyCountsSql("e")},
+         |${dailyArraysSql("e")},
          |g AS (
          |  SELECT gi, gj, gi / 10.0 AS th, gj / 10.0 AS tth
          |  FROM (SELECT unnest([1, 3, 5, 7, 9]) AS gi)
@@ -6700,9 +5997,7 @@ object Temporal {
          |  round(css, 9) AS css, round(fc1, 9) AS fc_1
          |FROM best WHERE rn = 1""".stripMargin
     } { (s, dir) =>
-      val daily = Tables.eventsTimed(s, dir)
-        .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-        .agg(count(lit(1)).as("n"))
+      val daily = dailyCounts(s, dir)
       val a = daily.groupBy(col("event_type"))
         .agg(sort_array(collect_list(struct(col("day"),
           col("n").cast(DoubleType).as("n")))).as("arr"),
@@ -6766,12 +6061,376 @@ object Temporal {
     * and ev_spectral_entropy (single source of truth for the trig-snap
     * discipline; a one-sided edit fails verify immediately). Prepend
     * `WITH `. */
-  private def dftPowerSql: String =
-    """d AS (
+  /** Purchases (`is_click` = 0) of the click/purchase stream, each
+    * carrying the same user's latest click at or before it as `idName`
+    * (its event id) and `tsName` (its time; both null when there is no
+    * such click): the single-shuffle union+window as-of plan. Oracle
+    * twin: [[asofSql]]. */
+  private def latestClick(s: SparkSession, dir: String, idName: String,
+      tsName: String): DataFrame = {
+    val e = Tables.eventsTimed(s, dir)
+      .filter(col("event_type").isin("click", "purchase"))
+      .select(col("user_id"), col("event_id"), col("ts_s"),
+        when(col("event_type") === "click", 1).otherwise(0).as("is_click"))
+    val w = Window.partitionBy(col("user_id"))
+      .orderBy(col("ts_s").asc, col("is_click").desc, col("event_id").asc)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    e.withColumn(idName,
+        last(when(col("is_click") === 1, col("event_id")), ignoreNulls = true).over(w))
+      .withColumn(tsName,
+        last(when(col("is_click") === 1, col("ts_s")), ignoreNulls = true).over(w))
+      .filter(col("is_click") === 0)
+  }
+
+  /** The as-of oracle: each purchase with the user's latest click at
+    * or before it (`click_id`, `click_ts_s`), then `matchCols` after
+    * `purchase_id, user_id, purchase_ts_s`. */
+  private def asofSql(matchCols: String): String =
+    s"""WITH e AS (
+       |  SELECT user_id, event_id, event_type,
+       |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
+       |  FROM events WHERE event_type IN ('click', 'purchase')),
+       |u AS (
+       |  SELECT user_id, ts_s, event_id,
+       |    CASE WHEN event_type = 'click' THEN 1 ELSE 0 END AS is_click,
+       |    last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
+       |      OVER (PARTITION BY user_id
+       |            ORDER BY ts_s ASC, (CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) DESC,
+       |                     event_id ASC
+       |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_id,
+       |    last_value(CASE WHEN event_type = 'click' THEN ts_s END IGNORE NULLS)
+       |      OVER (PARTITION BY user_id
+       |            ORDER BY ts_s ASC, (CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) DESC,
+       |                     event_id ASC
+       |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS click_ts_s
+       |  FROM e)
+       |SELECT event_id AS purchase_id, user_id, ts_s AS purchase_ts_s,
+       |  $matchCols
+       |FROM u WHERE is_click = 0""".stripMargin
+
+  /** Events per (event_type, day): `(event_type, day, n)`, the
+    * calendar-bounded daily series (≤ |types| × |days| rows). Oracle
+    * twin: [[dailyCountsSql]]. */
+  private def dailyCounts(s: SparkSession, dir: String): DataFrame =
+    Tables.eventsTimed(s, dir)
+      .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
+      .agg(count(lit(1)).as("n"))
+
+  /** DuckDB CTE `name` mirroring [[dailyCounts]]. */
+  private def dailyCountsSql(name: String): String =
+    s"""$name AS (
+       |  SELECT event_type,
+       |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+       |    CAST(count(*) AS BIGINT) AS n
+       |  FROM events GROUP BY 1, 2)""".stripMargin
+
+  /** Each type's daily counts as one day-ordered array: `(event_type,
+    * arr, nd, extra…)` over a [[dailyCounts]]-shaped relation, `arr` the
+    * (day, n) structs, for the types with at least `minDays` days. The
+    * sequential recurrences (Holt, Holt-Winters, θ) fold this array
+    * row-locally — |days| FLOPs per type. Oracle twin:
+    * [[dailyArraysSql]]. */
+  private def dailyArrays(daily: DataFrame, minDays: Int, extra: Column*): DataFrame =
+    daily.groupBy(col("event_type"))
+      .agg(sort_array(collect_list(struct(col("day"), col("n")))).as("arr"),
+        count(lit(1)).as("nd") +: extra: _*)
+      .filter(col("nd") >= minDays)
+
+  /** [[dailyArrays]]' counts as doubles, in day order. */
+  private def dailyValues: Column = transform(col("arr"), e => e("n").cast(DoubleType))
+
+  /** DuckDB CTE `a (event_type, v, nd, extra…)` over the daily-count
+    * CTE `from`, mirroring [[dailyArrays]] (callers filter on `nd`). */
+  private def dailyArraysSql(from: String, extra: String*): String =
+    (Seq("list(CAST(n AS DOUBLE) ORDER BY day) AS v",
+      "CAST(count(*) AS BIGINT) AS nd") ++ extra)
+      .mkString("a AS (\n  SELECT event_type, ", ",\n    ",
+        s"\n  FROM $from GROUP BY event_type)")
+
+  /** Holt's seed (l₂ = v₂, b₂ = v₂ − v₁) over the day values `v`. */
+  private def holtInit(v: Column): Column =
+    struct(element_at(v, 2).as("l"), (element_at(v, 2) - element_at(v, 1)).as("b"))
+
+  /** Holt's linear-trend recurrence (α = 0.3, β = 0.1) folded over `v`
+    * from [[holtInit]]: the final (l, b). Oracle twin:
+    * [[holtRecursion]], the identical IEEE chain. */
+  private def holt(v: Column): Column =
+    aggregate(slice(v, lit(3), greatest(size(v) - 2, lit(0))), holtInit(v),
+      (acc, x) => {
+        val lNew = lit(0.3) * x + lit(0.7) * (acc("l") + acc("b"))
+        struct(lNew.as("l"),
+          (lit(0.1) * (lNew - acc("l")) + lit(0.9) * acc("b")).as("b"))
+      })
+
+  /** Recursive CTE `h(event_type, i, l, b)` over `a`, mirroring
+    * [[holt]]: one row per day from day 2. */
+  private def holtRecursion: String =
+    """h(event_type, i, l, b) AS (
+      |    SELECT event_type, CAST(2 AS BIGINT), v[2], v[2] - v[1]
+      |    FROM a WHERE nd >= 2
+      |    UNION ALL
+      |    SELECT h.event_type, h.i + 1,
+      |      0.3 * a.v[CAST(h.i + 1 AS INT)] + 0.7 * (h.l + h.b),
+      |      0.1 * ((0.3 * a.v[CAST(h.i + 1 AS INT)]
+      |          + 0.7 * (h.l + h.b)) - h.l) + 0.9 * h.b
+      |    FROM h JOIN a ON a.event_type = h.event_type
+      |    WHERE h.i < a.nd)""".stripMargin
+
+  /** Per-type day count and total `(event_type, nd, tot)` of a
+    * [[dailyCounts]] relation. */
+  private def typeTotals(d: DataFrame): DataFrame =
+    d.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("nd"), sum(col("n")).as("tot"))
+
+  /** The ACF family's deviations `(event_type, day, dev)` in the
+    * exact-integer common-denominator form dev = n·nd − tot (the shared
+    * ×nd scale cancels in every ratio, so no double mean enters). */
+  private def deviations(d: DataFrame, t: DataFrame): DataFrame =
+    d.join(broadcast(t), "event_type")
+      .select(col("event_type"), col("day"),
+        (col("n") * col("nd") - col("tot")).as("dev"))
+
+  /** Lag products `(event_type, lag, extra…, sp)` of the deviations
+    * `v` for each `lag` row of `lags`: a calendar self-join of the
+    * bookkeeping relation, sp = Σ dev_t·dev_{t+lag}. Oracle twin:
+    * [[acfSql]]. */
+  private def lagProducts(v: DataFrame, lags: DataFrame, extra: Column*): DataFrame = {
+    val aggs = extra :+ sum(col("a.dev") * col("b.dev")).as("sp")
+    v.as("a")
+      .crossJoin(broadcast(lags))
+      .join(v.as("b"),
+        col("b.event_type") === col("a.event_type")
+          && col("b.day") === col("a.day") + col("lag"))
+      .groupBy(col("a.event_type").as("event_type"), col("lag"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** DuckDB CTEs `t`, `v`, `den (event_type, ss)` and `num (event_type,
+    * lag, n_pairs, sp)` over the daily-count CTE `d`, for the lags in
+    * the list `lags`; mirrors [[typeTotals]], [[deviations]] and
+    * [[lagProducts]]. */
+  private def acfSql(lags: String): String =
+    s"""t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
+       |             CAST(sum(n) AS BIGINT) AS tot FROM d GROUP BY event_type),
+       |v AS (
+       |  SELECT d.event_type, d.day, d.n * t.nd - t.tot AS dev
+       |  FROM d JOIN t USING (event_type)),
+       |den AS (
+       |  SELECT event_type, CAST(sum(dev * dev) AS BIGINT) AS ss
+       |  FROM v GROUP BY event_type),
+       |num AS (
+       |  SELECT a.event_type, l.lag, CAST(count(*) AS BIGINT) AS n_pairs,
+       |    CAST(sum(a.dev * b.dev) AS BIGINT) AS sp
+       |  FROM v a
+       |  CROSS JOIN (SELECT unnest([$lags]) AS lag) l
+       |  JOIN v b ON b.event_type = a.event_type AND b.day = a.day + l.lag
+       |  GROUP BY a.event_type, l.lag)""".stripMargin
+
+  /** The A/B arms, purchase (a) against view (b): one row `(n_a,
+    * mean_a, var_a, n_b, mean_b, var_b)` from exact DECIMAL power sums
+    * in one corpus agg, the mean round(…, 9)-snapped; the two arms are
+    * 1-row relations, cross-joined. Oracle twin: [[abArmsSql]]. */
+  private def abArms(s: SparkSession, dir: String): DataFrame = {
+    val v = col("value").cast(dec2)
+    val m = Tables.events(s, dir)
+      .filter(col("event_type").isin("purchase", "view"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(v).cast(DoubleType).as("s1"),
+        sum(v * v).cast(DoubleType).as("s2"))
+      .withColumn("mean", round(col("s1") / col("n"), 9))
+      .withColumn("var",
+        (col("s2") - col("s1") * col("s1") / col("n")) / (col("n") - 1))
+    val a = m.filter(col("event_type") === "purchase")
+      .select(col("n").as("n_a"), col("mean").as("mean_a"), col("var").as("var_a"))
+    val b = m.filter(col("event_type") === "view")
+      .select(col("n").as("n_b"), col("mean").as("mean_b"), col("var").as("var_b"))
+    a.crossJoin(b)
+  }
+
+  /** DuckDB CTEs `m`, `w` and `ab` mirroring [[abArms]]. */
+  private def abArmsSql: String =
+    """m AS (
       |  SELECT event_type,
-      |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-      |    CAST(count(*) AS BIGINT) AS n
-      |  FROM events GROUP BY 1, 2),
+      |    CAST(count(*) AS BIGINT) AS n,
+      |    CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS s1,
+      |    CAST(sum(CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2)))
+      |      AS DOUBLE) AS s2
+      |  FROM events WHERE event_type IN ('purchase', 'view')
+      |  GROUP BY 1),
+      |w AS (
+      |  SELECT event_type, n, round(s1 / n, 9) AS mean,
+      |    (s2 - s1 * s1 / n) / (n - 1) AS var
+      |  FROM m),
+      |ab AS (
+      |  SELECT a.n AS n_a, a.mean AS mean_a, a.var AS var_a,
+      |         b.n AS n_b, b.mean AS mean_b, b.var AS var_b
+      |  FROM w a JOIN w b
+      |    ON a.event_type = 'purchase' AND b.event_type = 'view')""".stripMargin
+
+  /** Each purchase `(event_id, user_id, ts_s)` with every touch
+    * (click, view or signup: `touch_id, t_user, touch_type, touch_s`)
+    * of the same user in the 7 days up to it, or one null touch: a
+    * user-keyed join with the range predicate applied post-join.
+    * Oracle twin: [[touchSql]]. */
+  private def touchPairs(s: SparkSession, dir: String): DataFrame = {
+    val e = Tables.eventsTimed(s, dir)
+    val p = e.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts_s"))
+    val t = e.filter(col("event_type").isin("click", "view", "signup"))
+      .select(col("event_id").as("touch_id"), col("user_id").as("t_user"),
+        col("event_type").as("touch_type"), col("ts_s").as("touch_s"))
+    p.join(t,
+      col("t_user") === col("user_id") &&
+        col("touch_s") <= col("ts_s") &&
+        col("touch_s") >= col("ts_s") - 604800L, "left_outer")
+  }
+
+  /** DuckDB CTEs `p` (purchases) and `t` (touches) of [[touchPairs]];
+    * callers write the 7-day join. */
+  private def touchSql: String =
+    """p AS (
+      |  SELECT event_id, user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s
+      |  FROM events WHERE event_type = 'purchase'),
+      |t AS (
+      |  SELECT event_id AS touch_id, user_id, event_type AS touch_type,
+      |    CAST(floor(epoch(ts)) AS BIGINT) AS touch_s
+      |  FROM events WHERE event_type IN ('click', 'view', 'signup'))""".stripMargin
+
+  /** Clicks `x` and purchases `y` per day `(day, x, y)`: the
+    * calendar-bounded pair series of the click→purchase statistics.
+    * Oracle twin: [[clickPurchaseDaysSql]]. */
+  private def clickPurchaseDays(s: SparkSession, dir: String): DataFrame =
+    Tables.eventsTimed(s, dir)
+      .groupBy(expr("ts_s div 86400").as("day"))
+      .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("x"),
+        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
+
+  /** DuckDB CTE `d` mirroring [[clickPurchaseDays]]. */
+  private def clickPurchaseDaysSql: String =
+    """d AS (
+      |  SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+      |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+      |      AS BIGINT) AS x,
+      |    CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+      |      AS BIGINT) AS y
+      |  FROM events GROUP BY 1)""".stripMargin
+
+  /** Daily clicks and views `(day, cf, vf)`, each normalized by its
+    * own mean to a ×10³ SF-invariant long (count · days / total). The
+    * totals are a 1-row broadcast anchor. Oracle twin:
+    * [[clickViewSql]]. */
+  private def clickViewDays(s: SparkSession, dir: String): DataFrame = {
+    val d = Tables.eventsTimed(s, dir)
+      .filter(col("event_type").isin("click", "view"))
+      .groupBy(expr("ts_s div 86400").as("day"))
+      .agg(sum(when(col("event_type") === "click", 1L).otherwise(0L)).as("c"),
+        sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("v"))
+    val an = d.agg(count(lit(1)).as("nd"), sum(col("c")).as("tc"),
+      sum(col("v")).as("tv"))
+    d.crossJoin(broadcast(an))
+      .select(col("day"),
+        floor(col("c").cast(DoubleType) * col("nd") / col("tc") * lit(1000)
+          + lit(0.5)).cast(LongType).as("cf"),
+        floor(col("v").cast(DoubleType) * col("nd") / col("tv") * lit(1000)
+          + lit(0.5)).cast(LongType).as("vf"))
+  }
+
+  /** DuckDB CTEs `d`, `an` and `z (day, cf, vf)` mirroring
+    * [[clickViewDays]]. */
+  private def clickViewSql: String =
+    """d AS (
+      |  SELECT CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
+      |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+      |      AS BIGINT) AS c,
+      |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
+      |      AS BIGINT) AS v
+      |  FROM events WHERE event_type IN ('click', 'view')
+      |  GROUP BY 1),
+      |an AS (SELECT CAST(count(*) AS BIGINT) AS nd,
+      |    CAST(sum(c) AS BIGINT) AS tc, CAST(sum(v) AS BIGINT) AS tv
+      |  FROM d),
+      |z AS (
+      |  SELECT day,
+      |    CAST(floor(CAST(c AS DOUBLE) * nd / tc * 1000 + 0.5) AS BIGINT)
+      |      AS cf,
+      |    CAST(floor(CAST(v AS DOUBLE) * nd / tv * 1000 + 0.5) AS BIGINT)
+      |      AS vf
+      |  FROM d CROSS JOIN an)""".stripMargin
+
+  /** The survival family's (cohort week, duration hour) window. */
+  private def cohortHours: WindowSpec =
+    Window.partitionBy(col("cohort_week")).orderBy(col("t_hours").asc)
+
+  /** The cohort-week survival risk table: per (cohort_week, t_hours),
+    * the users whose first high-value purchase (value ≥ 90) came
+    * `t_hours` after their first event (`d`, the event count) or who
+    * were censored at the observation end then (`c_censored`), with
+    * `removed`, `n_cohort` and `n_at_risk`. The observation end is a
+    * 1-row broadcast anchor; from `ct` down the relation is
+    * calendar-bounded (rows = cohorts × hours), so the [[cohortHours]]
+    * windows are bookkeeping. Oracle twin: [[riskTableSql]]. */
+  private def riskTable(s: SparkSession, dir: String, d: String): DataFrame = {
+    val e = Tables.eventsTimed(s, dir)
+      .select(col("user_id"), col("event_type"), col("value"), col("ts_s"))
+    val g = e.agg(max(col("ts_s")).as("gmax"))
+    val u = e.groupBy(col("user_id")).agg(min(col("ts_s")).as("first_s"))
+    val cv = e.filter(col("event_type") === "purchase" && col("value") >= 90)
+      .groupBy(col("user_id")).agg(min(col("ts_s")).as("conv_s"))
+    val ct = u.join(cv, Seq("user_id"), "left_outer")
+      .crossJoin(broadcast(g))
+      .select(expr("first_s div 604800").as("cohort_week"),
+        when(col("conv_s").isNotNull, expr("(conv_s - first_s) div 3600"))
+          .otherwise(expr("(gmax - first_s) div 3600")).as("t_hours"),
+        when(col("conv_s").isNotNull, 1L).otherwise(0L).as("ev"))
+      .groupBy(col("cohort_week"), col("t_hours"))
+      .agg(sum(col("ev")).as(d),
+        (count(lit(1)) - sum(col("ev"))).as("c_censored"))
+    ct.withColumn("removed", coalesce(
+        sum(col(d) + col("c_censored"))
+          .over(cohortHours.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .withColumn("n_cohort",
+        sum(col(d) + col("c_censored"))
+          .over(cohortHours.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn("n_at_risk", col("n_cohort") - col("removed"))
+  }
+
+  /** DuckDB CTEs `e` … `k` mirroring [[riskTable]]. */
+  private def riskTableSql(d: String): String =
+    s"""e AS (
+       |  SELECT user_id, event_type, value,
+       |    CAST(floor(epoch(ts)) AS BIGINT) AS ts_s FROM events),
+       |g AS (SELECT max(ts_s) AS gmax FROM e),
+       |u AS (SELECT user_id, min(ts_s) AS first_s FROM e GROUP BY 1),
+       |cv AS (
+       |  SELECT user_id, min(ts_s) AS conv_s FROM e
+       |  WHERE event_type = 'purchase' AND value >= 90 GROUP BY 1),
+       |d AS (
+       |  SELECT u.first_s // 604800 AS cohort_week,
+       |    CASE WHEN cv.conv_s IS NOT NULL
+       |         THEN (cv.conv_s - u.first_s) // 3600
+       |         ELSE (g.gmax - u.first_s) // 3600 END AS t_hours,
+       |    CASE WHEN cv.conv_s IS NOT NULL THEN 1 ELSE 0 END AS ev
+       |  FROM u LEFT JOIN cv ON cv.user_id = u.user_id CROSS JOIN g),
+       |ct AS (
+       |  SELECT cohort_week, CAST(t_hours AS BIGINT) AS t_hours,
+       |    CAST(sum(ev) AS BIGINT) AS $d,
+       |    CAST(count(*) - sum(ev) AS BIGINT) AS c_censored
+       |  FROM d GROUP BY 1, 2),
+       |w AS (
+       |  SELECT *,
+       |    CAST(coalesce(sum($d + c_censored) OVER (PARTITION BY cohort_week
+       |      ORDER BY t_hours ASC ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+       |      0) AS BIGINT) AS removed,
+       |    CAST(sum($d + c_censored) OVER (PARTITION BY cohort_week)
+       |      AS BIGINT) AS n_cohort
+       |  FROM ct),
+       |k AS (
+       |  SELECT cohort_week, t_hours, $d, c_censored,
+       |    n_cohort - removed AS n_at_risk FROM w)""".stripMargin
+
+  private def dftPowerSql: String =
+    s"""${dailyCountsSql("d")},
       |t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nd,
       |             CAST(sum(n) AS BIGINT) AS tot FROM d GROUP BY event_type),
       |v AS (
@@ -6805,9 +6464,7 @@ object Temporal {
   private def dftPower(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     val dec38 = DecimalType(38, 0)
-    val d = Tables.eventsTimed(s, dir)
-      .groupBy(col("event_type"), expr("ts_s div 86400").as("day"))
-      .agg(count(lit(1)).as("n"))
+    val d = dailyCounts(s, dir)
     val t = d.groupBy(col("event_type"))
       .agg(count(lit(1)).as("nd"), sum(col("n")).as("tot"))
     // dense 0-based day index: bounded |days| bookkeeping window
@@ -6901,15 +6558,8 @@ object Temporal {
 
   /** Generated oracle for ev_holtwinters_forecast. */
   private def hwOracleSql: String =
-    s"""WITH e AS (
-       |  SELECT event_type,
-       |    CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-       |    CAST(count(*) AS BIGINT) AS n
-       |  FROM events GROUP BY 1, 2),
-       |a AS (
-       |  SELECT event_type, list(CAST(n AS DOUBLE) ORDER BY day) AS v,
-       |    CAST(count(*) AS BIGINT) AS nd
-       |  FROM e GROUP BY event_type),
+    s"""WITH ${dailyCountsSql("e")},
+       |${dailyArraysSql("e")},
        |rec AS (
        |  WITH RECURSIVE ${hwRecursion("h")}
        |  SELECT * FROM h)

@@ -38,7 +38,7 @@ object EventStreams {
   private def stageDir(sfDir: String): String = staged.getOrElseUpdate(sfDir, {
     import java.nio.file._
     val src = Paths.get(s"${sfDir.stripSuffix("/")}/events.parquet")
-    val dir = Files.createTempDirectory("graft_stream")
+    val dir = graft.TempDirs.deletedOnExit("graft_stream")
     Files.copy(src, dir.resolve("events.parquet"))
     dir.toString
   })

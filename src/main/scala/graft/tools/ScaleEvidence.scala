@@ -222,7 +222,7 @@ object ScaleEvidence {
       // 16-bucket default any ~100-key batch hits every bucket and COW
       // degenerates to a full rewrite (measured before this knob)
       spark.conf.set("spark.graft.tablesink.buckets", "512")
-      val tdir = java.nio.file.Files.createTempDirectory("graft_cow_ev").toString
+      val tdir = graft.TempDirs.deletedOnExit("graft_cow_ev").toString
       val sink = new graft.sources.ParquetVersionedTable(spark, tdir)
       val base = spark.read.parquet(s"$dir/lineitem.parquet")
         .groupBy(col("l_orderkey")).agg(

@@ -101,7 +101,7 @@ class AsofSemanticsSpec extends AnyFunSuite {
       (4L, 25L * 1000000000L, 1L, "purchase"),
       (5L, 5L * 1000000000L, 1L, "purchase"),
       (6L, 30L * 1000000000L, 2L, "purchase"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft_asof").toString
+    val tmp = TempDirs.deletedOnExit("graft_asof").toString
     rows.toDF("event_id", "ts", "user_id", "event_type")
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -177,7 +177,7 @@ class LayoutSpec extends AnyFunSuite {
     import graft.sources.ZorderLayout
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.functions.{max => fmax, min => fmin}
-    val tmp = java.nio.file.Files.createTempDirectory("graft_zread").toString
+    val tmp = TempDirs.deletedOnExit("graft_zread").toString
     val o = graft.sources.Tables.orders(spark, sf)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
     ZorderLayout.writeZordered(o, tmp, "o_custkey", "o_totalprice")
@@ -209,7 +209,7 @@ class LayoutSpec extends AnyFunSuite {
 
   test("partitioned write enables partition pruning") {
     import graft.sources.Connectors
-    val tmp = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val tmp = TempDirs.deletedOnExit("graft_part").toString
     val orders = graft.sources.Tables.orders(spark, sf)
       .withColumn("status", col("o_orderstatus"))
     Connectors.writePartitioned(orders, tmp, Seq("status"))
@@ -710,7 +710,7 @@ class EdgeCorpusSpec extends AnyFunSuite {
   // must survive it.
   lazy val edgeDir: String = {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_edge").toString
+    val tmp = TempDirs.deletedOnExit("graft_edge").toString
     val docs = Seq(
       (0L, "", "en", "src0", 0L),
       (1L, "one", "en", "src0", 3L),
@@ -805,7 +805,7 @@ class ClusterCheckpointSpec extends AnyFunSuite {
       def rows(): Seq[String] =
         SparkEntry.queries(q)(spark, sf).collect().map(_.toString).toSeq.sorted
       val base = rows()
-      val dir = Files.createTempDirectory("graft_ckpt_rel").toRealPath()
+      val dir = TempDirs.deletedOnExit("graft_ckpt_rel").toRealPath()
       spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
       try {
         assert(rows() == base)
@@ -884,7 +884,7 @@ class ConnectorSpec extends AnyFunSuite {
 
   test("avro roundtrip handles non-nullable columns") {
     import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_avro_nn").toString
+    val tmp = TempDirs.deletedOnExit("graft_avro_nn").toString
     // spark.range produces a non-nullable id column — the field must be
     // declared with NO default (null is invalid for a non-union type)
     val df = spark.range(100).toDF("id")
@@ -898,7 +898,7 @@ class ConnectorSpec extends AnyFunSuite {
 
   test("avro connector rides the Hadoop FileSystem API (explicit file: URI)") {
     import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_avro_fs").toString
+    val tmp = TempDirs.deletedOnExit("graft_avro_fs").toString
     val df = graft.sources.Tables.region(spark, sf)
     graft.sources.Connectors.writeAvro(df, s"file:$tmp")
     val back = graft.sources.Connectors.readAvro(spark, s"file:$tmp",
@@ -910,7 +910,7 @@ class ConnectorSpec extends AnyFunSuite {
 
   test("avro roundtrips array columns bit-exactly (embeddings)") {
     import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_avro_arr").toString
+    val tmp = TempDirs.deletedOnExit("graft_avro_arr").toString
     val e = graft.sources.Tables.embeddings(spark, sf)
     graft.sources.Connectors.writeAvro(e, tmp)
     val back = graft.sources.Connectors.readAvro(spark, tmp,
@@ -923,7 +923,7 @@ class ConnectorSpec extends AnyFunSuite {
   test("avro logical types roundtrip the hostile corners: negative decimals, pre-epoch dates, nulls") {
     import java.nio.file.Files
     import org.apache.spark.sql.types._
-    val tmp = Files.createTempDirectory("graft_avro_logic").toString
+    val tmp = TempDirs.deletedOnExit("graft_avro_logic").toString
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("dec", DecimalType(18, 4), nullable = true),
@@ -962,7 +962,7 @@ class ConnectorSpec extends AnyFunSuite {
 
   test("avro roundtrip preserves all columns including timestamps") {
     import java.nio.file.Files
-    val tmp = Files.createTempDirectory("graft_avro_spec").toString
+    val tmp = TempDirs.deletedOnExit("graft_avro_spec").toString
     val orders = graft.sources.Tables.orders(spark, sf)
     graft.sources.Connectors.writeAvro(orders, tmp)
     val back = graft.sources.Connectors.readAvro(spark, tmp,
@@ -1226,9 +1226,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("incremental parquet sink resumes from checkpoint without rereads") {
     import java.nio.file._
-    val src = Files.createTempDirectory("graft_src").toString
-    val out = Files.createTempDirectory("graft_out").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val src = TempDirs.deletedOnExit("graft_src").toString
+    val out = TempDirs.deletedOnExit("graft_out").toString
+    val ckpt = TempDirs.deletedOnExit("graft_ckpt").toString
     val events = graft.sources.Tables.events(spark, sf)
     val half = events.count() / 2
     events.limit(half.toInt).write.mode("append").parquet(src)
@@ -1302,7 +1302,7 @@ class StreamingSpec extends AnyFunSuite {
     * later batches EXTEND sessions opened in earlier ones. */
   private def stageTerciles(): String = {
     import java.nio.file._
-    val dir = Files.createTempDirectory("graft_stream_multi").toString
+    val dir = TempDirs.deletedOnExit("graft_stream_multi").toString
     // Tables.events normalizes ts to long nanos whatever the file's
     // physical encoding; the tercile files written below are therefore
     // always long-typed
@@ -1312,7 +1312,7 @@ class StreamingSpec extends AnyFunSuite {
     val t0 = System.currentTimeMillis()
     Seq(col("ts") <= t1, col("ts") > t1 && col("ts") <= t2, col("ts") > t2)
       .zipWithIndex.foreach { case (pred, i) =>
-        val tmp = Files.createTempDirectory(s"graft_terc$i")
+        val tmp = TempDirs.deletedOnExit(s"graft_terc$i")
         ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val part = Files.list(tmp).filter(_.toString.endsWith(".parquet")).findFirst().get()
         val dst = Files.copy(part, Paths.get(dir, f"batch_$i%02d.parquet"))
@@ -1329,8 +1329,8 @@ class StreamingSpec extends AnyFunSuite {
   test("foreachBatch upsert sink converges to the batch latest-per-user table") {
     import org.apache.spark.sql.functions.{max_by, struct}
     val dir = stageTerciles()
-    val target = java.nio.file.Files.createTempDirectory("graft_upsert").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsert_ck").toString
+    val target = TempDirs.deletedOnExit("graft_upsert").toString
+    val ckpt = TempDirs.deletedOnExit("graft_upsert_ck").toString
     val q = EventStreams.upsertLatestSink(spark, dir, target, ckpt, maxFilesPerTrigger = 1)
     try {
       q.processAllAvailable()
@@ -1356,7 +1356,7 @@ class StreamingSpec extends AnyFunSuite {
     // after the pointer flipped (attempt died post-commit) and before
     // (died between the version write and the flip) — must converge to
     // an identical snapshot and pointer.
-    val target = java.nio.file.Files.createTempDirectory("graft_retry").toString
+    val target = TempDirs.deletedOnExit("graft_retry").toString
     val ev = graft.sources.Tables.events(spark, sf)
       .withColumn("ts_s", expr("ts div 1000000000"))
       .select("user_id", "event_id", "event_type", "value", "ts_s")
@@ -1487,7 +1487,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("left-outer stream-stream join emits unmatched purchases once the watermark passes") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_loj").toString
+    val dir = TempDirs.deletedOnExit("graft_loj").toString
     // rewrite (not copy): the sentinel appended below is long-ts, so
     // the staged file must share that encoding
     graft.sources.Tables.events(spark, sf).coalesce(1)
@@ -1535,7 +1535,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("dropDuplicatesWithinWatermark deduplicates a replayed batch exactly") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_ddww").toString
+    val dir = TempDirs.deletedOnExit("graft_ddww").toString
     Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(dir, "events.parquet"))
     Files.copy(Paths.get(s"$sf/events.parquet"), Paths.get(dir, "events_replay.parquet"))
     // delay must cover the corpus's 30-day event-time span so no key's
@@ -1557,7 +1557,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("transformWithState event-time timers close gap sessions to the batch result") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_twst").toString
+    val dir = TempDirs.deletedOnExit("graft_twst").toString
     // rewrite (not copy): the sentinel appended below is long-ts, so
     // the staged file must share that encoding
     graft.sources.Tables.events(spark, sf).coalesce(1)
@@ -1620,7 +1620,7 @@ class StreamingSpec extends AnyFunSuite {
     import java.nio.file.Files
     // source dir holds ONLY the new stream batch; all prior spend lives
     // in the batch history table the processor bootstraps from
-    val dir = Files.createTempDirectory("graft_twsi").toString
+    val dir = TempDirs.deletedOnExit("graft_twsi").toString
     val hist = graft.sources.Tables.events(spark, sf)
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
@@ -1674,7 +1674,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("transformWithState spend milestones carry exact state across micro-batches") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_tws").toString
+    val dir = TempDirs.deletedOnExit("graft_tws").toString
     // REWRITE (not copy) the staged file: this test later APPENDS a
     // long-ts sentinel file to the dir, so the staged file must share
     // that encoding — Tables.events normalizes ts to long nanos
@@ -1742,7 +1742,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming Misra-Gries sketch state accumulates across micro-batches") {
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("graft_hh").toString
+    val dir = TempDirs.deletedOnExit("graft_hh").toString
     // two files → two micro-batches under maxFilesPerTrigger=1; counts
     // are additive so batch order doesn't matter
     val docs = spark.read.parquet(s"$sf/documents.parquet")
@@ -1829,8 +1829,8 @@ class StreamingSpec extends AnyFunSuite {
   test("parquet sink ingests 3+ micro-batches exactly once") {
     import java.nio.file._
     val dir = stageTerciles()
-    val out = Files.createTempDirectory("graft_multi_out").toString
-    val ckpt = Files.createTempDirectory("graft_multi_ckpt").toString
+    val out = TempDirs.deletedOnExit("graft_multi_out").toString
+    val ckpt = TempDirs.deletedOnExit("graft_multi_ckpt").toString
     val q = EventStreams.toParquetSink(spark, dir, out, ckpt, maxFilesPerTrigger = 1)
     try {
       q.processAllAvailable()
@@ -2039,8 +2039,8 @@ class OffsetLedgerSpec extends AnyFunSuite {
   import java.nio.file.{Files, Paths}
 
   private def freshDirs(): (String, String) = (
-    Files.createTempDirectory("graft_topic").toString,
-    Files.createTempDirectory("graft_sink").toString)
+    TempDirs.deletedOnExit("graft_topic").toString,
+    TempDirs.deletedOnExit("graft_sink").toString)
 
   test("bounded polls drain the topic exactly once and the ledger tracks per-partition heads") {
     val (topic, sink) = freshDirs()
@@ -2116,8 +2116,8 @@ class OffsetLedgerFaultSpec extends AnyFunSuite {
   }
 
   test("exactly-once across duplicate delivery, out-of-order offsets and a mid-stream rebalance (6 micro-batches)") {
-    val topic = java.nio.file.Files.createTempDirectory("graft_faulttopic").toString
-    val sink = java.nio.file.Files.createTempDirectory("graft_faultsink").toString
+    val topic = TempDirs.deletedOnExit("graft_faulttopic").toString
+    val sink = TempDirs.deletedOnExit("graft_faultsink").toString
     // two consumers in one group share the ledger; turn-taking polls
     // play the micro-batch cadence (assignment = Kafka Consumer.assign)
     var assignA = Set(0, 1); var assignB = Set(2, 3)
@@ -2182,8 +2182,8 @@ class OffsetLedgerCrashSpec extends AnyFunSuite {
     * epoch dirs); "restart" = the next plain poll() call. Both crash
     * points are driven, across ≥3 committed micro-batches. */
   test("consumer crash mid-batch at both commit-window points; restart is exactly-once") {
-    val topic = Files.createTempDirectory("graft_crashtopic").toString
-    val sink = Files.createTempDirectory("graft_crashsink").toString
+    val topic = TempDirs.deletedOnExit("graft_crashtopic").toString
+    val sink = TempDirs.deletedOnExit("graft_crashsink").toString
     stageTopic(spark, sf, topic, nPartitions = 4)
     val total = spark.read.parquet(topic).count()
     val perPart = 120L
@@ -2423,7 +2423,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       // then a one-batch replay of the same corpus from a second dir —
       // the SET must be identical both ways (arrival-order invariance)
       for ((mft, nFiles) <- Seq((1, 3), (0, 1))) {
-        val dir = Files.createTempDirectory(s"graft_sdedup$mft").toString
+        val dir = TempDirs.deletedOnExit(s"graft_sdedup$mft").toString
         (0 until nFiles).foreach { i =>
           docs.filter(col("doc_id") % nFiles === i)
             .coalesce(1).write.mode("append").parquet(dir)
@@ -2453,7 +2453,7 @@ class StreamingDedupSpec extends AnyFunSuite {
     import spark.implicits._
     // 10 docs sharing one exact text → every band collides; cap=4 ⇒
     // members 1..4 admitted (C(4,2)=6 pairs), docs 5..10 dropped
-    val dir = Files.createTempDirectory("graft_sdedup_cap").toString
+    val dir = TempDirs.deletedOnExit("graft_sdedup_cap").toString
     (1L to 10L).map(i => (i, "alpha beta gamma delta epsilon zeta", "en", "s", 30L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("append").parquet(dir)
@@ -2498,10 +2498,10 @@ class EventsEncodingSpec extends AnyFunSuite {
       (2L, 1706745599999999000L, 8L, "purchase", 2.5, "{}"))
     // Tables.events reads <dir>/events.parquet — write the parquet
     // data AS that directory
-    val longDir = Files.createTempDirectory("graft_enc_long").toString
+    val longDir = TempDirs.deletedOnExit("graft_enc_long").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$longDir/events.parquet")
-    val tsDir = Files.createTempDirectory("graft_enc_ts").toString
+    val tsDir = TempDirs.deletedOnExit("graft_enc_ts").toString
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .withColumn("ts", expr("cast(timestamp_micros(ts div 1000) as timestamp_ntz)"))
       .coalesce(1).write.mode("overwrite").parquet(s"$tsDir/events.parquet")
@@ -4946,7 +4946,7 @@ class TableSinkSpec extends AnyFunSuite {
 
   private def freshTable(): ParquetVersionedTable =
     new ParquetVersionedTable(spark,
-      java.nio.file.Files.createTempDirectory("graft_tbl").toString)
+      TempDirs.deletedOnExit("graft_tbl").toString)
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[(Long, String, Double)] =
     df.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
@@ -5087,7 +5087,7 @@ class TableSinkSpec extends AnyFunSuite {
 
   test("TableSink copy-on-write: merge rewrites ONLY touched buckets, re-references the rest byte-identical; append never rewrites") {
     import spark.implicits._
-    val dirT = java.nio.file.Files.createTempDirectory("graft_cow").toString
+    val dirT = TempDirs.deletedOnExit("graft_cow").toString
     val t = new ParquetVersionedTable(spark, dirT)
     spark.conf.set("spark.graft.tablesink.buckets", "8")
     try {
@@ -5148,7 +5148,7 @@ class TableSinkSpec extends AnyFunSuite {
 
   test("TableSink vacuum deletes only files unreferenced by retained versions; retained time travel intact") {
     import spark.implicits._
-    val dirT = java.nio.file.Files.createTempDirectory("graft_vac").toString
+    val dirT = TempDirs.deletedOnExit("graft_vac").toString
     val t = new ParquetVersionedTable(spark, dirT)
     spark.conf.set("spark.graft.tablesink.buckets", "8")
     try {
@@ -5174,7 +5174,7 @@ class TableSinkSpec extends AnyFunSuite {
 
   test("TableSink optimize bin-packs fragmented buckets, re-references compact ones, changes no data") {
     import spark.implicits._
-    val dirT = java.nio.file.Files.createTempDirectory("graft_opt").toString
+    val dirT = TempDirs.deletedOnExit("graft_opt").toString
     val t = new ParquetVersionedTable(spark, dirT)
     spark.conf.set("spark.graft.tablesink.buckets", "4")
     try {
@@ -5228,7 +5228,7 @@ class TableSinkSpec extends AnyFunSuite {
 
   test("TableSink vacuum anchors retention on the committed pointer, not orphan manifests") {
     import spark.implicits._
-    val dirT = java.nio.file.Files.createTempDirectory("graft_vorph").toString
+    val dirT = TempDirs.deletedOnExit("graft_vorph").toString
     val t = new ParquetVersionedTable(spark, dirT)
     t.overwrite(Seq((1L, 1.0)).toDF("k", "x")) // v0
     t.append(Seq((2L, 2.0)).toDF("k", "x")) // v1
@@ -5532,7 +5532,7 @@ class ReliableCutSpec extends AnyFunSuite {
     // loss on a real cluster — localCheckpoint blocks die with their
     // executor, so with the conf set the cut must write a reliable
     // checkpoint to the shared dir (and still preserve rows + layout).
-    val dir = Files.createTempDirectory("graft_ckpt").toRealPath()
+    val dir = TempDirs.deletedOnExit("graft_ckpt").toRealPath()
     val df = persisted()
     try {
       spark.conf.set("spark.graft.checkpoint.dir", dir.toString)
@@ -5552,8 +5552,8 @@ class ReliableCutSpec extends AnyFunSuite {
   }
 
   test("a changed spark.graft.checkpoint.dir takes effect on the next cut") {
-    val a = Files.createTempDirectory("graft_ckpt_a").toRealPath()
-    val b = Files.createTempDirectory("graft_ckpt_b").toRealPath()
+    val a = TempDirs.deletedOnExit("graft_ckpt_a").toRealPath()
+    val b = TempDirs.deletedOnExit("graft_ckpt_b").toRealPath()
     val df = persisted()
     try {
       spark.conf.set("spark.graft.checkpoint.dir", a.toString)
@@ -5610,7 +5610,7 @@ class CdcMergeSinkSpec extends AnyFunSuite {
 
   private def stage(): String = {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_cdcm").toString
+    val dir = TempDirs.deletedOnExit("graft_cdcm").toString
     val ev = graft.sources.Tables.events(spark, sf)
       .withColumn("ts_s", expr("ts div 1000000000"))
     val ts = ev.selectExpr("percentile_approx(ts, array(0.33, 0.66))").head()
@@ -5619,7 +5619,7 @@ class CdcMergeSinkSpec extends AnyFunSuite {
     val t0 = System.currentTimeMillis()
     Seq(col("ts") <= t1, col("ts") > t1 && col("ts") <= t2, col("ts") > t2)
       .zipWithIndex.foreach { case (pred, i) =>
-        val tmp = Files.createTempDirectory(s"graft_cdcm$i")
+        val tmp = TempDirs.deletedOnExit(s"graft_cdcm$i")
         ev.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
           .findFirst().get()
@@ -5632,8 +5632,8 @@ class CdcMergeSinkSpec extends AnyFunSuite {
 
   test("streaming CDC merge sink applies insert/update/delete like the batch merge") {
     val dir = stage()
-    val target = java.nio.file.Files.createTempDirectory("graft_cdcm_t").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdcm_ck").toString
+    val target = TempDirs.deletedOnExit("graft_cdcm_t").toString
+    val ckpt = TempDirs.deletedOnExit("graft_cdcm_ck").toString
     val q = EventStreams.cdcMergeSink(spark, dir, target, ckpt, maxFilesPerTrigger = 1)
     try {
       q.processAllAvailable()
@@ -5662,7 +5662,7 @@ class CdcMergeSinkSpec extends AnyFunSuite {
   }
 
   test("cdcMergeBatch is idempotent under the same-batchId retry") {
-    val target = java.nio.file.Files.createTempDirectory("graft_cdcm_r").toString
+    val target = TempDirs.deletedOnExit("graft_cdcm_r").toString
     val ev = graft.sources.Tables.events(spark, sf)
       .withColumn("ts_s", expr("ts div 1000000000"))
       .select("user_id", "event_id", "event_type", "value", "ts_s")

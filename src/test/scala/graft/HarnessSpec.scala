@@ -105,4 +105,21 @@ class MainsGuardSpec extends AnyFunSuite {
     assert(hits(Pattern.quote(
       "/ len(list_distinct(list_concat(x.sh, y.sh))) >= 0.5)")) == owner)
   }
+
+  test("temp dirs are made only through TempDirs") {
+    assert(hits(Pattern.quote("Files.createTempDirectory")) ==
+      Seq("graft/TempDirs.scala" -> 1))
+  }
+
+  test("the part-year price panel is written once per engine, in Etl") {
+    val owner = Seq("graft/operators/Etl.scala" -> 1)
+    assert(hits(Pattern.quote("""year(col("l_shipdate")).as("y")""")) == owner)
+    assert(hits(Pattern.quote("year(l_shipdate) AS y,")) == owner)
+  }
+
+  test("the 2×12 moving-average chain is written once per engine, in Etl") {
+    val owner = Seq("graft/operators/Etl.scala" -> 1)
+    assert(hits(Pattern.quote("""lit(0.5) * lead(col("total"), 6)""")) == owner)
+    assert(hits(Pattern.quote("0.5 * lead(total, 6) OVER o")) == owner)
+  }
 }

@@ -4,7 +4,8 @@
 Lines are compared with surrounding whitespace trimmed. A window of 6
 consecutive lines is skipped when it holds a blank line or a `//`
 comment line. Every line covered by a window that already occurred
-earlier in the same file counts once.
+earlier in the same file counts once. Given more than one file, a last
+`total` line sums the per-file counts.
 
 Usage: python3 tools/dup_scan.py FILE...
 """
@@ -27,5 +28,8 @@ def dup_lines(path):
 
 
 if __name__ == "__main__":
-    for path in sys.argv[1:]:
-        print(f"{dup_lines(path)}\t{path}")
+    counts = [(dup_lines(path), path) for path in sys.argv[1:]]
+    for n, path in counts:
+        print(f"{n}\t{path}")
+    if len(counts) > 1:
+        print(f"{sum(n for n, _ in counts)}\ttotal")

@@ -1,6 +1,6 @@
 package graft.functions
 
-import graft.plans.{AdcDistance, BloomMightContain, BottomKSample, CdcChunks, CosineSimilarity, FloatDot, GramSketch, HeavyHittersSketch, HyperplaneDot, KllQuantileSketch, KmvDistinctSketch, L2Distance, NearestPqCode, QuantizedDot, SortedLongIntersectCount, TextRankTop3, TopCellsByCos, TopKByKey, TopKByKeyStr}
+import graft.plans.{AdcDistance, BloomMightContain, BottomKSample, CdcChunks, CosineSimilarity, FloatDot, GramSketch, HeavyHittersSketch, HyperplaneDot, KllQuantileSketch, KmvDistinctSketch, L2Distance, NearestPqCode, QuantizedDot, SortedLongIntersectCount, TextRankTop3, TopCellsByCos, TopKByKey, TopKByKeyStr, TopPartners}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.{call_function, lit}
@@ -83,6 +83,11 @@ object Vectors {
       "graft_topk_by_skey",
       exprs => TopKByKeyStr(exprs(0), exprs(1),
         exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
+      "built-in")
+    reg.createOrReplaceTempFunction(
+      "graft_top_partners",
+      exprs => TopPartners(exprs(0),
+        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
       "built-in")
   }
 
@@ -181,6 +186,16 @@ object Vectors {
   def topkByStrKey(spark: SparkSession, value: Column, id: Column, k: Int): Column = {
     register(spark)
     call_function("graft_topk_by_skey", value, id, lit(k))
+  }
+
+  /** Co-occurrence top-k aggregate over an `array<bigint>` partner
+    * list per row: the k partners named by the most rows of the group,
+    * as array<struct<part_b, weight>> under (weight DESC, part_b ASC)
+    * — one primitive count map per group and partition, never a row
+    * per pair (see plans/TopPartners.scala). */
+  def topPartners(spark: SparkSession, partners: Column, k: Int): Column = {
+    register(spark)
+    call_function("graft_top_partners", partners, lit(k))
   }
 
   /** Nearest product-quantization code of one (vector, subspace) row

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftSession, QueryDef}
+import graft.functions.Vectors
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -106,6 +107,33 @@ object Graph {
          |  GROUP BY ${k}doc_id)""".stripMargin
     }.mkString(",\n")
   }
+
+  /** The top-`k` item pairs (part_a < part_b) by co-occurrence over
+    * `lists`, one sorted, distinct `array<bigint>` basket per row in
+    * column `items`: (part_a, part_b, weight = baskets holding both),
+    * ordered by (weight DESC, part_a ASC, part_b ASC). Each basket
+    * emits, per item, the tail of its list after that item, and
+    * [[graft.plans.TopPartners]] counts a part's tails into one
+    * primitive map and keeps its top-k partners: the Σ deg² pair
+    * relation never exists as rows, so there is no pair self-join and
+    * no (part_a, part_b) hash aggregate. Exact: a pair in the global
+    * top-k has fewer than k pairs ranked above it, so fewer than k
+    * inside its own part_a group, where the order is the same — it is
+    * in that group's top-k. */
+  private[graft] def topPairs(
+      s: SparkSession, lists: DataFrame, k: Int): DataFrame =
+    lists.select(posexplode(col("items")).as(Seq("i", "part_a")),
+        col("items"))
+      .filter(col("i") < size(col("items")) - 1)
+      .select(col("part_a"), slice(col("items"), col("i") + 2,
+        size(col("items")) - col("i") - 1).as("tail"))
+      .groupBy(col("part_a"))
+      .agg(Vectors.topPartners(s, col("tail"), k).as("top"))
+      .select(col("part_a"), explode(col("top")).as("t"))
+      .select(col("part_a"), col("t.part_b").as("part_b"),
+        col("t.weight").as("weight"))
+      .orderBy(col("weight").desc, col("part_a").asc, col("part_b").asc)
+      .limit(k)
 
   /** The embedding near-dup graph (dedup_embedding's pairs) as mirrored
     * (src, dst) edges; oracle [[embeddingEdgesSql]]. */
@@ -1117,11 +1145,9 @@ object Graph {
       // each pre-partitioned on its half-step's join key, mean only
       // the node-sized score vector moves per round — the Pregel
       // layout, at the price of holding the 2-long edge list twice.
-      // edges0 itself stays persisted: graph_bipartite_projection and
-      // the clustering family build the plan-identical (c, p) distinct
-      // relation and reuse this cache (losing it cost bipartite ~2 s
-      // of recompute in the r16 batch-1 bench); the two key-partitioned
-      // copies below materialize FROM it
+      // edges0 itself stays persisted: the two key-partitioned copies
+      // below both materialize FROM it, so the lineitem ⋈ orders
+      // distinct runs once
       edges0.persist()
       val edgesByC = edges0.repartition(col("c")).persist()
       val edgesByP = edges0.repartition(col("p")).persist()
@@ -1187,10 +1213,17 @@ object Graph {
     // on a crawler-scale account), so each customer's part list is
     // capped at the first 1024 parts by partkey (the LSH hot-bucket
     // cap discipline, mirrored in the oracle — a cap that converts the
-    // worst account from deg² to a constant). Distinct (c, p) edges
-    // make the pair count customer-distinct by construction — no
-    // count(DISTINCT) exchange. Top-20 via TakeOrdered (distributed
-    // partial top-k, no single-task full sort).
+    // worst account from deg² to a constant). A customer's list is the
+    // sorted collect_set of its parts — distinct, so the pair count is
+    // customer-distinct by construction; null customers and parts drop
+    // out, as in the oracle's equi self-join — and topPairs counts the
+    // pairs per part in one native aggregate and keeps the top 20 (its
+    // comment gives the exactness argument). The Σ deg² pair work sits
+    // in the stage that reads the per-customer lists, sized by AQE. An
+    // explicit 2×slots re-key on the customer was measured and left
+    // out: at sf0.1 (local[4]) it cost 5.8-6.8 s of task time against
+    // 4.4-4.9 s without it, at the same 2.5-3.3 s wall, and at sf1d
+    // both read 50 s of task time and 15 s of wall.
     "graph_bipartite_projection" -> QueryDef.withOracle(
       """WITH edges AS (
         |  SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p
@@ -1208,39 +1241,14 @@ object Graph {
         |SELECT part_a, part_b, weight FROM pairs
         |ORDER BY weight DESC, part_a ASC, part_b ASC LIMIT 20"""
         .stripMargin) { (s, dir) =>
-      val edges = Tables.lineitem(s, dir)
+      val lists = Tables.lineitem(s, dir)
         .join(Tables.orders(s, dir),
           col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-        .distinct()
-      // per-customer window: bounded by that customer's part count,
-      // and the cap bounds the pair expansion that follows
-      val wC = Window.partitionBy(col("c")).orderBy(col("p").asc)
-      // r16 (guide §2.5): the self-join below costs Σ_c deg(c)² pair
-      // emissions — CPU-dense per input BYTE, so AQE's byte-based
-      // coalescing (which sized the stage at ~5 partitions for a 5 MB
-      // input at sf0.1, serializing ~20 s of pair CPU into 5 tasks)
-      // under-parallelizes it. Re-key the capped relation across 2×
-      // the session's parallelism explicitly (the clusterConf
-      // slots×2 wave convention — a deployment-derived count, not a
-      // local constant; explicit numPartitions also opts the exchange
-      // out of byte-based coalescing, and ≠ the static shuffle count
-      // so EnsureRequirements cannot elide it in favor of the
-      // window's coalescible exchange). The exchanged rows are the
-      // pair-thin (c, p) keys.
-      val capped = edges.withColumn("rn", row_number().over(wC))
-        .filter(col("rn") <= 1024)
-        .select(col("c"), col("p"))
-        .repartition(2 * s.sparkContext.defaultParallelism, col("c"))
-      val b = capped.select(col("c").as("c2"), col("p").as("pb"))
-      val pairs = capped
-        .join(b, col("c2") === col("c") && col("pb") > col("p"))
-        .groupBy(col("p").as("part_a"), col("pb").as("part_b"))
-        .agg(count(lit(1)).as("weight"))
-      pairs.orderBy(col("weight").desc, col("part_a").asc,
-          col("part_b").asc)
-        .limit(20)
-        .select(col("part_a"), col("part_b"), col("weight"))
+        .filter(col("o_custkey").isNotNull)
+        .groupBy(col("o_custkey"))
+        .agg(slice(sort_array(collect_set(col("l_partkey"))), 1, 1024)
+          .as("items"))
+      topPairs(s, lists, 20)
     },
 
     // ------------------------------------------------------------------

@@ -3950,12 +3950,14 @@ object Temporal {
     // Market-basket co-purchase pairs — top-20 part pairs by
     // within-order co-occurrence, with support and lift (lift > 1 ⇒
     // the pair co-occurs more than independence predicts: the
-    // association-rule opening move). The pair join is keyed on
-    // l_orderkey, so per-key fanout is bounded by ORDER SIZE (≤7 in
-    // TPC-H-shaped data), never corpus²; item supports join the 20-row
-    // top-pair relation broadcast — the corpus-scale support relation
-    // is probed twice but never widened. All counts exact BIGINT; only
-    // support/lift divide, ×10⁹/×10⁶ snapped.
+    // association-rule opening move). Each order is one basket — its
+    // sorted distinct part list — and Graph.topPairs counts the pairs
+    // per part natively (the graph_bipartite_projection kernel; per-
+    // basket fanout is ORDER SIZE², ≤7² in TPC-H-shaped data); item
+    // supports join the 20-row top-pair relation broadcast — the
+    // corpus-scale support relation is probed twice but never widened.
+    // All counts exact BIGINT; only support/lift divide, ×10⁹/×10⁶
+    // snapped.
     "ev_market_basket" -> QueryDef.withOracle(
       """WITH op AS (
         |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -3981,15 +3983,15 @@ object Temporal {
         |  CROSS JOIN n""".stripMargin) { (s, dir) =>
       val op = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_partkey")).distinct()
-        .persist() // pair join both sides + item supports
+        .persist() // baskets + item supports + order count
       val n = op.agg(countDistinct(col("l_orderkey")).as("n_orders"))
       val sup = op.groupBy(col("l_partkey")).agg(count(lit(1)).as("n_item"))
-      val a = op.select(col("l_orderkey"), col("l_partkey").as("pa"))
-      val b = op.select(col("l_orderkey"), col("l_partkey").as("pb"))
-      val p = a.join(b, Seq("l_orderkey")).filter(col("pb") > col("pa"))
-        .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("n_pair"))
-        .orderBy(col("n_pair").desc, col("pa").asc, col("pb").asc)
-        .limit(20)
+      val baskets = op.filter(col("l_orderkey").isNotNull)
+        .groupBy(col("l_orderkey"))
+        .agg(sort_array(collect_list(col("l_partkey"))).as("items"))
+      val p = Graph.topPairs(s, baskets, 20)
+        .select(col("part_a").as("pa"), col("part_b").as("pb"),
+          col("weight").as("n_pair"))
       broadcast(p)
         .join(sup.select(col("l_partkey").as("pa"), col("n_item").as("n_a")),
           Seq("pa"))

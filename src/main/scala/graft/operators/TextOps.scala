@@ -1783,7 +1783,7 @@ object TextOps {
           col("w1").as("dst")))
         // AQE-sized doc_id exchange: the native loop costs ~O(1) per
         // edge byte (NOT quadratic-per-byte like the bipartite pair
-        // join), so byte-based coalescing keeps CPU ∝ partition bytes
+        // stage), so byte-based coalescing keeps CPU ∝ partition bytes
         // at any scale; pinning 1-2×slots here was measured 4× worse
         // task (per-task setup dominates a sub-second stage at bench SF)
         .repartition(col("doc_id"))

@@ -199,8 +199,9 @@ object PlanAudit {
       // 1-row broadcast: the global (n, Σx, Σy, Σx², Σy²) moment
       // anchor; the 8-lag shifted join itself is an equi hash join
       "ev_cross_correlation",
-      // 1-row broadcast: the order-count anchor; pair and support
-      // joins are equi
+      // 1-row broadcast: the order-count anchor; the other broadcast
+      // is the 20-row top-pair relation, and the support joins are
+      // equi
       "ev_market_basket",
       // 4-row pct-target dim × the ≤50-value bounded quantity domain
       // — a constant, never corpus
@@ -334,14 +335,12 @@ object PlanAudit {
       // moves + the broadcast assemblies
       "etl_lowe_young" -> 8,
       "ev_rfm" -> 18,
-      // bipartite projection (r16): the distinct-edge agg + the
-      // per-customer cap window + the EXPLICIT 2×slots re-key of the
-      // capped relation (the pair self-join's Σdeg² CPU must not ride
-      // byte-coalesced partitions — see the operator comment) + the
-      // (part_a, part_b) count agg; self-join sides re-print with
-      // fresh expr ids (7 distinct lines measured, +1 cache-state
-      // headroom). Every exchange moves (c, p)/(p, p) key pairs.
-      "graph_bipartite_projection" -> 8,
+      // bipartite projection: two exchanges, measured — the
+      // per-customer collect_set of parts (keyed on the customer) and
+      // the per-part top-partners aggregate (keyed on part_a, each row
+      // one serialized count map); the orders side of the edge join
+      // broadcasts. No pair ever moves as a row of its own.
+      "graph_bipartite_projection" -> 2,
       // q38 is q28's selection plan with 3 target ranks instead of 2 —
       // same budget: one corpus-scale exchange (per-(flag, bucket)
       // counts), the rest ≤5×200-row bookkeeping moves
@@ -663,14 +662,6 @@ object PlanAudit {
       // the ann_quantized_topk argument: tier 1's broadcast is the
       // fixed-size NPROBES probe set over the cached int8 corpus
       "ann_mmr_rerank", "ann_diversity_eval",
-      // the graph_clustering_coeff argument: its (c, p) distinct-edge
-      // build is plan-identical to graph_hits's PERSISTED edges, so in
-      // a shared session the cache substitutes an InMemoryRelation
-      // whose stored physical plan (built with stats broadcasts on)
-      // prints a historical BroadcastExchange over the orders scan;
-      // the operator itself requests no broadcast (verified solo:
-      // two SMJ equi-joins + TakeOrdered)
-      "graph_bipartite_projection",
       // the graph_common_neighbors argument: both persist the IVF
       // home-assignment ⋈ embeddings relation in pass 1 (where stats
       // broadcast the sf-sized embeddings side); pass 2 prints that

@@ -26,15 +26,22 @@ object PlanSnap {
   }
 
   /** Renumbers, each by first appearance, what differs between two runs
-    * of the same plan: expression ids (`#123`), plan ids (`plan_id=`,
-    * `[id=#…]`), RDD ids, and the AQE query-stage and codegen ids, whose
-    * order follows stage completion; and drops the line number of each
-    * RDD's call site (`MapPartitionsRDD[179] at localCheckpoint at
-    * GraftSession.scala:138` → `MapPartitionsRDD[0] at localCheckpoint
-    * at GraftSession.scala`). */
-  private def normalize(plan: String): String =
+    * of the same plan, or between a run over some queries and a run over
+    * all of them: expression ids (`#123`), plan ids (`plan_id=`,
+    * `[id=#…]`), RDD ids, the AQE query-stage and codegen ids, whose
+    * order follows stage completion, the random suffix of a
+    * `TempDirs` directory (`graft_csv1335…` → `graft_csv0`),
+    * a JVM lambda object's name (`Multimodal$$$Lambda$5222/0x…@62d7…`
+    * → `Multimodal$$$Lambda0`), and the JVM-wide lambda-variable
+    * counter (`lambda x_283` → `lambda x_0`); and drops the line number
+    * of each RDD's call site (`MapPartitionsRDD[179] at localCheckpoint
+    * at GraftSession.scala:138` → `MapPartitionsRDD[0] at
+    * localCheckpoint at GraftSession.scala`). */
+  private[graft] def normalize(plan: String): String =
     Seq("""((?<!=)#)(\d+)""", """(plan_id=|id=#)(\d+)""", """(RDD\[)(\d+)""",
-      """(QueryStage\n(?:Output .*\n)?Arguments: )(\d+)""", """(\[codegen id : )(\d+)""")
+      """(QueryStage\n(?:Output .*\n)?Arguments: )(\d+)""", """(\[codegen id : )(\d+)""",
+      """(/graft_[a-z_]+)(\d+)""", """(\$Lambda)((?:\$\d+)?/0x[0-9a-f]+@[0-9a-f]+)""",
+      """(lambda [A-Za-z]\w*?_)(\d+)""")
       .foldLeft(plan)((text, re) => renumber(text, re.r))
       .replaceAll("""(RDD\[\d+\] at \S+ at [^:\s]+):\d+""", "$1")
 

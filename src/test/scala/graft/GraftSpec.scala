@@ -2372,8 +2372,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // waiting for a manual audit run. The shared CI session has run
     // 200+ tests by now; their persisted relations substitute
     // InMemoryRelations whose CAPTURED physical plans print historical
-    // stats broadcasts the operators never requested (the
-    // graph_bipartite_projection argument) — clear the cache first so
+    // stats broadcasts the operators never requested (the argument of
+    // several factBroadcastAllowed entries) — clear the cache first so
     // the audit measures what the operators request, which is its
     // stated contract.
     spark.catalog.clearCache()

@@ -123,3 +123,23 @@ class MainsGuardSpec extends AnyFunSuite {
     assert(hits(Pattern.quote("0.5 * lead(total, 6) OVER o")) == owner)
   }
 }
+
+class PlanSnapSpec extends AnyFunSuite {
+  import graft.tools.PlanSnap.normalize
+
+  test("normalize masks temp-dir suffixes, lambda objects and lambda counters") {
+    def plan(dir: String, lam: String, x: Int) =
+      s"""Location: InMemoryFileIndex [file:/tmp/graft_csv$dir]
+         |Arguments: graft.operators.Multimodal$$$$$$Lambda$lam, obj#2
+         |Arguments: transform(toks#1, lambdafunction(lambda x_$x#3 + 1, lambda x_$x#3, false))
+         |""".stripMargin
+    val full = plan("13358259839027977668", "$5222/0x00007f98b15c1480@62d743a4", 283)
+    val subset = plan("16265263558945975423", "$4730/0x00007f61bd2ffba0@5dd3841", 7)
+    assert(normalize(full) == normalize(subset))
+    assert(normalize(full).contains("/tmp/graft_csv0]"))
+    assert(normalize(full).contains("Multimodal$$$Lambda0, obj#0"))
+    assert(normalize(full).contains("lambdafunction(lambda x_0#"))
+    // a different lambda object or temp dir within one plan stays distinct
+    assert(normalize(full + subset).contains("/tmp/graft_csv1]"))
+  }
+}

@@ -1,78 +1,95 @@
 package graft
 
-import graft.plans.{BottomKSample, CosineSimilarity, GramSketch, HeavyHittersSketch, HyperplaneDot, KllQuantileSketch, SortedLongIntersectCount}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import scala.reflect.ClassTag
+
+import graft.plans.{AdcDistance, AsofJoinStrategy, BloomMightContain, BottomKSample, CdcChunks, CosineSimilarity, FloatDot, GramSketch, HeavyHittersSketch, HyperplaneDot, KllQuantileSketch, KmvDistinctSketch, L2Distance, NearestPqCode, QuantizedDot, SortedLongIntersectCount, TextRankTop3, ThresholdLevenshtein, TopCellsByCos, TopKByKey, TopKByKeyStr, TopPartners}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.util.ArrayData
 
-/** Formal extension entry point: registers the graft native expressions
-  * with any session built through `GraftSession.local`, a builder's
-  * `withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.GraftExtensions`. (For sessions the
-  * library doesn't own, [[graft.functions.Vectors.register]] installs
-  * the same functions imperatively.)
+/** The one way graft enters a session: injects every native function of
+  * [[GraftExtensions.functions]], the banded edit-distance rule and the
+  * as-of join strategy, once, when the session is built. Sessions get it
+  * through `GraftSession.local`, a builder's
+  * `withExtensions(new GraftExtensions)`, or, for a session graft does
+  * not build, `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     // bounded edit-distance predicates get the banded O(k·len)
     // algorithm automatically (see ThresholdLevenshtein)
-    e.injectOptimizerRule(_ => graft.plans.ThresholdLevenshtein)
+    e.injectOptimizerRule(_ => ThresholdLevenshtein)
     // the as-of join whole-operator path: AsofJoinPlan logical nodes
     // plan to the sort-merge AsofJoinExec (see plans/AsofJoin.scala)
-    e.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy())
-    e.injectFunction((
-      FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      exprs => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[HyperplaneDot].getName, "graft_dot"),
-      exprs => HyperplaneDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedLongIntersectCount].getName,
-        "graft_sorted_intersect_count"),
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_bottomk_sample"),
-      new ExpressionInfo(classOf[BottomKSample].getName, "graft_bottomk_sample"),
-      exprs => BottomKSample(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("graft_heavy_hitters"),
-      new ExpressionInfo(classOf[HeavyHittersSketch].getName, "graft_heavy_hitters"),
-      exprs => HeavyHittersSketch(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("graft_kll_quantiles"),
-      new ExpressionInfo(classOf[KllQuantileSketch].getName, "graft_kll_quantiles"),
-      exprs => KllQuantileSketch(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[ArrayData].toDoubleArray().toSeq)
-        .toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("graft_gram"),
-      new ExpressionInfo(classOf[GramSketch].getName, "graft_gram"),
-      exprs => GramSketch(exprs(0)).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("graft_topk_by_key"),
-      new ExpressionInfo(classOf[graft.plans.TopKByKey].getName, "graft_topk_by_key"),
-      exprs => graft.plans.TopKByKey(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("graft_topk_by_skey"),
-      new ExpressionInfo(classOf[graft.plans.TopKByKeyStr].getName, "graft_topk_by_skey"),
-      exprs => graft.plans.TopKByKeyStr(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression()))
-    e.injectFunction((
-      FunctionIdentifier("graft_l2"),
-      new ExpressionInfo(classOf[graft.plans.L2Distance].getName, "graft_l2"),
-      exprs => graft.plans.L2Distance(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_fdot"),
-      new ExpressionInfo(classOf[graft.plans.FloatDot].getName, "graft_fdot"),
-      exprs => graft.plans.FloatDot(exprs(0), exprs(1))))
+    e.injectPlannerStrategy(_ => AsofJoinStrategy())
+    for (f <- GraftExtensions.functions)
+      e.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.className, f.name), f.build))
   }
+}
+
+object GraftExtensions {
+
+  /** One native SQL function: its name, the class of the expression it
+    * builds, and the builder over the call's argument expressions. */
+  final case class NativeFunction(name: String, className: String,
+      build: Seq[Expression] => Expression)
+
+  /** The arguments of one call of the native function `fn`. */
+  private final class Args(fn: String, exprs: Seq[Expression]) {
+    def apply(i: Int): Expression = exprs(i)
+
+    /** Argument `i`, which sizes the expression, as a foldable, non-null
+      * literal: a column or a NULL there is rejected at analysis. */
+    def literal(i: Int): Any = {
+      val v = if (exprs(i).foldable) exprs(i).eval() else null
+      if (v == null) throw new IllegalArgumentException(
+        s"$fn: argument ${i + 1} must be a non-null literal, not ${exprs(i).sql}")
+      v
+    }
+
+    def int(i: Int): Int = literal(i).asInstanceOf[Number].intValue()
+  }
+
+  private def fn[T <: Expression: ClassTag](name: String)(build: Args => Expression) =
+    NativeFunction(name, implicitly[ClassTag[T]].runtimeClass.getName,
+      exprs => build(new Args(name, exprs)))
+
+  /** Every graft native function, the table [[GraftExtensions]] injects. */
+  val functions: Seq[NativeFunction] = Seq(
+    fn[CosineSimilarity]("graft_cosine")(a => CosineSimilarity(a(0), a(1))),
+    fn[HyperplaneDot]("graft_dot")(a => HyperplaneDot(a(0), a(1))),
+    fn[L2Distance]("graft_l2")(a => L2Distance(a(0), a(1))),
+    fn[FloatDot]("graft_fdot")(a => FloatDot(a(0), a(1))),
+    fn[SortedLongIntersectCount]("graft_sorted_intersect_count")(a =>
+      SortedLongIntersectCount(a(0), a(1))),
+    fn[BloomMightContain]("graft_bloom_might_contain")(a =>
+      BloomMightContain(a(0), a(1))),
+    fn[QuantizedDot]("graft_quantized_dot")(a => QuantizedDot(a(0), a(1))),
+    fn[BottomKSample]("graft_bottomk_sample")(a =>
+      BottomKSample(a(0), a.int(1)).toAggregateExpression()),
+    fn[HeavyHittersSketch]("graft_heavy_hitters")(a =>
+      HeavyHittersSketch(a(0), a.int(1), a.int(2)).toAggregateExpression()),
+    fn[KmvDistinctSketch]("graft_kmv_minhashes")(a =>
+      KmvDistinctSketch(a(0), a.int(1)).toAggregateExpression()),
+    fn[KllQuantileSketch]("graft_kll_quantiles")(a =>
+      KllQuantileSketch(a(0), a.int(1),
+        a.literal(2).asInstanceOf[ArrayData].toDoubleArray().toSeq)
+        .toAggregateExpression()),
+    fn[GramSketch]("graft_gram")(a => GramSketch(a(0)).toAggregateExpression()),
+    fn[TopKByKey]("graft_topk_by_key")(a =>
+      TopKByKey(a(0), a(1), a.int(2)).toAggregateExpression()),
+    fn[TopKByKeyStr]("graft_topk_by_skey")(a =>
+      TopKByKeyStr(a(0), a(1), a.int(2)).toAggregateExpression()),
+    fn[TopPartners]("graft_top_partners")(a =>
+      TopPartners(a(0), a.int(1)).toAggregateExpression()),
+    fn[CdcChunks]("graft_cdc_chunks")(a => CdcChunks(a(0))),
+    fn[TextRankTop3]("graft_textrank_top3")(a => TextRankTop3(a(0))),
+    fn[NearestPqCode]("graft_nearest_pq_code")(a =>
+      NearestPqCode(a(0), a(1), a(2))),
+    fn[AdcDistance]("graft_adc_distance")(a =>
+      AdcDistance(a(0), a(1), a.int(2), a.int(3))),
+    fn[TopCellsByCos]("graft_top_cells")(a =>
+      TopCellsByCos(a(0), a(1), a(2), a.int(3))))
 }

@@ -12,10 +12,17 @@ import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
   */
 object GraftSession {
 
-  /** Tuning applied to any session graft runs on. Safe to call on an
-    * existing session builder-produced session (configs are runtime-settable
-    * except shuffle.partitions which is). */
+  /** Tuning applied to any session graft runs on: sets runtime confs
+    * only, so it is safe on a session that already exists. Throws
+    * IllegalStateException when the session lacks the functions
+    * [[GraftExtensions]] injects. */
   def tune(spark: SparkSession): SparkSession = {
+    val missing = GraftExtensions.functions.map(_.name)
+      .filterNot(spark.catalog.functionExists)
+    if (missing.nonEmpty) throw new IllegalStateException(
+      s"the session has no ${missing.mkString(", ")}: build it with " +
+        "GraftSession.local, withExtensions(new GraftExtensions) or " +
+        s"spark.sql.extensions=${classOf[GraftExtensions].getName}")
     val c = spark.conf
     c.set("spark.sql.session.timeZone", "UTC")
     c.set("spark.sql.adaptive.enabled", "true")
@@ -58,12 +65,6 @@ object GraftSession {
     // guard — depth is the thing that diverges on a bad anchor; row
     // volume is just data size.
     c.set("spark.sql.cteRecursionRowLimit", Int.MaxValue.toString)
-    // imperative counterpart of GraftExtensions' injectOptimizerRule,
-    // for sessions the library doesn't own (idempotent)
-    if (!spark.experimental.extraOptimizations.contains(
-        graft.plans.ThresholdLevenshtein))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.ThresholdLevenshtein
     spark
   }
 
@@ -128,26 +129,6 @@ object GraftSession {
   def roundCut(s: SparkSession, df: DataFrame, eager: Boolean = true): DataFrame =
     if (reliable(s)) df.checkpoint() else df.localCheckpoint(eager)
 
-  /** Recommended configs for a real cluster run, sized from the
-    * topology. shuffle.partitions targets 2–3 waves of tasks per
-    * shuffle; maxPartitionBytes keeps scan tasks ~256 MB so a 100 TB
-    * input becomes ~400k tasks rather than 800k metadata-bound ones;
-    * AQE then coalesces/splits at runtime, so these are starting points
-    * rather than knife-edges.
-    */
-  def clusterConf(executors: Int, coresPerExecutor: Int): Map[String, String] = {
-    val slots = executors * coresPerExecutor
-    Map(
-      "spark.sql.shuffle.partitions" -> (slots * 2).toString,
-      "spark.sql.files.maxPartitionBytes" -> (256L * 1024 * 1024).toString,
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.skewJoin.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
-      "spark.sql.extensions" -> classOf[GraftExtensions].getName,
-      "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer")
-  }
-
   /** Core count of a local session: `SPARK_GRAFT_CPUS`, default 4. Every
     * graft main reads it here, so the tools run the session the bench
     * runs. */
@@ -162,7 +143,6 @@ object GraftSession {
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     tune(spark)

@@ -1,243 +1,126 @@
 package graft.functions
 
-import graft.plans.{AdcDistance, BloomMightContain, BottomKSample, CdcChunks, CosineSimilarity, FloatDot, GramSketch, HeavyHittersSketch, HyperplaneDot, KllQuantileSketch, KmvDistinctSketch, L2Distance, NearestPqCode, QuantizedDot, SortedLongIntersectCount, TextRankTop3, TopCellsByCos, TopKByKey, TopKByKeyStr, TopPartners}
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{call_function, lit}
 
 /** Column API over the native vector expressions.
   *
-  * The expressions are registered in the session's FunctionRegistry (so
-  * they're also usable from `spark.sql`) and surfaced via
-  * `call_function`, which avoids any private Column↔Expression bridging.
+  * The expressions are the functions [[graft.GraftExtensions]] injects
+  * into the session (so they're also usable from `spark.sql`), surfaced
+  * via `call_function`, which avoids any private Column↔Expression
+  * bridging.
   */
 object Vectors {
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => HyperplaneDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_l2", exprs => L2Distance(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_fdot", exprs => FloatDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sorted_intersect_count",
-      exprs => SortedLongIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_might_contain",
-      exprs => BloomMightContain(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_quantized_dot",
-      exprs => QuantizedDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_bottomk_sample",
-      exprs => BottomKSample(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_heavy_hitters",
-      exprs => HeavyHittersSketch(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_kmv_minhashes",
-      exprs => KmvDistinctSketch(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_kll_quantiles",
-      exprs => KllQuantileSketch(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[ArrayData].toDoubleArray().toSeq)
-        .toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_gram",
-      exprs => GramSketch(exprs(0)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_topk_by_key",
-      exprs => TopKByKey(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_cdc_chunks", exprs => CdcChunks(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_textrank_top3", exprs => TextRankTop3(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_nearest_pq_code",
-      exprs => NearestPqCode(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_adc_distance",
-      exprs => AdcDistance(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_top_cells",
-      exprs => TopCellsByCos(exprs(0), exprs(1), exprs(2),
-        exprs(3).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_topk_by_skey",
-      exprs => TopKByKeyStr(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_top_partners",
-      exprs => TopPartners(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "built-in")
-  }
-
   /** Cosine similarity of two `array<float>` columns, in double. */
-  def cosine(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def cosine(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
-  }
 
   /** Dot product of an `array<float>` column with an `array<double>`
     * plane, in double. */
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def dot(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)
-  }
 
   /** Euclidean distance of two `array<float>` columns, in double
     * (matches DuckDB `list_distance`). */
-  def l2(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def l2(a: Column, b: Column): Column =
     call_function("graft_l2", a, b)
-  }
 
   /** Raw inner product of two `array<float>` columns, in double — the
     * MIPS scoring primitive (matches DuckDB `list_inner_product`). */
-  def fdot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def fdot(a: Column, b: Column): Column =
     call_function("graft_fdot", a, b)
-  }
 
   /** Deterministic bottom-k-by-hash sample aggregate over a bigint id
     * column: returns the k sampled ids as a sorted array. */
-  def bottomkSample(spark: SparkSession, id: Column, k: Int): Column = {
-    register(spark)
-    call_function("graft_bottomk_sample", id, org.apache.spark.sql.functions.lit(k))
-  }
+  def bottomkSample(id: Column, k: Int): Column =
+    call_function("graft_bottomk_sample", id, lit(k))
 
   /** Mergeable Misra-Gries heavy-hitters aggregate over a string
     * column: top-k items as array<struct<token, est_count>>, counts
     * underestimating by at most N/capacity. */
-  def heavyHitters(spark: SparkSession, c: Column, capacity: Int, k: Int): Column = {
-    register(spark)
+  def heavyHitters(c: Column, capacity: Int, k: Int): Column =
     call_function("graft_heavy_hitters", c, lit(capacity), lit(k))
-  }
 
   /** Mergeable KLL-style quantile sketch over a double column: the
     * estimated quantiles for `qs` as array<double>. */
-  def kllQuantiles(spark: SparkSession, c: Column, levelCap: Int, qs: Seq[Double]): Column = {
-    register(spark)
+  def kllQuantiles(c: Column, levelCap: Int, qs: Seq[Double]): Column =
     call_function("graft_kll_quantiles", c, lit(levelCap), lit(qs.toArray))
-  }
 
   /** Intersection count of two sorted `array<bigint>` columns. */
-  def sortedIntersectCount(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def sortedIntersectCount(a: Column, b: Column): Column =
     call_function("graft_sorted_intersect_count", a, b)
-  }
 
   /** Exact integer dot product of two int8-code `array<bigint>`
     * columns (codegen'd tight loop). */
-  def quantizedDot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def quantizedDot(a: Column, b: Column): Column =
     call_function("graft_quantized_dot", a, b)
-  }
 
   /** KMV/theta distinct sketch over a bigint hash column: the k
     * smallest distinct hashes, sorted ascending. */
-  def kmvMinHashes(spark: SparkSession, h: Column, k: Int): Column = {
-    register(spark)
+  def kmvMinHashes(h: Column, k: Int): Column =
     call_function("graft_kmv_minhashes", h, lit(k))
-  }
 
   /** Mergeable fixed-point Gram accumulator over an `array<float>`
     * column: the upper triangle of Σ x·xᵀ as
     * array<struct<i, j, gram_fp, n_vecs>> (one ~d²/2-long buffer per
     * partition through the exchange; see plans/GramSketch.scala). */
-  def gramSketch(spark: SparkSession, emb: Column): Column = {
-    register(spark)
+  def gramSketch(emb: Column): Column =
     call_function("graft_gram", emb)
-  }
 
   /** Bounded top-k-per-group aggregate over (double value, bigint id):
     * the k best pairs under (value DESC, id ASC) as
     * array<struct<id, value>> — the window-free top-k-per-group plan
     * (≤k pairs per partition through the exchange, never the raw
     * stream). */
-  def topkByKey(spark: SparkSession, value: Column, id: Column, k: Int): Column = {
-    register(spark)
+  def topkByKey(value: Column, id: Column, k: Int): Column =
     call_function("graft_topk_by_key", value, id, lit(k))
-  }
 
   /** String-keyed variant of [[topkByKey]]: the k best (double value,
     * string id) pairs under (value DESC, id ASC binary) as
     * array<struct<id, value>> — for top-k-per-group where the row
     * identity is a string (token, bigram, URL) rather than a bigint. */
-  def topkByStrKey(spark: SparkSession, value: Column, id: Column, k: Int): Column = {
-    register(spark)
+  def topkByStrKey(value: Column, id: Column, k: Int): Column =
     call_function("graft_topk_by_skey", value, id, lit(k))
-  }
 
   /** Co-occurrence top-k aggregate over an `array<bigint>` partner
     * list per row: the k partners named by the most rows of the group,
     * as array<struct<part_b, weight>> under (weight DESC, part_b ASC)
     * — one primitive count map per group and partition, never a row
     * per pair (see plans/TopPartners.scala). */
-  def topPartners(spark: SparkSession, partners: Column, k: Int): Column = {
-    register(spark)
+  def topPartners(partners: Column, k: Int): Column =
     call_function("graft_top_partners", partners, lit(k))
-  }
 
   /** Nearest product-quantization code of one (vector, subspace) row
     * against the broadcast codebook — struct<dist, cell>, minimum by
     * (exact long L2 ASC, cell ASC); the native replacement for the
     * filter→transform→array_min chain (bit-identical; see
     * plans/IvfExpressions.scala). */
-  def nearestPqCode(spark: SparkSession, xfp: Column, sub: Column,
-      cb: Column): Column = {
-    register(spark)
+  def nearestPqCode(xfp: Column, sub: Column, cb: Column): Column =
     call_function("graft_nearest_pq_code", xfp, sub, cb)
-  }
 
   /** ADC distance of a corpus vector's code array against a probe's
     * (sub*codesPerSub + cell)-keyed distance-table map — the native
     * replacement for the per-subspace aggregate + map element_at chain
     * (bit-identical, null on missing key; see
     * plans/IvfExpressions.scala). */
-  def adcDistance(spark: SparkSession, codes: Column, dtab: Column,
-      codesPerSub: Int, m: Int): Column = {
-    register(spark)
+  def adcDistance(codes: Column, dtab: Column, codesPerSub: Int, m: Int): Column =
     call_function("graft_adc_distance", codes, dtab, lit(codesPerSub), lit(m))
-  }
 
   /** Content-defined (Gear-style, mod-32) chunks of a string column as
     * array<string> — the one-pass native replacement for the
     * codepoint-array + boundary-filter + re-substring chain
     * (bit-identical; see plans/CdcExpressions.scala). */
-  def cdcChunks(spark: SparkSession, text: Column): Column = {
-    register(spark)
+  def cdcChunks(text: Column): Column =
     call_function("graft_cdc_chunks", text)
-  }
 
   /** Per-document 4-round damped TextRank over a mirrored adjacency
     * array, returning the top-3 words as array<struct<pos, word,
     * rank_fp>> — the shuffle-once-compute-local replacement for the
     * distributed 4-round recurrence (bit-identical; see
     * plans/TextRankExpressions.scala). */
-  def textrankTop3(spark: SparkSession, edges: Column): Column = {
-    register(spark)
+  def textrankTop3(edges: Column): Column =
     call_function("graft_textrank_top3", edges)
-  }
 
   /** Top-`topN` IVF cells of an `array<float>` vector (precomputed
     * squared norm `na`) against a broadcast centroid array of
@@ -245,18 +128,13 @@ object Vectors {
     * (cos DESC, cell ASC) — the native replacement for the
     * transform→sort_array→slice chain in the IVF build's scoring pass
     * (bit-identical; see plans/IvfExpressions.scala). */
-  def topCells(spark: SparkSession, emb: Column, na: Column, cents: Column,
-      topN: Int): Column = {
-    register(spark)
+  def topCells(emb: Column, na: Column, cents: Column, topN: Int): Column =
     call_function("graft_top_cells", emb, na, cents, lit(topN))
-  }
 
   /** Bloom-membership predicate over a bigint key column; `bytes` is a
     * serialized `org.apache.spark.util.sketch.BloomFilter`. */
-  def bloomMightContain(spark: SparkSession, key: Column, bytes: Array[Byte]): Column = {
-    register(spark)
+  def bloomMightContain(key: Column, bytes: Array[Byte]): Column =
     call_function("graft_bloom_might_contain", key, lit(bytes))
-  }
 
   /** Deterministic pseudo-random hyperplanes for LSH: plane(j)(i) in
     * [-0.5, 0.5), derived from a fixed LCG-style mix so the identical

@@ -237,7 +237,7 @@ object Dedup {
       .join(hashed.select(col("doc_id").as("doc_b"),
         col("shh").as("sh_b"), col("nsh").as("nsh_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        Vectors.sortedIntersectCount(s, col("sh_a"), col("sh_b")).as("ni"),
+        Vectors.sortedIntersectCount(col("sh_a"), col("sh_b")).as("ni"),
         (col("nsh_a") + col("nsh_b")).as("ntot"),
         least(col("nsh_a"), col("nsh_b")).as("nmin"),
         col("nsh_a"))
@@ -626,7 +626,7 @@ object Dedup {
       val e = Tables.embeddings(s, dir)
       val a = e.select(col("vec_id").as("vec_a"), col("label"), col("embedding").as("emb_a"))
       val b = e.select(col("vec_id").as("vec_b"), col("label").as("label_b"), col("embedding").as("emb_b"))
-      val cos = Vectors.cosine(s, col("emb_a"), col("emb_b"))
+      val cos = Vectors.cosine(col("emb_a"), col("emb_b"))
       a.join(b, col("label") === col("label_b") && col("vec_a") < col("vec_b"))
         .filter(cos >= 0.3)
         .select(col("vec_a"), col("vec_b"), col("label"), round(cos, 6).as("cos_sim"))
@@ -705,7 +705,7 @@ object Dedup {
       // (task 0.95→5.1 s), which dwarfs re-exchanging the ~1 MB build.
       // The two cache-scan exchanges stay.
       val cos = round(
-        Vectors.cosine(s, col("x.embedding"), col("y.embedding")), 6)
+        Vectors.cosine(col("x.embedding"), col("y.embedding")), 6)
       cells.as("x").join(cells.as("y"),
           col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
         .filter(col("x.cell") ===
@@ -763,7 +763,7 @@ object Dedup {
           col("embedding"))
         .persist() // one IVF build feeds both sides of the cell self-join
       val pairCos = round(
-        Vectors.cosine(s, col("x.embedding"), col("y.embedding")), 6)
+        Vectors.cosine(col("x.embedding"), col("y.embedding")), 6)
       val prs = home.as("x").join(home.as("y"),
           col("x.cell") === col("y.cell") && col("x.vec_id") < col("y.vec_id"))
         .filter(pairCos >= 0.3)

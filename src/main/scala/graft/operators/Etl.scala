@@ -274,7 +274,7 @@ object Etl {
       import graft.functions.Vectors
       Tables.documents(s, dir)
         .groupBy(col("source"))
-        .agg(Vectors.bottomkSample(s, col("doc_id"), 8).as("ids"))
+        .agg(Vectors.bottomkSample(col("doc_id"), 8).as("ids"))
         .select(col("source"), explode(col("ids")).as("doc_id"))
         .withColumn("mix_key", (col("doc_id") * lit(2654435761L)) % 1000000007L)
     },

@@ -120,15 +120,14 @@ object Graph {
     * top-k has fewer than k pairs ranked above it, so fewer than k
     * inside its own part_a group, where the order is the same — it is
     * in that group's top-k. */
-  private[graft] def topPairs(
-      s: SparkSession, lists: DataFrame, k: Int): DataFrame =
+  private[graft] def topPairs(lists: DataFrame, k: Int): DataFrame =
     lists.select(posexplode(col("items")).as(Seq("i", "part_a")),
         col("items"))
       .filter(col("i") < size(col("items")) - 1)
       .select(col("part_a"), slice(col("items"), col("i") + 2,
         size(col("items")) - col("i") - 1).as("tail"))
       .groupBy(col("part_a"))
-      .agg(Vectors.topPartners(s, col("tail"), k).as("top"))
+      .agg(Vectors.topPartners(col("tail"), k).as("top"))
       .select(col("part_a"), explode(col("top")).as("t"))
       .select(col("part_a"), col("t.part_b").as("part_b"),
         col("t.weight").as("weight"))
@@ -1248,7 +1247,7 @@ object Graph {
         .groupBy(col("o_custkey"))
         .agg(slice(sort_array(collect_set(col("l_partkey"))), 1, 1024)
           .as("items"))
-      topPairs(s, lists, 20)
+      topPairs(lists, 20)
     },
 
     // ------------------------------------------------------------------

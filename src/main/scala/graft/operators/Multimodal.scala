@@ -740,7 +740,7 @@ object Multimodal {
       val ch = Tables.documents(s, dir)
         .filter(length(col("text")) >= 8)
         .select(col("doc_id"),
-          explode(graft.functions.Vectors.cdcChunks(s, col("text"))).as("chunk"))
+          explode(graft.functions.Vectors.cdcChunks(col("text"))).as("chunk"))
       ch.select(col("doc_id"),
           md5(col("chunk").cast(BinaryType)).as("chunk_md5"),
           length(col("chunk")).cast(LongType).as("chunk_len"))

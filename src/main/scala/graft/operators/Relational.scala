@@ -852,7 +852,7 @@ object Relational {
         out.toByteArray
       }
       val prunedFact = Tables.lineitem(s, dir)
-        .filter(graft.functions.Vectors.bloomMightContain(s, col("l_orderkey"), bytes))
+        .filter(graft.functions.Vectors.bloomMightContain(col("l_orderkey"), bytes))
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
       prunedFact
         .join(urgent, col("l_orderkey") === col("o_orderkey"))
@@ -1016,7 +1016,7 @@ object Relational {
         |WHERE rn <= 3""".stripMargin) { (s, dir) =>
       Tables.orders(s, dir)
         .groupBy(col("o_orderpriority"))
-        .agg(graft.functions.Vectors.topkByKey(s,
+        .agg(graft.functions.Vectors.topkByKey(
           col("o_totalprice"), col("o_orderkey"), 3).as("tk"))
         .select(col("o_orderpriority"), posexplode(col("tk")).as(Seq("i", "e")))
         .select(col("o_orderpriority"),

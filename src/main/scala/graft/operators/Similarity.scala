@@ -57,7 +57,7 @@ object Similarity {
     val wFinal = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos_q").desc, col("neighbor_id").asc)
     qcorp.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("qdot", Vectors.quantizedDot(s, col("pqv"), col("qv")))
+      .withColumn("qdot", Vectors.quantizedDot(col("pqv"), col("qv")))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), cosQ.as("cos_q"),
         pmod(hash(col("vec_id")), lit(64)).as("salt"))
       .withColumn("rn0", row_number().over(wLocal))
@@ -217,7 +217,7 @@ object Similarity {
       col("qn").as("qnb"))
     // same formula shape as tier 1's cos_q, snapped to ×10⁶ BIGINT
     val pairSim = floor(round(
-      Vectors.quantizedDot(s, col("qva"), col("qvb")).cast(DoubleType)
+      Vectors.quantizedDot(col("qva"), col("qvb")).cast(DoubleType)
         / sqrt(greatest(col("qna") * col("qnb"), lit(1L))
           .cast(DoubleType)), 6) * lit(1.0e6) + 0.5).cast(LongType)
     val pairs = pa
@@ -379,9 +379,8 @@ object Similarity {
     // scratch primitive loop instead of a cells-long lambda-interpreter
     // allocation + struct sort per row; at N·cells scale that chain WAS
     // the build cost (sf1d/160 cells: ~10 µs → sub-µs per row·cell).
-    val spark = base.sparkSession
     val top = graft.functions.Vectors.topCells(
-      spark, col("embedding"), col("na"), col("cents"), topN)
+      col("embedding"), col("na"), col("cents"), topN)
     base
       .crossJoin(broadcast(centArr))
       .select(col("vec_id"), col("label"), col("embedding"), col("na"),
@@ -565,7 +564,7 @@ object Similarity {
     xsub.crossJoin(broadcast(cbArr))
       .select(col("vec_id"), col("sub"), col("xfp"),
         graft.functions.Vectors.nearestPqCode(
-          xsub.sparkSession, col("xfp"), col("sub"), col("cb")).as("best"))
+          col("xfp"), col("sub"), col("cb")).as("best"))
       .select(col("vec_id"), col("sub"), col("xfp"),
         col("best.cell").as("cell"), col("best.dist").as("dist"))
 
@@ -592,7 +591,7 @@ object Similarity {
     val e = Tables.embeddings(s, dir)
     val probes = e.filter(col("vec_id") < NPROBES)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
-    val cos = round(Vectors.cosine(s, col("probe_emb"), col("embedding")), 6)
+    val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
     // Salted two-phase top-k: candidate lists are corpus-sized per
     // probe, so a single partitionBy(probe_id) window would sort a
     // whole corpus in NPROBES reducer tasks. Local top-K per salt
@@ -649,7 +648,7 @@ object Similarity {
       .select(col("probe_id"), col("vec_id").as("neighbor_id"))
       .distinct()
     val e = Tables.embeddings(s, dir)
-    val cos = round(Vectors.cosine(s, col("p_emb"), col("n_emb")), 6)
+    val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
     // Salted two-phase ranking (the ann_topk_exact pattern): a
     // probe's candidates are the union of 2 IVF cells, which even
     // with bounded cells can concentrate one probe's whole list into
@@ -702,7 +701,7 @@ object Similarity {
       val e = Tables.embeddings(s, dir)
       val probes = e.filter(col("vec_id") < NPROBES)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
-      val dist = round(Vectors.l2(s, col("probe_emb"), col("embedding")), 6)
+      val dist = round(Vectors.l2(col("probe_emb"), col("embedding")), 6)
       val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
         .orderBy(col("l2_dist").asc, col("neighbor_id").asc)
       val wFinal = Window.partitionBy(col("probe_id"))
@@ -745,7 +744,7 @@ object Similarity {
       val e = Tables.embeddings(s, dir)
       val probes = e.filter(col("vec_id") < NPROBES)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
-      val score = round(Vectors.fdot(s, col("probe_emb"), col("embedding")), 6)
+      val score = round(Vectors.fdot(col("probe_emb"), col("embedding")), 6)
       val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
         .orderBy(col("dot").desc, col("neighbor_id").asc)
       val wFinal = Window.partitionBy(col("probe_id"))
@@ -896,7 +895,7 @@ object Similarity {
       val e = Tables.embeddings(s, dir)
       def bucketOf(emb: org.apache.spark.sql.Column, t: Int) =
         (0 until planesPerTable).map { j =>
-          when(Vectors.dot(s, emb, typedLit(planes(t * planesPerTable + j))) > 0,
+          when(Vectors.dot(emb, typedLit(planes(t * planesPerTable + j))) > 0,
             lit(1 << j)).otherwise(lit(0))
         }.reduce(_ + _)
       def tabled(df: org.apache.spark.sql.DataFrame) = df.select(
@@ -910,7 +909,7 @@ object Similarity {
           explode(array(
             col("bucket") +: (0 until planesPerTable).map(j =>
               col("bucket").bitwiseXOR(lit(1 << j))): _*)).as("probe_bucket"))
-      val cos = round(Vectors.cosine(s, col("probe_emb"), col("embedding")), 6)
+      val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
       // Candidate lists are bucket-bounded, but a hot bucket can still
       // concentrate a probe's candidates into one task — salt anyway.
       val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
@@ -956,7 +955,7 @@ object Similarity {
       val probes = e.filter(col("vec_id") < NPROBES)
         .select(col("vec_id").as("probe_id"), col("label").as("probe_label"),
           col("embedding").as("probe_emb"))
-      val cos = round(Vectors.cosine(s, col("probe_emb"), col("embedding")), 6)
+      val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
       // Same salted two-phase ranking as ann_topk_exact: negatives per
       // probe are corpus-sized, so never sort them in one task.
       val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
@@ -1036,7 +1035,7 @@ object Similarity {
       val cand = quantizedTopK(s, dir, RERANK)
         .select(col("probe_id"), col("neighbor_id"))
       val e = Tables.embeddings(s, dir)
-      val cos = round(Vectors.cosine(s, col("p_emb"), col("n_emb")), 6)
+      val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
       // ≤ RERANK rows per probe survive tier 1 — a single-phase window
       // is bounded here, no salt needed
       val w = Window.partitionBy(col("probe_id"))
@@ -1252,7 +1251,7 @@ object Similarity {
         .select(col("vec_id"), col("codes"), posexplode(col("ps")).as(Seq("pidx", "p")))
         .filter(col("p.probe_id") =!= col("vec_id"))
         .select(col("p.probe_id").as("probe_id"), col("vec_id").as("neighbor_id"),
-          Vectors.adcDistance(s, col("codes"), col("p.dtab"), PQ_CODES, PQ_M)
+          Vectors.adcDistance(col("codes"), col("p.dtab"), PQ_CODES, PQ_M)
             .as("adist"))
       // salted two-phase top-RERANK (candidates per probe are corpus-sized)
       val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
@@ -1267,7 +1266,7 @@ object Similarity {
         .filter(col("qrn") <= PQ_RERANK)
         .select(col("probe_id"), col("neighbor_id"))
       val e = Tables.embeddings(s, dir)
-      val cos = round(Vectors.cosine(s, col("p_emb"), col("n_emb")), 6)
+      val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
       // ≤ PQ_RERANK rows per probe survive — bounded final window
       val w = Window.partitionBy(col("probe_id"))
         .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
@@ -1488,7 +1487,7 @@ object Similarity {
       // d²/2 struct rows per VECTOR through the partial agg) — exact
       // long sums, so results are bit-identical to the explode plan
       Tables.embeddings(s, dir)
-        .agg(Vectors.gramSketch(s, col("embedding")).as("gs"))
+        .agg(Vectors.gramSketch(col("embedding")).as("gs"))
         .select(inline(col("gs")))
     },
 
@@ -1547,7 +1546,7 @@ object Similarity {
       // mirroring driver-side reconstructs the full Gramian the oracle
       // computes
       val gram = Tables.embeddings(s, dir)
-        .agg(Vectors.gramSketch(s, col("embedding")).as("gs"))
+        .agg(Vectors.gramSketch(col("embedding")).as("gs"))
         .select(inline(col("gs")))
         .collect() // ≤ d(d+1)/2 bookkeeping rows — the MLlib Gramian pattern
       val d = gram.map(_.getInt(1)).max + 1
@@ -1663,13 +1662,12 @@ object Similarity {
         col("embedding").as("s_emb"))
       val b = assigned.select(col("c_label"), col("vec_id").as("dst_id"),
         col("embedding").as("d_emb"))
-      val cos = round(Vectors.cosine(s, col("s_emb"), col("d_emb")), 6)
+      val cos = round(Vectors.cosine(col("s_emb"), col("d_emb")), 6)
       a.join(b, Seq("c_label"))
         .filter(col("src_id") =!= col("dst_id"))
         .select(col("src_id"), col("dst_id"), cos.as("cos_sim"))
         .groupBy(col("src_id"))
-        .agg(graft.functions.Vectors.topkByKey(s,
-          col("cos_sim"), col("dst_id"), 3).as("tk"))
+        .agg(graft.functions.Vectors.topkByKey(col("cos_sim"), col("dst_id"), 3).as("tk"))
         .select(col("src_id"), posexplode(col("tk")).as(Seq("i", "e")))
         .select(col("src_id"), col("e.id").as("dst_id"),
           col("e.value").as("cos_sim"), (col("i") + 1).cast("int").as("rn"))
@@ -1904,7 +1902,7 @@ object Similarity {
       val e = Tables.embeddings(s, dir)
       val ex = exactTopK(s, dir)
         .select(col("probe_id"), col("neighbor_id")).persist()
-      val cos = round(Vectors.cosine(s, col("p_emb"), col("n_emb")), 6)
+      val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
       def sweep(p: Int): DataFrame = {
         val probeCells = assigns
           .filter(col("rn") <= p && col("vec_id") < NPROBES)
@@ -1982,7 +1980,7 @@ object Similarity {
       val probes = e.filter(col("vec_id") < NPROBES)
         .select(col("vec_id").as("probe_id"),
           col("embedding").as("probe_emb"), col("label").as("p_label"))
-      val cos = round(Vectors.cosine(s, col("probe_emb"), col("embedding")), 6)
+      val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
       val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
         .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
       val wFinal = Window.partitionBy(col("probe_id"))
@@ -2092,7 +2090,7 @@ object Similarity {
       val e = Tables.embeddings(s, dir)
       val probes = e.filter(col("vec_id") < NPROBES)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
-      val cos = round(Vectors.cosine(s, col("probe_emb"), col("embedding")), 6)
+      val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
       e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
           cos.as("cos_sim"))

@@ -29,7 +29,7 @@ object Sketches {
   private[graft] def heavyHittersRaw(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir)
       .select(explode(tokens(col("text"))).as("tok"))
-      .agg(Vectors.heavyHitters(s, col("tok"), HhCapacity, HhK).as("hh"))
+      .agg(Vectors.heavyHitters(col("tok"), HhCapacity, HhK).as("hh"))
       .select(posexplode(col("hh")).as(Seq("rank", "e")))
       .select((col("rank") + 1).as("rank"),
         col("e.token").as("token"), col("e.est_count").as("est_count"))
@@ -39,7 +39,7 @@ object Sketches {
   private[graft] def kllQuantilesRaw(s: SparkSession, dir: String): DataFrame =
     Tables.lineitem(s, dir)
       .groupBy(col("l_returnflag"))
-      .agg(Vectors.kllQuantiles(s, col("l_quantity").cast(DoubleType),
+      .agg(Vectors.kllQuantiles(col("l_quantity").cast(DoubleType),
         KllCap, KllQs).as("est"))
       .select(col("l_returnflag"), posexplode(col("est")).as(Seq("qi", "est_value")))
       .select(col("l_returnflag"),
@@ -216,7 +216,7 @@ object Sketches {
       // nd (exact distinct per source, for the n<k fallback) rides the
       // same shuffle as the sketch via countDistinct in one agg
       val sk = hashed.groupBy(col("source"))
-        .agg(Vectors.kmvMinHashes(s, col("h"), k).as("arr"),
+        .agg(Vectors.kmvMinHashes(col("h"), k).as("arr"),
           countDistinct(col("h")).as("nd"))
         .persist() // shared by singles + both sides of the pair join
       val singles = sk.select(col("source").as("scope"),
@@ -230,7 +230,7 @@ object Sketches {
         col("theta").as("theta_b"), col("idx").as("idx_b"))
       val pairs = th.join(b, col("idx_b") === col("idx") + 1 && col("idx") < 5)
         .select(concat(col("source"), lit("|"), col("src_b")).as("scope"),
-          round(Vectors.sortedIntersectCount(s, col("arr"), col("arr_b")) * lit(two60)
+          round(Vectors.sortedIntersectCount(col("arr"), col("arr_b")) * lit(two60)
             / least(col("theta"), col("theta_b")), 6).as("est"))
       singles.unionByName(pairs)
     },
@@ -353,7 +353,7 @@ object Sketches {
         when(size(arr) < k, size(arr).cast(DoubleType))
           .otherwise(lit(255.0) * lit(two60) / element_at(arr, k))
       val sk = hashed.groupBy(col("source"))
-        .agg(Vectors.kmvMinHashes(s, col("h"), k).as("arr"))
+        .agg(Vectors.kmvMinHashes(col("h"), k).as("arr"))
         .select(col("source"), col("arr"), estOf(col("arr")).as("est"),
           regexp_extract(col("source"), "(\\d+)$", 1).cast("int").as("idx"))
         .persist() // both sides of the adjacent-pair join

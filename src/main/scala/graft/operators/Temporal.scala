@@ -23,10 +23,8 @@ object Temporal {
 
   /** Build an as-of join through the custom operator path
     * (plans/AsofJoin.scala): left-outer "latest right row with the
-    * same key and time ≤ left time" with the given column names. The
-    * strategy is injected by GraftExtensions; for sessions built
-    * without it, this helper registers it idempotently via
-    * `experimental.extraStrategies` so the operator works anywhere. */
+    * same key and time ≤ left time" with the given column names,
+    * planned by the strategy GraftExtensions injects. */
   private[graft] def asofJoinNative(
       s: org.apache.spark.sql.SparkSession,
       left: org.apache.spark.sql.DataFrame,
@@ -34,10 +32,7 @@ object Temporal {
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String, rightTie: String,
       toleranceSec: Option[Long]): org.apache.spark.sql.DataFrame = {
-    import graft.plans.{AsofJoinPlan, AsofJoinStrategy}
-    if (!s.experimental.extraStrategies.exists(_.isInstanceOf[AsofJoinStrategy]))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ AsofJoinStrategy()
+    import graft.plans.AsofJoinPlan
     val lp = org.apache.spark.sql.GraftSqlBridge.analyzed(left)
     val rp = org.apache.spark.sql.GraftSqlBridge.analyzed(right)
     def attr(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
@@ -3989,7 +3984,7 @@ object Temporal {
       val baskets = op.filter(col("l_orderkey").isNotNull)
         .groupBy(col("l_orderkey"))
         .agg(sort_array(collect_list(col("l_partkey"))).as("items"))
-      val p = Graph.topPairs(s, baskets, 20)
+      val p = Graph.topPairs(baskets, 20)
         .select(col("part_a").as("pa"), col("part_b").as("pb"),
           col("weight").as("n_pair"))
       broadcast(p)

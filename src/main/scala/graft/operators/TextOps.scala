@@ -441,7 +441,7 @@ object TextOps {
       bigrams.groupBy(col("lang"), col("bigram"))
         .agg(count(lit(1)).as("n"))
         .groupBy(col("lang"))
-        .agg(graft.functions.Vectors.topkByStrKey(s,
+        .agg(graft.functions.Vectors.topkByStrKey(
           col("n").cast(DoubleType), col("bigram"), 10).as("tk"))
         .select(col("lang"), posexplode(col("tk")).as(Seq("i", "e")))
         .select(col("lang"), col("e.id").as("bigram"),
@@ -1793,7 +1793,7 @@ object TextOps {
         .agg(collect_list(struct(col("src"), col("dst"), col("cnt")))
           .as("adj"))
       e.select(col("doc_id"),
-          explode(graft.functions.Vectors.textrankTop3(s, col("adj")))
+          explode(graft.functions.Vectors.textrankTop3(col("adj")))
             .as("top"))
         .select(col("doc_id"), col("top.pos").as("pos"),
           col("top.word").as("word"), col("top.rank_fp").as("rank_fp"))

@@ -68,9 +68,8 @@ case class AsofJoinPlan(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[AsofJoinPlan]] as [[AsofJoinExec]]; injected via
-  * GraftExtensions (or idempotently through
-  * `session.experimental.extraStrategies` by the operator helper). */
+/** Plans [[AsofJoinPlan]] as [[AsofJoinExec]]; injected by
+  * GraftExtensions. */
 case class AsofJoinStrategy() extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: AsofJoinPlan =>

@@ -110,14 +110,14 @@ object ScaleStress {
       val toks = spark.range(n).select(
         concat(lit("t"), floor(sqrt(pmod(hash(col("id")), lit(4000000)).cast(DoubleType))))
           .as("tok"))
-      toks.agg(graft.functions.Vectors.heavyHitters(spark, col("tok"), 512, 20).as("hh"))
+      toks.agg(graft.functions.Vectors.heavyHitters(col("tok"), 512, 20).as("hh"))
         .select(explode(col("hh"))).count()
     }
     stressTime("KLL quantile sketch (20M doubles, 4 groups)", n) {
       spark.range(n).select((col("id") % 4).as("g"),
           pmod(hash(col("id")), lit(100000)).cast(DoubleType).as("v"))
         .groupBy(col("g"))
-        .agg(graft.functions.Vectors.kllQuantiles(spark, col("v"), 256,
+        .agg(graft.functions.Vectors.kllQuantiles(col("v"), 256,
           Seq(0.5, 0.95, 0.99)).as("est"))
         .count()
     }
@@ -192,7 +192,7 @@ object ScaleStress {
       val bloom = buildKeys.stat.bloomFilter("k", 100000L, 0.01)
       val bytes = { val o = new java.io.ByteArrayOutputStream(); bloom.writeTo(o); o.toByteArray }
       val pruned = fact.filter(
-        graft.functions.Vectors.bloomMightContain(spark, col("orderkey"), bytes))
+        graft.functions.Vectors.bloomMightContain(col("orderkey"), bytes))
       val reach = pruned.count()
       // locally the 20M-row shuffle is CPU-cheap so wall-clock ties the
       // unpruned join; the exchange-row reduction below is the number
@@ -210,7 +210,7 @@ object ScaleStress {
           xxhash64(pmod(hash(col("id")), lit(4000000)))
             .bitwiseAND(lit((1L << 60) - 1)).as("h"))
         .groupBy(col("g"))
-        .agg(graft.functions.Vectors.kmvMinHashes(spark, col("h"), 256).as("arr"))
+        .agg(graft.functions.Vectors.kmvMinHashes(col("h"), 256).as("arr"))
         .count()
     }
 
@@ -231,7 +231,7 @@ object ScaleStress {
         .orderBy(col("cos_q").desc, col("neighbor_id").asc)
       qvecs.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
         .withColumn("qdot",
-          graft.functions.Vectors.quantizedDot(spark, col("pqv"), col("qv")))
+          graft.functions.Vectors.quantizedDot(col("pqv"), col("qv")))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
           (col("qdot").cast(DoubleType) /
             sqrt(greatest(col("pqn") * col("qn"), lit(1L)).cast(DoubleType))).as("cos_q"),
@@ -388,7 +388,7 @@ object ScaleStress {
         .agg(sum(col("t.p"))).count()
     }
     stressTime(s"gram SKETCH aggregate ($nGvec vecs × d=64, one buffer/partition)", nGvec) {
-      emb.agg(graft.functions.Vectors.gramSketch(spark, col("embedding")).as("gs"))
+      emb.agg(graft.functions.Vectors.gramSketch(col("embedding")).as("gs"))
         .select(inline(col("gs"))).count()
     }
     emb.unpersist()
@@ -405,8 +405,7 @@ object ScaleStress {
     }
     stressTime("topk/group AGGREGATE TopKByKey (100 groups, k=10)", n) {
       fact.groupBy(col("suppkey"))
-        .agg(graft.functions.Vectors.topkByKey(spark,
-          col("price"), col("orderkey"), 10).as("tk"))
+        .agg(graft.functions.Vectors.topkByKey(col("price"), col("orderkey"), 10).as("tk"))
         .select(col("suppkey"), explode(col("tk"))).count()
     }
 

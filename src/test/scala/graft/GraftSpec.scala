@@ -36,7 +36,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
     val b = Seq(0.5f, -1.0f, 2.0f, 1.5f)
     val df = Seq((a, b)).toDF("a", "b")
       .select(col("a").cast("array<float>").as("a"), col("b").cast("array<float>").as("b"))
-    val got = df.select(Vectors.cosine(spark, col("a"), col("b"))).head().getDouble(0)
+    val got = df.select(Vectors.cosine(col("a"), col("b"))).head().getDouble(0)
     assert(math.abs(got - refCosine(a, b)) < 1e-15)
   }
 
@@ -45,7 +45,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
     val a = Seq(0.1f, 0.2f, 0.3f)
     val df = Seq((a, a)).toDF("a", "b")
       .select(col("a").cast("array<float>").as("a"), col("b").cast("array<float>").as("b"))
-    val got = df.select(Vectors.cosine(spark, col("a"), col("b"))).head().getDouble(0)
+    val got = df.select(Vectors.cosine(col("a"), col("b"))).head().getDouble(0)
     assert(math.abs(got - 1.0) < 1e-12)
   }
 
@@ -53,7 +53,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((Some(Seq(1.0f)), Option.empty[Seq[Float]])).toDF("a", "b")
       .select(col("a").cast("array<float>").as("a"), col("b").cast("array<float>").as("b"))
-    assert(df.select(Vectors.cosine(spark, col("a"), col("b"))).head().isNullAt(0))
+    assert(df.select(Vectors.cosine(col("a"), col("b"))).head().isNullAt(0))
   }
 
   test("hyperplane dot matches manual computation") {
@@ -62,7 +62,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
     val plane = Seq(0.25, 0.5, -1.0)
     val df = Seq(Tuple1(emb)).toDF("e")
       .select(col("e").cast("array<float>").as("e"))
-    val got = df.select(Vectors.dot(spark, col("e"), typedLit(plane))).head().getDouble(0)
+    val got = df.select(Vectors.dot(col("e"), typedLit(plane))).head().getDouble(0)
     assert(math.abs(got - (1.0 * 0.25 + -2.0 * 0.5 + 0.5 * -1.0)) < 1e-15)
   }
 }
@@ -79,7 +79,7 @@ class SortedIntersectSpec extends AnyFunSuite {
       (Seq(7L, 8L, 9L), Seq(7L, 8L, 9L)))          // identical
       .toDF("a", "b")
     val got = df.select(
-      graft.functions.Vectors.sortedIntersectCount(spark, col("a"), col("b")))
+      graft.functions.Vectors.sortedIntersectCount(col("a"), col("b")))
       .collect().map(_.getInt(0)).toSeq
     assert(got == Seq(2, 0, 0, 3))
   }
@@ -389,7 +389,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val bytes = { val o = new java.io.ByteArrayOutputStream(); bloom.writeTo(o); o.toByteArray }
     val total = li.count()
     val pruned = li.filter(graft.functions.Vectors
-      .bloomMightContain(spark, col("l_orderkey"), bytes)).count()
+      .bloomMightContain(col("l_orderkey"), bytes)).count()
     val trueMatch = li.join(urgent, col("l_orderkey") === col("o_orderkey")).count()
     assert(pruned >= trueMatch, "bloom must never drop a true match")
     assert(pruned <= trueMatch + (0.02 * total).toLong + 10,
@@ -620,7 +620,7 @@ class BottomKSampleSpec extends AnyFunSuite {
     def sample(parts: Int): Map[String, Seq[Long]] =
       docs.repartition(parts)
         .groupBy(col("source"))
-        .agg(graft.functions.Vectors.bottomkSample(spark, col("doc_id"), 5).as("ids"))
+        .agg(graft.functions.Vectors.bottomkSample(col("doc_id"), 5).as("ids"))
         .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
     val a = sample(1)
     val b = sample(13)
@@ -632,7 +632,7 @@ class BottomKSampleSpec extends AnyFunSuite {
     import spark.implicits._
     val tiny = Seq(("g", 1L), ("g", 2L), ("g", 3L)).toDF("g", "id")
     val got = tiny.groupBy(col("g"))
-      .agg(graft.functions.Vectors.bottomkSample(spark, col("id"), 10).as("ids"))
+      .agg(graft.functions.Vectors.bottomkSample(col("id"), 10).as("ids"))
       .head().getSeq[Long](1)
     assert(got.toSet == Set(1L, 2L, 3L))
   }
@@ -646,8 +646,7 @@ class TopKByKeyStrSpec extends AnyFunSuite {
     def top(parts: Int): Map[String, Seq[(String, Double)]] =
       docs.repartition(parts)
         .groupBy(col("source"))
-        .agg(graft.functions.Vectors.topkByStrKey(spark,
-          col("n_chars").cast("double"), col("lang"), 3).as("tk"))
+        .agg(graft.functions.Vectors.topkByStrKey(col("n_chars").cast("double"), col("lang"), 3).as("tk"))
         .collect().map(r => r.getString(0) ->
           r.getSeq[org.apache.spark.sql.Row](1).map(e =>
             e.getString(0) -> e.getDouble(1))).toMap
@@ -661,7 +660,7 @@ class TopKByKeyStrSpec extends AnyFunSuite {
     val tiny = Seq(("g", 5.0, "bb"), ("g", 5.0, "aa"), ("g", 5.0, "cc"),
       ("g", 9.0, "zz")).toDF("g", "v", "id")
     val got = tiny.groupBy(col("g"))
-      .agg(graft.functions.Vectors.topkByStrKey(spark, col("v"), col("id"), 3).as("tk"))
+      .agg(graft.functions.Vectors.topkByStrKey(col("v"), col("id"), 3).as("tk"))
       .selectExpr("transform(tk, e -> e.id) AS ids")
       .head().getSeq[String](0)
     assert(got == Seq("zz", "aa", "bb"))
@@ -672,7 +671,6 @@ class SqlApiSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("the engine surface is reachable through spark.sql") {
-    graft.functions.Vectors.register(spark)
     graft.sources.Tables.lineitem(spark, sf).createOrReplaceTempView("li")
     graft.sources.Tables.embeddings(spark, sf).createOrReplaceTempView("emb")
     val viaSql = spark.sql(
@@ -699,6 +697,16 @@ class SqlApiSpec extends AnyFunSuite {
       """SELECT l_returnflag, graft_topk_by_key(l_extendedprice, l_orderkey, 2) AS tk
         |FROM li GROUP BY l_returnflag""".stripMargin).collect()
     assert(topk.nonEmpty && topk.forall(_.getSeq[Any](1).size == 2))
+  }
+
+  test("a native function rejects a column or a NULL where it needs a literal") {
+    graft.sources.Tables.lineitem(spark, sf).createOrReplaceTempView("li")
+    for (k <- Seq("l_linenumber", "CAST(NULL AS INT)")) {
+      val e = intercept[IllegalArgumentException](spark.sql(
+        s"""SELECT graft_topk_by_key(l_extendedprice, l_orderkey, $k) AS tk
+           |FROM li GROUP BY l_returnflag""".stripMargin).collect())
+      assert(e.getMessage.contains("graft_topk_by_key: argument 3"), e.getMessage)
+    }
   }
 }
 
@@ -5300,7 +5308,7 @@ class IvfBuildSpec extends AnyFunSuite {
           struct(negCosChain(c).as("neg"), c.getField("cell").as("cell")))),
           1, topN).as("top"))
       val native = joined.select(col("vec_id"),
-        graft.functions.Vectors.topCells(spark, col("embedding"), col("na"),
+        graft.functions.Vectors.topCells(col("embedding"), col("na"),
           col("cents"), topN).as("top"))
       val a = chain.collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
       val b = native.collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
@@ -5417,7 +5425,7 @@ class NativeExprEquivalenceSpec extends AnyFunSuite {
         .as("chunks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val native = df.select(col("doc_id"),
-      graft.functions.Vectors.cdcChunks(spark, col("text")).as("chunks"))
+      graft.functions.Vectors.cdcChunks(col("text")).as("chunks"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(chain == native, s"diverged: ${chain.keySet.find(k => chain(k) != native(k))}")
     // chunks reassemble the document exactly
@@ -5448,7 +5456,7 @@ class NativeExprEquivalenceSpec extends AnyFunSuite {
           c.getField("cell").as("cell")))).as("best"))
       .collect().map(r => r.getLong(0) -> r.get(1).toString).toMap
     val native = j.select(col("vec_id"),
-      graft.functions.Vectors.nearestPqCode(spark, col("xfp"), col("sub"),
+      graft.functions.Vectors.nearestPqCode(col("xfp"), col("sub"),
         col("cb")).as("best"))
       .collect().map(r => r.getLong(0) -> r.get(1).toString).toMap
     assert(chain == native)
@@ -5469,7 +5477,7 @@ class NativeExprEquivalenceSpec extends AnyFunSuite {
             sN * 4 + element_at(col("codes"), sN + 1))).as("adist"))
         .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
       val nativeA = withTab.select(col("vec_id"),
-        graft.functions.Vectors.adcDistance(spark, col("codes"), col("dtab"),
+        graft.functions.Vectors.adcDistance(col("codes"), col("dtab"),
           4, 16).as("adist"))
         .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getLong(1))).toMap
       assert(chainA == nativeA, s"ADC diverged: $chainA vs $nativeA")

@@ -13,11 +13,29 @@ class GraftSessionSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("the shared session carries GraftExtensions' injected functions") {
-    // none of these is registered imperatively (Vectors.register), so
-    // only a session built with the extensions knows them
-    for (f <- Seq("graft_topk_by_key", "graft_topk_by_skey",
-        "graft_kll_quantiles", "graft_gram"))
+    val names = GraftExtensions.functions.map(_.name)
+    assert(names.size == 20 && names.distinct == names)
+    for (f <- names)
       assert(spark.catalog.functionExists(f), s"$f is not registered")
+  }
+
+  test("operators leave the session's experimental hooks empty") {
+    for (q <- Seq("asof_join_native", "q29_levenshtein"))
+      SparkEntry.queries(q)(spark, sf).collect()
+    assert(spark.experimental.extraStrategies.isEmpty)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+  }
+
+  test("ThresholdLevenshtein runs only in the two Operator Optimization batches") {
+    // RuleExecutor.batches and its Batch are protected: read by reflection
+    val opt = spark.sessionState.optimizer
+    def call(o: AnyRef, m: String): AnyRef = o.getClass.getMethod(m).invoke(o)
+    val withRule = call(opt, "batches").asInstanceOf[Seq[AnyRef]]
+      .filter(b => call(b, "rules").asInstanceOf[Seq[AnyRef]]
+        .contains(graft.plans.ThresholdLevenshtein))
+      .map(b => call(b, "name"))
+    assert(withRule == Seq("Operator Optimization before Inferring Filters",
+      "Operator Optimization after Inferring Filters"))
   }
 }
 
@@ -93,6 +111,11 @@ class MainsGuardSpec extends AnyFunSuite {
   test("JobGroupListener is the one SparkListener") {
     assert(hits("""(extends|new)\s+(org\.apache\.spark\.scheduler\.)?SparkListener\b""") ==
       Seq("graft/JobGroupListener.scala" -> 1))
+  }
+
+  test("native functions, rules and strategies enter only through GraftExtensions") {
+    assert(hits(Pattern.quote("createOrReplaceTempFunction")).isEmpty)
+    assert(hits(Pattern.quote("experimental.extra")).isEmpty)
   }
 
   test("the listener bus is drained only through GraftSqlBridge") {

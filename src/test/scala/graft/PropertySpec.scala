@@ -21,7 +21,7 @@ class PropertySpec extends AnyFunSuite {
     val cases = Gen.listOfN(60, gen).sample.get
     val df = cases.toDF("a", "b")
     val got = df.select(
-      graft.functions.Vectors.sortedIntersectCount(spark, col("a"), col("b")))
+      graft.functions.Vectors.sortedIntersectCount(col("a"), col("b")))
       .collect().map(_.getInt(0)).toSeq
     val want = cases.map { case (a, b) => a.toSet.intersect(b.toSet).size }
     assert(got == want)
@@ -34,7 +34,7 @@ class PropertySpec extends AnyFunSuite {
     val cases = Gen.listOfN(25, Gen.zip(idsGen, kGen)).sample.get
     cases.foreach { case (ids, k) =>
       val got = ids.toDF("id")
-        .agg(graft.functions.Vectors.bottomkSample(spark, col("id"), k))
+        .agg(graft.functions.Vectors.bottomkSample(col("id"), k))
         .head().getSeq[Long](0).toList
       val want = ids.sortBy(id => (BottomKSample.mix(id), id)).take(k)
       assert(got == want, s"ids=$ids k=$k")
@@ -50,7 +50,7 @@ class PropertySpec extends AnyFunSuite {
       }
     val df = cases.toDF("a", "b")
       .select(col("a").cast("array<float>").as("a"), col("b").cast("array<float>").as("b"))
-    val got = df.select(graft.functions.Vectors.cosine(spark, col("a"), col("b")))
+    val got = df.select(graft.functions.Vectors.cosine(col("a"), col("b")))
       .collect().map(_.getDouble(0))
     val want = cases.map { case (a, b) =>
       var dot = 0.0; var na = 0.0; var nb = 0.0
@@ -91,7 +91,7 @@ class PropertySpec extends AnyFunSuite {
     val df = vecs.toDF("embedding")
       .select(col("embedding").cast("array<float>").as("embedding"))
     val got = df
-      .agg(graft.functions.Vectors.gramSketch(spark, col("embedding")).as("gs"))
+      .agg(graft.functions.Vectors.gramSketch(col("embedding")).as("gs"))
       .select(inline(col("gs"))).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> (r.getLong(2), r.getLong(3))).toMap
     val d = 6
@@ -113,7 +113,7 @@ class PropertySpec extends AnyFunSuite {
     cases.foreach { case (rows, k) =>
       val df = rows.map { case (v, id) => (id.toLong, v.toDouble) }.toDF("id", "v")
       val got = df
-        .agg(graft.functions.Vectors.topkByKey(spark, col("v"), col("id"), k))
+        .agg(graft.functions.Vectors.topkByKey(col("v"), col("id"), k))
         .head().getSeq[org.apache.spark.sql.Row](0)
         .map(r => (r.getLong(0), r.getDouble(1))).toList
       val want = rows.map { case (v, id) => (id.toLong, v.toDouble) }
@@ -151,7 +151,7 @@ class CdcChunksPropertySpec extends AnyFunSuite {
       Gen.listOfN(40, multiG).sample.get).filter(_.nonEmpty)
     val got = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
-      .select(col("id"), graft.functions.Vectors.cdcChunks(spark, col("text")))
+      .select(col("id"), graft.functions.Vectors.cdcChunks(col("text")))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toList).toMap
     texts.zipWithIndex.foreach { case (t, i) =>
       assert(got(i.toLong) == refChunks(t).toList, s"text=${t.take(40)}…")

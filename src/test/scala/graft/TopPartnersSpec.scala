@@ -26,7 +26,7 @@ class TopPartnersSpec extends AnyFunSuite {
   }
 
   private def topPairs(df: DataFrame, k: Int): Seq[(Long, Long, Long)] =
-    Graph.topPairs(spark, df, k).collect().toSeq
+    Graph.topPairs(df, k).collect().toSeq
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
 
   /** Random sorted, distinct baskets over a small item domain, so
@@ -41,13 +41,13 @@ class TopPartnersSpec extends AnyFunSuite {
     val df = Seq(("g", Seq(5L, 3L, 9L)), ("g", Seq(3L, 9L)), ("g", Seq(9L, 1L)),
       ("g", Seq(1L)), ("g", Seq.empty[Long])).toDF("g", "partners")
     val got = df.groupBy(col("g"))
-      .agg(Vectors.topPartners(spark, col("partners"), 3).as("top"))
+      .agg(Vectors.topPartners(col("partners"), 3).as("top"))
       .head().getSeq[Row](1).map(r => (r.getLong(0), r.getLong(1)))
     // counts 9:3, 1:2, 3:2, 5:1 — 1 and 3 tie and 1 comes first; k = 3
     // drops 5
     assert(got == Seq((9L, 3L), (1L, 2L), (3L, 2L)))
     val schema = df.groupBy(col("g"))
-      .agg(Vectors.topPartners(spark, col("partners"), 3).as("top"))
+      .agg(Vectors.topPartners(col("partners"), 3).as("top"))
       .schema("top").dataType.simpleString
     assert(schema == "array<struct<part_b:bigint,weight:bigint>>")
   }
@@ -94,7 +94,7 @@ class TopPartnersSpec extends AnyFunSuite {
       d.select(posexplode(col("items")).as(Seq("i", "part_a")), col("items"))
         .select(col("part_a"), expr("slice(items, i + 2, size(items))").as("tail"))
         .groupBy(col("part_a"))
-        .agg(Vectors.topPartners(spark, col("tail"), 4).as("top"))
+        .agg(Vectors.topPartners(col("tail"), 4).as("top"))
         .collect().map(r => r.getLong(0) ->
           r.getSeq[Row](1).map(e => (e.getLong(0), e.getLong(1)))).toMap
     assert(perPart(df.repartition(1)) == perPart(df.repartition(8)))

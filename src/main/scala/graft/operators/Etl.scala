@@ -303,18 +303,11 @@ object Etl {
         |WHERE rn <= 3""".stripMargin) { (s, dir) =>
       val u = conv(substring(md5(col("doc_id").cast(StringType).cast(BinaryType)), 1, 15), 16, 10)
         .cast(LongType).cast(DoubleType) / lit(1.152921504606846976e18)
-      val wLocal = Window.partitionBy(col("source"), col("salt"))
-        .orderBy(col("es_key").desc, col("doc_id").asc)
-      val wFinal = Window.partitionBy(col("source"))
-        .orderBy(col("es_key").desc, col("doc_id").asc)
-      Tables.documents(s, dir)
+      val keyed = Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("n_chars"),
-          round(log(u) / col("n_chars"), 9).as("es_key"),
-          pmod(hash(col("doc_id")), lit(64)).as("salt"))
-        .withColumn("rn0", row_number().over(wLocal))
-        .filter(col("rn0") <= 3)
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= 3)
+          round(log(u) / col("n_chars"), 9).as("es_key"))
+      Skew.saltedTopK(keyed, col("source"),
+          Seq(col("es_key").desc, col("doc_id").asc), 3, col("doc_id"))
         .select(col("doc_id"), col("source"), col("n_chars"), col("es_key"), col("rn"))
     },
 

@@ -185,24 +185,14 @@ object Relational {
         |  FROM orders) WHERE rn <= 3""".stripMargin) { (s, dir) =>
       // Two-phase top-k. o_orderpriority has 5 values, so a plain
       // partitionBy(o_orderpriority) window funnels the whole fact table
-      // into ≤5 reducer tasks that each sort everything (AQE cannot
-      // split a skewed WINDOW partition the way it splits a join).
-      // Phase 1 salts the partition key: 5×64 bounded window partitions,
-      // each ~1/64th of a priority class, local top-3 per salt cell.
-      // Phase 2 ranks the ≤ 5×64×3 survivors — a tiny input — with the
-      // same total order, so the final row_number is identical to the
-      // single-window formulation the oracle runs.
-      val salted = Tables.orders(s, dir)
-        .withColumn("salt", pmod(hash(col("o_orderkey")), lit(64)))
-      val wLocal = Window.partitionBy(col("o_orderpriority"), col("salt"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      val wFinal = Window.partitionBy(col("o_orderpriority"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      salted
-        .withColumn("rn0", row_number().over(wLocal))
-        .filter(col("rn0") <= 3)
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= 3)
+      // into ≤5 reducer tasks that each sort everything. The salted
+      // phase 1 works in 5×64 bounded window partitions; phase 2 ranks
+      // the ≤ 5×64×3 survivors with the same total order, so the final
+      // row_number is identical to the single-window formulation the
+      // oracle runs.
+      Skew.saltedTopK(Tables.orders(s, dir), col("o_orderpriority"),
+          Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3,
+          col("o_orderkey"))
         .select("o_orderpriority", "o_orderkey", "o_totalprice", "rn")
     },
 

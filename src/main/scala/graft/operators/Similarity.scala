@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftSession, QueryDef}
+import graft.QueryDef
 import graft.functions.Vectors
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -25,6 +25,10 @@ object Similarity {
   private val K = 5
   private val NPROBES = 10
   private val RERANK = 32
+
+  /** The neighbor ranking most top-k queries here use: similarity
+    * descending, ids ascending on ties. */
+  private def cosDesc: Seq[Column] = Seq(col("cos_sim").desc, col("neighbor_id").asc)
 
   /** Shared int8-quantized corpus (vec_id, qv, qn), persisted so the
     * quantized scan tier and the rerank tier hit one cache entry.
@@ -52,18 +56,11 @@ object Similarity {
       .select(col("vec_id").as("probe_id"), col("qv").as("pqv"), col("qn").as("pqn"))
     val cosQ = round(col("qdot").cast(DoubleType) /
       sqrt(greatest(col("pqn") * col("qn"), lit(1L)).cast(DoubleType)), 6)
-    val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-      .orderBy(col("cos_q").desc, col("neighbor_id").asc)
-    val wFinal = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_q").desc, col("neighbor_id").asc)
-    qcorp.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+    val scored = qcorp.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .withColumn("qdot", Vectors.quantizedDot(col("pqv"), col("qv")))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), cosQ.as("cos_q"),
-        pmod(hash(col("vec_id")), lit(64)).as("salt"))
-      .withColumn("rn0", row_number().over(wLocal))
-      .filter(col("rn0") <= k)
-      .withColumn("rn", row_number().over(wFinal))
-      .filter(col("rn") <= k)
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"), cosQ.as("cos_q"))
+    Skew.saltedTopK(scored, col("probe_id"),
+        Seq(col("cos_q").desc, col("neighbor_id").asc), k, col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), col("cos_q"), col("rn"))
   }
 
@@ -182,85 +179,55 @@ object Similarity {
       s"SELECT probe_id, step, neighbor_id, rel AS rel_q6, mmr_fp FROM s$k")
       .mkString("\nUNION ALL\n")
 
-  /** Shared greedy-MMR machinery: (cand, pairs, selection). `cand` is
-    * the quantized top-MMR_CAND tier with ×10⁶-snapped relevance,
-    * `pairs` the bounded candidate-candidate sim table, `selection`
-    * the K greedy picks (probe_id, step, neighbor_id, rel_q6, mmr_fp).
-    * Each round's 1-row-per-probe pick is eagerly cut (GraftSession.roundCut)
-    * — without the cut, round k's anti-join + penalty join each
-    * re-embed round k−1's whole subtree and the plan doubles per round
-    * (the audit measured 244 printed exchanges on the unpersisted
-    * chain). persist() alone is NOT enough here: it dedups execution
-    * but the analyzer/optimizer still walks the doubled logical tree
-    * every round, and that driver-side walk was the measured cost
-    * (8.2 s warm for ann_mmr_rerank / 24.5 s for ann_diversity_eval
-    * on a 2 000-vector corpus — data-free optimizer time; 0.5/0.7 s
-    * after the checkpoint cut). All checkpointed relations are
-    * bookkeeping-bounded (≤MMR_CAND×NPROBES rows), so the
-    * materialization is free at any corpus scale — the
-    * graph_pagerank lineage-cut argument. */
-  private def mmrParts(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
+  /** Candidate-candidate similarity of two MMR pool entries: the
+    * same formula shape as tier 1's cos_q on their int8 codes,
+    * snapped to ×10⁶ BIGINT. */
+  private def mmrSim(x: Column, y: Column): Column =
+    floor(round(
+      Vectors.quantizedDot(x("qv"), y("qv")).cast(DoubleType)
+        / sqrt(greatest(x("qn") * y("qn"), lit(1L)).cast(DoubleType)), 6)
+      * lit(1.0e6) + 0.5).cast(LongType)
+
+  /** Shared greedy-MMR machinery, one row per probe: (probe_id, pool,
+    * picks). `pool` is the quantized top-MMR_CAND tier in rank order,
+    * `array<struct<rn, neighbor_id, rel, qv, qn>>` with ×10⁶-snapped
+    * relevance; `picks` the K greedy selections in step order,
+    * `array<struct<step, mmr_fp, c>>` with `c` the chosen pool entry.
+    * One shuffle gathers the pool; the K steps then run as one
+    * `aggregate` fold inside the row, which carries the picks so far
+    * from step to step.
+    * Step 1 is pure relevance (the rank-1 entry); each later step drops
+    * the picked entries, scores the rest 7·rel − 3·max sim to a pick
+    * and takes the max of (mmr_fp, −neighbor_id), i.e. the
+    * (mmr_fp desc, neighbor_id asc) argmax. A pool that runs out
+    * before step K ends the fold's growth, as the oracle's inner joins
+    * do. */
+  private def mmrParts(s: SparkSession, dir: String): DataFrame = {
     val qcorp = quantizedCorpus(s, dir)
-    val cand = quantizedTopK(s, dir, MMR_CAND)
-      .select(col("probe_id"), col("neighbor_id"),
+    val pool = col("pool")
+    val first = pool.getItem(0)
+    val picks = aggregate(sequence(lit(2), lit(K)),
+      array(struct(lit(1).as("step"), (first("rel") * 7).as("mmr_fp"),
+        first.as("c"))),
+      (acc, k) => {
+        val rest = filter(pool, c =>
+          !exists(acc, p => p("c")("neighbor_id") === c("neighbor_id")))
+        val best = array_max(transform(rest, c => struct(
+          (c("rel") * 7 - array_max(transform(acc, p => mmrSim(c, p("c"))))
+            * 3).as("mmr_fp"),
+          (-c("neighbor_id")).as("neg_id"), c.as("c"))))
+        when(size(rest) === 0, acc).otherwise(concat(acc, array(struct(
+          k.as("step"), best("mmr_fp").as("mmr_fp"), best("c").as("c")))))
+      })
+    // tier 1 keeps ≤ MMR_CAND×NPROBES rows: broadcast them to fetch
+    // their codes, never shuffle the corpus
+    qcorp.join(broadcast(quantizedTopK(s, dir, MMR_CAND)),
+        col("vec_id") === col("neighbor_id"))
+      .groupBy(col("probe_id"))
+      .agg(array_sort(collect_list(struct(col("rn"), col("neighbor_id"),
         floor(col("cos_q") * lit(1.0e6) + 0.5).cast(LongType).as("rel"),
-        col("rn"))
-      // ≤MMR_CAND×NPROBES rows; every greedy step re-reads
-      .transform(GraftSession.roundCut(s, _))
-    val pa = cand.select(col("probe_id"), col("neighbor_id").as("a"))
-    val pb = cand.select(col("probe_id").as("p2"),
-      col("neighbor_id").as("b"))
-    val qa = qcorp.select(col("vec_id").as("a"), col("qv").as("qva"),
-      col("qn").as("qna"))
-    val qb = qcorp.select(col("vec_id").as("b"), col("qv").as("qvb"),
-      col("qn").as("qnb"))
-    // same formula shape as tier 1's cos_q, snapped to ×10⁶ BIGINT
-    val pairSim = floor(round(
-      Vectors.quantizedDot(col("qva"), col("qvb")).cast(DoubleType)
-        / sqrt(greatest(col("qna") * col("qnb"), lit(1L))
-          .cast(DoubleType)), 6) * lit(1.0e6) + 0.5).cast(LongType)
-    val pairs = pa
-      .join(pb, col("probe_id") === col("p2") && col("a") =!= col("b"))
-      .join(qa, "a").join(qb, "b")
-      .select(col("probe_id"), col("a"), col("b"), pairSim.as("sim"))
-      // MMR_CAND²×NPROBES pair table; K−1 steps re-read
-      .transform(GraftSession.roundCut(s, _))
-    // step 1: pure relevance — tier 1's rank-1 row IS the argmax
-    val first = cand.filter(col("rn") === 1)
-      .select(col("probe_id"), lit(1).as("step"), col("neighbor_id"),
-        col("rel").as("rel_q6"), (col("rel") * 7).as("mmr_fp"))
-      .transform(GraftSession.roundCut(s, _))
-    var steps = Vector(first)
-    var selected = first.select(col("probe_id"), col("neighbor_id"))
-    for (k <- 2 to K) {
-      val selB = selected.select(col("probe_id").as("p3"),
-        col("neighbor_id").as("b2"))
-      val maxp = pairs
-        .join(selB, col("p3") === col("probe_id")
-          && col("b2") === col("b"))
-        .groupBy(col("probe_id"), col("a"))
-        .agg(max(col("sim")).as("mp"))
-        .select(col("probe_id").as("p4"), col("a"), col("mp"))
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("mmr_fp").desc, col("neighbor_id").asc)
-      val next = cand
-        .join(selected, Seq("probe_id", "neighbor_id"), "left_anti")
-        .join(maxp, col("p4") === col("probe_id")
-          && col("a") === col("neighbor_id"))
-        .select(col("probe_id"), col("neighbor_id"), col("rel"),
-          (col("rel") * 7 - col("mp") * 3).as("mmr_fp"))
-        .withColumn("rr", row_number().over(w))
-        .filter(col("rr") === 1)
-        .select(col("probe_id"), lit(k).as("step"), col("neighbor_id"),
-          col("rel").as("rel_q6"), col("mmr_fp"))
-        // lineage cut: 1 row/probe feeds every later round
-        .transform(GraftSession.roundCut(s, _))
-      steps = steps :+ next
-      selected = selected.unionByName(
-        next.select(col("probe_id"), col("neighbor_id")))
-    }
-    (cand, pairs, steps.reduce(_ unionByName _))
+        col("qv"), col("qn")))).as("pool"))
+      .select(col("probe_id"), pool, picks.as("picks"))
   }
 
   /** Oracle CTEs for the quantized corpus + pairwise code cosine
@@ -594,19 +561,10 @@ object Similarity {
     val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
     // Salted two-phase top-k: candidate lists are corpus-sized per
     // probe, so a single partitionBy(probe_id) window would sort a
-    // whole corpus in NPROBES reducer tasks. Local top-K per salt
-    // cell first; the final window sees ≤64×K rows per probe.
-    val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    val wFinal = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), cos.as("cos_sim"),
-        pmod(hash(col("vec_id")), lit(64)).as("salt"))
-      .withColumn("rn0", row_number().over(wLocal))
-      .filter(col("rn0") <= K)
-      .withColumn("rn", row_number().over(wFinal))
-      .filter(col("rn") <= K)
+    // whole corpus in NPROBES reducer tasks.
+    val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+      .select(col("probe_id"), col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
+    Skew.saltedTopK(scored, col("probe_id"), cosDesc, K, col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), col("cos_sim"), col("rn"))
   }
 
@@ -653,21 +611,11 @@ object Similarity {
     // probe's candidates are the union of 2 IVF cells, which even
     // with bounded cells can concentrate one probe's whole list into
     // a single task under a plain partitionBy(probe_id) window.
-    // Local top-K per salt cell first; the final window sees ≤64×K
-    // rows per probe.
-    val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    val wFinal = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    cand
+    val scored = cand
       .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb")), "probe_id")
       .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")), "neighbor_id")
-      .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"),
-        pmod(hash(col("neighbor_id")), lit(64)).as("salt"))
-      .withColumn("rn0", row_number().over(wLocal))
-      .filter(col("rn0") <= K)
-      .withColumn("rn", row_number().over(wFinal))
-      .filter(col("rn") <= K)
+      .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"))
+    Skew.saltedTopK(scored, col("probe_id"), cosDesc, K, col("neighbor_id"))
       .select(col("probe_id"), col("neighbor_id"), col("cos_sim"), col("rn"))
   }
 
@@ -702,18 +650,11 @@ object Similarity {
       val probes = e.filter(col("vec_id") < NPROBES)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
       val dist = round(Vectors.l2(col("probe_emb"), col("embedding")), 6)
-      val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-        .orderBy(col("l2_dist").asc, col("neighbor_id").asc)
-      val wFinal = Window.partitionBy(col("probe_id"))
-        .orderBy(col("l2_dist").asc, col("neighbor_id").asc)
-      e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+      val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          dist.as("l2_dist"),
-          pmod(hash(col("vec_id")), lit(64)).as("salt"))
-        .withColumn("rn0", row_number().over(wLocal))
-        .filter(col("rn0") <= K)
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= K)
+          dist.as("l2_dist"))
+      Skew.saltedTopK(scored, col("probe_id"),
+          Seq(col("l2_dist").asc, col("neighbor_id").asc), K, col("neighbor_id"))
         .select(col("probe_id"), col("neighbor_id"), col("l2_dist"), col("rn"))
     },
 
@@ -745,18 +686,11 @@ object Similarity {
       val probes = e.filter(col("vec_id") < NPROBES)
         .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
       val score = round(Vectors.fdot(col("probe_emb"), col("embedding")), 6)
-      val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-        .orderBy(col("dot").desc, col("neighbor_id").asc)
-      val wFinal = Window.partitionBy(col("probe_id"))
-        .orderBy(col("dot").desc, col("neighbor_id").asc)
-      e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+      val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          score.as("dot"),
-          pmod(hash(col("vec_id")), lit(64)).as("salt"))
-        .withColumn("rn0", row_number().over(wLocal))
-        .filter(col("rn0") <= K)
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= K)
+          score.as("dot"))
+      Skew.saltedTopK(scored, col("probe_id"),
+          Seq(col("dot").desc, col("neighbor_id").asc), K, col("neighbor_id"))
         .select(col("probe_id"), col("neighbor_id"), col("dot"), col("rn"))
     },
 
@@ -910,22 +844,14 @@ object Similarity {
             col("bucket") +: (0 until planesPerTable).map(j =>
               col("bucket").bitwiseXOR(lit(1 << j))): _*)).as("probe_bucket"))
       val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
-      // Candidate lists are bucket-bounded, but a hot bucket can still
-      // concentrate a probe's candidates into one task — salt anyway.
-      val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      val wFinal = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      bucketed.join(broadcast(probes),
+      val scored = bucketed.join(broadcast(probes),
           col("tbl") === col("ptbl") && col("bucket") === col("probe_bucket") &&
             col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
         .distinct() // a pair may collide in several tables — score once
-        .withColumn("salt", pmod(hash(col("neighbor_id")), lit(64)))
-        .withColumn("rn0", row_number().over(wLocal))
-        .filter(col("rn0") <= K)
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= K)
+      // Candidate lists are bucket-bounded, but a hot bucket can still
+      // concentrate a probe's candidates into one task — salt anyway.
+      Skew.saltedTopK(scored, col("probe_id"), cosDesc, K, col("neighbor_id"))
         .select(col("probe_id"), col("neighbor_id"), col("cos_sim"), col("rn"))
     },
 
@@ -958,18 +884,11 @@ object Similarity {
       val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
       // Same salted two-phase ranking as ann_topk_exact: negatives per
       // probe are corpus-sized, so never sort them in one task.
-      val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      val wFinal = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      e.join(broadcast(probes), col("label") =!= col("probe_label"))
+      val scored = e.join(broadcast(probes), col("label") =!= col("probe_label"))
         .select(col("probe_id"), col("probe_label"),
           col("vec_id").as("neighbor_id"), col("label").as("neighbor_label"),
-          cos.as("cos_sim"), pmod(hash(col("vec_id")), lit(64)).as("salt"))
-        .withColumn("rn0", row_number().over(wLocal))
-        .filter(col("rn0") <= K)
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= K)
+          cos.as("cos_sim"))
+      Skew.saltedTopK(scored, col("probe_id"), cosDesc, K, col("neighbor_id"))
         .select(col("probe_id"), col("probe_label"), col("neighbor_id"),
           col("neighbor_label"), col("cos_sim"), col("rn"))
     },
@@ -1056,16 +975,20 @@ object Similarity {
     // mode every raw-similarity list has on retrieval over a corpus
     // with near-dups). Candidates are the quantized top-MMR_CAND per
     // probe (the ann_refine_rerank tier-1 shape — the corpus pass
-    // reads int8 codes only); candidate-candidate sims are a BOUNDED
-    // MMR_CAND²-per-probe pair join, never corpus². λ = 0.7 as integer
-    // weights on ×10⁶-snapped cosines: every MMR score is an exact
-    // BIGINT (7·rel − 3·maxsim), so the K greedy steps — each one
-    // anti-join + max-agg + argmax window over ≤MMR_CAND rows/probe —
-    // are engine-exact and the oracle replays them as K unrolled CTE
+    // reads int8 codes only); candidate-candidate sims are computed
+    // inside each probe's bounded pool, never corpus². λ = 0.7 as
+    // integer weights on ×10⁶-snapped cosines: every MMR score is an
+    // exact BIGINT (7·rel − 3·maxsim), so the K greedy steps — one
+    // fold over the probe's ≤MMR_CAND-entry pool row (mmrParts) — are
+    // engine-exact and the oracle replays them as K unrolled CTE
     // blocks. At 10⁹ vectors the only corpus-scale work is tier 1;
-    // selection touches MMR_CAND×NPROBES bookkeeping rows.
+    // selection touches one NPROBES-row pool table.
     "ann_mmr_rerank" -> QueryDef.withOracle(mmrOracleSql) { (s, dir) =>
-      mmrParts(s, dir)._3
+      mmrParts(s, dir)
+        .select(col("probe_id"), explode(col("picks")).as("p"))
+        .select(col("probe_id"), col("p.step").as("step"),
+          col("p.c.neighbor_id").as("neighbor_id"),
+          col("p.c.rel").as("rel_q6"), col("p.mmr_fp").as("mmr_fp"))
     },
 
     // ------------------------------------------------------------------
@@ -1073,12 +996,14 @@ object Similarity {
     // per probe, the mean pairwise candidate-candidate cosine inside
     // the PLAIN quantized top-5 vs inside the MMR-selected 5, and the
     // gain (plain − MMR; positive means MMR actually bought
-    // diversity). Both sets and all sims come from the shared bounded
-    // MMR machinery — C(5,2)=10 pairs per set per probe, exact ×10⁶
-    // BIGINT sims, averages floor-snapped — so the whole eval is
-    // bookkeeping on top of tier 1 and fully oracled by extending the
-    // unrolled greedy CTE chain. MmrDiversitySpec asserts the gain is
-    // non-negative for every probe.
+    // diversity). Both sets come from the same mmrParts pool row —
+    // C(5,2)=10 pairs per set per probe, exact ×10⁶ BIGINT sims,
+    // averages floor-snapped — so the whole eval is bookkeeping on top
+    // of tier 1 and fully oracled by extending the unrolled greedy CTE
+    // chain. A probe whose sets hold fewer than two members has no
+    // pair and gets no row, as in the oracle's pair joins.
+    // Round9InvariantSpec asserts the gain is non-negative for every
+    // probe.
     "ann_diversity_eval" -> QueryDef.withOracle(
       s"""$mmrOracleCtes,
          |top5 AS (SELECT probe_id, neighbor_id FROM cand WHERE rn <= $K),
@@ -1105,28 +1030,19 @@ object Similarity {
          |  topk_avg_fp - mmr_avg_fp AS gain_fp
          |FROM tp JOIN mm ON mm.probe_id = tp.probe_id""".stripMargin) {
       (s, dir) =>
-      val (cand, pairs, out) = mmrParts(s, dir)
-      def avgSim(set: DataFrame, outName: String): DataFrame = {
-        val t = set.select(col("probe_id").as("pt"),
-          col("neighbor_id").as("a2"))
-        val u = set.select(col("probe_id").as("pu"),
-          col("neighbor_id").as("b2"))
-        t.join(u, col("pu") === col("pt") && col("b2") > col("a2"))
-          .join(pairs, col("pt") === col("probe_id")
-            && col("a2") === col("a") && col("b2") === col("b"))
-          .groupBy(col("pt"))
-          .agg(floor(sum(col("sim")).cast(DoubleType) / 10 + 0.5)
-            .cast(LongType).as(outName))
-      }
-      val tp = avgSim(cand.filter(col("rn") <= K)
-        .select(col("probe_id"), col("neighbor_id")), "topk_avg_fp")
-      val mm = avgSim(out.select(col("probe_id"), col("neighbor_id")),
-        "mmr_avg_fp")
-        .withColumnRenamed("pt", "pm")
-      tp.join(mm, col("pm") === col("pt"))
-        .select(col("pt").as("probe_id"), col("topk_avg_fp"),
-          col("mmr_avg_fp"),
-          (col("topk_avg_fp") - col("mmr_avg_fp")).as("gain_fp"))
+      // the pair sum over a set, each unordered pair once
+      def avgSim(set: Column): Column = floor(aggregate(set, lit(0L),
+        (acc, x) => acc + aggregate(
+          filter(set, y => y("neighbor_id") > x("neighbor_id")), lit(0L),
+          (a, y) => a + mmrSim(x, y))).cast(DoubleType) / 10 + 0.5)
+        .cast(LongType)
+      mmrParts(s, dir)
+        // both sets hold min(pool size, K) members
+        .filter(size(col("pool")) >= 2)
+        .select(col("probe_id"),
+          avgSim(slice(col("pool"), 1, K)).as("topk_avg_fp"),
+          avgSim(transform(col("picks"), p => p("c"))).as("mmr_avg_fp"))
+        .withColumn("gain_fp", col("topk_avg_fp") - col("mmr_avg_fp"))
     },
 
     // ------------------------------------------------------------------
@@ -1254,16 +1170,9 @@ object Similarity {
           Vectors.adcDistance(col("codes"), col("p.dtab"), PQ_CODES, PQ_M)
             .as("adist"))
       // salted two-phase top-RERANK (candidates per probe are corpus-sized)
-      val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-        .orderBy(col("adist").asc, col("neighbor_id").asc)
-      val wMid = Window.partitionBy(col("probe_id"))
-        .orderBy(col("adist").asc, col("neighbor_id").asc)
-      val cand = adc
-        .withColumn("salt", pmod(hash(col("neighbor_id")), lit(64)))
-        .withColumn("rn0", row_number().over(wLocal))
-        .filter(col("rn0") <= PQ_RERANK)
-        .withColumn("qrn", row_number().over(wMid))
-        .filter(col("qrn") <= PQ_RERANK)
+      val cand = Skew.saltedTopK(adc, col("probe_id"),
+          Seq(col("adist").asc, col("neighbor_id").asc), PQ_RERANK,
+          col("neighbor_id"))
         .select(col("probe_id"), col("neighbor_id"))
       val e = Tables.embeddings(s, dir)
       val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
@@ -1911,21 +1820,14 @@ object Similarity {
           .filter(col("vec_id") =!= col("probe_id"))
           .select(col("probe_id"), col("vec_id").as("neighbor_id"))
           .distinct()
-        val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-        val wFinal = Window.partitionBy(col("probe_id"))
-          .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-        val ivf = cand
+        val scored = cand
           .join(e.select(col("vec_id").as("probe_id"),
             col("embedding").as("p_emb")), "probe_id")
           .join(e.select(col("vec_id").as("neighbor_id"),
             col("embedding").as("n_emb")), "neighbor_id")
-          .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"),
-            pmod(hash(col("neighbor_id")), lit(64)).as("salt"))
-          .withColumn("rn0", row_number().over(wLocal))
-          .filter(col("rn0") <= K)
-          .withColumn("rn", row_number().over(wFinal))
-          .filter(col("rn") <= K)
+          .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"))
+        val ivf = Skew.saltedTopK(scored, col("probe_id"), cosDesc, K,
+            col("neighbor_id"))
           .select(col("probe_id"), col("neighbor_id"))
         ex.join(ivf, Seq("probe_id", "neighbor_id"))
           .agg(count(lit(1)).as("total_hits"))
@@ -1981,21 +1883,14 @@ object Similarity {
         .select(col("vec_id").as("probe_id"),
           col("embedding").as("probe_emb"), col("label").as("p_label"))
       val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
-      val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      val wFinal = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
       // PRE-filter arm: the label equality rides the broadcast join
       // condition, so the scan scores only the allowed class
-      val pre = e.join(broadcast(probes),
+      val allowed = e.join(broadcast(probes),
           col("vec_id") =!= col("probe_id") && col("label") === col("p_label"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cos.as("cos_sim"),
-          pmod(hash(col("vec_id")), lit(64)).as("salt"))
-        .withColumn("rn0", row_number().over(wLocal))
-        .filter(col("rn0") <= K)
-        .withColumn("rn", row_number().over(wFinal))
-        .filter(col("rn") <= K)
+          cos.as("cos_sim"))
+      val pre = Skew.saltedTopK(allowed, col("probe_id"), cosDesc, K,
+          col("neighbor_id"))
         .select(col("probe_id"), col("neighbor_id"))
       // POST-filter arm: unfiltered global top-K, labels dropped after
       val lab = e.select(col("vec_id"), col("label"))

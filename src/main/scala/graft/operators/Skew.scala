@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -15,7 +16,7 @@ import org.apache.spark.sql.types._
   * across `nSalts` reducers. AQE's skew-join handles many cases at
   * runtime; explicit salting is for the pathological keys AQE can't
   * split (e.g. a single key holding >50% of rows, or skewed
-  * aggregations).
+  * aggregations). `saltedTopK` is the same idea for a top-k window.
   */
 object Skew {
 
@@ -28,6 +29,26 @@ object Skew {
     val replicated = small.withColumn("__salt",
       explode(sequence(lit(0), lit(nSalts - 1))))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
+  }
+
+  /** The first `k` rows of each `part` group in `order`, numbered
+    * 1..k in column `rn`. A plain partitionBy(part) window sorts a
+    * whole group in one task, and AQE cannot split a skewed window
+    * partition the way it splits a join. So phase 1 ranks within
+    * (part, salt) cells, salt = hash(saltFrom) mod 64, and keeps each
+    * cell's local top-k; phase 2 ranks the ≤ 64×k survivors per group
+    * with the same order. When `order` is a total order within a
+    * group, `rn` equals the single-window row_number. */
+  def saltedTopK(df: DataFrame, part: Column, order: Seq[Column], k: Int,
+      saltFrom: Column): DataFrame = {
+    val wLocal = Window.partitionBy(part, col("salt")).orderBy(order: _*)
+    val wFinal = Window.partitionBy(part).orderBy(order: _*)
+    df.withColumn("salt", pmod(hash(saltFrom), lit(64)))
+      .withColumn("rn0", row_number().over(wLocal))
+      .filter(col("rn0") <= k)
+      .withColumn("rn", row_number().over(wFinal))
+      .filter(col("rn") <= k)
+      .drop("salt", "rn0")
   }
 
   private val dec4 = DecimalType(18, 4)

@@ -33,6 +33,11 @@ object Training {
     * identical at any count). */
   private val BpeMerges = 8
 
+  /** Merges selected per training round by the registry's BPE queries
+    * (the `m` of [[bpeTrainBatched]]); the merge list is the same for
+    * any value. */
+  private val BpeBatch = 4
+
   /** Shared CTE chain for the BPE oracles, generated for [[BpeMerges]]
     * rounds: each round is three CTEs (adjacent-pair counts over the
     * delimited symbol strings, the arg-max pair, the merged word
@@ -76,9 +81,7 @@ object Training {
     * any `m` (spec: BpeBatchEquivalenceSpec). */
   private def bpeTrain(s: org.apache.spark.sql.SparkSession, dir: String)
       : Seq[(Int, String, String, String, Long)] =
-    bpeTrainBatched(s, dir,
-      s.conf.getOption("spark.graft.bpe.batch").map(_.toInt).getOrElse(4),
-      BpeMerges)._1
+    bpeTrainBatched(s, dir, BpeBatch, BpeMerges)._1
 
   /** Batched BPE merge selection. The serial bound on BPE training is
     * the ROUND count, not the per-round cost: one Spark job per merge

@@ -220,7 +220,9 @@ object PlanAudit {
       // graph_eigencentrality argument)
       "graph_hits",
       // tier 1 is ann_quantized_topk's broadcast-probe × corpus int8
-      // scan; every selection-step join is equi on (probe, neighbor)
+      // scan; the pool's join back to the codes is equi on the
+      // neighbor id (a broadcast of the ≤MMR_CAND×NPROBES tier-1
+      // rows), and the greedy steps run inside each probe's row
       "ann_mmr_rerank", "ann_diversity_eval",
       // 1-row crossJoin: the (center, sig2) pooled-limit anchor the
       // ≤|months| subgroup relation expands against
@@ -519,11 +521,10 @@ object PlanAudit {
       // one corpus (type, day) agg + bookkeeping) + its own per-type
       // total and entropy aggs on the 8·|types|-row relation
       "ev_spectral_entropy" -> 9,
-      // the shared bounded MMR machinery (tier-1 candidates + pair
-      // sims + greedy picks, all checkpointed at ≤MMR_CAND×NPROBES
-      // rows) + the two C(5,2) pair-average aggs and their join —
-      // every exchange after tier 1 moves bookkeeping rows
-      "ann_diversity_eval" -> 10,
+      // tier 1's two salted ranking exchanges + the one probe_id
+      // exchange that gathers each probe's ≤MMR_CAND-entry pool; the
+      // greedy steps and both C(5,2) pair sums run inside that row
+      "ann_diversity_eval" -> 3,
       // ONE corpus scan to the |months|×|flags| relation; the k /
       // complete-block / within-block-rank self-join / rank-sum / tie
       // aggregates stack ~13 further exchanges, all ≤|months|×|flags|
@@ -660,7 +661,8 @@ object PlanAudit {
       // printing opaquely behind the shared embedding near-dup cache
       "graph_link_jaccard",
       // the ann_quantized_topk argument: tier 1's broadcast is the
-      // fixed-size NPROBES probe set over the cached int8 corpus
+      // fixed-size NPROBES probe set over the cached int8 corpus, and
+      // the pool join's is the ≤MMR_CAND×NPROBES tier-1 survivors
       "ann_mmr_rerank", "ann_diversity_eval",
       // the graph_common_neighbors argument: both persist the IVF
       // home-assignment ⋈ embeddings relation in pass 1 (where stats

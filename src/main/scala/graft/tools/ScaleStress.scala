@@ -434,13 +434,8 @@ object ScaleStress {
     }
     stressTime(s"IVF hot-cell ranking SALTED two-phase (64 salts, k=5)",
         nIvfProbes * nCand) {
-      val wLocal = Window.partitionBy(col("probe_id"), col("salt"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      val wFinal = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      pairs.withColumn("salt", pmod(hash(col("neighbor_id")), lit(64)))
-        .withColumn("rn0", row_number().over(wLocal)).filter(col("rn0") <= 5)
-        .withColumn("rn", row_number().over(wFinal)).filter(col("rn") <= 5)
+      graft.operators.Skew.saltedTopK(pairs, col("probe_id"),
+        Seq(col("cos_sim").desc, col("neighbor_id").asc), 5, col("neighbor_id"))
         .count()
     }
     pairs.unpersist()

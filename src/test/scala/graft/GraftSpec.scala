@@ -757,6 +757,21 @@ class EdgeCorpusSpec extends AnyFunSuite {
     assert(emb.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L))
   }
 
+  test("MMR over pools smaller than K: fewer steps, no pair-less diversity row") {
+    // 3 vectors: each probe's pool holds the other 2
+    val picks = SparkEntry.queries("ann_mmr_rerank")(spark, edgeDir).collect()
+    assert(picks.groupBy(_.getAs[Long]("probe_id"))
+      .map { case (p, rs) => p -> rs.map(_.getAs[Int]("step")).sorted.toSeq } ==
+      (0L to 2L).map(_ -> Seq(1, 2)).toMap)
+    assert(SparkEntry.queries("ann_diversity_eval")(spark, edgeDir).count() == 3)
+    // 2 vectors: a 1-entry pool gets one step and has no pair to average
+    val two = TempDirs.deletedOnExit("graft_edge2").toString
+    spark.read.parquet(s"$edgeDir/embeddings.parquet").filter(col("vec_id") < 2)
+      .write.parquet(s"$two/embeddings.parquet")
+    assert(SparkEntry.queries("ann_mmr_rerank")(spark, two).count() == 2)
+    assert(SparkEntry.queries("ann_diversity_eval")(spark, two).count() == 0)
+  }
+
   test("langid scores chinese characters") {
     val row = SparkEntry.queries("text_langid")(spark, edgeDir)
       .filter(col("doc_id") === 3L).head()
@@ -4423,6 +4438,25 @@ class Round9InvariantSpec extends AnyFunSuite {
       val rels = ordered.map(_.getAs[Long]("rel_q6"))
       assert(rels.head == rels.max, s"probe $p step-1 not the rel argmax")
     }
+  }
+
+  test("ann_mmr_rerank and ann_diversity_eval run in at most 8 jobs") {
+    // the K greedy steps are one fold inside each probe's pool row, so
+    // no step adds a job (the per-step cut loop ran 53 and 59). Counted
+    // on a warm pass, as Profile does: the first pass also runs one job
+    // per reference to the not yet cached int8 corpus.
+    val dir = java.nio.file.Paths.get(sf).resolveSibling("sf0.01").toString
+    val l = new JobGroupListener
+    spark.sparkContext.addSparkListener(l)
+    try for (q <- Seq("ann_mmr_rerank", "ann_diversity_eval")) {
+      SparkEntry.queries(q)(spark, dir).collect()
+      val g = s"mmr-jobs-$q"
+      spark.sparkContext.setJobGroup(g, g)
+      try SparkEntry.queries(q)(spark, dir).collect()
+      finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
+      assert(l.jobs(g) > 0 && l.jobs(g) <= 8, s"$q ran ${l.jobs(g)} jobs")
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("ev_dickey_fuller: verdict consistent with its own snapped t") {

@@ -140,6 +140,11 @@ class MainsGuardSpec extends AnyFunSuite {
     assert(hits(Pattern.quote("year(l_shipdate) AS y,")) == owner)
   }
 
+  test("the salted two-phase top-k is written once, in Skew") {
+    assert(hits(Pattern.quote("""withColumn("rn0", row_number()""")) ==
+      Seq("graft/operators/Skew.scala" -> 1))
+  }
+
   test("the 2×12 moving-average chain is written once per engine, in Etl") {
     val owner = Seq("graft/operators/Etl.scala" -> 1)
     assert(hits(Pattern.quote("""lit(0.5) * lead(col("total"), 6)""")) == owner)

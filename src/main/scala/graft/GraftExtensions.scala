@@ -2,7 +2,7 @@ package graft
 
 import scala.reflect.ClassTag
 
-import graft.plans.{AdcDistance, AsofJoinStrategy, BloomMightContain, BottomKSample, CdcChunks, CosineSimilarity, FloatDot, GramSketch, HeavyHittersSketch, HyperplaneDot, KllQuantileSketch, KmvDistinctSketch, L2Distance, NearestPqCode, QuantizedDot, SortedLongIntersectCount, TextRankTop3, ThresholdLevenshtein, TopCellsByCos, TopKByKey, TopKByKeyStr, TopPartners}
+import graft.plans.{AdcDistance, AsofJoinStrategy, BloomMightContain, BottomKSample, CdcChunks, CosineSimilarity, FloatDot, GramSketch, HeavyHittersSketch, HyperplaneDot, KllQuantileSketch, KmvDistinctSketch, L2Distance, NearestPqCode, QuantizedDot, SortedLongIntersectCount, TextRankTop3, ThresholdLevenshtein, TopCellsByCos, TopKByKey, TopPartners}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -80,8 +80,6 @@ object GraftExtensions {
     fn[GramSketch]("graft_gram")(a => GramSketch(a(0)).toAggregateExpression()),
     fn[TopKByKey]("graft_topk_by_key")(a =>
       TopKByKey(a(0), a(1), a.int(2)).toAggregateExpression()),
-    fn[TopKByKeyStr]("graft_topk_by_skey")(a =>
-      TopKByKeyStr(a(0), a(1), a.int(2)).toAggregateExpression()),
     fn[TopPartners]("graft_top_partners")(a =>
       TopPartners(a(0), a.int(1)).toAggregateExpression()),
     fn[CdcChunks]("graft_cdc_chunks")(a => CdcChunks(a(0))),

@@ -68,20 +68,13 @@ object Vectors {
   def gramSketch(emb: Column): Column =
     call_function("graft_gram", emb)
 
-  /** Bounded top-k-per-group aggregate over (double value, bigint id):
-    * the k best pairs under (value DESC, id ASC) as
+  /** Bounded top-k-per-group aggregate over (double value, bigint or
+    * string id): the k best pairs under (value DESC, id ASC) as
     * array<struct<id, value>> — the window-free top-k-per-group plan
     * (≤k pairs per partition through the exchange, never the raw
-    * stream). */
+    * stream). Called through `Skew.topK`. */
   def topkByKey(value: Column, id: Column, k: Int): Column =
     call_function("graft_topk_by_key", value, id, lit(k))
-
-  /** String-keyed variant of [[topkByKey]]: the k best (double value,
-    * string id) pairs under (value DESC, id ASC binary) as
-    * array<struct<id, value>> — for top-k-per-group where the row
-    * identity is a string (token, bigram, URL) rather than a bigint. */
-  def topkByStrKey(value: Column, id: Column, k: Int): Column =
-    call_function("graft_topk_by_skey", value, id, lit(k))
 
   /** Co-occurrence top-k aggregate over an `array<bigint>` partner
     * list per row: the k partners named by the most rows of the group,

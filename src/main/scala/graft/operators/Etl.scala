@@ -286,8 +286,9 @@ object Etl {
     // u is the deterministic 60-bit md5 uniform, and the round-9 +
     // doc_id tiebreak makes the ranking reproducible across engines
     // (a last-ulp libm difference in ln cannot reorder). Top-3 per
-    // source via the salted two-phase window, so no task sorts a whole
-    // source even when one source holds half the corpus. This is the
+    // source via the bounded top-k aggregate, so no task sorts a whole
+    // source even when one source holds half the corpus; the winners
+    // get n_chars back by doc_id. This is the
     // importance-sampling step a training mix uses when "sample by
     // tokens, not documents" matters.
     "etl_weighted_sample" -> QueryDef.withOracle(
@@ -303,11 +304,11 @@ object Etl {
         |WHERE rn <= 3""".stripMargin) { (s, dir) =>
       val u = conv(substring(md5(col("doc_id").cast(StringType).cast(BinaryType)), 1, 15), 16, 10)
         .cast(LongType).cast(DoubleType) / lit(1.152921504606846976e18)
-      val keyed = Tables.documents(s, dir)
-        .select(col("doc_id"), col("source"), col("n_chars"),
-          round(log(u) / col("n_chars"), 9).as("es_key"))
-      Skew.saltedTopK(keyed, col("source"),
-          Seq(col("es_key").desc, col("doc_id").asc), 3, col("doc_id"))
+      val docs = Tables.documents(s, dir)
+      val keyed = docs.select(col("doc_id"), col("source"),
+        round(log(u) / col("n_chars"), 9).as("es_key"))
+      broadcast(Skew.topK(keyed, "source", "es_key", "doc_id", 3))
+        .join(docs.select(col("doc_id"), col("n_chars")), "doc_id")
         .select(col("doc_id"), col("source"), col("n_chars"), col("es_key"), col("rn"))
     },
 

@@ -183,17 +183,13 @@ object Relational {
         |    row_number() OVER (PARTITION BY o_orderpriority
         |                       ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
         |  FROM orders) WHERE rn <= 3""".stripMargin) { (s, dir) =>
-      // Two-phase top-k. o_orderpriority has 5 values, so a plain
-      // partitionBy(o_orderpriority) window funnels the whole fact table
-      // into ≤5 reducer tasks that each sort everything. The salted
-      // phase 1 works in 5×64 bounded window partitions; phase 2 ranks
-      // the ≤ 5×64×3 survivors with the same total order, so the final
-      // row_number is identical to the single-window formulation the
-      // oracle runs.
-      Skew.saltedTopK(Tables.orders(s, dir), col("o_orderpriority"),
-          Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3,
-          col("o_orderkey"))
-        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rn")
+      // o_orderpriority has 5 values, so a plain partitionBy window
+      // funnels the whole fact table into ≤5 reducer tasks that each
+      // sort everything. The bounded top-k aggregate moves ≤3 pairs per
+      // (priority, partition) through the exchange and numbers them
+      // like the oracle's single-window row_number.
+      Skew.topK(Tables.orders(s, dir), "o_orderpriority", "o_totalprice",
+        "o_orderkey", 3)
     },
 
     // ------------------------------------------------------------------
@@ -989,12 +985,9 @@ object Relational {
     // Top-k per group as an AGGREGATE, not a window: TopKByKey keeps
     // the 3 best (totalprice, orderkey) pairs per (priority, partition)
     // and merges associatively, so the exchange carries ≤3 pairs per
-    // group per task instead of every raw row into a group sort.
-    // Contrast q7_window_topk, which must hand-salt the window into a
-    // two-phase plan to avoid the single-task group sort — here the
-    // aggregation framework's partial/final split does that for free.
-    // (value DESC, id ASC) is a deterministic total order → full
-    // oracle.
+    // group per task instead of every raw row into a group sort. This
+    // is q7_window_topk's plan with a bigint rank column. (value DESC,
+    // id ASC) is a deterministic total order → full oracle.
     "q39_topk_agg" -> QueryDef.withOracle(
       """SELECT o_orderpriority, CAST(rn AS BIGINT) AS rank,
         |  o_orderkey, o_totalprice
@@ -1004,15 +997,10 @@ object Relational {
         |      ORDER BY o_totalprice DESC, o_orderkey ASC) AS rn
         |  FROM orders)
         |WHERE rn <= 3""".stripMargin) { (s, dir) =>
-      Tables.orders(s, dir)
-        .groupBy(col("o_orderpriority"))
-        .agg(graft.functions.Vectors.topkByKey(
-          col("o_totalprice"), col("o_orderkey"), 3).as("tk"))
-        .select(col("o_orderpriority"), posexplode(col("tk")).as(Seq("i", "e")))
-        .select(col("o_orderpriority"),
-          (col("i") + 1).cast(LongType).as("rank"),
-          col("e.id").as("o_orderkey"),
-          col("e.value").as("o_totalprice"))
+      Skew.topK(Tables.orders(s, dir), "o_orderpriority", "o_totalprice",
+          "o_orderkey", 3)
+        .select(col("o_orderpriority"), col("rn").cast(LongType).as("rank"),
+          col("o_orderkey"), col("o_totalprice"))
     },
 
     // ------------------------------------------------------------------

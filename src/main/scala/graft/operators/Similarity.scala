@@ -26,9 +26,11 @@ object Similarity {
   private val NPROBES = 10
   private val RERANK = 32
 
-  /** The neighbor ranking most top-k queries here use: similarity
-    * descending, ids ascending on ties. */
-  private def cosDesc: Seq[Column] = Seq(col("cos_sim").desc, col("neighbor_id").asc)
+  /** The neighbor ranking most top-k queries here use: the top-K
+    * (probe_id, neighbor_id, cos_sim, rn) of a scored pair stream,
+    * similarity descending, ids ascending on ties. */
+  private def cosTopK(scored: DataFrame): DataFrame =
+    Skew.topK(scored, "probe_id", "cos_sim", "neighbor_id", K)
 
   /** Shared int8-quantized corpus (vec_id, qv, qn), persisted so the
     * quantized scan tier and the rerank tier hit one cache entry.
@@ -46,11 +48,10 @@ object Similarity {
       .persist()
   }
 
-  /** Quantized-cosine candidates: for each probe, the top-`k` corpus
-    * vectors by int8-code cosine, ranked with the salted two-phase
-    * window. Returns (probe_id, neighbor_id, cos_q, rn). */
-  private def quantizedTopK(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val qcorp = quantizedCorpus(s, dir)
+  /** Quantized-cosine candidates: for each probe, the top-`k` vectors
+    * of the persisted `qcorp` ([[quantizedCorpus]]) by int8-code
+    * cosine. Returns (probe_id, neighbor_id, cos_q, rn). */
+  private def quantizedTopK(qcorp: DataFrame, k: Int): DataFrame = {
     val probes = qcorp
       .filter(col("vec_id") < NPROBES)
       .select(col("vec_id").as("probe_id"), col("qv").as("pqv"), col("qn").as("pqn"))
@@ -59,9 +60,7 @@ object Similarity {
     val scored = qcorp.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .withColumn("qdot", Vectors.quantizedDot(col("pqv"), col("qv")))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), cosQ.as("cos_q"))
-    Skew.saltedTopK(scored, col("probe_id"),
-        Seq(col("cos_q").desc, col("neighbor_id").asc), k, col("neighbor_id"))
-      .select(col("probe_id"), col("neighbor_id"), col("cos_q"), col("rn"))
+    Skew.topK(scored, "probe_id", "cos_q", "neighbor_id", k)
   }
 
   /** MMR candidate-pool size per probe (tier-1 survivors the greedy
@@ -221,7 +220,7 @@ object Similarity {
       })
     // tier 1 keeps ≤ MMR_CAND×NPROBES rows: broadcast them to fetch
     // their codes, never shuffle the corpus
-    qcorp.join(broadcast(quantizedTopK(s, dir, MMR_CAND)),
+    qcorp.join(broadcast(quantizedTopK(qcorp, MMR_CAND)),
         col("vec_id") === col("neighbor_id"))
       .groupBy(col("probe_id"))
       .agg(array_sort(collect_list(struct(col("rn"), col("neighbor_id"),
@@ -535,6 +534,40 @@ object Similarity {
       .select(col("vec_id"), col("sub"), col("xfp"),
         col("best.cell").as("cell"), col("best.dist").as("dist"))
 
+  /** Oracle CTEs `home`, `m1`, `m2`, `m3` (after `ivfAssignSql`): each
+    * vector's top-3 neighbors in its IVF home cell, shared by
+    * ann_knn_graph and embedding_lof. This mirrors the r15 scale
+    * shape: the (pre-cast) embedding payload rides the materialized
+    * home relation and the cosine evaluates INSIDE the per-cell join.
+    * The top 3 are THREE chained max() passes over a packed BIGINT key
+    * ((cos_fp + 2e6)·10^10 − dst_id: cos desc then dst asc, no ties
+    * possible) instead of a row_number window — at 100× the pair
+    * stream is 2.5e9 rows and a window over it spills >46 GB
+    * (OOM-killed the sf10d mirror), while a keyed max() streams in
+    * O(|src|) state; each pass re-streams the join. */
+  private def knnTop3Ctes: String = {
+    val key = """(CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
+                |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
+                |      - b.vec_id""".stripMargin
+    def pass(i: Int): String = {
+      val after = if (i == 1) "" else
+        s"""  JOIN m${i - 1} ON m${i - 1}.src_id = a.vec_id
+           |  WHERE $key < m${i - 1}.k${i - 1}
+           |""".stripMargin
+      s"""m$i AS MATERIALIZED (
+         |  SELECT a.vec_id AS src_id,
+         |    max($key) AS k$i
+         |  FROM home a JOIN home b
+         |    ON a.c_label = b.c_label AND a.vec_id <> b.vec_id
+         |""".stripMargin + after + "  GROUP BY 1)"
+    }
+    """home AS MATERIALIZED (
+      |  SELECT r.vec_id, r.c_label,
+      |    list_transform(e.embedding, v -> CAST(v AS DOUBLE)) AS emb_d
+      |  FROM ranked r JOIN embeddings e USING (vec_id) WHERE r.rn = 1),
+      |""".stripMargin + (1 to 3).map(pass).mkString(",\n")
+  }
+
   /** Oracle SQL for the exact brute-force top-K (also the ground-truth
     * CTE body of ann_recall_eval's oracle). */
   private def exactTopkSql: String =
@@ -552,20 +585,16 @@ object Similarity {
        |  JOIN embeddings e ON e.vec_id <> p.vec_id)
        |WHERE rn <= $K""".stripMargin
 
-  /** Exact brute-force cosine top-K per probe (salted two-phase
-    * ranking). Shared by ann_topk_exact and ann_recall_eval. */
+  /** Exact brute-force cosine top-K per probe. Shared by
+    * ann_topk_exact and ann_recall_eval. */
   private def exactTopK(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     val probes = e.filter(col("vec_id") < NPROBES)
       .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
     val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
-    // Salted two-phase top-k: candidate lists are corpus-sized per
-    // probe, so a single partitionBy(probe_id) window would sort a
-    // whole corpus in NPROBES reducer tasks.
     val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
-    Skew.saltedTopK(scored, col("probe_id"), cosDesc, K, col("neighbor_id"))
-      .select(col("probe_id"), col("neighbor_id"), col("cos_sim"), col("rn"))
+    cosTopK(scored)
   }
 
   /** Oracle CTE chain for the IVF-probed candidate generation +
@@ -593,8 +622,8 @@ object Similarity {
        |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rn FROM pair_scored)
        |WHERE rn <= $K""".stripMargin
 
-  /** IVF-probed approximate top-K per probe (2-cell probing, salted
-    * two-phase ranking). Shared by ann_ivf_topk and ann_recall_eval. */
+  /** IVF-probed approximate top-K per probe (2-cell probing). Shared
+    * by ann_ivf_topk and ann_recall_eval. */
   private def ivfTopK(s: SparkSession, dir: String): DataFrame = {
     val assigns = ivfAssignments(s, dir) // persisted by the build itself
     val home = assigns.filter(col("rn") === 1)
@@ -607,16 +636,11 @@ object Similarity {
       .distinct()
     val e = Tables.embeddings(s, dir)
     val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
-    // Salted two-phase ranking (the ann_topk_exact pattern): a
-    // probe's candidates are the union of 2 IVF cells, which even
-    // with bounded cells can concentrate one probe's whole list into
-    // a single task under a plain partitionBy(probe_id) window.
     val scored = cand
       .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb")), "probe_id")
       .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")), "neighbor_id")
       .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"))
-    Skew.saltedTopK(scored, col("probe_id"), cosDesc, K, col("neighbor_id"))
-      .select(col("probe_id"), col("neighbor_id"), col("cos_sim"), col("rn"))
+    cosTopK(scored)
   }
 
   val defs: Seq[(String, QueryDef)] = Seq(
@@ -630,8 +654,9 @@ object Similarity {
     // cosine and L2 rank differently and retrieval stacks specify L2).
     // Identical scale shape: broadcast probe set × one corpus scan,
     // distance via the codegen'd graft_l2 primitive loop (matching
-    // DuckDB list_distance double accumulation), salted two-phase
-    // ranking ascending — no corpus-sized per-probe window.
+    // DuckDB list_distance double accumulation), the bounded top-K
+    // aggregate over the negated distance — no corpus-sized per-probe
+    // window.
     "ann_l2_topk" -> QueryDef.withOracle(
       s"""SELECT probe_id, neighbor_id, l2_dist, rn FROM (
          |  SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
@@ -652,10 +677,9 @@ object Similarity {
       val dist = round(Vectors.l2(col("probe_emb"), col("embedding")), 6)
       val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          dist.as("l2_dist"))
-      Skew.saltedTopK(scored, col("probe_id"),
-          Seq(col("l2_dist").asc, col("neighbor_id").asc), K, col("neighbor_id"))
-        .select(col("probe_id"), col("neighbor_id"), col("l2_dist"), col("rn"))
+          (-dist).as("l2_dist"))
+      Skew.topK(scored, "probe_id", "l2_dist", "neighbor_id", K)
+        .withColumn("l2_dist", -col("l2_dist"))
     },
 
     // ------------------------------------------------------------------
@@ -666,8 +690,8 @@ object Similarity {
     // its cosine/L2 siblings: broadcast probe set × ONE corpus scan,
     // scores via the codegen'd graft_fdot primitive loop (left-to-right
     // accumulation matching DuckDB list_inner_product bit-for-bit),
-    // salted two-phase ranking descending — no corpus-sized per-probe
-    // window task.
+    // the bounded top-K aggregate — no corpus-sized per-probe window
+    // task.
     "ann_mips_topk" -> QueryDef.withOracle(
       s"""SELECT probe_id, neighbor_id, dot, rn FROM (
          |  SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
@@ -689,9 +713,7 @@ object Similarity {
       val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
           score.as("dot"))
-      Skew.saltedTopK(scored, col("probe_id"),
-          Seq(col("dot").desc, col("neighbor_id").asc), K, col("neighbor_id"))
-        .select(col("probe_id"), col("neighbor_id"), col("dot"), col("rn"))
+      Skew.topK(scored, "probe_id", "dot", "neighbor_id", K)
     },
 
     // ------------------------------------------------------------------
@@ -850,9 +872,9 @@ object Similarity {
         .select(col("probe_id"), col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
         .distinct() // a pair may collide in several tables — score once
       // Candidate lists are bucket-bounded, but a hot bucket can still
-      // concentrate a probe's candidates into one task — salt anyway.
-      Skew.saltedTopK(scored, col("probe_id"), cosDesc, K, col("neighbor_id"))
-        .select(col("probe_id"), col("neighbor_id"), col("cos_sim"), col("rn"))
+      // hold most of a probe's candidates; the top-K aggregate never
+      // sorts them in one task.
+      cosTopK(scored)
     },
 
     // ------------------------------------------------------------------
@@ -882,14 +904,15 @@ object Similarity {
         .select(col("vec_id").as("probe_id"), col("label").as("probe_label"),
           col("embedding").as("probe_emb"))
       val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
-      // Same salted two-phase ranking as ann_topk_exact: negatives per
-      // probe are corpus-sized, so never sort them in one task.
+      // the probe's label rides its group key; the ≤ K×NPROBES picks
+      // get their own label back by id
       val scored = e.join(broadcast(probes), col("label") =!= col("probe_label"))
-        .select(col("probe_id"), col("probe_label"),
-          col("vec_id").as("neighbor_id"), col("label").as("neighbor_label"),
-          cos.as("cos_sim"))
-      Skew.saltedTopK(scored, col("probe_id"), cosDesc, K, col("neighbor_id"))
-        .select(col("probe_id"), col("probe_label"), col("neighbor_id"),
+        .select(struct(col("probe_id"), col("probe_label")).as("probe"),
+          col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
+      broadcast(Skew.topK(scored, "probe", "cos_sim", "neighbor_id", K))
+        .join(e.select(col("vec_id").as("neighbor_id"),
+          col("label").as("neighbor_label")), "neighbor_id")
+        .select(col("probe.probe_id"), col("probe.probe_label"), col("neighbor_id"),
           col("neighbor_label"), col("cos_sim"), col("rn"))
     },
 
@@ -902,10 +925,10 @@ object Similarity {
     // float cosine. This is the memory-bandwidth scale path: the scan
     // side reads 4× fewer bytes than float32 brute force, which is the
     // bottleneck of a 10^9-vector exact-rerank tier. Ranking is the
-    // salted two-phase top-k (local top-K per salt cell, then final
-    // top-K over ≤64×K survivors per probe) so no single task ever
-    // sorts a probe's whole candidate list. QuantRecallSpec measures
-    // recall vs the float-exact top-5.
+    // bounded top-K aggregate (≤K pairs per probe and partition cross
+    // the exchange), so no single task ever sorts a probe's whole
+    // candidate list. QuantRecallSpec measures recall vs the
+    // float-exact top-5.
     "ann_quantized_topk" -> QueryDef.withOracle(
       s"""WITH $quantizedSql
          |SELECT probe_id, neighbor_id, cos_q, rn FROM (
@@ -916,7 +939,7 @@ object Similarity {
          |               neighbor_id ASC) AS rn
          |  FROM c)
          |WHERE rn <= $K""".stripMargin) { (s, dir) =>
-      quantizedTopK(s, dir, K)
+      quantizedTopK(quantizedCorpus(s, dir), K)
     },
 
     // ------------------------------------------------------------------
@@ -951,12 +974,12 @@ object Similarity {
          |  SELECT *, row_number() OVER (PARTITION BY probe_id
          |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rn FROM rr)
          |WHERE rn <= $K""".stripMargin) { (s, dir) =>
-      val cand = quantizedTopK(s, dir, RERANK)
+      val cand = quantizedTopK(quantizedCorpus(s, dir), RERANK)
         .select(col("probe_id"), col("neighbor_id"))
       val e = Tables.embeddings(s, dir)
       val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
       // ≤ RERANK rows per probe survive tier 1 — a single-phase window
-      // is bounded here, no salt needed
+      // is bounded here
       val w = Window.partitionBy(col("probe_id"))
         .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
       cand
@@ -1169,10 +1192,10 @@ object Similarity {
         .select(col("p.probe_id").as("probe_id"), col("vec_id").as("neighbor_id"),
           Vectors.adcDistance(col("codes"), col("p.dtab"), PQ_CODES, PQ_M)
             .as("adist"))
-      // salted two-phase top-RERANK (candidates per probe are corpus-sized)
-      val cand = Skew.saltedTopK(adc, col("probe_id"),
-          Seq(col("adist").asc, col("neighbor_id").asc), PQ_RERANK,
-          col("neighbor_id"))
+      // top-RERANK by ascending distance (candidates per probe are
+      // corpus-sized): the top-k aggregate over the negated distance
+      val cand = Skew.topK(adc.withColumn("adist", -col("adist")), "probe_id",
+          "adist", "neighbor_id", PQ_RERANK)
         .select(col("probe_id"), col("neighbor_id"))
       val e = Tables.embeddings(s, dir)
       val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
@@ -1490,57 +1513,14 @@ object Similarity {
     // same blocking discipline as the dedup band joins, with the same
     // documented recall trade (a true neighbor in another cell is
     // missed; more cells probed = more recall, same shape). The
-    // candidate join carries (id, cell) pairs only; scoring joins
-    // embeddings by id; ranking is the salted two-phase pattern.
+    // candidate join carries (id, cell) pairs only; the embeddings
+    // ride the cell assignment, and the ranking is the bounded top-k
+    // aggregate inside the per-cell join's stage.
     "ann_knn_graph" -> QueryDef.withOracle(
-      // oracle mirrors the r15 scale shape: the (pre-cast) embedding
-      // payload rides the materialized home relation and the cosine
-      // evaluates INSIDE the per-cell join. Top-3-per-src is THREE
-      // chained max() passes over a packed BIGINT key
-      // ((cos_fp + 2e6)·10^10 − dst_id: cos desc then dst asc, no
-      // ties possible) instead of a row_number window — at 100× the
-      // pair stream is 2.5e9 rows and a window over it spills >46 GB
-      // (OOM-killed the sf10d mirror), while a keyed max() streams in
-      // O(|src|) state; each pass re-streams the join (the decoded
-      // (cos, dst) come back EXACTLY: c/1e6 in double equals
-      // round(cos, 6) for every 6-decimal value).
+      // the decoded (cos, dst) come back EXACTLY from the packed key:
+      // c/1e6 in double equals round(cos, 6) for every 6-decimal value
       s"""WITH $ivfAssignSql,
-         |home AS MATERIALIZED (
-         |  SELECT r.vec_id, r.c_label,
-         |    list_transform(e.embedding, v -> CAST(v AS DOUBLE)) AS emb_d
-         |  FROM ranked r JOIN embeddings e USING (vec_id) WHERE r.rn = 1),
-         |m1 AS MATERIALIZED (
-         |  SELECT a.vec_id AS src_id,
-         |    max((CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id) AS k1
-         |  FROM home a JOIN home b
-         |    ON a.c_label = b.c_label AND a.vec_id <> b.vec_id
-         |  GROUP BY 1),
-         |m2 AS MATERIALIZED (
-         |  SELECT a.vec_id AS src_id,
-         |    max((CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id) AS k2
-         |  FROM home a JOIN home b
-         |    ON a.c_label = b.c_label AND a.vec_id <> b.vec_id
-         |  JOIN m1 ON m1.src_id = a.vec_id
-         |  WHERE (CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id < m1.k1
-         |  GROUP BY 1),
-         |m3 AS MATERIALIZED (
-         |  SELECT a.vec_id AS src_id,
-         |    max((CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id) AS k3
-         |  FROM home a JOIN home b
-         |    ON a.c_label = b.c_label AND a.vec_id <> b.vec_id
-         |  JOIN m2 ON m2.src_id = a.vec_id
-         |  WHERE (CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id < m2.k2
-         |  GROUP BY 1),
+         |$knnTop3Ctes,
          |u AS (
          |  SELECT src_id, k1 AS k, 1 AS rn FROM m1
          |  UNION ALL SELECT src_id, k2, 2 FROM m2
@@ -1572,14 +1552,10 @@ object Similarity {
       val b = assigned.select(col("c_label"), col("vec_id").as("dst_id"),
         col("embedding").as("d_emb"))
       val cos = round(Vectors.cosine(col("s_emb"), col("d_emb")), 6)
-      a.join(b, Seq("c_label"))
-        .filter(col("src_id") =!= col("dst_id"))
-        .select(col("src_id"), col("dst_id"), cos.as("cos_sim"))
-        .groupBy(col("src_id"))
-        .agg(graft.functions.Vectors.topkByKey(col("cos_sim"), col("dst_id"), 3).as("tk"))
-        .select(col("src_id"), posexplode(col("tk")).as(Seq("i", "e")))
-        .select(col("src_id"), col("e.id").as("dst_id"),
-          col("e.value").as("cos_sim"), (col("i") + 1).cast("int").as("rn"))
+      Skew.topK(a.join(b, Seq("c_label"))
+          .filter(col("src_id") =!= col("dst_id"))
+          .select(col("src_id"), col("dst_id"), cos.as("cos_sim")),
+        "src_id", "cos_sim", "dst_id", 3)
     },
 
     // ------------------------------------------------------------------
@@ -1590,54 +1566,18 @@ object Similarity {
     // LOF(p) = mean over p's neighbors o of lrd(o)/lrd(p), with
     // lrd = 1/mean reachability distance and reach(p,o) =
     // max(kdist(o), d(p,o)). Rides ann_knn_graph's k=3 cosine kNN
-    // (IVF-cell candidates, salted ranking, ×10⁶-snapped cosines), so
+    // (IVF-cell candidates, top-k aggregate, ×10⁶-snapped cosines), so
     // every distance is an EXACT ×10⁶ integer: kdist/reach stay
     // integers, lrd snaps once to a ×10⁹ long (k·10¹⁵/Σreach, dup
     // guard at Σ=0), and LOF divides the two snapped integer sums once
     // at output. Verdict LOF > 1.5. All joins are id-keyed; singleton
     // IVF cells drop out of the kNN base identically on both engines.
     "embedding_lof" -> QueryDef.withOracle(
-      // top-3 kNN base via the same r15 three-pass packed-key max()
-      // chain as ann_knn_graph's oracle (the windowed pair stream
-      // spills >46 GB at 100×); d_fp decodes from the packed key as
-      // 1e6 − (c − 2e6), identical to 1e6 − floor(cos·1e6 + 0.5)
+      // top-3 kNN base via ann_knn_graph's packed-key chain; d_fp
+      // decodes from the packed key as 1e6 − (c − 2e6), identical to
+      // 1e6 − floor(cos·1e6 + 0.5)
       s"""WITH $ivfAssignSql,
-         |home AS MATERIALIZED (
-         |  SELECT r.vec_id, r.c_label,
-         |    list_transform(e.embedding, v -> CAST(v AS DOUBLE)) AS emb_d
-         |  FROM ranked r JOIN embeddings e USING (vec_id) WHERE r.rn = 1),
-         |m1 AS MATERIALIZED (
-         |  SELECT a.vec_id AS src_id,
-         |    max((CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id) AS k1
-         |  FROM home a JOIN home b
-         |    ON a.c_label = b.c_label AND a.vec_id <> b.vec_id
-         |  GROUP BY 1),
-         |m2 AS MATERIALIZED (
-         |  SELECT a.vec_id AS src_id,
-         |    max((CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id) AS k2
-         |  FROM home a JOIN home b
-         |    ON a.c_label = b.c_label AND a.vec_id <> b.vec_id
-         |  JOIN m1 ON m1.src_id = a.vec_id
-         |  WHERE (CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id < m1.k1
-         |  GROUP BY 1),
-         |m3 AS MATERIALIZED (
-         |  SELECT a.vec_id AS src_id,
-         |    max((CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id) AS k3
-         |  FROM home a JOIN home b
-         |    ON a.c_label = b.c_label AND a.vec_id <> b.vec_id
-         |  JOIN m2 ON m2.src_id = a.vec_id
-         |  WHERE (CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-         |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-         |      - b.vec_id < m2.k2
-         |  GROUP BY 1),
+         |$knnTop3Ctes,
          |ku AS (
          |  SELECT src_id, k1 AS k FROM m1
          |  UNION ALL SELECT src_id, k2 FROM m2
@@ -1724,7 +1664,7 @@ object Similarity {
     // probe (vec_id < NPROBES, leave-one-out against the full corpus)
     // takes the majority label of its exact top-K cosine neighbors,
     // ties to the smallest label. Rides the shared exactTopK pipeline
-    // (broadcast probes × ONE corpus scan, salted two-phase ranking);
+    // (broadcast probes × ONE corpus scan, bounded top-K aggregate);
     // the vote adds only K×NPROBES-row joins and a probe-keyed argmax
     // (the lexicographic struct-min, no window). Deterministic → fully
     // oracled.
@@ -1826,9 +1766,7 @@ object Similarity {
           .join(e.select(col("vec_id").as("neighbor_id"),
             col("embedding").as("n_emb")), "neighbor_id")
           .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"))
-        val ivf = Skew.saltedTopK(scored, col("probe_id"), cosDesc, K,
-            col("neighbor_id"))
-          .select(col("probe_id"), col("neighbor_id"))
+        val ivf = cosTopK(scored).select(col("probe_id"), col("neighbor_id"))
         ex.join(ivf, Seq("probe_id", "neighbor_id"))
           .agg(count(lit(1)).as("total_hits"))
           .select(lit(p.toLong).as("nprobe"),
@@ -1846,8 +1784,8 @@ object Similarity {
     // class (always returns K, the correct semantics); POST-filter
     // takes the unfiltered global top-K and drops non-matching labels
     // (cheaper, returns ≤K — the recall you silently lose). Both arms
-    // ride the broadcast-probe × one-corpus-scan shape with salted
-    // two-phase ranking; the verdict row per probe counts what
+    // ride the broadcast-probe × one-corpus-scan shape with the
+    // bounded top-K aggregate; the verdict row per probe counts what
     // post-filtering kept. Deterministic → fully oracled.
     "ann_filtered_topk" -> QueryDef.withOracle(
       s"""WITH pre AS (
@@ -1889,9 +1827,7 @@ object Similarity {
           col("vec_id") =!= col("probe_id") && col("label") === col("p_label"))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
           cos.as("cos_sim"))
-      val pre = Skew.saltedTopK(allowed, col("probe_id"), cosDesc, K,
-          col("neighbor_id"))
-        .select(col("probe_id"), col("neighbor_id"))
+      val pre = cosTopK(allowed).select(col("probe_id"), col("neighbor_id"))
       // POST-filter arm: unfiltered global top-K, labels dropped after
       val lab = e.select(col("vec_id"), col("label"))
       val post = exactTopK(s, dir)

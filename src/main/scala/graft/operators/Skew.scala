@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.QueryDef
+import graft.functions.Vectors
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * across `nSalts` reducers. AQE's skew-join handles many cases at
   * runtime; explicit salting is for the pathological keys AQE can't
   * split (e.g. a single key holding >50% of rows, or skewed
-  * aggregations). `saltedTopK` is the same idea for a top-k window.
+  * aggregations). `topK` is the one top-k-per-group path.
   */
 object Skew {
 
@@ -31,24 +31,24 @@ object Skew {
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** The first `k` rows of each `part` group in `order`, numbered
-    * 1..k in column `rn`. A plain partitionBy(part) window sorts a
-    * whole group in one task, and AQE cannot split a skewed window
-    * partition the way it splits a join. So phase 1 ranks within
-    * (part, salt) cells, salt = hash(saltFrom) mod 64, and keeps each
-    * cell's local top-k; phase 2 ranks the ≤ 64×k survivors per group
-    * with the same order. When `order` is a total order within a
-    * group, `rn` equals the single-window row_number. */
-  def saltedTopK(df: DataFrame, part: Column, order: Seq[Column], k: Int,
-      saltFrom: Column): DataFrame = {
-    val wLocal = Window.partitionBy(part, col("salt")).orderBy(order: _*)
-    val wFinal = Window.partitionBy(part).orderBy(order: _*)
-    df.withColumn("salt", pmod(hash(saltFrom), lit(64)))
-      .withColumn("rn0", row_number().over(wLocal))
-      .filter(col("rn0") <= k)
-      .withColumn("rn", row_number().over(wFinal))
-      .filter(col("rn") <= k)
-      .drop("salt", "rn0")
+  /** The first `k` rows of each `part` group under (value DESC, id
+    * ASC), as (part, id, value, rn) with `rn` = 1..k: the rows
+    * `row_number() <= k` keeps. One bounded aggregate
+    * (plans/TopKByKey.scala) carries at most k pairs per (group,
+    * partition) through the exchange, so no task sorts a whole group
+    * however few or skewed the groups are. The id is a bigint or a
+    * string; the value travels as a double and comes back in its
+    * column's type. Values order as in Spark's sort (NaN largest,
+    * −0.0 = 0.0); rows with a null value or id are skipped. For an
+    * ascending order, negate the value before and after. */
+  def topK(df: DataFrame, part: String, value: String, id: String, k: Int): DataFrame = {
+    val t = df.schema
+    val idIn = if (t(id).dataType == StringType) col(id) else col(id).cast(LongType)
+    df.groupBy(col(part))
+      .agg(Vectors.topkByKey(col(value).cast(DoubleType), idIn, k).as("tk"))
+      .select(col(part), posexplode(col("tk")).as(Seq("i", "e")))
+      .select(col(part), col("e.id").cast(t(id).dataType).as(id),
+        col("e.value").cast(t(value).dataType).as(value), (col("i") + 1).as("rn"))
   }
 
   private val dec4 = DecimalType(18, 4)

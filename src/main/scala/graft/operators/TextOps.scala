@@ -409,12 +409,12 @@ object TextOps {
     // built once per row from a materialized token array (persist
     // barrier against lambda-inlined regexp re-evaluation), then one
     // shuffle on (lang, bigram) with map-side partial counts. The
-    // per-language top-10 is TopKByKeyStr (the q39 aggregate with a
-    // string id): ≤10 (n, bigram) pairs per (lang, partition) move
-    // through the final exchange — a row_number window partitioned by
-    // lang would instead sort EVERY distinct bigram of a language in
-    // one task (the §5 single-task-sort anti-pattern; it was also a 7×
-    // bench regression at sf0.1 before this rewrite).
+    // per-language top-10 is Skew.topK with a string id: ≤10
+    // (n, bigram) pairs per (lang, partition) move through the final
+    // exchange — a row_number window partitioned by lang would instead
+    // sort EVERY distinct bigram of a language in one task (the §5
+    // single-task-sort anti-pattern; it was also a 7× bench regression
+    // at sf0.1 before this rewrite).
     "text_ngram_freq" -> QueryDef.withOracle(
       s"""WITH t AS (
          |  SELECT lang, ${toksSql("text")} AS toks FROM documents),
@@ -438,15 +438,8 @@ object TextOps {
             i => concat_ws(" ",
               element_at(col("toks"), i + 1),
               element_at(col("toks"), i + 2)))).as("bigram"))
-      bigrams.groupBy(col("lang"), col("bigram"))
-        .agg(count(lit(1)).as("n"))
-        .groupBy(col("lang"))
-        .agg(graft.functions.Vectors.topkByStrKey(
-          col("n").cast(DoubleType), col("bigram"), 10).as("tk"))
-        .select(col("lang"), posexplode(col("tk")).as(Seq("i", "e")))
-        .select(col("lang"), col("e.id").as("bigram"),
-          col("e.value").cast(LongType).as("n"),
-          (col("i") + 1).cast(IntegerType).as("rn"))
+      Skew.topK(bigrams.groupBy(col("lang"), col("bigram"))
+        .agg(count(lit(1)).as("n")), "lang", "n", "bigram", 10)
     },
 
     // ------------------------------------------------------------------

@@ -310,16 +310,16 @@ object PlanAudit {
     // = groupBy(cell,pos) + groupBy(cell) + 1-row collapse — every one
     // a k×d-row bookkeeping move after map-side combine, never a
     // corpus-scale shuffle; consumers (topk/xcell) stack their own
-    // candidate-join + salted two-phase ranking exchanges on top
-    Map("dedup_embedding_xcell" -> 12, "ann_ivf_topk" -> 13,
+    // candidate-join + top-k aggregate exchanges on top
+    Map("dedup_embedding_xcell" -> 12, "ann_ivf_topk" -> 6,
       "ann_ivf_assign" -> 9,
       // PQ chains two codebook builds (each groupBy(sub,cell,pos) +
       // groupBy(sub,cell) + 1-row collapse over m×codes×dsub
       // bookkeeping rows), the per-vec code collapse, the probe-table
-      // collapse, the salted two-phase ADC ranking and the rerank
-      // joins — every exchange is either bookkeeping-bounded or the
-      // single corpus-linear code shuffle
-      "ann_pq_topk" -> 16,
+      // collapse, the ADC top-k aggregate and the rerank joins — every
+      // exchange is either bookkeeping-bounded or the single
+      // corpus-linear code shuffle
+      "ann_pq_topk" -> 11,
       "pipe_clean_corpus" -> 8, "q28_median_exact" -> 8,
       "graph_pagerank" -> 26, "graph_triangles" -> 14,
       "ev_peak_concurrency" -> 12, "etl_chain_index" -> 9,
@@ -374,10 +374,10 @@ object PlanAudit {
       "ev_dau_stickiness" -> 8,
       // knn_graph stacks the IVF build (ann_ivf_assign's bookkeeping
       // exchanges), the cell-mate candidate join, two embedding payload
-      // joins and the salted two-phase ranking — same budget class as
+      // joins and the top-k aggregate — same budget class as
       // ann_ivf_topk
-      "ann_knn_graph" -> 13,
-      // LOF stacks the full knn_graph pipeline (13) + the kdist agg,
+      "ann_knn_graph" -> 11,
+      // LOF stacks the full knn_graph pipeline (11) + the kdist agg,
       // reach/lrd joins and the final assembly — every added exchange
       // moves the 3-per-src kNN relation or the per-node kd/lrd rows,
       // never the corpus. The COUNT is audit-order-sensitive: when the
@@ -398,19 +398,19 @@ object PlanAudit {
       // run (persisted at Similarity.scala's embedding_lof), so the
       // string-count growth is print duplication, not recomputation.
       "embedding_lof" -> 24,
-      // recall eval stacks the full ann_ivf_topk pipeline (13) on the
-      // exact ranking (2) plus the K×NPROBES-row compare joins — every
+      // recall eval stacks the full ann_ivf_topk pipeline (6) on the
+      // exact ranking (1) plus the K×NPROBES-row compare joins — every
       // added exchange rides the two top-K outputs, never the corpus
-      "ann_recall_eval" -> 18,
-      // both filter arms rank via the salted two-phase pattern (2
-      // windows each) + the label join and the K×NPROBES-row compare
-      // join — exchanges carry top-K outputs, never the corpus
-      "ann_filtered_topk" -> 9,
+      "ann_recall_eval" -> 9,
+      // one top-k aggregate exchange per filter arm; the label and
+      // compare joins move top-K outputs, never the corpus (2
+      // measured at sf0.001)
+      "ann_filtered_topk" -> 2,
       // the sweep runs the recall-eval shape TWICE (nprobe 1 and 2)
       // against ONE shared IVF build and ONE exact ranking — the
       // second arm re-prints the persisted build's exchanges; each
       // arm's own moves are candidate-thin compare joins
-      "ann_nprobe_sweep" -> 30,
+      "ann_nprobe_sweep" -> 11,
       // estimator eval stacks the candidate build (bands + cap, the
       // dedup_ngram_jaccard budget) + the signature agg + the doc-id
       // keyed compare joins — all candidate-thin after the one
@@ -521,10 +521,10 @@ object PlanAudit {
       // one corpus (type, day) agg + bookkeeping) + its own per-type
       // total and entropy aggs on the 8·|types|-row relation
       "ev_spectral_entropy" -> 9,
-      // tier 1's two salted ranking exchanges + the one probe_id
-      // exchange that gathers each probe's ≤MMR_CAND-entry pool; the
-      // greedy steps and both C(5,2) pair sums run inside that row
-      "ann_diversity_eval" -> 3,
+      // tier 1's top-k aggregate exchange + the one probe_id exchange
+      // that gathers each probe's ≤MMR_CAND-entry pool; the greedy
+      // steps and both C(5,2) pair sums run inside that row
+      "ann_diversity_eval" -> 2,
       // ONE corpus scan to the |months|×|flags| relation; the k /
       // complete-block / within-block-rank self-join / rank-sum / tie
       // aggregates stack ~13 further exchanges, all ≤|months|×|flags|
@@ -598,94 +598,19 @@ object PlanAudit {
 
   // ops allowed to broadcast a filter-bounded fact subset by intent
   // (populated from the audited plans; each must carry a justification):
-  // - dedup_decontaminate / pipe_clean_corpus: the broadcast side is
-  //   the EVAL-SUITE shingle set (doc_id-bounded by construction — an
-  //   evaluation benchmark is fixed-size however big the corpus is)
-  // - ann_topk_exact / ann_lsh / ann_quantized_topk / ann_refine_rerank
-  //   / ann_hard_negatives: the broadcast is the PROBE SET
-  //   (filter(vec_id < NPROBES) — a fixed-size query workload, not a
-  //   corpus fraction); the aggregate-detection can't see this because
-  //   the filter rides a cached corpus relation
-  // - graph_degree_stats / graph_triangles: the broadcast is the
-  //   >1024-member hot-bucket relation from Dedup.capBuckets — a
-  //   HashAggregate-bounded output that prints opaquely once the shared
-  //   bands cache is materialized by an earlier plan build
-  // - graph_contamination_bfs: the broadcast side is the EVAL-SUITE
-  //   shingle set (same bounded-by-construction argument as
-  //   dedup_decontaminate), plus the persisted-edge cache-print
-  //   artifact below
-  // - graph_common_neighbors: its persisted edge relation registers in
-  //   pass 1 (normal threshold), where STATS chose to broadcast the
-  //   sf-sized embeddings side of the label equi-join; pass 2 prints
-  //   that captured subtree from the cache. The operator requests no
-  //   broadcast (verified: the plan built directly under threshold -1
-  //   has zero BroadcastExchange nodes), and at 100 TB stats would not
-  //   broadcast a corpus-scale side.
-  // - graph_assortativity: same cache-print artifact as
-  //   graph_common_neighbors — its persisted edge relation registers
-  //   under stats that broadcast the sf-sized embeddings side of
-  //   dedup_embedding's label equi-join; the operator itself requests
-  //   no broadcast.
-  // - graph_modularity: same cache-print artifact via lpaArtifacts'
-  //   persisted near-dup edge relation (the graph_contamination_bfs
-  //   argument); the operator's only requested broadcast is the 1-row
-  //   aggregate-bounded edge-count anchor.
-  // - pipe_dedup_funnel: same cache-print artifact — the shared bands/
-  //   candidate cache and the operator's persisted flag relation
-  //   register under pass-1 stats and print opaquely in pass 2; the
-  //   only bounded broadcast the operator consumes is the
-  //   distinct-bounded near-dup-removal id set.
+  // the broadcast is the PROBE SET (filter(vec_id < NPROBES) over the
+  // embeddings scan or the cached int8 corpus — a fixed-size query
+  // workload, not a corpus fraction), which the aggregate-detection
+  // cannot see because a filter is not a bounding node. ann_mmr_rerank
+  // and ann_diversity_eval also broadcast the ≤MMR_CAND×NPROBES tier-1
+  // survivors to fetch their codes; ann_range_search filters by a
+  // range instead of ranking.
   private val factBroadcastAllowed: Set[String] =
-    Set("dedup_decontaminate", "pipe_clean_corpus",
-      "ann_topk_exact", "ann_l2_topk", "ann_mips_topk",
+    Set("ann_topk_exact", "ann_l2_topk", "ann_mips_topk",
       "ann_recall_eval", "ann_nprobe_sweep", "ann_filtered_topk",
-      "ann_lsh",
-      "ann_quantized_topk", "ann_refine_rerank",
-      "ann_hard_negatives", "graph_degree_stats", "graph_triangles",
-      "graph_common_neighbors", "graph_contamination_bfs",
-      "graph_assortativity", "graph_modularity", "pipe_dedup_funnel",
-      // the ann_topk_exact argument: the broadcast is the fixed-size
-      // probe set (vec_id < NPROBES), invisible to the
-      // aggregate-detection behind the cached corpus relation
-      "ann_knn_classify",
-      // the graph_degree_stats/graph_triangles argument: the broadcast
-      // is the >1024-member hot-bucket relation from Dedup.capBuckets,
-      // HashAggregate-bounded but printing opaquely once the shared
-      // bands cache is materialized by an earlier plan build
-      "graph_clustering_coeff",
-      // the ann_topk_exact argument: the NPROBES-row probe broadcast
-      // over the corpus scan (range filter instead of ranking)
-      "ann_range_search",
-      // the graph_common_neighbors argument: the only requested
-      // broadcasts are the ≤4096 distinct-bounded bit/wedge relations,
-      // printing opaquely behind the shared embedding near-dup cache
-      "graph_link_jaccard",
-      // the ann_quantized_topk argument: tier 1's broadcast is the
-      // fixed-size NPROBES probe set over the cached int8 corpus, and
-      // the pool join's is the ≤MMR_CAND×NPROBES tier-1 survivors
-      "ann_mmr_rerank", "ann_diversity_eval",
-      // the graph_common_neighbors argument: both persist the IVF
-      // home-assignment ⋈ embeddings relation in pass 1 (where stats
-      // broadcast the sf-sized embeddings side); pass 2 prints that
-      // captured subtree from the cache. Neither operator requests a
-      // corpus broadcast — their own broadcasts are the
-      // aggregate-bounded centroid/anchor relations.
-      "dedup_semdedup", "embedding_cluster_eval",
-      // the graph_degree_stats/graph_triangles argument: the only
-      // broadcast is the >1024-member hot-bucket relation from
-      // Dedup.capBuckets, printing opaquely behind the shared bands
-      // cache
-      "graph_rich_club",
-      // the graph_common_neighbors argument: its persisted embedding
-      // near-dup edge relation registers under pass-1 stats (which
-      // broadcast the sf-sized embeddings side of the label
-      // equi-join); the operator itself requests no corpus broadcast
-      "graph_betweenness",
-      // the same argument for the other two consumers of persisted
-      // embedding-derived relations: square_count's edge persist and
-      // LOF's knn persist register under pass-1 stats; neither
-      // operator requests a corpus broadcast of its own
-      "graph_square_count", "embedding_lof")
+      "ann_lsh", "ann_quantized_topk", "ann_refine_rerank",
+      "ann_hard_negatives", "ann_knn_classify", "ann_range_search",
+      "ann_mmr_rerank", "ann_diversity_eval")
 
   /** True when a BroadcastExchange subtree in `plan` scans one of the
     * corpus-scale tables with NO aggregate/limit between the exchange
@@ -727,7 +652,10 @@ object PlanAudit {
     *
     * Two passes: the standard checks under normal conf, then the
     * unbounded-fact-broadcast check with stats broadcasts disabled
-    * (threshold -1) so only operator-requested broadcasts remain.
+    * (threshold -1) so only operator-requested broadcasts remain. The
+    * cache is cleared before each pass-2 build: a relation cached in
+    * pass 1 would print the plan it captured under the normal
+    * threshold, stats broadcasts included.
     */
   def auditAll(spark: SparkSession, dir: String,
       report: String => Unit = _ => ()): Seq[(String, Seq[String])] = {
@@ -751,6 +679,7 @@ object PlanAudit {
         graft.SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
           if (factBroadcastAllowed(name)) None
           else try {
+            spark.catalog.clearCache()
             val plan = fn(spark, dir).queryExecution.executedPlan.toString
             if (unboundedFactBroadcast(plan)) {
               report(s"[audit] $name: FACT_BROADCAST"); Some(name -> Seq("FACT_BROADCAST"))

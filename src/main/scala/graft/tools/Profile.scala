@@ -13,11 +13,13 @@ import org.apache.spark.sql.GraftSqlBridge
   * with the pass's task time (Bench's `queries_task` definition), jobs,
   * stages and tasks, then its completed stages sorted by run time —
   * the "which operator is eating the task time" view.
-  * Usage: runMain graft.tools.Profile <q1,q2,...> [sfDir]
+  * Usage: runMain graft.tools.Profile <q1,q2,...|ALL> [sfDir]
   */
 object Profile {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
+    val names =
+      if (args(0) == "ALL") graft.SparkEntry.queries.keys.toSeq.sorted
+      else args(0).split(",").toSeq
     val dir = if (args.length > 1) args(1) else
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.GraftSession.local()

@@ -57,7 +57,7 @@ object ScaleStress {
         .agg(sum(col("quantity").cast(DecimalType(18, 2))).as("sq"))
         .count()
     }
-    time("window topk per group (q7 shape)") {
+    time("window topk per group (plain row_number)") {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy(col("suppkey")).orderBy(col("price").desc, col("orderkey").asc)
       fact.withColumn("rn", row_number().over(w)).filter(col("rn") <= 10).count()
@@ -224,20 +224,15 @@ object ScaleStress {
       .persist()
     qvecs.count()
     stressTime("int8 brute-force ANN scan (1M x 64-d, 4 probes)", nVec) {
-      import org.apache.spark.sql.expressions.Window
       val probes = qvecs.filter(col("vec_id") < 4)
         .select(col("vec_id").as("probe_id"), col("qv").as("pqv"), col("qn").as("pqn"))
-      val w = Window.partitionBy(col("probe_id"), col("salt"))
-        .orderBy(col("cos_q").desc, col("neighbor_id").asc)
-      qvecs.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
+      val scored = qvecs.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
         .withColumn("qdot",
           graft.functions.Vectors.quantizedDot(col("pqv"), col("qv")))
         .select(col("probe_id"), col("vec_id").as("neighbor_id"),
           (col("qdot").cast(DoubleType) /
-            sqrt(greatest(col("pqn") * col("qn"), lit(1L)).cast(DoubleType))).as("cos_q"),
-          pmod(hash(col("vec_id")), lit(64)).as("salt"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 5)
-        .count()
+            sqrt(greatest(col("pqn") * col("qn"), lit(1L)).cast(DoubleType))).as("cos_q"))
+      graft.operators.Skew.topK(scored, "probe_id", "cos_q", "neighbor_id", 5).count()
     }
 
     // Z-order bit interleave: row-local 16-bit math over 20M rows.
@@ -404,20 +399,17 @@ object ScaleStress {
       fact.withColumn("rn", row_number().over(w)).filter(col("rn") <= 10).count()
     }
     stressTime("topk/group AGGREGATE TopKByKey (100 groups, k=10)", n) {
-      fact.groupBy(col("suppkey"))
-        .agg(graft.functions.Vectors.topkByKey(col("price"), col("orderkey"), 10).as("tk"))
-        .select(col("suppkey"), explode(col("tk"))).count()
+      graft.operators.Skew.topK(fact, "suppkey", "price", "orderkey", 10).count()
     }
 
-    // --- IVF probe ranking under a hot cell: salted vs naive window ---
+    // --- IVF probe ranking under a hot cell: top-k aggregate vs naive window ---
     // ann_ivf_topk's final phase ranks each probe's candidate list.
     // With a skewed corpus ONE cell can hold half the vectors, so a
     // probe probing that cell owns ~corpus/2 candidate rows — a plain
     // partitionBy(probe_id) window sorts that whole list in ONE task
     // (the round-5 verdict's scale-killer; per-probe rows grow with
-    // the corpus, the task count doesn't). The salted two-phase plan
-    // bounds per-task sort rows by cands/salts and the final window
-    // input by salts × k per probe — both independent of cell size.
+    // the corpus, the task count doesn't). The top-k aggregate keeps
+    // ≤k pairs per (probe, partition), independent of cell size.
     val nIvfProbes = 4L
     val nCand = math.max(n / 16, 250000L) // each probe hits the hot cell
     val pairs = spark.range(nIvfProbes * nCand).select(
@@ -432,11 +424,9 @@ object ScaleStress {
         .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
       pairs.withColumn("rn", row_number().over(w)).filter(col("rn") <= 5).count()
     }
-    stressTime(s"IVF hot-cell ranking SALTED two-phase (64 salts, k=5)",
+    stressTime(s"IVF hot-cell ranking AGGREGATE TopKByKey (k=5)",
         nIvfProbes * nCand) {
-      graft.operators.Skew.saltedTopK(pairs, col("probe_id"),
-        Seq(col("cos_sim").desc, col("neighbor_id").asc), 5, col("neighbor_id"))
-        .count()
+      graft.operators.Skew.topK(pairs, "probe_id", "cos_sim", "neighbor_id", 5).count()
     }
     pairs.unpersist()
 

@@ -359,7 +359,8 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("IVF-probed ANN joins candidates by cell with hash joins, not loops") {
-    val p = plan("ann_ivf_topk")
+    val qe = SparkEntry.queries("ann_ivf_topk")(spark, sf).queryExecution
+    val p = qe.executedPlan.toString
     // the intended corpus × broadcast-centroid scoring (a nested loop)
     // lives inside the SHARED cached cell build; the candidate/payload
     // joins outside it must be equi-joins and never a cartesian
@@ -367,13 +368,12 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("InMemoryTableScan") || p.contains("InMemoryRelation"),
       "cell assignments should be shared via the persisted relation")
     assert("BroadcastHashJoin".r.findAllIn(p).nonEmpty)
-    // final ranking must be the salted two-phase pattern: a local
-    // window partitioned by (probe_id, salt) ahead of the bounded
-    // final per-probe window — never one task sorting a whole
-    // 2-cell candidate union
-    assert(p.contains("salt"), "salted pre-ranking window missing")
-    assert("row_number".r.findAllIn(p).length >= 2,
-      "expected two-phase (local + final) ranking windows")
+    // final ranking is the bounded top-k aggregate, never a window
+    // over the 10-value probe_id: no task sorts a whole 2-cell
+    // candidate union
+    import org.apache.spark.sql.execution.window.WindowExec
+    assert(qe.sparkPlan.collect { case w: WindowExec => w }.isEmpty, p.take(500))
+    assert(p.contains("graft_topk_by_key"), "top-k aggregate missing")
   }
 
   test("bloom semi-join reduction prunes the fact scan and stays exact") {
@@ -452,14 +452,18 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("distributed-rank queries never sort a whole group in one task") {
     // q7/q34/q28 group on 3-5-value keys; a window partitioned ONLY by
-    // that key funnels the whole fact table into as many tasks. The
-    // rewrites salt/range-bucket the partition key; any remaining
-    // single-key window must consume bounded input (a top-k filter or a
+    // that key funnels the whole fact table into as many tasks. q7
+    // ranks with the bounded top-k aggregate and no window at all. q34
+    // and q28 range-bucket the partition key; any remaining single-key
+    // window must consume bounded input (a top-k filter or a
     // pre-aggregated tiny child), never the raw scan.
     import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.window.WindowExec
-    for (q <- Seq("q7_window_topk", "q34_rank_family", "q28_median_exact")) {
+    val q7 = SparkEntry.queries("q7_window_topk")(spark, sf).queryExecution.sparkPlan
+    assert(q7.collect { case w: WindowExec => w }.isEmpty, s"q7 has a window:\n$q7")
+    assert(q7.toString.contains("graft_topk_by_key"), s"q7: top-k aggregate missing:\n$q7")
+    for (q <- Seq("q34_rank_family", "q28_median_exact")) {
       val phys = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
       val wins = phys.collect { case w: WindowExec => w }
       assert(wins.exists(_.partitionSpec.size >= 2),
@@ -635,35 +639,6 @@ class BottomKSampleSpec extends AnyFunSuite {
       .agg(graft.functions.Vectors.bottomkSample(col("id"), 10).as("ids"))
       .head().getSeq[Long](1)
     assert(got.toSet == Set(1L, 2L, 3L))
-  }
-}
-
-class TopKByKeyStrSpec extends AnyFunSuite {
-  import SparkTestSession._
-
-  test("string-keyed top-k is invariant under repartitioning (merge correctness)") {
-    val docs = graft.sources.Tables.documents(spark, sf)
-    def top(parts: Int): Map[String, Seq[(String, Double)]] =
-      docs.repartition(parts)
-        .groupBy(col("source"))
-        .agg(graft.functions.Vectors.topkByStrKey(col("n_chars").cast("double"), col("lang"), 3).as("tk"))
-        .collect().map(r => r.getString(0) ->
-          r.getSeq[org.apache.spark.sql.Row](1).map(e =>
-            e.getString(0) -> e.getDouble(1))).toMap
-    val a = top(1)
-    val b = top(17)
-    assert(a == b)
-  }
-
-  test("ties break by binary string order, ascending") {
-    import spark.implicits._
-    val tiny = Seq(("g", 5.0, "bb"), ("g", 5.0, "aa"), ("g", 5.0, "cc"),
-      ("g", 9.0, "zz")).toDF("g", "v", "id")
-    val got = tiny.groupBy(col("g"))
-      .agg(graft.functions.Vectors.topkByStrKey(col("v"), col("id"), 3).as("tk"))
-      .selectExpr("transform(tk, e -> e.id) AS ids")
-      .head().getSeq[String](0)
-    assert(got == Seq("zz", "aa", "bb"))
   }
 }
 

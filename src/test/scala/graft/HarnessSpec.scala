@@ -14,7 +14,7 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("the shared session carries GraftExtensions' injected functions") {
     val names = GraftExtensions.functions.map(_.name)
-    assert(names.size == 20 && names.distinct == names)
+    assert(names.size == 19 && names.distinct == names)
     for (f <- names)
       assert(spark.catalog.functionExists(f), s"$f is not registered")
   }
@@ -140,9 +140,14 @@ class MainsGuardSpec extends AnyFunSuite {
     assert(hits(Pattern.quote("year(l_shipdate) AS y,")) == owner)
   }
 
-  test("the salted two-phase top-k is written once, in Skew") {
-    assert(hits(Pattern.quote("""withColumn("rn0", row_number()""")) ==
+  test("top-k per group is written once") {
+    // Skew.topK is the one caller of the native aggregate's helper, and
+    // no salted two-phase window is left beside it
+    assert(hits(Pattern.quote("Vectors.topkByKey(")) ==
       Seq("graft/operators/Skew.scala" -> 1))
+    assert(hits(Pattern.quote("""call_function("graft_topk_by_key"""")) ==
+      Seq("graft/functions/Vectors.scala" -> 1))
+    assert(hits(Pattern.quote("""withColumn("rn0", row_number()""")).isEmpty)
   }
 
   test("the 2×12 moving-average chain is written once per engine, in Etl") {

@@ -104,22 +104,54 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("TopKByKey == reference sort-take under (value desc, id asc) (randomized)") {
+    import graft.operators.Skew
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    // duplicate-heavy values exercise the id tiebreak; k spans under-
-    // and over-filled buffers
-    val rowsGen = Gen.chooseNum(0, 60).flatMap(n =>
-      Gen.listOfN(n, Gen.chooseNum(0, 9)).map(_.zipWithIndex))
-    val cases = Gen.listOfN(12, Gen.zip(rowsGen, Gen.chooseNum(1, 8))).sample.get
-    cases.foreach { case (rows, k) =>
-      val df = rows.map { case (v, id) => (id.toLong, v.toDouble) }.toDF("id", "v")
-      val got = df
-        .agg(graft.functions.Vectors.topkByKey(col("v"), col("id"), k))
-        .head().getSeq[org.apache.spark.sql.Row](0)
-        .map(r => (r.getLong(0), r.getDouble(1))).toList
-      val want = rows.map { case (v, id) => (id.toLong, v.toDouble) }
-        .sortBy { case (id, v) => (-v, id) }.take(k)
-      assert(got == want, s"rows=${rows.size} k=$k")
+    // (g, id, value bits, rn): bits, so that −0.0 ≠ 0.0 and NaN == NaN
+    def rows(df: DataFrame, id: String): Seq[(String, String, Long, Int)] =
+      df.select(col("g"), col(id).cast("string"), col("v"), col("rn")).collect()
+        .map(r => (r.getString(0), r.getString(1),
+          java.lang.Double.doubleToLongBits(r.getDouble(2)), r.getInt(3)))
+        .toSeq.sorted
+    // Skew.topK against the row_number() <= k reference; ascending
+    // negates the value before and after
+    def check(df: DataFrame, id: String, k: Int, asc: Boolean = false): Unit = {
+      val order = if (asc) col("v").asc else col("v").desc
+      val want = df.withColumn("rn",
+          row_number().over(Window.partitionBy(col("g")).orderBy(order, col(id).asc)))
+        .filter(col("rn") <= k)
+      val got =
+        if (asc) Skew.topK(df.withColumn("v", -col("v")), "g", "v", id, k)
+          .withColumn("v", -col("v"))
+        else Skew.topK(df, "g", "v", id, k)
+      assert(rows(got, id) == rows(want, id), s"id=$id k=$k asc=$asc")
     }
+    // duplicate-heavy values exercise the id tiebreak, ±0.0 must tie
+    // and NaN must rank first; string ids need binary UTF-8 order
+    // (😀 sorts after ﬀ there, before it in UTF-16); k spans under-
+    // and over-filled buffers
+    val value = Gen.frequency(6 -> Gen.chooseNum(-3, 3).map(_.toDouble),
+      2 -> Gen.oneOf(0.0, -0.0), 1 -> Gen.const(Double.NaN))
+    val row = Gen.zip(Gen.oneOf("a", "b", "c"), value,
+      Gen.oneOf("", "Z", "a", "é", "ﬀ", "😀"))
+    val cases = Gen.listOfN(12, Gen.zip(
+      Gen.chooseNum(0, 60).flatMap(Gen.listOfN(_, row)), Gen.chooseNum(1, 8))).sample.get
+    cases.foreach { case (rs, k) =>
+      val df = rs.zipWithIndex.map { case ((g, v, p), i) => (g, i.toLong, p + i, v) }
+        .toDF("g", "id", "sid", "v")
+      check(df, "id", k)
+      check(df, "sid", k)
+      // NaN left out: negation keeps it largest, an ascending sort puts it last
+      check(df.filter(!isnan(col("v"))), "id", k, asc = true)
+    }
+    // string ids under any partitioning, with duplicate (value, id) pairs
+    val docs = graft.sources.Tables.documents(spark, sf).select(col("source").as("g"),
+      col("lang").as("sid"), col("n_chars").cast("double").as("v"))
+    for (parts <- Seq(1, 17)) check(docs.repartition(parts), "sid", 3)
+    // ties break by binary string order, ascending: zz, aa, bb
+    check(Seq(("g", 5.0, "bb"), ("g", 5.0, "aa"), ("g", 5.0, "cc"), ("g", 9.0, "zz"))
+      .toDF("g", "v", "sid"), "sid", 3)
   }
 }
 

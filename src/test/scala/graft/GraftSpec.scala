@@ -642,6 +642,35 @@ class BottomKSampleSpec extends AnyFunSuite {
   }
 }
 
+class TopKByKeyStrSpec extends AnyFunSuite {
+  import SparkTestSession._
+
+  test("string-keyed top-k is invariant under repartitioning (merge correctness)") {
+    val docs = graft.sources.Tables.documents(spark, sf)
+    def top(parts: Int): Map[String, Seq[(String, Double)]] =
+      docs.repartition(parts)
+        .groupBy(col("source"))
+        .agg(graft.functions.Vectors.topkByKey(col("n_chars").cast("double"), col("lang"), 3).as("tk"))
+        .collect().map(r => r.getString(0) ->
+          r.getSeq[org.apache.spark.sql.Row](1).map(e =>
+            e.getString(0) -> e.getDouble(1))).toMap
+    val a = top(1)
+    val b = top(17)
+    assert(a == b)
+  }
+
+  test("ties break by binary string order, ascending") {
+    import spark.implicits._
+    val tiny = Seq(("g", 5.0, "bb"), ("g", 5.0, "aa"), ("g", 5.0, "cc"),
+      ("g", 9.0, "zz")).toDF("g", "v", "id")
+    val got = tiny.groupBy(col("g"))
+      .agg(graft.functions.Vectors.topkByKey(col("v"), col("id"), 3).as("tk"))
+      .selectExpr("transform(tk, e -> e.id) AS ids")
+      .head().getSeq[String](0)
+    assert(got == Seq("zz", "aa", "bb"))
+  }
+}
+
 class SqlApiSpec extends AnyFunSuite {
   import SparkTestSession._
 

@@ -145,13 +145,6 @@ class PropertySpec extends AnyFunSuite {
       // NaN left out: negation keeps it largest, an ascending sort puts it last
       check(df.filter(!isnan(col("v"))), "id", k, asc = true)
     }
-    // string ids under any partitioning, with duplicate (value, id) pairs
-    val docs = graft.sources.Tables.documents(spark, sf).select(col("source").as("g"),
-      col("lang").as("sid"), col("n_chars").cast("double").as("v"))
-    for (parts <- Seq(1, 17)) check(docs.repartition(parts), "sid", 3)
-    // ties break by binary string order, ascending: zz, aa, bb
-    check(Seq(("g", 5.0, "bb"), ("g", 5.0, "aa"), ("g", 5.0, "cc"), ("g", 9.0, "zz"))
-      .toDF("g", "v", "sid"), "sid", 3)
   }
 }
 

@@ -2,7 +2,7 @@ package graft
 
 import scala.reflect.ClassTag
 
-import graft.plans.{AdcDistance, AsofJoinStrategy, BloomMightContain, BottomKSample, CdcChunks, CosineSimilarity, FloatDot, GramSketch, HeavyHittersSketch, HyperplaneDot, KllQuantileSketch, KmvDistinctSketch, L2Distance, NearestPqCode, QuantizedDot, SortedLongIntersectCount, TextRankTop3, ThresholdLevenshtein, TopCellsByCos, TopKByKey, TopPartners}
+import graft.plans.{AdcDistance, AsofJoinStrategy, BloomMightContain, CdcChunks, GramSketch, HeavyHittersSketch, KllQuantileSketch, KmvDistinctSketch, NearestPqCode, TextRankTop3, ThresholdLevenshtein, TopCellsByCos, TopKByKey, TopPartners, VectorExpression, VectorKernel}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -57,18 +57,10 @@ object GraftExtensions {
       exprs => build(new Args(name, exprs)))
 
   /** Every graft native function, the table [[GraftExtensions]] injects. */
-  val functions: Seq[NativeFunction] = Seq(
-    fn[CosineSimilarity]("graft_cosine")(a => CosineSimilarity(a(0), a(1))),
-    fn[HyperplaneDot]("graft_dot")(a => HyperplaneDot(a(0), a(1))),
-    fn[L2Distance]("graft_l2")(a => L2Distance(a(0), a(1))),
-    fn[FloatDot]("graft_fdot")(a => FloatDot(a(0), a(1))),
-    fn[SortedLongIntersectCount]("graft_sorted_intersect_count")(a =>
-      SortedLongIntersectCount(a(0), a(1))),
+  val functions: Seq[NativeFunction] = VectorKernel.all.map(k =>
+    fn[VectorExpression](k.name)(a => VectorExpression(k, a(0), a(1)))) ++ Seq(
     fn[BloomMightContain]("graft_bloom_might_contain")(a =>
       BloomMightContain(a(0), a(1))),
-    fn[QuantizedDot]("graft_quantized_dot")(a => QuantizedDot(a(0), a(1))),
-    fn[BottomKSample]("graft_bottomk_sample")(a =>
-      BottomKSample(a(0), a.int(1)).toAggregateExpression()),
     fn[HeavyHittersSketch]("graft_heavy_hitters")(a =>
       HeavyHittersSketch(a(0), a.int(1), a.int(2)).toAggregateExpression()),
     fn[KmvDistinctSketch]("graft_kmv_minhashes")(a =>

@@ -68,6 +68,17 @@ object GraftSession {
     spark
   }
 
+  /** The session conf `key` as a positive int, `default` when unset.
+    * A non-number or a value below 1 throws IllegalArgumentException
+    * here, where the knob is read. */
+  def positiveInt(s: SparkSession, key: String, default: Int): Int =
+    s.conf.getOption(key).fold(default) { v =>
+      val n = v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive int, got '$v'"))
+      require(n > 0, s"$key must be positive, got $n")
+      n
+    }
+
   private val CheckpointDirKey = "spark.graft.checkpoint.dir"
 
   // Conf value last handed to setCheckpointDir, per SparkContext. The

@@ -31,11 +31,6 @@ object Vectors {
   def fdot(a: Column, b: Column): Column =
     call_function("graft_fdot", a, b)
 
-  /** Deterministic bottom-k-by-hash sample aggregate over a bigint id
-    * column: returns the k sampled ids as a sorted array. */
-  def bottomkSample(id: Column, k: Int): Column =
-    call_function("graft_bottomk_sample", id, lit(k))
-
   /** Mergeable Misra-Gries heavy-hitters aggregate over a string
     * column: top-k items as array<struct<token, est_count>>, counts
     * underestimating by at most N/capacity. */

@@ -257,11 +257,12 @@ object Etl {
     },
 
     // ------------------------------------------------------------------
-    // Reproducible per-group sampling via the custom BottomKSample
-    // TypedImperativeAggregate: k docs per source, identical on any
-    // partitioning/engine (min-k over an arithmetic mix is a
-    // semilattice). The oracle replicates the sample with a plain
-    // window over the same mix.
+    // Reproducible per-group sampling: the k docs per source with the
+    // smallest arithmetic mix (ties by doc_id), identical on any
+    // partitioning/engine (min-k over a deterministic key is a
+    // semilattice). Skew.topK ranks the negated mix, which is exact in
+    // its double value (every mix is below 2^53). The oracle replicates
+    // the sample with a plain window over the same mix.
     "etl_sample_per_source" -> QueryDef.withOracle(
       """SELECT source, doc_id,
         |  (doc_id * 2654435761) % 1000000007 AS mix_key
@@ -271,12 +272,10 @@ object Etl {
         |      ORDER BY (doc_id * 2654435761) % 1000000007 ASC, doc_id ASC) AS rn
         |  FROM documents)
         |WHERE rn <= 8""".stripMargin) { (s, dir) =>
-      import graft.functions.Vectors
-      Tables.documents(s, dir)
-        .groupBy(col("source"))
-        .agg(Vectors.bottomkSample(col("doc_id"), 8).as("ids"))
-        .select(col("source"), explode(col("ids")).as("doc_id"))
-        .withColumn("mix_key", (col("doc_id") * lit(2654435761L)) % 1000000007L)
+      val mix = (col("doc_id") * lit(2654435761L)) % 1000000007L
+      Skew.topK(Tables.documents(s, dir).withColumn("neg_mix", -mix),
+          "source", "neg_mix", "doc_id", 8)
+        .select(col("source"), col("doc_id"), (-col("neg_mix")).as("mix_key"))
     },
 
     // ------------------------------------------------------------------

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDef
+import graft.{GraftSession, QueryDef}
 import graft.functions.Vectors
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -268,15 +268,7 @@ object Similarity {
     * paths never set the conf, so they always run the replayable
     * default. */
   private[graft] def kcellsOf(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.ivf.cells") match {
-      case None => KCELLS
-      case Some(v) =>
-        val k = v.trim.toIntOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"spark.graft.ivf.cells must be a positive int, got '$v'"))
-        require(k > 0, s"spark.graft.ivf.cells must be positive, got $k")
-        k
-    }
+    GraftSession.positiveInt(s, "spark.graft.ivf.cells", KCELLS)
 
   /** Session-resolved Lloyd TRAINING sample modulus (the SCALING.md §3
     * sampled-centroid knob): when S > 1, the k-means training passes
@@ -290,15 +282,7 @@ object Similarity {
     * paths never set the conf, so the default (1 = train on
     * everything) keeps the build bit-replayable by the DuckDB oracle. */
   private[graft] def trainModOf(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.ivf.train.mod") match {
-      case None => 1
-      case Some(v) =>
-        val m = v.trim.toIntOption.getOrElse(
-          throw new IllegalArgumentException(
-            s"spark.graft.ivf.train.mod must be a positive int, got '$v'"))
-        require(m > 0, s"spark.graft.ivf.train.mod must be positive, got $m")
-        m
-    }
+    GraftSession.positiveInt(s, "spark.graft.ivf.train.mod", 1)
 
   /** Fixed Lloyd refinement rounds (centroid rebuilds). Deterministic
     * and small — the build is reproducible, not convergence-chased. */

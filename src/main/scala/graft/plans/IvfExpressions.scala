@@ -19,8 +19,9 @@ import org.apache.spark.sql.types._
   *            c.cell))), 1, topN)
   * }}}
   * reproduced operation for operation so the DuckDB-oracled build is
-  * bit-unchanged: the dot accumulates (double)float·double left to
-  * right from 0.0 (= zip_with+aggregate = HyperplaneDot); rounding is
+  * bit-unchanged: the dot is the [[HyperplaneDot]] kernel, which
+  * accumulates (double)float·double left to right from 0.0 (=
+  * zip_with+aggregate); rounding is
   * Spark `Round(_, 6)`'s own double path (NaN/Inf pass through, else
   * `BigDecimal.valueOf(x).setScale(6, HALF_UP)`); the double ordering
   * is Spark's nan-safe array-sort ordering (NaN largest, -0.0 == 0.0);
@@ -111,14 +112,7 @@ case class TopCellsByCos(emb: Expression, na: Expression, cents: Expression,
       val mismatch = a.numElements() != cvec.numElements()
       var neg = 0.0
       if (!mismatch) {
-        var dot = 0.0
-        var i = 0
-        val n = a.numElements()
-        while (i < n) {
-          dot += a.getFloat(i).toDouble * cvec.getDouble(i)
-          i += 1
-        }
-        val cos = dot / math.sqrt(naV * nb)
+        val cos = HyperplaneDot(a, cvec) / math.sqrt(naV * nb)
         // Spark Round(double, 6): NaN/Inf unchanged, else HALF_UP via the
         // decimal string representation (BigDecimal.valueOf)
         val rounded =

@@ -28,8 +28,9 @@ import java.nio.ByteBuffer
   * operator in the registry.
   *
   * Implementation: bounded sorted-unique long buffer (binary search
-  * insert, O(k) worst-case shift — k is 256; the branch-free heap of
-  * BottomKSample is not reusable because KMV must dedupe).
+  * insert, O(k) worst-case shift — k is 256). It dedupes on insert,
+  * which the bounded top-k-per-group aggregate `TopKByKey` does not, so
+  * KMV keeps its own buffer.
   */
 case class KmvDistinctSketch(
     child: Expression,

@@ -6,35 +6,73 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for vector math over `array<float>`
-  * embedding columns.
+/** Native Catalyst expression for one array kernel over two embedding
+  * or id-set columns: `kernel` names the function, fixes its types and
+  * computes it.
   *
   * Why not `zip_with`/`aggregate`: higher-order array functions build a
   * lambda interpreter per element and fall out of whole-stage codegen;
   * for 10^8+ cosine evaluations in a dedup/ANN pass that's the hot
-  * path. These expressions generate a tight primitive loop via
-  * `doGenCode`, stay inside WholeStageCodegen, and accumulate in double
-  * (matching DuckDB's `list_cosine_similarity` semantics, so results
-  * are oracle-comparable bit-for-bit before rounding).
+  * path. The kernel is a primitive loop in one Scala method: the
+  * interpreted path calls it, and `doGenCode` emits one static call to
+  * it (as Spark's own codegen calls `DateTimeUtils`), so the expression
+  * stays inside WholeStageCodegen with a single copy of the arithmetic.
   */
-case class CosineSimilarity(left: Expression, right: Expression)
+case class VectorExpression(kernel: VectorKernel, left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
+  override def checkInputDataTypes(): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(l, _), ArrayType(r, _)) if l == kernel.leftElem && r == kernel.rightElem =>
+        TypeCheckResult.TypeCheckSuccess
+      case (l, r) => TypeCheckResult.TypeCheckFailure(
+        s"${kernel.name} expects (array<${kernel.leftElem.catalogString}>, " +
+          s"array<${kernel.rightElem.catalogString}>), got $l / $r")
     }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_cosine expects array<float> inputs, got ${left.dataType} / ${right.dataType}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_cosine"
+  override def dataType: DataType = kernel.dataType
+  override def prettyName: String = kernel.name
+  // plans print the call as `name(left, right)`, not the kernel object
+  override protected def stringArgs: Iterator[Any] = Iterator(left, right)
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    kernel.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${kernel.staticApply}($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** One array kernel: its SQL name, the element types of its two array
+  * inputs and its result type. Each kernel is a top-level object whose
+  * `apply` is the kernel's only implementation, with a primitive result;
+  * generated code calls it through the object's static forwarder. */
+sealed abstract class VectorKernel(val name: String, val leftElem: DataType,
+    val rightElem: DataType, val dataType: DataType) extends Serializable {
+
+  /** `apply`, boxed, for the interpreted path. */
+  def eval(x: ArrayData, y: ArrayData): Any
+
+  private[plans] def staticApply: String =
+    getClass.getName.stripSuffix("$") + ".apply"
+}
+
+object VectorKernel {
+  /** Every kernel, one native function each. */
+  val all: Seq[VectorKernel] = Seq(CosineSimilarity, HyperplaneDot, L2Distance,
+    FloatDot, SortedLongIntersectCount, QuantizedDot)
+}
+
+/** Cosine similarity of two `array<float>` vectors, accumulated in
+  * double (matching DuckDB's `list_cosine_similarity` semantics, so
+  * results are oracle-comparable bit-for-bit before rounding). */
+object CosineSimilarity
+    extends VectorKernel("graft_cosine", FloatType, FloatType, DoubleType) {
+  def eval(x: ArrayData, y: ArrayData): Any = apply(x, y)
+
+  def apply(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -46,50 +84,34 @@ case class CosineSimilarity(left: Expression, right: Expression)
     }
     dot / math.sqrt(na * nb)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |int n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double dot = 0.0, na = 0.0, nb = 0.0;
-         |for (int i = 0; i < n; i++) {
-         |  double xv = $a.getFloat(i);
-         |  double yv = $b.getFloat(i);
-         |  dot += xv * yv; na += xv * xv; nb += yv * yv;
-         |}
-         |${ev.value} = dot / java.lang.Math.sqrt(na * nb);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
-/** Euclidean (L2) distance of two `array<float>` columns, accumulated
-  * in double — matches DuckDB's `list_distance` semantics, so results
-  * are oracle-comparable bit-for-bit before rounding. Same codegen
-  * argument as [[CosineSimilarity]]: a tight primitive loop inside
-  * WholeStageCodegen for the probe×corpus hot path.
-  */
-case class L2Distance(left: Expression, right: Expression)
-    extends BinaryExpression {
+/** Dot product of a float embedding against a double-typed plane
+  * (hyperplane LSH, IVF centroids); accumulates in double. */
+object HyperplaneDot
+    extends VectorKernel("graft_dot", FloatType, DoubleType, DoubleType) {
+  def eval(x: ArrayData, y: ArrayData): Any = apply(x, y)
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
+  def apply(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0
+    var i = 0
+    while (i < n) {
+      dot += x.getFloat(i).toDouble * y.getDouble(i)
+      i += 1
     }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_l2 expects array<float> inputs, got ${left.dataType} / ${right.dataType}")
+    dot
   }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_l2"
+}
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+/** Euclidean (L2) distance of two `array<float>` vectors, accumulated
+  * in double — matches DuckDB's `list_distance` semantics, so results
+  * are oracle-comparable bit-for-bit before rounding. */
+object L2Distance
+    extends VectorKernel("graft_l2", FloatType, FloatType, DoubleType) {
+  def eval(x: ArrayData, y: ArrayData): Any = apply(x, y)
+
+  def apply(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var ss = 0.0
     var i = 0
@@ -100,51 +122,19 @@ case class L2Distance(left: Expression, right: Expression)
     }
     math.sqrt(ss)
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |int n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double ss = 0.0;
-         |for (int i = 0; i < n; i++) {
-         |  double d = (double) $a.getFloat(i) - (double) $b.getFloat(i);
-         |  ss += d * d;
-         |}
-         |${ev.value} = java.lang.Math.sqrt(ss);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
-/** Raw inner product of two `array<float>` columns in a double
+/** Raw inner product of two `array<float>` vectors in a double
   * accumulator — the scoring primitive of maximum-inner-product search
   * (MIPS), where vectors are deliberately NOT normalized (recommender
   * retrieval: popularity lives in the norm). Left-to-right product
   * accumulation matches DuckDB's `list_inner_product`, so scores are
-  * bit-identical across engines. Codegen-resident like its L2/cosine
-  * siblings.
-  */
-case class FloatDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+  * bit-identical across engines. */
+object FloatDot
+    extends VectorKernel("graft_fdot", FloatType, FloatType, DoubleType) {
+  def eval(x: ArrayData, y: ArrayData): Any = apply(x, y)
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_fdot expects array<float> inputs, got ${left.dataType} / ${right.dataType}")
-  }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_fdot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def apply(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0.0
     var i = 0
@@ -154,47 +144,19 @@ case class FloatDot(left: Expression, right: Expression)
     }
     dot
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |int n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double dot = 0.0;
-         |for (int i = 0; i < n; i++) {
-         |  dot += (double) $a.getFloat(i) * (double) $b.getFloat(i);
-         |}
-         |${ev.value} = dot;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Intersection cardinality of two pre-sorted long arrays via a tight
   * merge loop — the hot inner op of shingle-set verification. Spark's
   * `array_intersect` builds a boxed hash set per row; for 10^5–10^8
-  * candidate pairs the merge over sorted primitive arrays is both
-  * allocation-free and codegen-resident. Inputs MUST be sorted
-  * ascending (produce them with `array_sort`).
-  */
-case class SortedLongIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression {
+  * candidate pairs the merge over sorted primitive arrays is
+  * allocation-free. Inputs MUST be sorted ascending (produce them with
+  * `array_sort`). */
+object SortedLongIntersectCount extends VectorKernel(
+    "graft_sorted_intersect_count", LongType, LongType, IntegerType) {
+  def eval(x: ArrayData, y: ArrayData): Any = apply(x, y)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_sorted_intersect_count expects (array<bigint>, array<bigint>), got $l / $r")
-    }
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_sorted_intersect_count"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def apply(x: ArrayData, y: ArrayData): Int = {
     var i = 0; var j = 0; var n = 0
     val nx = x.numElements(); val ny = y.numElements()
     while (i < nx && j < ny) {
@@ -205,115 +167,25 @@ case class SortedLongIntersectCount(left: Expression, right: Expression)
     }
     n
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |int i = 0, j = 0, n = 0;
-         |int nx = $a.numElements(), ny = $b.numElements();
-         |while (i < nx && j < ny) {
-         |  long xv = $a.getLong(i); long yv = $b.getLong(j);
-         |  if (xv == yv) { n++; i++; j++; }
-         |  else if (xv < yv) { i++; } else { j++; }
-         |}
-         |${ev.value} = n;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Integer dot product of two int8-code arrays (stored as
   * array<bigint> after quantization): the hot inner op of the
   * quantized ANN scan tier. Exact long accumulation — the same value
   * any engine computes — so ann_quantized_topk stays fully oracled
-  * while the loop runs codegen-resident and allocation-free instead of
-  * through the per-element `zip_with`/`aggregate` lambda interpreter
-  * (~30% on the 1M-vector stress scan, whose remaining cost is pair
+  * while the loop runs allocation-free instead of through the
+  * per-element `zip_with`/`aggregate` lambda interpreter (~30% on the
+  * 1M-vector stress scan, whose remaining cost is pair
   * materialization, not the dot). */
-case class QuantizedDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+object QuantizedDot
+    extends VectorKernel("graft_quantized_dot", LongType, LongType, LongType) {
+  def eval(x: ArrayData, y: ArrayData): Any = apply(x, y)
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_quantized_dot expects (array<bigint>, array<bigint>), got $l / $r")
-    }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_quantized_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  def apply(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var dot = 0L
     var i = 0
     while (i < n) { dot += x.getLong(i) * y.getLong(i); i += 1 }
     dot
   }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |int n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long dot = 0L;
-         |for (int i = 0; i < n; i++) {
-         |  dot += $a.getLong(i) * $b.getLong(i);
-         |}
-         |${ev.value} = dot;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Dot product of a float embedding against a double-typed plane
-  * (hyperplane LSH); accumulates in double. */
-case class HyperplaneDot(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) => TypeCheckResult.TypeCheckFailure(
-        s"graft_dot expects (array<float>, array<double>), got $l / $r")
-    }
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_dot"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var i = 0
-    while (i < n) {
-      dot += x.getFloat(i).toDouble * y.getDouble(i)
-      i += 1
-    }
-    dot
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""
-         |int n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double dot = 0.0;
-         |for (int i = 0; i < n; i++) {
-         |  dot += ((double) $a.getFloat(i)) * $b.getDouble(i);
-         |}
-         |${ev.value} = dot;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

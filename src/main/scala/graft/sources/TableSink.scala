@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.GraftSession
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -450,8 +451,8 @@ final class ParquetVersionedTable(spark: SparkSession, dir: String)
           payload.filterNot(last.columns.contains).mkString(","))
       val upserts = opCol.fold(last)(op => last.filter(!(col(op) <=> lit("D"))))
       enforceSchema(upserts.select(payload.map(col): _*))
-      val numBuckets = spark.conf
-        .getOption("spark.graft.tablesink.buckets").map(_.toInt).getOrElse(16)
+      val numBuckets =
+        GraftSession.positiveInt(spark, "spark.graft.tablesink.buckets", 16)
       commit(txn) { v =>
         curM match {
           case None =>

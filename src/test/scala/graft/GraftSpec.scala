@@ -3,7 +3,7 @@ package graft
 import graft.functions.Vectors
 import graft.operators.Multimodal
 import graft.streaming.EventStreams
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,6 +64,80 @@ class VectorExpressionsSpec extends AnyFunSuite {
       .select(col("e").cast("array<float>").as("e"))
     val got = df.select(Vectors.dot(col("e"), typedLit(plane))).head().getDouble(0)
     assert(math.abs(got - (1.0 * 0.25 + -2.0 * 0.5 + 0.5 * -1.0)) < 1e-15)
+  }
+
+  test("each kernel evaluates bit-identically with and without codegen") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import spark.implicits._
+    // empty, unequal-length and null arrays beside plain rows; parquet
+    // input, so the optimizer cannot fold the calls into a local relation
+    def fv(xs: Float*): Option[Seq[Float]] = Some(xs)
+    def lv(xs: Long*): Option[Seq[Long]] = Some(xs)
+    val noF = Option.empty[Seq[Float]]; val noL = Option.empty[Seq[Long]]
+    val rows = Seq(
+      (1, fv(1f, 2f, -0.5f, 3.25f), fv(0.5f, -1f, 2f, 1.5f), lv(1, 3, 5, 9), lv(2, 3, 5, 10)),
+      (2, fv(1.5f, -2f), fv(0.1f, 0.2f, 0.3f), lv(1, 2, 3), lv(2)),
+      (3, fv(), fv(), lv(), lv()),
+      (4, fv(), fv(1f), lv(), lv(7)),
+      (5, noF, fv(1f), noL, lv(1)),
+      (6, fv(1f), noF, lv(1), noL)) ++
+      (7 to 12).map { r =>
+        val f = (0 until 16).map(i => ((r * 7919 + i * 104729) % 2001 - 1000) / 333.0f)
+        val l = (0 until 16).map(i => ((r * 31 + i * 17) % 255 - 127).toLong)
+        (r, Some(f), Some(f.reverse.map(_ * 0.7f)), Some(l.sorted), Some(l.map(_ / 2).sorted))
+      }
+    val cents = (0 until 4).map(c => (c, (0 until (if (c == 3) 3 else 4))
+      .map(i => ((c * 13 + i * 7) % 9 - 4) / 3.0)))
+    val dir = TempDirs.deletedOnExit("graft_kernels").toString
+    rows.toDF("id", "f1", "f2", "l1", "l2")
+      .withColumn("f1", col("f1").cast("array<float>"))
+      .withColumn("f2", col("f2").cast("array<float>"))
+      .withColumn("d", transform(col("f2"), x => x.cast("double") * 0.5))
+      .withColumn("na", aggregate(col("f1"), lit(0.0), (a, x) => a + x.cast("double") * x))
+      .crossJoin(cents.toDF("cell", "cvec")
+        .withColumn("nb", aggregate(col("cvec"), lit(0.0), (a, x) => a + x * x))
+        .agg(collect_list(struct(col("cell"), col("cvec"), col("nb"))).as("cents")))
+      .write.mode("overwrite").parquet(dir)
+    val calls = Seq("graft_cosine(f1, f2)", "graft_dot(f1, d)", "graft_l2(f1, f2)",
+      "graft_fdot(f1, f2)", "graft_quantized_dot(l1, l2)",
+      "graft_sorted_intersect_count(l1, l2)", "graft_top_cells(f1, na, cents, 2)")
+    // doubles by their bits, so NaN and -0.0 compare exactly
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case r: Row => r.toSeq.map(bits)
+      case xs: Seq[_] => xs.map(bits)
+      case x => x
+    }
+    val modes = Seq(
+      "codegen" -> Seq("spark.sql.codegen.wholeStage" -> "true",
+        "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+        "spark.sql.codegen.fallback" -> "false"),
+      "interpreted" -> Seq("spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+    val out = modes.map { case (mode, confs) =>
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        val df = spark.read.parquet(dir).selectExpr("id" +: calls: _*)
+        val stages = df.queryExecution.executedPlan
+          .collect { case w: WholeStageCodegenExec => w }
+        assert(stages.nonEmpty == (mode == "codegen"), s"$mode plan: ${df.queryExecution.executedPlan}")
+        df.collect().sortBy(_.getInt(0)).map(r => bits(r).asInstanceOf[Seq[Any]]).toSeq
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    val (gen, interp) = (out(0), out(1))
+    assert(gen.length == rows.length)
+    for ((g, i) <- gen.zip(interp); (call, c) <- calls.zipWithIndex)
+      assert(g(c + 1) == i(c + 1), s"row ${g.head} $call: codegen ${g(c + 1)} vs interpreted ${i(c + 1)}")
+    // a null input gives null (row 6 has a null only on the right, which
+    // graft_top_cells does not read), present inputs a value
+    assert(gen(4).tail.forall(_ == null) && gen(5).tail.init.forall(_ == null))
+    assert(gen(5).last != null)
+    assert(gen(0).tail.forall(_ != null))
   }
 }
 
@@ -243,6 +317,10 @@ class LayoutSpec extends AnyFunSuite {
 class OperatorSmokeSpec extends AnyFunSuite {
   import SparkTestSession._
 
+  // every registered query, built once for the two registry-wide tests
+  private lazy val built: Map[String, DataFrame] =
+    SparkEntry.queries.map { case (name, fn) => name -> fn(spark, sf) }
+
   test("entry (flagship) returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
@@ -253,8 +331,7 @@ class OperatorSmokeSpec extends AnyFunSuite {
   }
 
   test("every query runs and matches its declared columns at sf0.001") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, sf)
+    built.foreach { case (name, df) =>
       assert(df.columns.nonEmpty, s"$name has no columns")
       df.count() // forces full execution
     }
@@ -266,8 +343,8 @@ class OperatorSmokeSpec extends AnyFunSuite {
     // (decimal stays internal, DOUBLE out; arrays explode to scalars)
     // is enforced here so a violation fails `sbt test`, not round review
     import org.apache.spark.sql.types.{ArrayType, DecimalType, MapType, StructType => SType}
-    SparkEntry.queries.foreach { case (name, fn) =>
-      fn(spark, sf).schema.fields.foreach { f =>
+    built.foreach { case (name, df) =>
+      df.schema.fields.foreach { f =>
         val bad = f.dataType match {
           case _: DecimalType | _: ArrayType | _: SType | _: MapType => true
           case _ => false
@@ -616,18 +693,28 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 }
 
+/** Bottom-k sampling, as etl_sample_per_source runs it: the k ids per
+  * group with the smallest `(id * 2654435761) % 1000000007`, ties by id,
+  * through `Skew.topK` on the negated mix. */
+object BottomKSampleSpec {
+  def sample(df: DataFrame, part: String, id: String, k: Int): DataFrame =
+    graft.operators.Skew.topK(
+      df.withColumn("neg_mix", -((col(id) * lit(2654435761L)) % 1000000007L)),
+      part, "neg_mix", id, k)
+}
+
 class BottomKSampleSpec extends AnyFunSuite {
   import SparkTestSession._
+  import BottomKSampleSpec.sample
 
   test("sample is invariant under repartitioning (merge correctness)") {
     val docs = graft.sources.Tables.documents(spark, sf)
-    def sample(parts: Int): Map[String, Seq[Long]] =
-      docs.repartition(parts)
-        .groupBy(col("source"))
-        .agg(graft.functions.Vectors.bottomkSample(col("doc_id"), 5).as("ids"))
-        .collect().map(r => r.getString(0) -> r.getSeq[Long](1)).toMap
-    val a = sample(1)
-    val b = sample(13)
+    def ids(parts: Int): Map[String, Seq[Long]] =
+      sample(docs.repartition(parts), "source", "doc_id", 5)
+        .collect().groupBy(_.getAs[String]("source"))
+        .map { case (g, rs) => g -> rs.sortBy(_.getAs[Int]("rn")).map(_.getAs[Long]("doc_id")).toSeq }
+    val a = ids(1)
+    val b = ids(13)
     assert(a == b)
     assert(a.values.forall(_.size == 5))
   }
@@ -635,10 +722,8 @@ class BottomKSampleSpec extends AnyFunSuite {
   test("k larger than group yields the whole group") {
     import spark.implicits._
     val tiny = Seq(("g", 1L), ("g", 2L), ("g", 3L)).toDF("g", "id")
-    val got = tiny.groupBy(col("g"))
-      .agg(graft.functions.Vectors.bottomkSample(col("id"), 10).as("ids"))
-      .head().getSeq[Long](1)
-    assert(got.toSet == Set(1L, 2L, 3L))
+    val got = sample(tiny, "g", "id", 10).collect().map(_.getAs[Long]("id"))
+    assert(got.toSet == Set(1L, 2L, 3L) && got.length == 3)
   }
 }
 
@@ -5375,15 +5460,25 @@ class IvfBuildSpec extends AnyFunSuite {
   }
 
   test("ivf knob confs reject non-positive and non-numeric values") {
+    import spark.implicits._
+    // each knob is rejected where it is read, naming its key
+    val readers: Seq[(String, () => Any)] = Seq(
+      "spark.graft.ivf.train.mod" -> (() => graft.operators.Similarity.trainModOf(spark)),
+      "spark.graft.ivf.cells" -> (() => graft.operators.Similarity.kcellsOf(spark)),
+      "spark.graft.tablesink.buckets" -> (() =>
+        new graft.sources.ParquetVersionedTable(spark,
+          TempDirs.deletedOnExit("graft_badbuckets").toString)
+          .mergeByKey(Seq((1L, 1L)).toDF("k", "ord"), Seq("k"), Seq("ord"))))
     val conf = spark.conf
-    try {
-      for (bad <- Seq("0", "-3", "abc")) {
-        conf.set("spark.graft.ivf.train.mod", bad)
-        intercept[IllegalArgumentException] {
-          graft.operators.Similarity.trainModOf(spark)
+    for ((key, read) <- readers) {
+      try {
+        for (bad <- Seq("0", "-3", "abc")) {
+          conf.set(key, bad)
+          val e = intercept[IllegalArgumentException](read())
+          assert(e.getMessage.contains(key), s"$key=$bad: ${e.getMessage}")
         }
-      }
-    } finally conf.unset("spark.graft.ivf.train.mod")
+      } finally conf.unset(key)
+    }
   }
 }
 

@@ -14,7 +14,7 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("the shared session carries GraftExtensions' injected functions") {
     val names = GraftExtensions.functions.map(_.name)
-    assert(names.size == 19 && names.distinct == names)
+    assert(names.size == 18 && names.distinct == names)
     for (f <- names)
       assert(spark.catalog.functionExists(f), s"$f is not registered")
   }
@@ -148,6 +148,18 @@ class MainsGuardSpec extends AnyFunSuite {
     assert(hits(Pattern.quote("""call_function("graft_topk_by_key"""")) ==
       Seq("graft/functions/Vectors.scala" -> 1))
     assert(hits(Pattern.quote("""withColumn("rn0", row_number()""")).isEmpty)
+    // bottom-k sampling is the same aggregate over a negated key
+    assert(hits("graft_bottomk_sample|BottomKSample").isEmpty)
+  }
+
+  test("each vector kernel's loop is written once, in its kernel object") {
+    // generated code calls the kernel's method: no generated Java holds
+    // a loop (`for (int …` or a stripMargin `|while (` line)
+    assert(hits("""for\s*\(\s*(int|long)\s|\|\s*while\s*\(""").isEmpty)
+    // the float·double and float·float dots, and no third copy beside
+    // them (TopCellsByCos calls the HyperplaneDot kernel)
+    assert(hits(Pattern.quote("getFloat(i).toDouble *")) ==
+      Seq("graft/plans/VectorExpressions.scala" -> 2))
   }
 
   test("the 2×12 moving-average chain is written once per engine, in Etl") {

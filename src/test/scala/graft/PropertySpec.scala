@@ -1,6 +1,5 @@
 package graft
 
-import graft.plans.BottomKSample
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
@@ -33,10 +32,10 @@ class PropertySpec extends AnyFunSuite {
     val kGen = Gen.chooseNum(1, 12)
     val cases = Gen.listOfN(25, Gen.zip(idsGen, kGen)).sample.get
     cases.foreach { case (ids, k) =>
-      val got = ids.toDF("id")
-        .agg(graft.functions.Vectors.bottomkSample(col("id"), k))
-        .head().getSeq[Long](0).toList
-      val want = ids.sortBy(id => (BottomKSample.mix(id), id)).take(k)
+      val got = BottomKSampleSpec.sample(ids.toDF("id").withColumn("g", lit(0)),
+          "g", "id", k)
+        .collect().sortBy(_.getAs[Int]("rn")).map(_.getAs[Long]("id")).toList
+      val want = ids.sortBy(id => ((id * 2654435761L) % 1000000007L, id)).take(k)
       assert(got == want, s"ids=$ids k=$k")
     }
   }

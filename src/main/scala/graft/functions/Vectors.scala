@@ -102,13 +102,15 @@ object Vectors {
   def cdcChunks(text: Column): Column =
     call_function("graft_cdc_chunks", text)
 
-  /** Per-document 4-round damped TextRank over a mirrored adjacency
-    * array, returning the top-3 words as array<struct<pos, word,
-    * rank_fp>> — the shuffle-once-compute-local replacement for the
-    * distributed 4-round recurrence (bit-identical; see
-    * plans/TextRankExpressions.scala). */
-  def textrankTop3(edges: Column): Column =
-    call_function("graft_textrank_top3", edges)
+  /** Per-document 4-round damped TextRank over one document's token
+    * lists (`array<array<string>>`, e.g. a `collect_list` of token
+    * arrays per doc_id): adjacent ≥3-char, unequal tokens within a list
+    * are the graph's edges. Returns the top-3 words as
+    * array<struct<pos, word, rank_fp>> — the shuffle-once-compute-local
+    * replacement for the distributed 4-round recurrence (bit-identical;
+    * see plans/TextRankExpressions.scala). */
+  def textrankTop3(tokenLists: Column): Column =
+    call_function("graft_textrank_top3", tokenLists)
 
   /** Top-`topN` IVF cells of an `array<float>` vector (precomputed
     * squared norm `na`) against a broadcast centroid array of

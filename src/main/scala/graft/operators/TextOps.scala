@@ -1700,15 +1700,12 @@ object TextOps {
     // TextRank keywords — graph-based keyword extraction (the RAKE
     // alternative that sees GLOBAL structure: a word is important if
     // important words co-occur with it, PageRank on the per-doc word
-    // adjacency graph). 500k per-doc graphs run SIMULTANEOUSLY as one
-    // distributed computation: edges are (doc, w1, w2, cnt) adjacency
-    // counts (content words ≥3 chars), four synchronous damped-rank
-    // rounds in the Graph.scala exact fixed-point discipline (2²⁰
-    // scale, 85/100 damping, integer div) — deterministic, so the
-    // unrolled DuckDB oracle replays it bit-for-bit. Every round is
-    // O(Σ edges) keyed on (doc, word); the top-3 window partitions by
-    // the HIGH-cardinality doc_id (bounded per-doc input by
-    // construction).
+    // adjacency graph). Edges are (doc, w1, w2, cnt) adjacency counts
+    // of adjacent content words (≥3 chars), four synchronous
+    // damped-rank rounds in the Graph.scala exact fixed-point
+    // discipline (2²⁰ scale, 85/100 damping, integer div) —
+    // deterministic, so the unrolled DuckDB oracle replays it
+    // bit-for-bit.
     "text_textrank" -> QueryDef.withOracle {
       def stepSql(i: Int): String =
         s"""r${i + 1} AS (
@@ -1747,47 +1744,17 @@ object TextOps {
          |SELECT doc_id, CAST(pos AS INT) AS pos, word, r AS rank_fp
          |FROM rk WHERE pos <= 3""".stripMargin
     } { (s, dir) =>
-      val t = Tables.documents(s, dir)
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-        .persist() // regexp-per-element inlining trap (Dedup.shingled)
-      val bg = t.filter(size(col("toks")) >= 2)
-        .select(col("doc_id"), explode(transform(
-          sequence(lit(1), size(col("toks")) - 1),
-          i => struct(element_at(col("toks"), i).as("w1"),
-            element_at(col("toks"), i + 1).as("w2")))).as("b"))
-        .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-        .filter(length(col("w1")) >= 3 && length(col("w2")) >= 3 &&
-          col("w1") =!= col("w2"))
-      // r17 (guide §1.2/§8): shuffle ONCE, compute locally. Each
-      // per-doc word graph is bounded by that document's token count
-      // and the 4-round recurrence never couples documents, so the
-      // whole iteration runs inside one expression over the collected
-      // per-doc adjacency array (plans/TextRankExpressions.scala —
-      // bit-identical long arithmetic, order-invariant, so the
-      // collect_list order cannot change the result). Plan shape: one
-      // doc_id exchange + two doc-local aggs + the native loop —
-      // versus r16's ~2 executed exchanges per round (≈20 sequential
-      // AQE stage rounds of wall) or the co-partitioned SMJ cascade
-      // (zero exchanges but 4 unrolled join+agg plan levels whose
-      // per-task setup dominated task time at bench SF). Rank state
-      // never crosses the network — the 100 TB-correct shape.
-      val e = bg.select(col("doc_id"), col("w1").as("src"), col("w2").as("dst"))
-        .unionByName(bg.select(col("doc_id"), col("w2").as("src"),
-          col("w1").as("dst")))
-        // AQE-sized doc_id exchange: the native loop costs ~O(1) per
-        // edge byte (NOT quadratic-per-byte like the bipartite pair
-        // stage), so byte-based coalescing keeps CPU ∝ partition bytes
-        // at any scale; pinning 1-2×slots here was measured 4× worse
-        // task (per-task setup dominates a sub-second stage at bench SF)
-        .repartition(col("doc_id"))
-        .groupBy(col("doc_id"), col("src"), col("dst"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("doc_id")) // doc-local: no second exchange
-        .agg(collect_list(struct(col("src"), col("dst"), col("cnt")))
-          .as("adj"))
-      e.select(col("doc_id"),
-          explode(graft.functions.Vectors.textrankTop3(col("adj")))
-            .as("top"))
+      // Shuffle once, compute locally: the one doc_id aggregate
+      // collects each row's token list (documents has no key
+      // constraint, and rows sharing a doc_id form one graph), and
+      // graft_textrank_top3 builds the graph and runs the recurrence
+      // inside the row (plans/TextRankExpressions.scala). No bigram row
+      // is built or shuffled; rank state never crosses the network.
+      Tables.documents(s, dir)
+        .groupBy(col("doc_id"))
+        .agg(collect_list(tokens(col("text"))).as("toks"))
+        .select(col("doc_id"),
+          explode(graft.functions.Vectors.textrankTop3(col("toks"))).as("top"))
         .select(col("doc_id"), col("top.pos").as("pos"),
           col("top.word").as("word"), col("top.rank_fp").as("rank_fp"))
     }

@@ -507,13 +507,12 @@ object PlanAudit {
       // joins — the graph_pagerank lazily-unrolled-iteration argument:
       // every exchange after the first moves value-domain bookkeeping
       "etl_huber_mean" -> 14,
-      // Re-derived r17 after the native per-doc rewrite: the whole
-      // 4-round recurrence runs inside graft_textrank_top3 over the
-      // collected per-doc adjacency, so the plan is ONE doc_id-keyed
-      // exchange + two doc-local aggs + explode (r17, since-deleted
-      // ExchangeProbe: total=1 distinct=1). +2 headroom for cache-state reprint
-      // variants of the tokenized-docs persist.
-      "text_textrank" -> 3,
+      // graft_textrank_top3 builds each document's graph from its
+      // collected token lists and runs the whole 4-round recurrence, so
+      // the plan is ONE doc_id-keyed exchange (the collect_list
+      // aggregate) + explode; nothing is persisted, so no cache-state
+      // reprint can add a printed exchange
+      "text_textrank" -> 1,
       // rides the full ann_ivf_assign budget (9) + its own ≤KCELLS-row
       // member agg and the 1-row total anchor
       "ann_ivf_quality" -> 11,

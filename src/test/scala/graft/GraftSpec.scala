@@ -30,12 +30,21 @@ class VectorExpressionsSpec extends AnyFunSuite {
     dot / math.sqrt(na * nb)
   }
 
+  /** `df` written to parquet and read back: over a local relation the
+    * optimizer folds a call by evaluating it interpreted, so only a
+    * file scan runs the generated code. */
+  private def viaParquet(df: DataFrame): DataFrame = {
+    val dir = TempDirs.deletedOnExit("graft_kernel_in").toString
+    df.write.mode("overwrite").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
   test("cosine expression matches reference (codegen path)") {
     import spark.implicits._
     val a = Seq(1.0f, 2.0f, -0.5f, 3.25f)
     val b = Seq(0.5f, -1.0f, 2.0f, 1.5f)
-    val df = Seq((a, b)).toDF("a", "b")
-      .select(col("a").cast("array<float>").as("a"), col("b").cast("array<float>").as("b"))
+    val df = viaParquet(Seq((a, b)).toDF("a", "b")
+      .select(col("a").cast("array<float>").as("a"), col("b").cast("array<float>").as("b")))
     val got = df.select(Vectors.cosine(col("a"), col("b"))).head().getDouble(0)
     assert(math.abs(got - refCosine(a, b)) < 1e-15)
   }
@@ -60,8 +69,8 @@ class VectorExpressionsSpec extends AnyFunSuite {
     import spark.implicits._
     val emb = Seq(1.0f, -2.0f, 0.5f)
     val plane = Seq(0.25, 0.5, -1.0)
-    val df = Seq(Tuple1(emb)).toDF("e")
-      .select(col("e").cast("array<float>").as("e"))
+    val df = viaParquet(Seq(Tuple1(emb)).toDF("e")
+      .select(col("e").cast("array<float>").as("e")))
     val got = df.select(Vectors.dot(col("e"), typedLit(plane))).head().getDouble(0)
     assert(math.abs(got - (1.0 * 0.25 + -2.0 * 0.5 + 0.5 * -1.0)) < 1e-15)
   }
@@ -70,8 +79,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.execution.WholeStageCodegenExec
     import spark.implicits._
-    // empty, unequal-length and null arrays beside plain rows; parquet
-    // input, so the optimizer cannot fold the calls into a local relation
+    // empty, unequal-length and null arrays beside plain rows
     def fv(xs: Float*): Option[Seq[Float]] = Some(xs)
     def lv(xs: Long*): Option[Seq[Long]] = Some(xs)
     val noF = Option.empty[Seq[Float]]; val noL = Option.empty[Seq[Long]]
@@ -89,16 +97,14 @@ class VectorExpressionsSpec extends AnyFunSuite {
       }
     val cents = (0 until 4).map(c => (c, (0 until (if (c == 3) 3 else 4))
       .map(i => ((c * 13 + i * 7) % 9 - 4) / 3.0)))
-    val dir = TempDirs.deletedOnExit("graft_kernels").toString
-    rows.toDF("id", "f1", "f2", "l1", "l2")
+    val input = viaParquet(rows.toDF("id", "f1", "f2", "l1", "l2")
       .withColumn("f1", col("f1").cast("array<float>"))
       .withColumn("f2", col("f2").cast("array<float>"))
       .withColumn("d", transform(col("f2"), x => x.cast("double") * 0.5))
       .withColumn("na", aggregate(col("f1"), lit(0.0), (a, x) => a + x.cast("double") * x))
       .crossJoin(cents.toDF("cell", "cvec")
         .withColumn("nb", aggregate(col("cvec"), lit(0.0), (a, x) => a + x * x))
-        .agg(collect_list(struct(col("cell"), col("cvec"), col("nb"))).as("cents")))
-      .write.mode("overwrite").parquet(dir)
+        .agg(collect_list(struct(col("cell"), col("cvec"), col("nb"))).as("cents"))))
     val calls = Seq("graft_cosine(f1, f2)", "graft_dot(f1, d)", "graft_l2(f1, f2)",
       "graft_fdot(f1, f2)", "graft_quantized_dot(l1, l2)",
       "graft_sorted_intersect_count(l1, l2)", "graft_top_cells(f1, na, cents, 2)")
@@ -119,7 +125,7 @@ class VectorExpressionsSpec extends AnyFunSuite {
       val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
       try {
         confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        val df = spark.read.parquet(dir).selectExpr("id" +: calls: _*)
+        val df = input.selectExpr("id" +: calls: _*)
         val stages = df.queryExecution.executedPlan
           .collect { case w: WholeStageCodegenExec => w }
         assert(stages.nonEmpty == (mode == "codegen"), s"$mode plan: ${df.queryExecution.executedPlan}")

@@ -41,19 +41,19 @@ object GraftSession {
     // intermediate keeps thousands of partitions, a bookkeeping
     // relation collapses to a few.
     c.set("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    // r17 (guide §2.4): allow a join to run exchange-free when BOTH
-    // children are hash-partitioned on the same SUBSET of the join
-    // keys. The engine's iterative operators deliberately lay loop
-    // invariants out on a coarse key (textrank: doc_id; the per-doc
-    // graph is bounded by construction) so every round's join/agg is
-    // satisfied by one up-front exchange; with the default (true) the
-    // planner re-exchanges on the full key set per round anyway —
-    // measured on text_textrank: 2 executed O(E) exchanges per round
-    // that this flag turns into zero. The default exists to protect
-    // organically-subset-partitioned joins from low parallelism /
-    // skew; here every subset layout is constructed with an explicit
-    // deployment-derived partition count, and non-constructed joins
-    // get their partitioning from a fresh full-key exchange as before.
+    // Allow a join to run exchange-free when BOTH children are
+    // hash-partitioned on the same SUBSET of the join keys. Measured
+    // with graft.tools.PlanSnap at sf0.01, every query, against a build
+    // with the default (true): three queries depend on it, each joining
+    // top-k aggregate outputs (hash-partitioned on probe_id) on
+    // (probe_id, neighbor_id) — ann_filtered_topk 2 exchanges (5 with
+    // the default), ann_recall_eval 10 (13), ann_nprobe_sweep 15 (17).
+    // No graph-loop query's plan, nor its jobs, stages or tasks in
+    // graft.tools.Profile, changed with it. The default exists to
+    // protect organically-subset-partitioned joins from low
+    // parallelism / skew; those joins read at most K rows per probe
+    // on each side, and other joins get a fresh full-key exchange as
+    // before.
     c.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
     // 10 MB default is conservative; dims in a TPC-H-ratio schema are tiny
     // relative to facts — let Catalyst broadcast aggressively.
@@ -121,12 +121,10 @@ object GraftSession {
     * lineage-cut edge bases once per round even though the base was
     * built hash-partitioned on the join key. The cut therefore restates
     * the layout of the plan AQE actually ran, so the loop's joins/aggs
-    * are satisfied exchange-free (with
-    * requireAllClusterKeysForCoPartition=false above for coarse-key
-    * layouts). The checkpoint runs with the session's own conf (AQE
-    * on), and nothing is written to it. Call it on a MATERIALIZED
-    * subtree (persist + count first, or a previous cut): then the cut
-    * plan is a pure cache/RDD scan. */
+    * are satisfied exchange-free. The checkpoint runs with the
+    * session's own conf (AQE on), and nothing is written to it. Call it
+    * on a MATERIALIZED subtree (persist + count first, or a previous
+    * cut): then the cut plan is a pure cache/RDD scan. */
   def cut(s: SparkSession, df: DataFrame): DataFrame =
     GraftSqlBridge.withExecutedLayout(df, roundCut(s, df))
 

@@ -27,12 +27,14 @@ object Dedup {
 
   /** Distinct word-3-gram shingles per doc.
     *
-    * persist() is load-bearing twice over: (1) CollapseProject would
-    * otherwise inline the tokenizing regexp into the shingle lambda and
-    * re-run it interpreted per element (O(n²) regexp calls per doc —
-    * measured 20× slower); (2) every dedup variant self-joins this
-    * relation, and the cache (deduped by canonical plan across queries)
-    * stops the doc scan + shingling from recomputing per join side. At
+    * The tokenizer needs no barrier: CollapseProject does not inline a
+    * non-cheap alias that its consumer reads more than once, so the
+    * regexp stays in its own Project below the shingle lambda and runs
+    * once per doc (text_winnow runs the same shape unpersisted).
+    * persist() is load-bearing for reuse: every dedup variant
+    * self-joins this relation, and the cache (deduped by canonical plan
+    * across queries) stops the doc scan + shingling from recomputing
+    * per join side. At
     * cluster scale the same role is played by a checkpoint or a reused
     * exchange; the relation is corpus-linear and column-pruned (ids +
     * shingle hashes, not text).
@@ -614,15 +616,11 @@ object Dedup {
     // Embedding near-dup pairs inside label cells (label = IVF cell):
     // the quadratic term is bounded by cell size, never corpus size.
     "dedup_embedding" -> QueryDef.withOracle(
-      """SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
-        |  round(list_cosine_similarity(
-        |    list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-        |    list_transform(b.embedding, x -> CAST(x AS DOUBLE))), 6) AS cos_sim
-        |FROM embeddings a JOIN embeddings b
-        |  ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE list_cosine_similarity(
-        |    list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-        |    list_transform(b.embedding, x -> CAST(x AS DOUBLE))) >= 0.3""".stripMargin) { (s, dir) =>
+      s"""SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.label AS label,
+         |  round(${Similarity.embCosSql("a", "b")}, 6) AS cos_sim
+         |FROM embeddings a JOIN embeddings b
+         |  ON a.label = b.label AND a.vec_id < b.vec_id
+         |WHERE ${Similarity.embCosSql("a", "b")} >= 0.3""".stripMargin) { (s, dir) =>
       val e = Tables.embeddings(s, dir)
       val a = e.select(col("vec_id").as("vec_a"), col("label"), col("embedding").as("emb_a"))
       val b = e.select(col("vec_id").as("vec_b"), col("label").as("label_b"), col("embedding").as("emb_b"))
@@ -654,9 +652,7 @@ object Dedup {
          |pairs AS (
          |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
          |    a.label AS label_a, b.label AS label_b,
-         |    round(list_cosine_similarity(
-         |      list_transform(a.embedding, v -> CAST(v AS DOUBLE)),
-         |      list_transform(b.embedding, v -> CAST(v AS DOUBLE))), 6) AS cos_sim
+         |    round(${Similarity.embCosSql("a", "b")}, 6) AS cos_sim
          |  FROM cells a JOIN cells b
          |    ON a.c_label = b.c_label AND a.vec_id < b.vec_id)
          |SELECT DISTINCT vec_a, vec_b, label_a, label_b,
@@ -742,9 +738,7 @@ object Dedup {
          |    b.cos_c AS cb, a.cell
          |  FROM home a JOIN home b
          |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE round(list_cosine_similarity(
-         |      list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-         |      list_transform(b.embedding, x -> CAST(x AS DOUBLE))), 6) >= 0.3),
+         |  WHERE round(${Similarity.embCosSql("a", "b")}, 6) >= 0.3),
          |dd AS (
          |  SELECT va AS vec_id, ca AS cos_c, cell, vb AS nb, cb AS nb_cos FROM prs
          |  UNION ALL

@@ -143,16 +143,14 @@ object Graph {
   /** Oracle mirror of [[embeddingEdges]]: a `WITH` prefix ending at CTE
     * `edges` (src, dst). */
   private val embeddingEdgesSql: String =
-    """WITH p AS MATERIALIZED (
-      |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-      |  FROM embeddings a JOIN embeddings b
-      |    ON a.label = b.label AND a.vec_id < b.vec_id
-      |  WHERE list_cosine_similarity(
-      |      list_transform(a.embedding, x -> CAST(x AS DOUBLE)),
-      |      list_transform(b.embedding, x -> CAST(x AS DOUBLE))) >= 0.3),
-      |edges AS MATERIALIZED (
-      |  SELECT vec_a AS src, vec_b AS dst FROM p
-      |  UNION ALL SELECT vec_b AS src, vec_a AS dst FROM p)""".stripMargin
+    s"""WITH p AS MATERIALIZED (
+       |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+       |  FROM embeddings a JOIN embeddings b
+       |    ON a.label = b.label AND a.vec_id < b.vec_id
+       |  WHERE ${Similarity.embCosSql("a", "b")} >= 0.3),
+       |edges AS MATERIALIZED (
+       |  SELECT vec_a AS src, vec_b AS dst FROM p
+       |  UNION ALL SELECT vec_b AS src, vec_a AS dst FROM p)""".stripMargin
 
   /** Node degrees (n, deg) of an undirected pair relation (doc_a, doc_b). */
   private def pairDegrees(pairs: DataFrame): DataFrame =

@@ -4,7 +4,6 @@ import graft.{GraftSession, QueryDef}
 import graft.functions.Vectors
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
@@ -32,36 +31,111 @@ object Similarity {
   private def cosTopK(scored: DataFrame): DataFrame =
     Skew.topK(scored, "probe_id", "cos_sim", "neighbor_id", K)
 
+  /** Oracle twin of the top-k aggregate: per probe, the first `k` rows
+    * of the query `from` by (`order`, neighbor_id ASC), as `cols` and
+    * their rank rn. */
+  private def topKSql(from: String, cols: String, order: String, k: Int = K): String =
+    s"""SELECT $cols, rn FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY probe_id
+       |    ORDER BY $order, neighbor_id ASC) AS rn
+       |  FROM ($from))
+       |WHERE rn <= $k""".stripMargin
+
+  /** DuckDB's unrounded cosine of two DOUBLE lists: the one oracle
+    * spelling of [[Vectors.cosine]]. Callers round at their own site;
+    * some compare the raw value. */
+  private def cosSql(a: String, b: String): String =
+    s"list_cosine_similarity($a, $b)"
+
+  /** An embedding column as a DOUBLE list. */
+  private def embDSql(c: String): String =
+    s"list_transform($c, x -> CAST(x AS DOUBLE))"
+
+  /** [[cosSql]] of the `embedding` columns of table aliases `a`, `b`. */
+  private[operators] def embCosSql(a: String, b: String): String =
+    cosSql(embDSql(s"$a.embedding"), embDSql(s"$b.embedding"))
+
+  /** Brute-force probe scan, the scale shape of every exact ANN query:
+    * the NPROBES probe rows of `corpus` (`vec_id AS probe_id`, then
+    * `probe`) broadcast and joined on `on` against ONE pass over
+    * `corpus`. Returns (`key`, neighbor_id, `score`). */
+  private def probeScan(corpus: DataFrame, probe: Seq[Column], on: Column,
+      score: Column, key: Column = col("probe_id")): DataFrame = {
+    val probes = corpus.filter(col("vec_id") < NPROBES)
+      .select(col("vec_id").as("probe_id") +: probe: _*)
+    corpus.join(broadcast(probes), on)
+      .select(key, col("vec_id").as("neighbor_id"), score)
+  }
+
+  /** The probe-scan join condition of every scan but the label-keyed
+    * hard negatives: any row but the probe itself. */
+  private def notSelf: Column = col("vec_id") =!= col("probe_id")
+
+  private def probeEmb: Column = col("embedding").as("probe_emb")
+
+  /** Round-6 cosine of a scanned embedding row to its probe. */
+  private def probeCos: Column =
+    round(Vectors.cosine(col("probe_emb"), col("embedding")), 6).as("cos_sim")
+
+  /** Oracle twin of [[probeScan]]: probe set `p` joined to corpus `e`
+    * on `on`, selecting (probe_id, neighbor_id, `cols`). */
+  private def probeScanSql(cols: String, on: String = "e.vec_id <> p.vec_id"): String =
+    s"""SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id, $cols
+       |FROM (SELECT * FROM embeddings WHERE vec_id < $NPROBES) p
+       |JOIN embeddings e ON $on""".stripMargin
+
+  private val probeCosSql = s"round(${embCosSql("p", "e")}, 6) AS cos_sim"
+
+  /** Exact rerank of candidate (probe_id, neighbor_id) pairs: each id
+    * fetches its float embedding, the round-6 cosine scores the pair
+    * and [[cosTopK]] keeps each probe's top K. */
+  private def rerank(s: SparkSession, dir: String, cand: DataFrame): DataFrame = {
+    val e = Tables.embeddings(s, dir)
+    val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
+    cosTopK(cand
+      .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb")), "probe_id")
+      .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")), "neighbor_id")
+      .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim")))
+  }
+
+  /** Oracle twin of [[rerank]] over the candidate CTE `cand`. */
+  private def rerankSql(cand: String): String =
+    topKSql(
+      s"""SELECT c.probe_id, c.neighbor_id, round(${embCosSql("x", "y")}, 6) AS cos_sim
+         |  FROM $cand c JOIN embeddings x ON x.vec_id = c.probe_id
+         |  JOIN embeddings y ON y.vec_id = c.neighbor_id""".stripMargin,
+      "probe_id, neighbor_id, cos_sim", "cos_sim DESC")
+
   /** Shared int8-quantized corpus (vec_id, qv, qn), persisted so the
     * quantized scan tier and the rerank tier hit one cache entry.
     * The persist is also an optimizer barrier: without it
     * CollapseProject inlines the whole quantization into the per-pair
     * zip_with lambda and re-quantizes both vectors for every candidate
     * pair. */
-  private def quantizedCorpus(s: SparkSession, dir: String): DataFrame = {
-    val embD = transform(col("embedding"), x => x.cast(DoubleType))
+  private def quantizedCorpus(s: SparkSession, dir: String): DataFrame =
     Tables.embeddings(s, dir)
       .withColumn("maxabs", greatest(array_max(transform(embD, x => abs(x))), lit(1e-12)))
       .select(col("vec_id"),
         transform(embD, x => floor(x * 127.0 / col("maxabs") + 0.5).cast(LongType)).as("qv"))
       .withColumn("qn", aggregate(col("qv"), lit(0L), (a, x) => a + x * x))
       .persist()
-  }
 
   /** Quantized-cosine candidates: for each probe, the top-`k` vectors
     * of the persisted `qcorp` ([[quantizedCorpus]]) by int8-code
-    * cosine. Returns (probe_id, neighbor_id, cos_q, rn). */
-  private def quantizedTopK(qcorp: DataFrame, k: Int): DataFrame = {
-    val probes = qcorp
-      .filter(col("vec_id") < NPROBES)
-      .select(col("vec_id").as("probe_id"), col("qv").as("pqv"), col("qn").as("pqn"))
-    val cosQ = round(col("qdot").cast(DoubleType) /
+    * cosine. Returns (probe_id, neighbor_id, cos_q, rn). ScaleStress
+    * times it over a synthetic corpus. */
+  private[graft] def quantizedTopK(qcorp: DataFrame, k: Int): DataFrame = {
+    val cosQ = round(Vectors.quantizedDot(col("pqv"), col("qv")).cast(DoubleType) /
       sqrt(greatest(col("pqn") * col("qn"), lit(1L)).cast(DoubleType)), 6)
-    val scored = qcorp.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .withColumn("qdot", Vectors.quantizedDot(col("pqv"), col("qv")))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), cosQ.as("cos_q"))
-    Skew.topK(scored, "probe_id", "cos_q", "neighbor_id", k)
+    Skew.topK(probeScan(qcorp, Seq(col("qv").as("pqv"), col("qn").as("pqn")), notSelf,
+      cosQ.as("cos_q")), "probe_id", "cos_q", "neighbor_id", k)
   }
+
+  /** Oracle twin of [[quantizedTopK]] (after `quantizedSql`). */
+  private def quantizedTopkSql(k: Int): String = topKSql(
+    """SELECT probe_id, neighbor_id,
+      |    round(CAST(qdot AS DOUBLE) / sqrt(CAST(greatest(qq, 1) AS DOUBLE)), 6) AS cos_q
+      |  FROM c""".stripMargin, "probe_id, neighbor_id, cos_q", "cos_q DESC", k)
 
   /** MMR candidate-pool size per probe (tier-1 survivors the greedy
     * selection diversifies over). A deployment knob, like RERANK. */
@@ -83,7 +157,7 @@ object Similarity {
       }
     }.mkString(",\n    ")
     s"""WITH ed AS (
-       |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb
+       |  SELECT vec_id, ${embDSql("embedding")} AS emb
        |  FROM embeddings),
        |pl(tbl, w, plane) AS (VALUES
        |    $plRows),
@@ -100,17 +174,14 @@ object Similarity {
        |cand AS MATERIALIZED (
        |  SELECT DISTINCT pr.probe_id, c.vec_id AS neighbor_id
        |  FROM pr JOIN b c ON c.tbl = pr.tbl AND c.bucket = pr.pbucket
-       |    AND c.vec_id <> pr.probe_id),
-       |scored AS (
-       |  SELECT cd.probe_id, cd.neighbor_id,
-       |    round(list_cosine_similarity(pe.emb, ne.emb), 6) AS cos_sim
-       |  FROM cand cd
-       |  JOIN ed pe ON pe.vec_id = cd.probe_id
-       |  JOIN ed ne ON ne.vec_id = cd.neighbor_id)
-       |SELECT probe_id, neighbor_id, cos_sim, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY probe_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rn
-       |  FROM scored) WHERE rn <= $K""".stripMargin
+       |    AND c.vec_id <> pr.probe_id)
+       |""".stripMargin + topKSql(
+      s"""SELECT cd.probe_id, cd.neighbor_id,
+         |    round(${cosSql("pe.emb", "ne.emb")}, 6) AS cos_sim
+         |  FROM cand cd
+         |  JOIN ed pe ON pe.vec_id = cd.probe_id
+         |  JOIN ed ne ON ne.vec_id = cd.neighbor_id""".stripMargin,
+      "probe_id, neighbor_id, cos_sim", "cos_sim DESC")
   }
 
   /** Unrolled greedy-MMR oracle CTE chain (through `sel$K`): K blocks,
@@ -422,8 +493,7 @@ object Similarity {
     def assign(r: Int): String =
       s"""sc$r AS (
          |  SELECT e.vec_id, e.label, e.embedding, c.cell,
-         |    round(list_cosine_similarity(
-         |      list_transform(e.embedding, x -> CAST(x AS DOUBLE)), c.cvec), 6) AS cos_c
+         |    round(${cosSql(embDSql("e.embedding"), "c.cvec")}, 6) AS cos_c
          |  FROM embeddings e CROSS JOIN c$r c),
          |a$r AS (
          |  SELECT vec_id, label, embedding, cell FROM (
@@ -441,8 +511,7 @@ object Similarity {
        |$rounds,
        |scored AS (
        |  SELECT e.vec_id, e.label, c.cell AS c_label,
-       |    round(list_cosine_similarity(
-       |      list_transform(e.embedding, x -> CAST(x AS DOUBLE)), c.cvec), 6) AS cos_c
+       |    round(${cosSql(embDSql("e.embedding"), "c.cvec")}, 6) AS cos_c
        |  FROM embeddings e CROSS JOIN c$LLOYD c),
        |ranked AS (
        |  SELECT *, row_number() OVER (PARTITION BY vec_id
@@ -530,9 +599,9 @@ object Similarity {
     * (OOM-killed the sf10d mirror), while a keyed max() streams in
     * O(|src|) state; each pass re-streams the join. */
   private def knnTop3Ctes: String = {
-    val key = """(CAST(floor(round(list_cosine_similarity(a.emb_d, b.emb_d),
-                |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
-                |      - b.vec_id""".stripMargin
+    val key = s"""(CAST(floor(round(${cosSql("a.emb_d", "b.emb_d")},
+                 |        6) * 1e6 + 0.5) AS BIGINT) + 2000000) * 10000000000
+                 |      - b.vec_id""".stripMargin
     def pass(i: Int): String = {
       val after = if (i == 1) "" else
         s"""  JOIN m${i - 1} ON m${i - 1}.src_id = a.vec_id
@@ -545,86 +614,53 @@ object Similarity {
          |    ON a.c_label = b.c_label AND a.vec_id <> b.vec_id
          |""".stripMargin + after + "  GROUP BY 1)"
     }
-    """home AS MATERIALIZED (
-      |  SELECT r.vec_id, r.c_label,
-      |    list_transform(e.embedding, v -> CAST(v AS DOUBLE)) AS emb_d
-      |  FROM ranked r JOIN embeddings e USING (vec_id) WHERE r.rn = 1),
-      |""".stripMargin + (1 to 3).map(pass).mkString(",\n")
+    s"""home AS MATERIALIZED (
+       |  SELECT r.vec_id, r.c_label,
+       |    ${embDSql("e.embedding")} AS emb_d
+       |  FROM ranked r JOIN embeddings e USING (vec_id) WHERE r.rn = 1),
+       |""".stripMargin + (1 to 3).map(pass).mkString(",\n")
   }
 
   /** Oracle SQL for the exact brute-force top-K (also the ground-truth
     * CTE body of ann_recall_eval's oracle). */
-  private def exactTopkSql: String =
-    s"""SELECT probe_id, neighbor_id, cos_sim, rn FROM (
-       |  SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
-       |    round(list_cosine_similarity(
-       |      list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-       |      list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS cos_sim,
-       |    row_number() OVER (PARTITION BY p.vec_id
-       |      ORDER BY round(list_cosine_similarity(
-       |        list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-       |        list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) DESC,
-       |               e.vec_id ASC) AS rn
-       |  FROM (SELECT * FROM embeddings WHERE vec_id < $NPROBES) p
-       |  JOIN embeddings e ON e.vec_id <> p.vec_id)
-       |WHERE rn <= $K""".stripMargin
+  private val exactTopkSql: String =
+    topKSql(probeScanSql(probeCosSql), "probe_id, neighbor_id, cos_sim", "cos_sim DESC")
 
   /** Exact brute-force cosine top-K per probe. Shared by
     * ann_topk_exact and ann_recall_eval. */
-  private def exactTopK(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    val probes = e.filter(col("vec_id") < NPROBES)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
-    val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
-    val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
-    cosTopK(scored)
-  }
+  private def exactTopK(s: SparkSession, dir: String): DataFrame =
+    cosTopK(probeScan(Tables.embeddings(s, dir), Seq(probeEmb), notSelf, probeCos))
 
-  /** Oracle CTE chain for the IVF-probed candidate generation +
-    * scoring (consumed after `ivfAssignSql`); shared by ann_ivf_topk
-    * and ann_recall_eval. */
-  private def ivfTopkCtes: String =
-    s"""home AS (SELECT vec_id, c_label FROM ranked WHERE rn = 1),
-       |probes AS (SELECT vec_id AS probe_id, c_label FROM ranked
-       |           WHERE rn <= 2 AND vec_id < $NPROBES),
-       |cand AS (
-       |  SELECT DISTINCT p.probe_id, h.vec_id AS neighbor_id
-       |  FROM probes p JOIN home h
-       |    ON p.c_label = h.c_label AND h.vec_id <> p.probe_id),
-       |pair_scored AS (
-       |  SELECT c.probe_id, c.neighbor_id,
-       |    round(list_cosine_similarity(
-       |      list_transform(x.embedding, v -> CAST(v AS DOUBLE)),
-       |      list_transform(y.embedding, v -> CAST(v AS DOUBLE))), 6) AS cos_sim
-       |  FROM cand c JOIN embeddings x ON x.vec_id = c.probe_id
-       |  JOIN embeddings y ON y.vec_id = c.neighbor_id)""".stripMargin
+  /** Cells each IVF probe scans in ann_ivf_topk and ann_recall_eval. */
+  private val PROBE_CELLS = 2
 
-  private def ivfTopkSelect: String =
-    s"""SELECT probe_id, neighbor_id, cos_sim, rn FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY probe_id
-       |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rn FROM pair_scored)
-       |WHERE rn <= $K""".stripMargin
+  /** Oracle CTEs of [[ivfTopK]] (after `ivfAssignSql`): `home`, then per
+    * cell count p in `nprobes` the top-K CTE `ivf_p` (probe_id,
+    * neighbor_id, cos_sim, rn). */
+  private def ivfTopkCtes(nprobes: Int*): String =
+    ("home AS (SELECT vec_id, c_label FROM ranked WHERE rn = 1)" +: nprobes.map { p =>
+      s"""probes_$p AS (SELECT vec_id AS probe_id, c_label FROM ranked
+         |  WHERE rn <= $p AND vec_id < $NPROBES),
+         |cand_$p AS (
+         |  SELECT DISTINCT pr.probe_id, h.vec_id AS neighbor_id
+         |  FROM probes_$p pr JOIN home h
+         |    ON pr.c_label = h.c_label AND h.vec_id <> pr.probe_id),
+         |ivf_$p AS (${rerankSql(s"cand_$p")})""".stripMargin
+    }).mkString(",\n")
 
-  /** IVF-probed approximate top-K per probe (2-cell probing). Shared
-    * by ann_ivf_topk and ann_recall_eval. */
-  private def ivfTopK(s: SparkSession, dir: String): DataFrame = {
-    val assigns = ivfAssignments(s, dir) // persisted by the build itself
+  /** IVF-probed approximate top-K per probe: each probe scans the home
+    * cells of its `nprobe` nearest centroids in `assigns`
+    * ([[ivfAssignments]], persisted by the build itself). */
+  private def ivfTopK(s: SparkSession, dir: String, assigns: DataFrame,
+      nprobe: Int): DataFrame = {
     val home = assigns.filter(col("rn") === 1)
       .select(col("vec_id"), col("c_label"))
-    val probeCells = assigns.filter(col("rn") <= 2 && col("vec_id") < NPROBES)
+    val probeCells = assigns.filter(col("rn") <= nprobe && col("vec_id") < NPROBES)
       .select(col("vec_id").as("probe_id"), col("c_label"))
-    val cand = probeCells.join(home, Seq("c_label"))
+    rerank(s, dir, probeCells.join(home, Seq("c_label"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-      .distinct()
-    val e = Tables.embeddings(s, dir)
-    val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
-    val scored = cand
-      .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb")), "probe_id")
-      .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")), "neighbor_id")
-      .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"))
-    cosTopK(scored)
+      .distinct())
   }
 
   val defs: Seq[(String, QueryDef)] = Seq(
@@ -641,27 +677,13 @@ object Similarity {
     // DuckDB list_distance double accumulation), the bounded top-K
     // aggregate over the negated distance — no corpus-sized per-probe
     // window.
-    "ann_l2_topk" -> QueryDef.withOracle(
-      s"""SELECT probe_id, neighbor_id, l2_dist, rn FROM (
-         |  SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
-         |    round(list_distance(
-         |      list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-         |      list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS l2_dist,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY round(list_distance(
-         |        list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-         |        list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) ASC,
-         |               e.vec_id ASC) AS rn
-         |  FROM (SELECT * FROM embeddings WHERE vec_id < $NPROBES) p
-         |  JOIN embeddings e ON e.vec_id <> p.vec_id)
-         |WHERE rn <= $K""".stripMargin) { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-      val probes = e.filter(col("vec_id") < NPROBES)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
+    "ann_l2_topk" -> QueryDef.withOracle(topKSql(
+      probeScanSql(s"""round(list_distance(${embDSql("p.embedding")},
+                      |    ${embDSql("e.embedding")}), 6) AS l2_dist""".stripMargin),
+      "probe_id, neighbor_id, l2_dist", "l2_dist ASC")) { (s, dir) =>
       val dist = round(Vectors.l2(col("probe_emb"), col("embedding")), 6)
-      val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          (-dist).as("l2_dist"))
+      val scored = probeScan(Tables.embeddings(s, dir), Seq(probeEmb), notSelf,
+        (-dist).as("l2_dist"))
       Skew.topK(scored, "probe_id", "l2_dist", "neighbor_id", K)
         .withColumn("l2_dist", -col("l2_dist"))
     },
@@ -676,28 +698,13 @@ object Similarity {
     // accumulation matching DuckDB list_inner_product bit-for-bit),
     // the bounded top-K aggregate — no corpus-sized per-probe window
     // task.
-    "ann_mips_topk" -> QueryDef.withOracle(
-      s"""SELECT probe_id, neighbor_id, dot, rn FROM (
-         |  SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
-         |    round(list_inner_product(
-         |      list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-         |      list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS dot,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY round(list_inner_product(
-         |        list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-         |        list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) DESC,
-         |               e.vec_id ASC) AS rn
-         |  FROM (SELECT * FROM embeddings WHERE vec_id < $NPROBES) p
-         |  JOIN embeddings e ON e.vec_id <> p.vec_id)
-         |WHERE rn <= $K""".stripMargin) { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-      val probes = e.filter(col("vec_id") < NPROBES)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
+    "ann_mips_topk" -> QueryDef.withOracle(topKSql(
+      probeScanSql(s"""round(list_inner_product(${embDSql("p.embedding")},
+                      |    ${embDSql("e.embedding")}), 6) AS dot""".stripMargin),
+      "probe_id, neighbor_id, dot", "dot DESC")) { (s, dir) =>
       val score = round(Vectors.fdot(col("probe_emb"), col("embedding")), 6)
-      val scored = e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          score.as("dot"))
-      Skew.topK(scored, "probe_id", "dot", "neighbor_id", K)
+      Skew.topK(probeScan(Tables.embeddings(s, dir), Seq(probeEmb), notSelf,
+        score.as("dot")), "probe_id", "dot", "neighbor_id", K)
     },
 
     // ------------------------------------------------------------------
@@ -716,15 +723,11 @@ object Similarity {
     // embedding corpora sit far higher at the same nprobe.
     "ann_recall_eval" -> QueryDef.withOracle(
       s"""WITH $ivfAssignSql,
-         |$ivfTopkCtes,
-         |ivf AS (SELECT probe_id, neighbor_id FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY probe_id
-         |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rn FROM pair_scored)
-         |  WHERE rn <= $K),
+         |${ivfTopkCtes(PROBE_CELLS)},
          |exact AS (SELECT probe_id, neighbor_id FROM ($exactTopkSql)),
          |hits AS (
          |  SELECT e.probe_id, CAST(count(*) AS BIGINT) AS n_hit
-         |  FROM exact e JOIN ivf i
+         |  FROM exact e JOIN ivf_$PROBE_CELLS i
          |    ON i.probe_id = e.probe_id AND i.neighbor_id = e.neighbor_id
          |  GROUP BY e.probe_id)
          |SELECT p.probe_id, coalesce(h.n_hit, 0) AS n_hit,
@@ -732,7 +735,7 @@ object Similarity {
          |FROM (SELECT DISTINCT probe_id FROM exact) p
          |LEFT JOIN hits h ON h.probe_id = p.probe_id""".stripMargin) { (s, dir) =>
       val ex = exactTopK(s, dir).select(col("probe_id"), col("neighbor_id"))
-      val iv = ivfTopK(s, dir).select(col("probe_id"), col("neighbor_id"))
+      val iv = ivfTopK(s, dir, ivfAssignments(s, dir), PROBE_CELLS).select(col("probe_id"), col("neighbor_id"))
       val hits = ex.join(iv, Seq("probe_id", "neighbor_id"))
         .groupBy(col("probe_id")).agg(count(lit(1)).as("n_hit"))
       ex.select(col("probe_id")).distinct()
@@ -784,7 +787,6 @@ object Similarity {
         |  CAST(list_aggregate(qv, 'min') AS BIGINT) AS q_min,
         |  CAST(list_aggregate(qv, 'max') AS BIGINT) AS q_max
         |FROM q""".stripMargin) { (s, dir) =>
-      val embD = transform(col("embedding"), x => x.cast(DoubleType))
       val qv = transform(embD,
         x => floor(x * 127.0 / col("maxabs") + 0.5).cast(LongType))
       Tables.embeddings(s, dir)
@@ -806,8 +808,10 @@ object Similarity {
     // (fixed-point centroids, round-6 cosine, id tiebreaks) → oracled.
     "ann_ivf_topk" -> QueryDef.withOracle(
       s"""WITH $ivfAssignSql,
-         |$ivfTopkCtes
-         |$ivfTopkSelect""".stripMargin)(ivfTopK),
+         |${ivfTopkCtes(PROBE_CELLS)}
+         |SELECT * FROM ivf_$PROBE_CELLS""".stripMargin) { (s, dir) =>
+      ivfTopK(s, dir, ivfAssignments(s, dir), PROBE_CELLS)
+    },
 
     // ------------------------------------------------------------------
     // Hyperplane-LSH bucketed ANN, band-OR construction: 4 independent
@@ -868,31 +872,17 @@ object Similarity {
     // Same single-pass broadcast-probe scan as ann_topk_exact with the
     // label inequality fused into the join condition, so negatives are
     // filtered before scoring ever happens.
-    "ann_hard_negatives" -> QueryDef.withOracle(
-      s"""SELECT probe_id, probe_label, neighbor_id, neighbor_label, cos_sim, rn FROM (
-         |  SELECT p.vec_id AS probe_id, p.label AS probe_label,
-         |    e.vec_id AS neighbor_id, e.label AS neighbor_label,
-         |    round(list_cosine_similarity(
-         |      list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-         |      list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS cos_sim,
-         |    row_number() OVER (PARTITION BY p.vec_id
-         |      ORDER BY round(list_cosine_similarity(
-         |        list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-         |        list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) DESC,
-         |               e.vec_id ASC) AS rn
-         |  FROM (SELECT * FROM embeddings WHERE vec_id < $NPROBES) p
-         |  JOIN embeddings e ON e.label <> p.label)
-         |WHERE rn <= $K""".stripMargin) { (s, dir) =>
+    "ann_hard_negatives" -> QueryDef.withOracle(topKSql(
+      probeScanSql(s"p.label AS probe_label, e.label AS neighbor_label, $probeCosSql",
+        "e.label <> p.label"),
+      "probe_id, probe_label, neighbor_id, neighbor_label, cos_sim",
+      "cos_sim DESC")) { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val probes = e.filter(col("vec_id") < NPROBES)
-        .select(col("vec_id").as("probe_id"), col("label").as("probe_label"),
-          col("embedding").as("probe_emb"))
-      val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
       // the probe's label rides its group key; the ≤ K×NPROBES picks
       // get their own label back by id
-      val scored = e.join(broadcast(probes), col("label") =!= col("probe_label"))
-        .select(struct(col("probe_id"), col("probe_label")).as("probe"),
-          col("vec_id").as("neighbor_id"), cos.as("cos_sim"))
+      val scored = probeScan(e, Seq(col("label").as("probe_label"), probeEmb),
+        col("label") =!= col("probe_label"), probeCos,
+        struct(col("probe_id"), col("probe_label")).as("probe"))
       broadcast(Skew.topK(scored, "probe", "cos_sim", "neighbor_id", K))
         .join(e.select(col("vec_id").as("neighbor_id"),
           col("label").as("neighbor_label")), "neighbor_id")
@@ -915,14 +905,7 @@ object Similarity {
     // float-exact top-5.
     "ann_quantized_topk" -> QueryDef.withOracle(
       s"""WITH $quantizedSql
-         |SELECT probe_id, neighbor_id, cos_q, rn FROM (
-         |  SELECT probe_id, neighbor_id,
-         |    round(CAST(qdot AS DOUBLE) / sqrt(CAST(greatest(qq, 1) AS DOUBLE)), 6) AS cos_q,
-         |    row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY round(CAST(qdot AS DOUBLE) / sqrt(CAST(greatest(qq, 1) AS DOUBLE)), 6) DESC,
-         |               neighbor_id ASC) AS rn
-         |  FROM c)
-         |WHERE rn <= $K""".stripMargin) { (s, dir) =>
+         |${quantizedTopkSql(K)}""".stripMargin) { (s, dir) =>
       quantizedTopK(quantizedCorpus(s, dir), K)
     },
 
@@ -940,38 +923,10 @@ object Similarity {
     // the float-exact top-5.
     "ann_refine_rerank" -> QueryDef.withOracle(
       s"""WITH $quantizedSql,
-         |t1 AS (
-         |  SELECT probe_id, neighbor_id,
-         |    row_number() OVER (PARTITION BY probe_id
-         |      ORDER BY round(CAST(qdot AS DOUBLE) / sqrt(CAST(greatest(qq, 1) AS DOUBLE)), 6) DESC,
-         |               neighbor_id ASC) AS qrn
-         |  FROM c),
-         |cand AS (SELECT probe_id, neighbor_id FROM t1 WHERE qrn <= $RERANK),
-         |rr AS (
-         |  SELECT cd.probe_id, cd.neighbor_id,
-         |    round(list_cosine_similarity(
-         |      list_transform(x.embedding, v -> CAST(v AS DOUBLE)),
-         |      list_transform(y.embedding, v -> CAST(v AS DOUBLE))), 6) AS cos_sim
-         |  FROM cand cd JOIN embeddings x ON x.vec_id = cd.probe_id
-         |  JOIN embeddings y ON y.vec_id = cd.neighbor_id)
-         |SELECT probe_id, neighbor_id, cos_sim, rn FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY probe_id
-         |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rn FROM rr)
-         |WHERE rn <= $K""".stripMargin) { (s, dir) =>
-      val cand = quantizedTopK(quantizedCorpus(s, dir), RERANK)
-        .select(col("probe_id"), col("neighbor_id"))
-      val e = Tables.embeddings(s, dir)
-      val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
-      // ≤ RERANK rows per probe survive tier 1 — a single-phase window
-      // is bounded here
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      cand
-        .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb")), "probe_id")
-        .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")), "neighbor_id")
-        .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= K)
+         |cand AS (${quantizedTopkSql(RERANK)})
+         |${rerankSql("cand")}""".stripMargin) { (s, dir) =>
+      rerank(s, dir, quantizedTopK(quantizedCorpus(s, dir), RERANK)
+        .select(col("probe_id"), col("neighbor_id")))
     },
 
     // ------------------------------------------------------------------
@@ -1121,22 +1076,9 @@ object Similarity {
          |    ON t.sub = v.sub AND t.cell = v.code AND t.vec_id < $NPROBES
          |  WHERE v.vec_id <> t.vec_id
          |  GROUP BY 1, 2),
-         |pt1 AS (
-         |  SELECT probe_id, neighbor_id, row_number() OVER (PARTITION BY probe_id
-         |    ORDER BY adist ASC, neighbor_id ASC) AS qrn
-         |  FROM adc),
-         |pcand AS (SELECT probe_id, neighbor_id FROM pt1 WHERE qrn <= $PQ_RERANK),
-         |prr AS (
-         |  SELECT cd.probe_id, cd.neighbor_id,
-         |    round(list_cosine_similarity(
-         |      list_transform(x.embedding, v -> CAST(v AS DOUBLE)),
-         |      list_transform(y.embedding, v -> CAST(v AS DOUBLE))), 6) AS cos_sim
-         |  FROM pcand cd JOIN embeddings x ON x.vec_id = cd.probe_id
-         |  JOIN embeddings y ON y.vec_id = cd.neighbor_id)
-         |SELECT probe_id, neighbor_id, cos_sim, rn FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY probe_id
-         |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rn FROM prr)
-         |WHERE rn <= $K""".stripMargin) { (s, dir) =>
+         |pcand AS (${topKSql("SELECT * FROM adc", "probe_id, neighbor_id",
+                              "adist ASC", PQ_RERANK)})
+         |${rerankSql("pcand")}""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.types.BinaryType
       val xsub = pqXsub(s, dir).persist() // codebooks + encode + probes share it
       val seeded = xsub.withColumn("cell",
@@ -1181,17 +1123,7 @@ object Similarity {
       val cand = Skew.topK(adc.withColumn("adist", -col("adist")), "probe_id",
           "adist", "neighbor_id", PQ_RERANK)
         .select(col("probe_id"), col("neighbor_id"))
-      val e = Tables.embeddings(s, dir)
-      val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
-      // ≤ PQ_RERANK rows per probe survive — bounded final window
-      val w = Window.partitionBy(col("probe_id"))
-        .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-      cand
-        .join(e.select(col("vec_id").as("probe_id"), col("embedding").as("p_emb")), "probe_id")
-        .join(e.select(col("vec_id").as("neighbor_id"), col("embedding").as("n_emb")), "neighbor_id")
-        .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= K)
+      rerank(s, dir, cand)
     },
 
     // ------------------------------------------------------------------
@@ -1694,71 +1626,35 @@ object Similarity {
     // corpus-scale. All counts exact BIGINTs; recall = hits/(K·probes)
     // assembles from exact integers, round(…, 9)-snapped.
     "ann_nprobe_sweep" -> QueryDef.withOracle {
-      def pCtes(p: Int): String =
-        s"""probes_$p AS (SELECT vec_id AS probe_id, c_label FROM ranked
-           |  WHERE rn <= $p AND vec_id < $NPROBES),
-           |cand_$p AS (
-           |  SELECT DISTINCT pr.probe_id, h.vec_id AS neighbor_id
-           |  FROM probes_$p pr JOIN home h
-           |    ON pr.c_label = h.c_label AND h.vec_id <> pr.probe_id),
-           |scored_$p AS (
-           |  SELECT c.probe_id, c.neighbor_id,
-           |    round(list_cosine_similarity(
-           |      list_transform(x.embedding, v -> CAST(v AS DOUBLE)),
-           |      list_transform(y.embedding, v -> CAST(v AS DOUBLE))), 6)
-           |      AS cos_sim
-           |  FROM cand_$p c JOIN embeddings x ON x.vec_id = c.probe_id
-           |  JOIN embeddings y ON y.vec_id = c.neighbor_id),
-           |ivf_$p AS (SELECT probe_id, neighbor_id FROM (
-           |  SELECT *, row_number() OVER (PARTITION BY probe_id
-           |    ORDER BY cos_sim DESC, neighbor_id ASC) AS rn
-           |  FROM scored_$p) WHERE rn <= $K),
-           |hit_$p AS (
+      def hitCte(p: Int): String =
+        s"""hit_$p AS (
            |  SELECT CAST($p AS BIGINT) AS nprobe,
            |    CAST(count(*) AS BIGINT) AS total_hits
            |  FROM exact e JOIN ivf_$p i
            |    ON i.probe_id = e.probe_id AND i.neighbor_id = e.neighbor_id)"""
           .stripMargin
       s"""WITH $ivfAssignSql,
-         |home AS (SELECT vec_id, c_label FROM ranked WHERE rn = 1),
+         |${ivfTopkCtes(1, 2)},
          |exact AS (SELECT probe_id, neighbor_id FROM ($exactTopkSql)),
-         |${pCtes(1)},
-         |${pCtes(2)},
+         |${hitCte(1)},
+         |${hitCte(2)},
          |u AS (SELECT * FROM hit_1 UNION ALL SELECT * FROM hit_2)
          |SELECT nprobe, CAST($NPROBES AS BIGINT) AS n_probes, total_hits,
          |  round(total_hits / ($K.0 * $NPROBES), 9) AS recall_at_k
          |FROM u""".stripMargin
     } { (s, dir) =>
-      val assigns = ivfAssignments(s, dir) // persisted by the build itself
-      val home = assigns.filter(col("rn") === 1)
-        .select(col("vec_id"), col("c_label"))
-      val e = Tables.embeddings(s, dir)
+      val assigns = ivfAssignments(s, dir)
       val ex = exactTopK(s, dir)
         .select(col("probe_id"), col("neighbor_id")).persist()
-      val cos = round(Vectors.cosine(col("p_emb"), col("n_emb")), 6)
-      def sweep(p: Int): DataFrame = {
-        val probeCells = assigns
-          .filter(col("rn") <= p && col("vec_id") < NPROBES)
-          .select(col("vec_id").as("probe_id"), col("c_label"))
-        val cand = probeCells.join(home, Seq("c_label"))
-          .filter(col("vec_id") =!= col("probe_id"))
-          .select(col("probe_id"), col("vec_id").as("neighbor_id"))
-          .distinct()
-        val scored = cand
-          .join(e.select(col("vec_id").as("probe_id"),
-            col("embedding").as("p_emb")), "probe_id")
-          .join(e.select(col("vec_id").as("neighbor_id"),
-            col("embedding").as("n_emb")), "neighbor_id")
-          .select(col("probe_id"), col("neighbor_id"), cos.as("cos_sim"))
-        val ivf = cosTopK(scored).select(col("probe_id"), col("neighbor_id"))
-        ex.join(ivf, Seq("probe_id", "neighbor_id"))
+      def hits(p: Int): DataFrame =
+        ex.join(ivfTopK(s, dir, assigns, p).select(col("probe_id"), col("neighbor_id")),
+            Seq("probe_id", "neighbor_id"))
           .agg(count(lit(1)).as("total_hits"))
           .select(lit(p.toLong).as("nprobe"),
             lit(NPROBES.toLong).as("n_probes"), col("total_hits"),
             round(col("total_hits") / lit(K * 1.0 * NPROBES), 9)
               .as("recall_at_k"))
-      }
-      sweep(1).unionAll(sweep(2))
+      hits(1).unionAll(hits(2))
     },
 
     // ------------------------------------------------------------------
@@ -1772,18 +1668,9 @@ object Similarity {
     // bounded top-K aggregate; the verdict row per probe counts what
     // post-filtering kept. Deterministic → fully oracled.
     "ann_filtered_topk" -> QueryDef.withOracle(
-      s"""WITH pre AS (
-         |  SELECT probe_id, neighbor_id, rn FROM (
-         |    SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY p.vec_id
-         |        ORDER BY round(list_cosine_similarity(
-         |          list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-         |          list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6)
-         |          DESC, e.vec_id ASC) AS rn
-         |    FROM (SELECT * FROM embeddings WHERE vec_id < $NPROBES) p
-         |    JOIN embeddings e
-         |      ON e.vec_id <> p.vec_id AND e.label = p.label)
-         |  WHERE rn <= $K),
+      s"""WITH pre AS (${topKSql(
+            probeScanSql(probeCosSql, "e.vec_id <> p.vec_id AND e.label = p.label"),
+            "probe_id, neighbor_id", "cos_sim DESC")}),
          |post AS (
          |  SELECT t.probe_id, t.neighbor_id
          |  FROM ($exactTopkSql) t
@@ -1801,16 +1688,10 @@ object Similarity {
          |  ON po.probe_id = p.probe_id AND po.neighbor_id = p.neighbor_id
          |GROUP BY p.probe_id""".stripMargin) { (s, dir) =>
       val e = Tables.embeddings(s, dir)
-      val probes = e.filter(col("vec_id") < NPROBES)
-        .select(col("vec_id").as("probe_id"),
-          col("embedding").as("probe_emb"), col("label").as("p_label"))
-      val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
       // PRE-filter arm: the label equality rides the broadcast join
       // condition, so the scan scores only the allowed class
-      val allowed = e.join(broadcast(probes),
-          col("vec_id") =!= col("probe_id") && col("label") === col("p_label"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cos.as("cos_sim"))
+      val allowed = probeScan(e, Seq(probeEmb, col("label").as("p_label")),
+        notSelf && col("label") === col("p_label"), probeCos)
       val pre = cosTopK(allowed).select(col("probe_id"), col("neighbor_id"))
       // POST-filter arm: unfiltered global top-K, labels dropped after
       val lab = e.select(col("vec_id"), col("label"))
@@ -1892,23 +1773,9 @@ object Similarity {
     // whole-stage codegen, and the round(…,6) snap pins the boundary
     // so τ-edge rows can't diverge between engines.
     "ann_range_search" -> QueryDef.withOracle(
-      s"""SELECT p.vec_id AS probe_id, e.vec_id AS neighbor_id,
-         |  round(list_cosine_similarity(
-         |    list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-         |    list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6) AS cos_sim
-         |FROM (SELECT * FROM embeddings WHERE vec_id < $NPROBES) p
-         |JOIN embeddings e ON e.vec_id <> p.vec_id
-         |WHERE round(list_cosine_similarity(
-         |    list_transform(p.embedding, x -> CAST(x AS DOUBLE)),
-         |    list_transform(e.embedding, x -> CAST(x AS DOUBLE))), 6)
-         |  >= 0.25""".stripMargin) { (s, dir) =>
-      val e = Tables.embeddings(s, dir)
-      val probes = e.filter(col("vec_id") < NPROBES)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("probe_emb"))
-      val cos = round(Vectors.cosine(col("probe_emb"), col("embedding")), 6)
-      e.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          cos.as("cos_sim"))
+      s"""SELECT probe_id, neighbor_id, cos_sim FROM (${probeScanSql(probeCosSql)})
+         |WHERE cos_sim >= 0.25""".stripMargin) { (s, dir) =>
+      probeScan(Tables.embeddings(s, dir), Seq(probeEmb), notSelf, probeCos)
         .filter(col("cos_sim") >= 0.25)
     },
 

@@ -560,8 +560,7 @@ object TextOps {
          |  CAST(floor(CAST(sum(lp_fp) AS BIGINT) * 1000.0 / count(*) + 0.5) AS BIGINT)
          |    / 1000000000.0 AS avg_ln_p
          |FROM scored GROUP BY doc_id""".stripMargin) { (s, dir) =>
-      // token arrays materialized behind a persist barrier (the
-      // regexp-per-element inlining trap, see Dedup.shingled)
+      // token arrays persisted once: the bigram rows feed four branches
       val t = Tables.documents(s, dir)
         .select(col("doc_id"), tokens(col("text")).as("toks"))
         .persist()
@@ -1327,10 +1326,9 @@ object TextOps {
       val stop = Seq("the", "a", "an", "of", "and", "or", "to", "in", "is",
         "it", "for", "on", "with", "as", "at", "by")
       val stopArr = array(stop.map(lit): _*)
-      val t = Tables.documents(s, dir)
+      val f = Tables.documents(s, dir)
         .select(col("doc_id"), tokens(col("text")).as("toks"))
-        .persist() // tokenizer barrier (the regexp-inlining trap)
-      val f = t.select(col("doc_id"),
+        .select(col("doc_id"),
           posexplode(col("toks")).as(Seq("pos0", "tok")))
         .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("tok"),
           array_contains(stopArr, col("tok")).as("stop"))

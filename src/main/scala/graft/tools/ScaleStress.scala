@@ -214,8 +214,9 @@ object ScaleStress {
         .count()
     }
 
-    // int8-quantized brute-force ANN scan: 1M synthetic 64-d vectors,
-    // 4 probes — the memory-bandwidth tier (4x fewer bytes than f32).
+    // int8-quantized brute-force ANN scan: 1M synthetic 64-d vectors
+    // through the shipped quantized probe scan (10 probes) — the
+    // memory-bandwidth tier (4x fewer bytes than f32).
     val nVec = 1000000L
     val qvecs = spark.range(nVec).select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(63)), i =>
@@ -223,16 +224,8 @@ object ScaleStress {
       .withColumn("qn", aggregate(col("qv"), lit(0L), (a, x) => a + x * x))
       .persist()
     qvecs.count()
-    stressTime("int8 brute-force ANN scan (1M x 64-d, 4 probes)", nVec) {
-      val probes = qvecs.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("probe_id"), col("qv").as("pqv"), col("qn").as("pqn"))
-      val scored = qvecs.join(broadcast(probes), col("vec_id") =!= col("probe_id"))
-        .withColumn("qdot",
-          graft.functions.Vectors.quantizedDot(col("pqv"), col("qv")))
-        .select(col("probe_id"), col("vec_id").as("neighbor_id"),
-          (col("qdot").cast(DoubleType) /
-            sqrt(greatest(col("pqn") * col("qn"), lit(1L)).cast(DoubleType))).as("cos_q"))
-      graft.operators.Skew.topK(scored, "probe_id", "cos_q", "neighbor_id", 5).count()
+    stressTime("int8 brute-force ANN scan (1M x 64-d, 10 probes)", nVec) {
+      graft.operators.Similarity.quantizedTopK(qvecs, 5).count()
     }
 
     // Z-order bit interleave: row-local 16-bit math over 20M rows.
@@ -607,46 +600,6 @@ object ScaleStress {
         s"(B×maps bound, input-size-independent)")
     }
 
-    // ---- round-9b shape: per-doc TextRank is doc-keyed and linear ----
-    // text_textrank's scale claim: 4 damped-rank rounds over the
-    // (doc, src, dst, cnt) adjacency are O(Σ per-doc edges) with every
-    // exchange keyed on (doc, word) — doubling the DOC COUNT doubles
-    // the work (linear corpus scaling, the per-doc graphs never
-    // interact), and per-doc cost is bounded by doc length however big
-    // the corpus grows. Synthetic corpus: 60-word docs from a 30-word
-    // cyclic vocabulary (dense repeated-bigram structure, like
-    // template-heavy crawl text).
-    for (nDocs <- Seq(n / 400, n / 200)) {
-      stressTime(s"textrank 4 rounds over $nDocs docs", nDocs * 59) {
-        val docs = spark.range(nDocs)
-        val e = docs.select(col("id").as("doc_id"),
-            explode(sequence(lit(0), lit(58))).as("i"))
-          .select(col("doc_id"),
-            concat(lit("w"), pmod(col("i") + col("doc_id"), lit(30))).as("src"),
-            concat(lit("w"), pmod(col("i") + col("doc_id") + 1, lit(30))).as("dst"))
-          .groupBy(col("doc_id"), col("src"), col("dst"))
-          .agg(count(lit(1)).as("cnt"))
-          .repartition(col("doc_id"), col("src")).persist()
-        val deg = e.groupBy(col("doc_id"), col("src"))
-          .agg(sum(col("cnt")).as("deg")).persist()
-        val nodes = deg.select(col("doc_id"), col("src").as("word"))
-        var r = nodes.select(col("doc_id"), col("word"), lit(1048576L).as("r"))
-        for (_ <- 0 until 4) {
-          val contrib = e
-            .join(r.withColumnRenamed("word", "src"), Seq("doc_id", "src"))
-            .join(deg, Seq("doc_id", "src"))
-            .groupBy(col("doc_id"), col("dst").as("word"))
-            .agg(sum(col("cnt") * expr("r div deg")).as("s"))
-          r = nodes
-            .join(contrib, Seq("doc_id", "word"), "left_outer")
-            .select(col("doc_id"), col("word"),
-              expr("(15 * 1048576 + 85 * coalesce(s, 0)) div 100").as("r"))
-        }
-        val out = r.count()
-        e.unpersist(); deg.unpersist()
-        out
-      }
-    }
     spark.stop()
   }
 }

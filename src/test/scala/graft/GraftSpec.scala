@@ -535,17 +535,20 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("distributed-rank queries never sort a whole group in one task") {
     // q7/q34/q28 group on 3-5-value keys; a window partitioned ONLY by
-    // that key funnels the whole fact table into as many tasks. q7
-    // ranks with the bounded top-k aggregate and no window at all. q34
+    // that key funnels the whole fact table into as many tasks. q7 and
+    // the ANN reranks rank with the bounded top-k aggregate and no
+    // window at all. q34
     // and q28 range-bucket the partition key; any remaining single-key
     // window must consume bounded input (a top-k filter or a
     // pre-aggregated tiny child), never the raw scan.
     import org.apache.spark.sql.execution.FilterExec
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.window.WindowExec
-    val q7 = SparkEntry.queries("q7_window_topk")(spark, sf).queryExecution.sparkPlan
-    assert(q7.collect { case w: WindowExec => w }.isEmpty, s"q7 has a window:\n$q7")
-    assert(q7.toString.contains("graft_topk_by_key"), s"q7: top-k aggregate missing:\n$q7")
+    for (q <- Seq("q7_window_topk", "ann_refine_rerank", "ann_pq_topk")) {
+      val phys = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
+      assert(phys.collect { case w: WindowExec => w }.isEmpty, s"$q has a window:\n$phys")
+      assert(phys.toString.contains("graft_topk_by_key"), s"$q: top-k aggregate missing:\n$phys")
+    }
     for (q <- Seq("q34_rank_family", "q28_median_exact")) {
       val phys = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
       val wins = phys.collect { case w: WindowExec => w }

@@ -162,6 +162,14 @@ class MainsGuardSpec extends AnyFunSuite {
       Seq("graft/plans/VectorExpressions.scala" -> 2))
   }
 
+  test("the ANN probe scan and the oracle cosine are written once, in Similarity") {
+    assert(hits(Pattern.quote("list_cosine_similarity(")) ==
+      Seq("graft/operators/Similarity.scala" -> 1))
+    // the probe-scan builder and ann_lsh's bucketed probe join
+    assert(hits(Pattern.quote("broadcast(probes)")) ==
+      Seq("graft/operators/Similarity.scala" -> 2))
+  }
+
   test("the 2×12 moving-average chain is written once per engine, in Etl") {
     val owner = Seq("graft/operators/Etl.scala" -> 1)
     assert(hits(Pattern.quote("""lit(0.5) * lead(col("total"), 6)""")) == owner)
